@@ -500,12 +500,6 @@ def unzigzag(u: int) -> int:
     return (u >> 1) if u % 2 == 0 else -((u + 1) >> 1)
 
 
-def rice_bits(folded, param: int) -> int:
-    """Total bits to Rice-code the zigzag-folded residuals at param."""
-    u = np.asarray(folded, dtype=np.int64)
-    return int((u >> param).sum()) + (1 + param) * len(u)
-
-
 def _best_residual_coding(residuals) -> tuple[int, int, int]:
     """-> (param, raw_width, bits incl. the 4-bit param field):
     param == -1 means the spec's escape (raw fixed-width two's

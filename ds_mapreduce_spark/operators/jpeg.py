@@ -646,10 +646,6 @@ def _build_huffman(bits: tuple[int, ...], huffval: bytes):
     return _huff_lut(tuple(bits), bytes(huffval))
 
 
-def _huff_decode(reader: _BitReader, lut) -> int:
-    return reader.huff(lut)
-
-
 def _extend(v: int, size: int) -> int:
     """The spec's EXTEND: map magnitude bits back to a signed value."""
     return v if v >= (1 << (size - 1)) else v - (1 << size) + 1

@@ -154,7 +154,7 @@ def test_encoder_rejects_bad_geometry():
 # streams.
 # ---------------------------------------------------------------------------
 
-_REF_MAX_ENTRIES = 4096
+_REF_MAX_ENTRIES = 4095  # gif._LZW_MAX_ENTRIES (giflib LZ_MAX_CODE)
 _REF_MAX_BITS = 12
 
 
