@@ -20,28 +20,10 @@ def project(df: DataFrame, *cols: Column | str) -> DataFrame:
     return df.select(*cols)
 
 
-def filter_rows(df: DataFrame, predicate: Column) -> DataFrame:
-    """Filter; simple comparisons push into the parquet scan."""
-    return df.where(predicate)
-
-
 def aggregate(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
     """Hash aggregation with automatic partial (map-side) combine —
     the global version of the reference's per-chunk reduce (§1.4)."""
     return df.groupBy(*keys).agg(*aggs)
-
-
-def equi_join(
-    df: DataFrame,
-    other: DataFrame,
-    on,
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """Equi-join; pass broadcast_right=True for dimension tables so the
-    fact side never shuffles (verify: BroadcastHashJoin in explain)."""
-    right = F.broadcast(other) if broadcast_right else other
-    return df.join(right, on, how)
 
 
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
@@ -49,14 +31,6 @@ def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     (per-partition heaps, no total sort). `order` must be a total order
     for deterministic results."""
     return df.orderBy(*order).limit(k)
-
-
-def top_k_per_group(
-    df: DataFrame, group: Sequence[str], order: Sequence[Column], k: int, rank_col: str = "rnk"
-) -> DataFrame:
-    """Per-group top-k via row_number window: one shuffle on the group key."""
-    w = Window.partitionBy(*group).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
 
 
 def latest_wins_merge(

@@ -60,210 +60,12 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 #: Everything NOT listed still registers (after these) and stays under
 #: the in-repo parity gate; tests/test_driver_contract.py locks the
 #: family coverage of this window.
-#: Round-9 rotation (VERDICT r8 #1 — the staged plan, executed):
-#: CORRECTNESS_r08 graded the r8 window 50/50 hash-green, so OUT go
-#: 26 of the 28 twice-green r7-cohort entries (dedup_span_excision,
-#: events_robust_outliers, hybrid_search_rerank, skyline_price_size,
-#: session_path_analysis, mr_inverted_index_capped, orc_roundtrip,
-#: customer_rfm_segments, market_basket_pairs, q2_min_cost_supplier,
-#: q7_volume_shipping, q9_product_type_profit,
-#: events_heavy_hitter_profile, text_quality_score,
-#: dedup_span_excision_minlen, skyline_3d_grid,
-#: quality_classifier_linear, ingest_manifest_pipeline,
-#: cms_heavy_hitter_estimates, hybrid_rrf_fusion,
-#: schema_evolution_roundtrip, snapshot_diff_census, dedup_semdedup,
-#: dsir_importance_select, graph_bfs_reach,
-#: bloom_ngram_decontamination); events_gapfill_interpolate and
-#: seasonal_naive_backtest stay — they are the ONLY temporal_queries
-#: rows in the window, and rotating both out would leave that family
-#: ungraded (test_check_window_spans_every_family). IN come ALL 26
-#: never-driver-graded entries — the five r8-new registrations plus
-#: the 21 remaining backlog residents — so after this round EVERY
-#: registered query has driver-grade evidence: 196/196 ever-graded,
-#: zero backlog. The 22 entries first graded in r08 stay pinned for a
-#: second consecutive green. Every IN entry is green under the
-#: in-repo DuckDB parity gate at sf0.001 AND sf0.01 (196/196,
-#: re-verified this session). The fifteen r9-new registrations
-#: (dedup_span_winnow_screen — the VERDICT r8 #7 comparison row —
-#: multimodal_ppm_resize_real / multimodal_wav_decimate_real, which
-#: make the mandated resize/frame-sample legs REAL container->
-#: container transforms, multimodal_png_roundtrip — a real COMPRESSED
-#: codec, PNG from the spec with stdlib zlib — multimodal_jpeg_roundtrip
-#: — a real LOSSY codec, baseline JPEG from T.81 with a fixed-point
-#: DCT so the analytic oracle grades the lossy chain bit-exactly —
-#: multimodal_gif_roundtrip — hand-written LZW, interchange proven
-#: against OpenJDK ImageIO — multimodal_ulaw_roundtrip — G.711 mu-law
-#: lossy audio, closed-form-oracle graded, javax.sound interchange —
-#: multimodal_mjpeg_avi_roundtrip — a real VIDEO container, MJPEG-in-
-#: AVI wrapping the JPEG codec per frame with stride-2 temporal
-#: sampling — multimodal_jpeg_color_roundtrip — 4:4:4 YCbCr color
-#: with both Annex K tables and fixed-point color transforms —
-#: multimodal_adpcm_roundtrip — stateful-adaptive IMA ADPCM graded by
-#: the repo's first recursive-CTE state-machine oracle —
-#: multimodal_flac_roundtrip — bit-level FLAC subset, the Rice/Golomb
-#: entropy-coding family, STREAMINFO-MD5-verified lossless —
-#: multimodal_animgif_roundtrip — animated GIF with transparency-
-#: masked delta frames, the inter-frame temporal-coding class —
-#: multimodal_mdct_roundtrip — windowed-MDCT perceptual audio with
-#: Layer-I/II block companding and exp-Golomb coding, the MP3/AAC
-#: class, payload bytes graded closed-form —
-#: multimodal_mcv_roundtrip — hybrid motion-compensated transform
-#: video, the H.261->H.264 class, graded by a recursive CTE that
-#: carries the reconstructed frame and replays the block-matching
-#: search — and
-#: gzip_jsonl_roundtrip) register after this window, green under
-#: the in-repo gate at both scales.
-#: Round-10 rotation (VERDICT r9 #1 — the staged plan, executed):
-#: CORRECTNESS_r09 graded the r9 window 50/50 hash-green, so OUT go
-#: all 48 non-stay residents — the 22 twice-green r8-cohort entries
-#: AND the 26 first-graded-in-r9 entries. The prior "pin a first
-#: green one more round" rule is superseded by the judge's explicit
-#: r10 prescription (grade all 15 r9-new + refresh the stalest
-#: cohort, target 211/211 ever-graded): with 15 never-graded rows and
-#: a 24-entry r1-stale cohort both due, pinning 26 would leave only 9
-#: refresh slots. The risk evidence supports this: r9 graded 26
-#: first-time entries 26-for-26 green, no driver grading has ever
-#: diverged from the in-repo DuckDB parity gate, and every rotated-out
-#: entry stays under that gate at sf0.001 AND sf0.01 every pytest run.
-#: IN (50): the fifteen r9-new registrations (13 codec rows + winnow
-#: screen + gzip JSONL), the full 24-entry r1-stale cohort, the full
-#: 7-entry r2 cohort, 2 of the r3 cohort, and 2 family-coverage swaps
-#: (knn_bruteforce — stalest similarity_queries row, r5;
-#: range_join_price_bands — stalest temporal_queries row, r4) so
-#: test_check_window_spans_every_family keeps every module graded:
-#: format via gzip_jsonl_roundtrip, mr via the three r1-stale MR rows,
-#: stream via events_cohort_retention, text via
-#: doc_winnowing_fingerprints.
-#: Round-11 rotation (the staged r10 plan, executed): CORRECTNESS_r10
-#: graded the r10 window 50/50 hash-green (211/211 ever-graded, zero
-#: backlog), so OUT went all 50. IN (50): the THREE r11 registrations
-#: (multimodal_mp3_framing_roundtrip, multimodal_h264_annexb_roundtrip,
-#: dedup_span_winnow_screen_entropic), the remaining r3 cohort, the
-#: FULL r4 and r5 cohorts, and 11 of the 28-entry r6 cohort + the r11
-#: entropic eval (family breadth: both similarity rows, both temporal
-#: rows, the core dedup trio, stream/JSON, graph, decontamination) —
-#: driving the oldest-evidence watermark from r3 to r6. Graded 50/50
-#: hash-green (CORRECTNESS_r11): 214/214 ever-graded, zero failures.
-#: Round-12 rotation (VERDICT r11 #1 — the staged plan, executed):
-#: OUT go all 50 r11 residents (all green, most twice-evidenced).
-#: IN (50): the ENTIRE stale cohort — all 16 entries last graded r6
-#: and all 22 last graded r7 (the 38 rows VERDICT r11 names as the
-#: stalest evidence) — plus 10 r8-cohort fills chosen for family
-#: breadth (format: orc_roundtrip; mr: mr_inverted_index_capped;
-#: dedup: the span-excision pair + SemDeDup; stream: CMS heavy
-#: hitters; text: Bloom decontam + DSIR; relational: q2 + graph BFS)
-#: and the TWO r12 registrations (quantile_sketch_estimates +
-#: quantile_sketch_rollup — VERDICT r11 #7's named candidate in both
-#: its halves: the mergeable quantile sketch's estimate/exact
-#: contract AND the day-store re-aggregation query, completing the
-#: CMS/HLL sketch family; net-new = the allowed 2). After this round
-#: the oldest grading evidence anywhere moves from r6 to r8
-#: (events_robust_outliers and hybrid_search_rerank, the 11th/12th
-#: fill candidates, yield their slots to the new rows and stay
-#: r8-evidenced under the in-repo gate). Every IN entry is green
-#: under the in-repo DuckDB parity gate at sf0.001 AND sf0.01 every
-#: pytest run; no driver grading has ever diverged from it.
-#: Round-13 rotation (VERDICT r12 #1 — the staged plan, executed):
-#: CORRECTNESS_r12 graded the r12 window 50/50 hash-green (216/216
-#: ever-graded, zero latest-grade failures), so OUT go all 50 r12
-#: residents. IN (50): ALL 16 entries last graded r8 (the stalest
-#: evidence anywhere — VERDICT r12 #1 names them), 33 of the 50-entry
-#: r9 cohort chosen family-balanced (all of dedup/format/mr/
-#: multimodal/relational/similarity/temporal's r9 rows; 5 of 10
-#: stream rows; 13 of 19 text rows), and the ONE r13 registration
-#: (quantile_sketch_day_range — VERDICT r12 #4's named candidate: the
-#: landed day store's production range-read path, day filter
-#: plan-locked pruned, fact table never re-read). After this round
-#: the oldest grading evidence anywhere moves from r8 to r9; the 17
-#: r9 leftovers (events_dow_hour_profile, events_pivot,
-#: events_unpivot, events_user_activity, events_value_histogram,
-#: array_functions, bpe_encode_census, deterministic_sample,
-#: doc_repetition_stats, domain_quota_sample, fuzzy_name_pairs,
-#: length_bucketed_batching, map_functions, pipeline_corpus_prep,
-#: term_frequencies, unigram_commonness, vocab_oov_rates) are the
-#: natural head of the staged r14 window, topped up from the 50-entry
-#: r10 cohort, family-balanced. Every IN entry is green under the
-#: in-repo DuckDB parity gate at sf0.001 AND sf0.01 every pytest run;
-#: no driver grading has ever diverged from it.
-#: Round-15 rotation (VERDICT r14 #3 — the staged plan, executed):
-#: CORRECTNESS_r14 graded the r14 window 50/50 hash-green (219/219
-#: ever-graded, zero latest-grade failures), so OUT go all 50 r14
-#: residents. IN (50): ALL 19 entries last graded r10 (the stalest
-#: evidence anywhere — VERDICT r14 #3 names them: 7 multimodal + 12
-#: relational), 30 of the 50-entry r11 cohort chosen family-balanced
-#: (ALL of similarity/mr/temporal/format/stream/multimodal's r11 rows
-#: — 20 — plus dedup 4 of 9, text 3 of 9, relational 3 of 12), and
-#: the ONE r15 registration (sketch_store_compaction — VERDICT r14
-#: #4's named candidate: the day-store maintenance lifecycle step,
-#: fragmented incremental-ingest store re-aggregated to one file per
-#: day, content equality hash-graded, compaction plan-locked to read
-#: only the store; net-new = 1 of the allowed 2). After this round
-#: the oldest grading evidence anywhere moves from r10 to r11; the 20
-#: r11 leftovers (dedup: contrastive_pairs, dedup_lsh_eval,
-#: dedup_minhash_verified, dedup_span_winnow_screen_entropic,
-#: related_docs_topk; relational: agg_suite, graph_triangle_count,
-#: join_full_outer, null_semantics, q10_returned_item_customers,
-#: q15_top_supplier, q19_disjunctive_predicates, scalar_functions,
-#: topk_orders; text: doc_chunking, exact_ngram_decontamination,
-#: mixture_rebalance, sequence_packing, span_corruption_plan,
-#: stratified_sample) are the natural head of the staged r16 window,
-#: topped up from the 50-entry r12 cohort, family-balanced. Every IN
-#: entry is green under the in-repo DuckDB parity gate at sf0.001 AND
-#: sf0.01 every pytest run; no driver grading has ever diverged from
-#: it.
-#: Round-14 rotation (VERDICT r13 #3 — the staged plan, executed):
-#: CORRECTNESS_r13 graded the r13 window 50/50 hash-green (217/217
-#: ever-graded, zero latest-grade failures), so OUT go all 50 r13
-#: residents. IN (50): ALL 17 r9 leftovers (the stalest evidence
-#: anywhere — VERDICT r13 #3 names them), 31 of the 50-entry r10
-#: cohort chosen family-balanced (all of dedup/format/mr/similarity/
-#: temporal's r10 rows, both r10 stream/text rows, 8 of 15 multimodal,
-#: 11 of 23 relational), and the TWO r14 registrations
-#: (hll_sketch_day_range — VERDICT r13 #5's named candidate: the
-#: cardinality member of the landed day-store read family — and
-#: cms_sketch_day_range, the frequency member that completes the
-#: CMS/HLL/quantile triad; both day filters plan-locked pruned, both
-#: estimate branches never touching the fact table; net-new = the
-#: allowed 2). After this round the oldest grading evidence anywhere
-#: moves from r9 to r10; the 19 r10 leftovers (multimodal: mdct,
-#: mjpeg_avi, png, ppm_resize_real, resize, ulaw, wav_decimate_real;
-#: relational: q14, q16, q17, q18, q22, q4, q5, regex_functions,
-#: set_operations, sql_q6_forecast_revenue, window_rank_per_group,
-#: window_running_sum) are the natural head of the staged r15 window,
-#: topped up from the 50-entry r11 cohort, family-balanced. Every IN
-#: entry is green under the in-repo DuckDB parity gate at sf0.001 AND
-#: sf0.01 every pytest run; no driver grading has ever diverged from
-#: it.
-#: Round-16 rotation (VERDICT r15 #2 — the staged plan, executed):
-#: CORRECTNESS_r15 graded the r15 window 50/50 hash-green (220/220
-#: ever-graded, zero latest-grade failures), so OUT go all 50 r15
-#: residents. IN (50): ALL 20 entries last graded r11 (the stalest
-#: evidence anywhere — VERDICT r15 #3 names the cohort: dedup 5 +
-#: relational 9 + text 6), 29 of the 50-entry r12 cohort chosen
-#: family-balanced (ALL of format/mr/multimodal/similarity/temporal's
-#: r12 rows — 11 — plus dedup 3 of 6, relational 5 of 11, stream 5 of
-#: 10, text 5 of 12), and the ONE r16 registration
-#: (sketch_store_retention — VERDICT r15 #4's named candidate: the
-#: day-store retention/expiry lifecycle step, day partitions below
-#: the span-midpoint cutoff deleted as pure directory metadata from a
-#: copy of the compacted store, surviving-range read hash-graded
-#: against the raw retained window, expiry + post-expiry pruning
-#: plan-locked; net-new = 1 of the allowed 2). After this round the
-#: oldest grading evidence anywhere moves from r11 to r12; the 21 r12
-#: leftovers (dedup: dedup_incremental, dedup_prefix_filter,
-#: dedup_span_excision_minlen; relational: agg_approx_suite,
-#: approx_distinct_rollup, dq_validation_suite, equi_depth_histogram,
-#: graph_pagerank_converged, table_profile; stream:
-#: events_rolling_1h_stats, events_rolling_7d_active_users,
-#: events_rolling_anomaly_flags, multi_touch_attribution,
-#: quantile_sketch_estimates; text: bloom_ngram_decontamination,
-#: bpe_pair_merge_stats, corpus_shard_plan, dsir_importance_select,
-#: entity_resolution_clusters, epoch_shuffle_plan,
-#: trigram_substring_search) are the natural head of the staged r17
-#: window, topped up from the 50-entry r13 cohort, family-balanced.
-#: Every IN entry is green under the in-repo DuckDB parity gate at
-#: sf0.001 AND sf0.01 every pytest run; no driver grading has ever
-#: diverged from it.
+#: Rotation: once a window is graded, the next one swaps the graded
+#: entries for those with the oldest grading evidence (family-balanced,
+#: so test_check_window_spans_every_family holds) plus any new
+#: registrations. Every entry, in or out of the window, stays under the
+#: in-repo DuckDB parity gate at sf0.001 and sf0.01; the per-round
+#: IN/OUT lists are in this file's git history.
 PRIORITY: tuple[str, ...] = (
     # ---- first 9 slots: one per capability family (graceful
     # ---- degradation if the driver window ever shrinks) ----

@@ -11,9 +11,39 @@ in the state store; the watermark bounds state size by evicting
 windows older than max(event_time) - delay. With
 ``availableNow`` the same job is an incremental batch — how a 100 TB
 backfill and the live stream share one code path.
+
+Every twin reads its feed through ``_feed``. The state-store twins
+drain into the in-memory sink (``_to_memory``); the ``foreachBatch``
+twins run one ``reduce(k, [v])`` per micro-batch — merge the batch
+into version n-1, write version n — through ``_run_versioned``, which
+owns one contract for all of them:
+
+- **Paths.** Micro-batch ``n`` writes version ``n`` under
+  ``state_dir``: ``v{n}`` for a one-table state, ``v{n}/{table}`` for
+  a multi-table one, ``{name}v{n}`` for a table or per-batch log whose
+  name ends in ``_`` (``uni_v{n}``, ``verdicts_v{n}``).
+- **Seeds.** A state with an initial value (a history fingerprint
+  store, a zero token cursor) is written to ``v-1`` before the stream
+  starts, so batch 0 reads its predecessor like every other batch; an
+  unseeded state starts from batch 0's partial alone.
+- **Replay.** Batch ``n`` reads only version ``n-1`` and overwrites
+  version ``n`` (and its log entry). A batch Spark re-runs after a
+  crash (at-least-once delivery) therefore rewrites the same version
+  from the same predecessor: the landed state is exactly-once.
+- **Resume.** The answer is read from the last version this run
+  fired; if no batch fired (an availableNow restart with nothing new)
+  from the latest landed version >= 0.
+- **Empty feed.** If no batch fired and nothing has landed, the answer
+  is the twin's answer on an empty batch of the feed's schema: the
+  right columns, no rows.
+- **Logs.** A twin whose answer is a per-batch log returns the union
+  of the log versions <= the last batch that fired (versions a
+  previous run left above it are stale), else of all landed ones.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,19 +52,23 @@ from ds_mapreduce_spark.functions.temporal import epoch_sec, epoch_us
 from ds_mapreduce_spark.sources.catalog import normalize_events_ts
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``, so any scheme (local,
+    HDFS, S3A) works."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def existing_state_versions(
     spark: SparkSession, state_dir: str, prefix: str = "v"
 ) -> list[int]:
     """Batch ids with landed state under ``state_dir`` (dirs named
-    ``{prefix}{int}``), via the Hadoop FS API so any scheme (local,
-    HDFS, S3A) works. The versioned-state jobs need this for the two
+    ``{prefix}{int}``). The versioned-state jobs need this for the two
     cases where ``foreachBatch`` never fires: a genuinely empty feed,
     and an availableNow RESUME whose checkpoint says nothing is new —
     in the second case the right answer is the state already on disk,
     not a crash on ``v-1`` (ADVICE r6)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, path = _fs_path(spark, state_dir)
     if not fs.exists(path):
         return []
     out = []
@@ -48,18 +82,140 @@ def existing_state_versions(
     return sorted(out)
 
 
-def _resolve_final_version(
-    spark: SparkSession, state_dir: str, fired: int, floor: int = 0
-) -> int | None:
-    """Final state version to read after ``awaitTermination``: the max
-    batch id that fired this run, else the latest landed version from a
-    previous run (resume-with-nothing-new), else None (empty feed —
-    callers fall back to an empty-schema result). ``floor`` excludes
-    seed versions (the ``v-1`` initial store some jobs write)."""
-    if fired >= floor:
-        return fired
-    landed = [v for v in existing_state_versions(spark, state_dir) if v >= floor]
-    return landed[-1] if landed else None
+def _feed(
+    spark: SparkSession,
+    path: str,
+    *,
+    per_file: bool = False,
+    events: bool = False,
+    schema=None,
+    text: bool = False,
+    options: dict | None = None,
+) -> DataFrame:
+    """The stream a twin reads: parquet under ``path`` with the schema
+    inferred from it (unless given), or text lines (``text``).
+    ``per_file`` makes each file one micro-batch; ``events`` reads the
+    events table (``ts`` as INT64 nanos is read as long, then
+    normalized to a UTC timestamp). A file ``path`` is read as its
+    directory narrowed to that file name, since FileStreamSource only
+    accepts directories."""
+    if events:
+        # before the schema is inferred: Spark 4 reads INT64 nanos only
+        # as long, under this flag
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    reader = spark.readStream
+    if not text:
+        reader = reader.schema(
+            schema if schema is not None else spark.read.parquet(path).schema
+        )
+    if per_file:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    for k, v in (options or {}).items():
+        reader = reader.option(k, v)
+    fs, p = _fs_path(spark, path)
+    if fs.isFile(p):
+        path, _, name = path.rpartition("/")
+        reader = reader.option("pathGlobFilter", name)
+    stream = reader.text(path) if text else reader.parquet(path)
+    return normalize_events_ts(stream) if events else stream
+
+
+def _to_memory(df: DataFrame, table: str, mode: str) -> DataFrame:
+    """Drain the stream ``df`` (availableNow) into the in-memory table
+    ``table``; returns that table."""
+    (
+        df.writeStream.format("memory")
+        .queryName(table)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(table)
+
+
+class _Version:
+    """One micro-batch's handle on the versioned state: ``prev`` reads
+    version n-1 (absent when ``first``: batch 0 of an unseeded state),
+    ``put`` writes version n, ``get`` reads back what ``put`` wrote.
+    ``table`` names a table or log as in the module docstring."""
+
+    def __init__(self, batch: DataFrame, at: Callable, n: int, first: bool):
+        self.sess, self.at, self.n, self.first = batch.sparkSession, at, n, first
+
+    def prev(self, table: str | None = None) -> DataFrame:
+        return self.sess.read.parquet(self.at(self.n - 1, table))
+
+    def put(self, df: DataFrame, table: str | None = None) -> None:
+        df.write.mode("overwrite").parquet(self.at(self.n, table))
+
+    def get(self, table: str | None = None) -> DataFrame:
+        return self.sess.read.parquet(self.at(self.n, table))
+
+
+def _run_versioned(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    step: Callable[[DataFrame, _Version], None],
+    *,
+    present: Callable[..., DataFrame] = lambda df: df,
+    empty: Callable[[DataFrame], DataFrame] | str,
+    tables: tuple = (None,),
+    log: str | None = None,
+    seed: DataFrame | dict | None = None,
+) -> DataFrame:
+    """Drain ``stream`` (availableNow, checkpointed) through ``step``,
+    one call per micro-batch, and return the answer under the contract
+    in the module docstring. ``seed`` (a DataFrame, or one per table)
+    is written to ``v-1`` first. Without ``log``, the answer is
+    ``present(*tables at the final version)``; with one, it is
+    ``present(union of the log)``. With no version to read, it is
+    ``empty(an empty batch)``, or an empty frame of schema ``empty``
+    when that is a DDL string."""
+    spark = stream.sparkSession
+
+    def series(table: str | None) -> str:
+        return f"{table}v" if table and table.endswith("_") else "v"
+
+    def at(n: int, table: str | None) -> str:
+        nested = table and not table.endswith("_")
+        return f"{state_dir}/{series(table)}{n}" + (f"/{table}" if nested else "")
+
+    def landed(table: str | None) -> list[int]:
+        versions = existing_state_versions(spark, state_dir, series(table))
+        return [n for n in versions if n >= 0]
+
+    if seed is not None:
+        for table, df in (seed if isinstance(seed, dict) else {None: seed}).items():
+            df.write.mode("overwrite").parquet(at(-1, table))
+    fired = -1
+
+    def sink(batch: DataFrame, n: int) -> None:
+        nonlocal fired
+        step(batch, _Version(batch, at, n, first=n == 0 and seed is None))
+        fired = max(fired, n)
+
+    (
+        stream.writeStream.foreachBatch(sink)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+        .awaitTermination()
+    )
+    if log is not None:
+        versions = [n for n in landed(log) if fired < 0 or n <= fired]
+        if versions:
+            return present(spark.read.parquet(*[at(n, log) for n in versions]))
+    else:
+        final = fired if fired >= 0 else max(landed(tables[0]), default=None)
+        if final is not None:
+            return present(*[spark.read.parquet(at(final, t)) for t in tables])
+    if isinstance(empty, str):
+        return spark.createDataFrame([], empty)
+    return empty(spark.createDataFrame([], stream.schema))
 
 
 def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -93,8 +249,6 @@ def session_window_agg(events: DataFrame, gap: str = "30 minutes", watermark: st
     run_streaming_session_window."""
     if events.isStreaming:
         events = events.withWatermark("ts", watermark)
-    from ds_mapreduce_spark.functions.temporal import epoch_sec
-
     return (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
@@ -121,25 +275,8 @@ def run_streaming_session_window(
     session once its close is final — sessions still extendable within
     the watermark of max event time stay in state, exactly like the
     applyInPandasWithState twin's open sessions."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    out = session_window_agg(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    out = session_window_agg(_feed(spark, events_dir, events=True))
+    return _to_memory(out, sink_table, "append")
 
 
 def run_streaming_wordcount(
@@ -152,27 +289,14 @@ def run_streaming_wordcount(
     HashMap). availableNow drains what exists and stops; the identical
     query tails a growing directory in production.
     """
-    reader = spark.readStream
-    if not text_path.endswith("/") and "." in text_path.rsplit("/", 1)[-1]:
-        base, _, fname = text_path.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        text_path = base
-    lines = reader.text(text_path)
+    lines = _feed(spark, text_path, text=True)
     counts = (
         lines.select(F.explode(F.split(F.col("value"), r"\s+")).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _to_memory(counts, sink_table, "complete")
 
 
 def run_streaming_dedup(
@@ -191,22 +315,14 @@ def run_streaming_dedup(
     through and state is evicted: the 100 TB configuration, since an
     unbounded distinct-key state store eventually IS the corpus.
     """
-    stream = spark.readStream.schema(schema).parquet(src_dir)
+    stream = _feed(spark, src_dir, schema=schema)
     if watermark is not None:
         ts_col, delay = watermark
         stream = stream.withWatermark(ts_col, delay)
         deduped = stream.dropDuplicatesWithinWatermark(key_cols)
     else:
         deduped = stream.dropDuplicates(key_cols)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _to_memory(deduped, sink_table, "append")
 
 
 def attribution_join(clicks: DataFrame, purchases: DataFrame, horizon: str = "2 hours") -> DataFrame:
@@ -254,27 +370,10 @@ def run_streaming_attribution_join(
 ) -> DataFrame:
     """Stream-stream interval join over the events parquet with an
     availableNow trigger; returns the joined rows from the memory sink."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
+    stream = _feed(spark, events_dir, events=True)
     clicks = stream.where(F.col("event_type") == "click")
     purchases = stream.where(F.col("event_type") == "purchase")
-    out = attribution_join(clicks, purchases, horizon)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _to_memory(attribution_join(clicks, purchases, horizon), sink_table, "append")
 
 
 def run_streaming_tumbling_window(
@@ -284,29 +383,8 @@ def run_streaming_tumbling_window(
     availableNow trigger (process-everything-then-stop), landing in an
     in-memory sink; returns the sink contents as a DataFrame.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if schema is None:
-        # infer AFTER the nanos conf is set (events.ts is INT64 nanos,
-        # which Spark 4 only reads as long under this flag)
-        schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        # FileStreamSource only accepts directories; narrow with a glob
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    out = windowed_counts(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    out = windowed_counts(_feed(spark, events_dir, events=True, schema=schema))
+    return _to_memory(out, sink_table, "complete")
 
 
 def run_streaming_cdc_merge(
@@ -315,58 +393,26 @@ def run_streaming_cdc_merge(
     """Streaming CDC upsert: the change feed arrives as micro-batches
     and each batch MERGES into the landed state via ``foreachBatch`` —
     the latest-wins reduction is the same ``latest_wins_merge`` the
-    batch query (``cdc_latest_wins_merge``) runs in one plan.
-
-    State is chained through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``): a retried batch id rewrites its own
-    version from its predecessor, so the sink is idempotent on top of
-    at-least-once delivery (exactly-once state). Returns the final
-    merged state. 100 TB: each micro-batch shuffles only
-    |state ∩ batch keys| + |batch| rows; a bucketed state table drops
-    the state side of that shuffle entirely, and compaction of the
-    version chain is the same incremental-compaction plan as batch.
+    batch query (``cdc_latest_wins_merge``) runs in one plan. Returns
+    the final merged state; versioned state as in the module docstring.
+    100 TB: each micro-batch shuffles only |state ∩ batch keys| +
+    |batch| rows; a bucketed state table drops the state side of that
+    shuffle entirely, and compaction of the version chain is the same
+    incremental-compaction plan as batch.
     """
     from ds_mapreduce_spark.operators.relational import (
         cdc_change_rows,
         latest_wins_merge,
     )
 
-    schema = spark.read.parquet(orders_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(orders_dir)
-    )
-    feed = cdc_change_rows(stream)
-    last_version: list[int] = [-1]
+    def merge(rows: DataFrame) -> DataFrame:
+        return latest_wins_merge(rows, ["o_orderkey"], "version")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        rows = batch_df
-        if batch_id > 0:
-            rows = sess.read.parquet(f"{state_dir}/v{batch_id - 1}").unionByName(
-                batch_df
-            )
-        merged = latest_wins_merge(rows, ["o_orderkey"], "version")
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def step(batch: DataFrame, v: _Version) -> None:
+        v.put(merge(batch if v.first else v.prev().unionByName(batch)))
 
-    q = (
-        feed.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty merged schema
-        return latest_wins_merge(
-            cdc_change_rows(spark.createDataFrame([], schema)),
-            ["o_orderkey"],
-            "version",
-        )
-    return spark.read.parquet(f"{state_dir}/v{final}")
+    feed = cdc_change_rows(_feed(spark, orders_dir, per_file=True))
+    return _run_versioned(feed, state_dir, checkpoint_dir, step, empty=merge)
 
 
 def run_streaming_pii_scrub(
@@ -382,23 +428,7 @@ def run_streaming_pii_scrub(
     scales by adding executors."""
     from ds_mapreduce_spark.plans.text_queries import pii_scrub_rows
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema)
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    out = pii_scrub_rows(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _to_memory(pii_scrub_rows(_feed(spark, docs_dir)), sink_table, "append")
 
 
 def run_streaming_incremental_dedup(
@@ -410,84 +440,56 @@ def run_streaming_incremental_dedup(
 ) -> DataFrame:
     """Streaming ingest dedup: documents arrive as micro-batches and
     each batch is classified against the ACCUMULATED fingerprint store
-    (initial store = the history corpus's fingerprints) with the same
+    (seed store = the history corpus's fingerprints) with the same
     ``incremental_dedup`` reduction the batch query grades; hashes of
     this batch's 'new' docs are appended to the store for the next
-    batch.
+    batch. The answer is the per-batch verdict log.
 
     Semantics note vs the one-shot batch run: a duplicate pair split
     across micro-batches classifies as dup_of_history (the store saw it
     first) rather than dup_in_batch — but the KEPT SET (one owner per
     hash, smallest id wins when arrival order is id-ordered) is
     identical however the feed is chunked, which is the invariant
-    ``tests/test_streaming.py`` pins. State chains through versioned
-    parquet dirs like the CDC merge (idempotent per batch id). 100 TB:
-    the store is fingerprints only (append-only, bucketed by hash); a
-    day's batch never joins more than |store ∩ batch| + |batch| rows.
+    ``tests/test_streaming.py`` pins. 100 TB: the store is fingerprints
+    only (append-only, bucketed by hash); a day's batch never joins
+    more than |store ∩ batch| + |batch| rows.
     """
+    from pyspark.sql import Window
+
     from ds_mapreduce_spark.functions.text import portable_fingerprint
 
     hist_fp = (
         history.select(portable_fingerprint(F.col("text")).alias("text_md5"))
         .distinct()
     )
-    hist_fp.write.mode("overwrite").parquet(f"{state_dir}/v-1")
 
-    schema = spark.read.parquet(batch_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(batch_dir)
-    )
-    last = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        store = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
+    def step(batch: DataFrame, v: _Version) -> None:
+        store = v.prev()
         # same reduction as operators.dedup.incremental_dedup, but the
         # history side is already a fingerprint store (hashes, not text)
-        from pyspark.sql import Window
-
-        b = batch_df.select(
-            "doc_id", portable_fingerprint(F.col("text")).alias("text_md5")
-        )
-        w = Window.partitionBy("text_md5")
-        b = b.withColumn("batch_keep", F.min("doc_id").over(w))
-        joined = b.join(
-            store.withColumn("__seen", F.lit(1)), "text_md5", "left"
-        )
+        b = batch.select("doc_id", portable_fingerprint(F.col("text")).alias("text_md5"))
+        b = b.withColumn("batch_keep", F.min("doc_id").over(Window.partitionBy("text_md5")))
+        joined = b.join(store.withColumn("__seen", F.lit(1)), "text_md5", "left")
         verdict = (
             F.when(F.col("__seen").isNotNull(), "dup_of_history")
             .when(F.col("doc_id") != F.col("batch_keep"), "dup_in_batch")
             .otherwise("new")
         )
         out = joined.select("doc_id", "text_md5", verdict.alias("verdict"))
-        out.write.mode("overwrite").parquet(f"{state_dir}/verdicts_v{batch_id}")
+        v.put(out, "verdicts_")
         new_hashes = out.where(F.col("verdict") == "new").select("text_md5")
-        store.select("text_md5").unionByName(new_hashes).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/v{batch_id}")
-        last[0] = max(last[0], batch_id)
+        v.put(store.select("text_md5").unionByName(new_hashes).distinct())
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="verdicts_v")
-    if last[0] >= 0:
-        versions = [v for v in versions if v <= last[0]]
-    if not versions:  # empty feed, no prior verdicts: empty schema
-        return spark.createDataFrame([], schema).select(
+    def empty(batch: DataFrame) -> DataFrame:
+        return batch.select(
             "doc_id",
             portable_fingerprint(F.col("text")).alias("text_md5"),
             F.lit("new").alias("verdict"),
         )
-    return spark.read.parquet(
-        *[f"{state_dir}/verdicts_v{i}" for i in versions]
+
+    return _run_versioned(
+        _feed(spark, batch_dir, per_file=True), state_dir, checkpoint_dir, step,
+        empty=empty, log="verdicts_", seed=hist_fp,
     )
 
 
@@ -503,10 +505,10 @@ def run_streaming_shard_plan(
     from the accumulated token total — the ingest-time twin of the batch
     ``corpus_shard_plan`` query. Within a batch the assignment is the
     same ``prefix_sum_over_total_order`` operator (md5 order); the
-    carried offset chains through versioned 1-row parquet state
-    (idempotent per batch id, like the CDC merge). When arrival chunks
-    respect the global md5 order, assignments equal the one-shot batch
-    plan exactly — the invariant tests/test_streaming.py pins.
+    carried offset is a 1-row state seeded at 0, and the answer is the
+    per-batch assignment log. When arrival chunks respect the global
+    md5 order, assignments equal the one-shot batch plan exactly — the
+    invariant tests/test_streaming.py pins.
 
     100 TB: per-batch work is one range exchange over the BATCH (not the
     corpus); state is a single row; the shard manifest appends forever.
@@ -515,21 +517,9 @@ def run_streaming_shard_plan(
     from ds_mapreduce_spark.functions.text import tokens
     from ds_mapreduce_spark.operators.relational import prefix_sum_over_total_order
 
-    spark.createDataFrame([(0,)], "carried bigint").write.mode("overwrite").parquet(
-        f"{state_dir}/v-1"
-    )
-    schema = spark.read.parquet(batch_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(batch_dir)
-    )
-    last = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        carried = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-        base = batch_df.select(
+    def step(batch: DataFrame, v: _Version) -> None:
+        carried = v.prev()
+        base = batch.select(
             "doc_id",
             F.md5(F.col("doc_id").cast("string")).alias("__key"),
             F.size(tokens(F.col("text"))).cast("bigint").alias("n_tok"),
@@ -540,40 +530,29 @@ def run_streaming_shard_plan(
         assigned = (
             cum.crossJoin(F.broadcast(carried))
             .withColumn("cum", F.col("cum_local") + F.col("carried"))
-            .withColumn(
-                "shard_id", idiv_floor(F.col("cum") - F.col("n_tok"), budget)
-            )
+            .withColumn("shard_id", idiv_floor(F.col("cum") - F.col("n_tok"), budget))
             .select("doc_id", "n_tok", "shard_id")
         )
-        assigned.write.mode("overwrite").parquet(f"{state_dir}/assign_v{batch_id}")
+        v.put(assigned, "assign_")
         new_total = (
-            sess.read.parquet(f"{state_dir}/assign_v{batch_id}")
+            v.get("assign_")
             .agg((F.sum("n_tok")).cast("bigint").alias("b"))
             .crossJoin(F.broadcast(carried))
             .select((F.col("carried") + F.coalesce(F.col("b"), F.lit(0))).alias("carried"))
         )
-        new_total.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last[0] = max(last[0], batch_id)
+        v.put(new_total)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="assign_v")
-    if last[0] >= 0:
-        versions = [v for v in versions if v <= last[0]]
-    if not versions:  # empty feed, no prior assignments: empty schema
-        return spark.createDataFrame([], schema).select(
+    def empty(batch: DataFrame) -> DataFrame:
+        return batch.select(
             "doc_id",
             F.lit(0).cast("bigint").alias("n_tok"),
             F.lit(0).cast("bigint").alias("shard_id"),
         )
-    return spark.read.parquet(
-        *[f"{state_dir}/assign_v{i}" for i in versions]
+
+    return _run_versioned(
+        _feed(spark, batch_dir, per_file=True), state_dir, checkpoint_dir, step,
+        empty=empty, log="assign_",
+        seed=spark.createDataFrame([(0,)], "carried bigint"),
     )
 
 
@@ -585,53 +564,22 @@ def run_streaming_mv_maintenance(
     ``foreachBatch`` — the same ``mv_partial``/``mv_merge`` the batch
     query (``incremental_agg_maintenance``) composes in one plan, so the
     maintained state converges to the batch answer under ANY chunking of
-    the feed (associative DECIMAL partials).
-
-    State is chained through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``) exactly like ``run_streaming_cdc_merge``: a
-    retried batch id rewrites its own version from its predecessor, so
-    the sink is idempotent on top of at-least-once delivery. Returns the
-    final MV through the shared ``mv_present`` projection. 100 TB: each
-    micro-batch scans ONLY its delta and shuffles |groups| partial rows;
-    the state store is group-cardinality-sized — the continuous-
-    aggregate contract."""
+    the feed (associative DECIMAL partials). Returns the final MV
+    through the shared ``mv_present`` projection; versioned state as in
+    the module docstring. 100 TB: each micro-batch scans ONLY its delta
+    and shuffles |groups| partial rows; the state store is
+    group-cardinality-sized — the continuous-aggregate contract."""
     from ds_mapreduce_spark.operators.relational import mv_merge, mv_partial, mv_present
 
-    schema = spark.read.parquet(orders_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if orders_dir.endswith(".parquet"):
-        base, _, fname = orders_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        orders_dir = base
-    stream = reader.parquet(orders_dir)
-    last_version: list[int] = [-1]
+    def step(batch: DataFrame, v: _Version) -> None:
+        part = mv_partial(batch, ["o_orderpriority"], "o_totalprice")
+        v.put(mv_merge(part) if v.first else mv_merge(v.prev(), part))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = mv_partial(batch_df, ["o_orderpriority"], "o_totalprice")
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            merged = mv_merge(prev, part)
-        else:
-            merged = mv_merge(part)
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, orders_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=mv_present,
+        empty=lambda b: mv_present(mv_merge(mv_partial(b, ["o_orderpriority"], "o_totalprice"))),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty MV schema
-        return mv_present(
-            mv_merge(mv_partial(spark.createDataFrame([], schema),
-                                ["o_orderpriority"], "o_totalprice"))
-        )
-    return mv_present(spark.read.parquet(f"{state_dir}/v{final}"))
 
 
 def run_streaming_scd2(
@@ -647,61 +595,33 @@ def run_streaming_scd2(
     (dropping a compressed row is only safe if nothing ever lands
     between it and its predecessor).
 
-    State is chained through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``) like the CDC twin, so a retried batch id
-    rewrites its own version — idempotent on at-least-once delivery.
-    The per-batch reduction (groupBy MAX per (user, s)) is associative
-    and commutative, so any micro-batching of the input converges to
-    the same state. 100 TB: each micro-batch shuffles |state ∩ batch
-    keys| + |batch| rows once bucketed by user_id; re-versioning
-    touches only keys present in the delta (join state on batch keys);
-    state size is |distinct change instants|, the minimum any exact
-    late-data-correct SCD2 can hold.
+    Versioned state as in the module docstring. The per-batch reduction
+    (groupBy MAX per (user, s)) is associative and commutative, so any
+    micro-batching of the input converges to the same state. 100 TB:
+    each micro-batch shuffles |state ∩ batch keys| + |batch| rows once
+    bucketed by user_id; re-versioning touches only keys present in the
+    delta (join state on batch keys); state size is |distinct change
+    instants|, the minimum any exact late-data-correct SCD2 can hold.
     """
     from ds_mapreduce_spark.operators.relational import (
         purchase_change_rows,
         scd2_versions,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    feed = purchase_change_rows(stream)
-    last_version: list[int] = [-1]
+    def keyed(rows: DataFrame) -> DataFrame:
+        return rows.groupBy("user_id", "s").agg(F.max("cents").alias("cents"))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        rows = batch_df
-        if batch_id > 0:
-            rows = sess.read.parquet(f"{state_dir}/v{batch_id - 1}").unionByName(rows)
-        state = rows.groupBy("user_id", "s").agg(F.max("cents").alias("cents"))
-        state.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def history(state: DataFrame) -> DataFrame:
+        return scd2_versions(state, "user_id", "s", "cents")
 
-    q = (
-        feed.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    def step(batch: DataFrame, v: _Version) -> None:
+        v.put(keyed(batch if v.first else v.prev().unionByName(batch)))
+
+    feed = purchase_change_rows(_feed(spark, events_dir, events=True))
+    return _run_versioned(
+        feed, state_dir, checkpoint_dir, step,
+        present=history, empty=lambda b: history(keyed(b)),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty history schema
-        final_state = (
-            purchase_change_rows(normalize_events_ts(spark.createDataFrame([], schema)))
-            .groupBy("user_id", "s")
-            .agg(F.max("cents").alias("cents"))
-        )
-    else:
-        final_state = spark.read.parquet(f"{state_dir}/v{final}")
-    return scd2_versions(final_state, "user_id", "s", "cents")
 
 
 def run_streaming_hourly_resample(
@@ -719,62 +639,36 @@ def run_streaming_hourly_resample(
     is exact, which an emit-as-you-go design could not do (a carried-
     forward value may change retroactively).
 
-    State is chained through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``) like the MV/SCD2 twins, so a retried batch
-    id rewrites its own version — idempotent on at-least-once delivery;
-    (n, sum_cents) merge is associative+commutative, so any chunking of
-    the feed converges to the batch rollup. 100 TB: each micro-batch
-    shuffles |batch| rows into |users × active hours| state — the
-    continuous-aggregate contract; the fill's window partitions stay
-    bounded by span hours, never event volume."""
+    Versioned state as in the module docstring; (n, sum_cents) merge is
+    associative+commutative, so any chunking of the feed converges to
+    the batch rollup. 100 TB: each micro-batch shuffles |batch| rows
+    into |users × active hours| state — the continuous-aggregate
+    contract; the fill's window partitions stay bounded by span hours,
+    never event volume."""
     from ds_mapreduce_spark.operators.temporal import (
         hourly_cents_rollup,
         resample_forward_fill,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = hourly_cents_rollup(batch_df)
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
+    def step(batch: DataFrame, v: _Version) -> None:
+        part = hourly_cents_rollup(batch)
+        if not v.first:
             part = (
-                prev.unionByName(part)
+                v.prev()
+                .unionByName(part)
                 .groupBy("user_id", "h")
                 .agg(
                     F.sum("n").cast("bigint").alias("n"),
                     F.sum("sum_cents").cast("bigint").alias("sum_cents"),
                 )
             )
-        part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        v.put(part)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, events_dir, events=True), state_dir, checkpoint_dir, step,
+        present=resample_forward_fill,
+        empty=lambda b: resample_forward_fill(hourly_cents_rollup(b)),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty grid schema
-        final_state = hourly_cents_rollup(
-            normalize_events_ts(spark.createDataFrame([], schema))
-        )
-    else:
-        final_state = spark.read.parquet(f"{state_dir}/v{final}")
-    return resample_forward_fill(final_state)
 
 
 def run_streaming_heavy_hitters(
@@ -786,58 +680,27 @@ def run_streaming_heavy_hitters(
     ``keycount_partial``/``keycount_merge`` the batch profile
     (``events_heavy_hitter_profile``) composes in one plan, so the
     maintained state converges to the batch answer under ANY chunking
-    of the feed (counts are associative). State is chained through
-    versioned parquet dirs (``v{batch_id}`` reads ``v{batch_id-1}``)
-    like ``run_streaming_mv_maintenance``: a retried batch id rewrites
-    its own version from its predecessor — idempotent on top of
-    at-least-once delivery. Returns the final top-10 through the
-    shared ``heavy_hitter_present`` projection. 100 TB: each
-    micro-batch scans only its delta and shuffles |keys-in-batch|
-    partial rows; the state store is key-cardinality-sized — the skew
-    monitor you leave running NEXT to the pipeline it tunes."""
+    of the feed (counts are associative). Versioned state as in the
+    module docstring. Returns the final top-10 through the shared
+    ``heavy_hitter_present`` projection. 100 TB: each micro-batch scans
+    only its delta and shuffles |keys-in-batch| partial rows; the state
+    store is key-cardinality-sized — the skew monitor you leave running
+    NEXT to the pipeline it tunes."""
     from ds_mapreduce_spark.operators.skew import (
         heavy_hitter_present,
         keycount_merge,
         keycount_partial,
     )
-    from ds_mapreduce_spark.sources.catalog import normalize_events_ts
 
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
+    def step(batch: DataFrame, v: _Version) -> None:
+        part = keycount_partial(batch)
+        v.put(keycount_merge(part) if v.first else keycount_merge(v.prev(), part))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = keycount_partial(batch_df)
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            merged = keycount_merge(prev, part)
-        else:
-            merged = keycount_merge(part)
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, events_dir, per_file=True, events=True), state_dir,
+        checkpoint_dir, step, present=heavy_hitter_present,
+        empty=lambda b: heavy_hitter_present(keycount_merge(keycount_partial(b))),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state (ADVICE r6): empty top-k
-        return heavy_hitter_present(
-            keycount_merge(keycount_partial(
-                normalize_events_ts(spark.createDataFrame([], schema))
-            ))
-        )
-    return heavy_hitter_present(spark.read.parquet(f"{state_dir}/v{final}"))
 
 
 def run_streaming_cms_sketch(
@@ -860,13 +723,11 @@ def run_streaming_cms_sketch(
     batch answer (exact, estimate, overcount) end-to-end; a real
     deployment reads its probe keys from whatever candidate tracker it
     runs beside the sketch. The final answer derives ENTIRELY from
-    landed state through the shared ``cms_probe_estimates`` scoring
-    tail. State chains through versioned parquet dirs (``v{batch_id}``
-    reads ``v{batch_id-1}``): a retried batch id rewrites its own
-    version from its predecessor — idempotent on at-least-once
-    delivery. 100 TB: each micro-batch shuffles at most 1024 sketch
-    partial rows plus |keys-in-batch| count partials; the sketch merge
-    cost is a constant regardless of stream size."""
+    landed state (``v{n}/sketch``, ``v{n}/counts``) through the shared
+    ``cms_probe_estimates`` scoring tail. 100 TB: each micro-batch
+    shuffles at most 1024 sketch partial rows plus |keys-in-batch|
+    count partials; the sketch merge cost is a constant regardless of
+    stream size."""
     from ds_mapreduce_spark.operators.skew import (
         keycount_merge,
         keycount_partial,
@@ -876,51 +737,28 @@ def run_streaming_cms_sketch(
         cms_merge,
         cms_probe_estimates,
     )
-    from ds_mapreduce_spark.sources.catalog import normalize_events_ts
 
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sketch = cms_counters(batch_df, depth=4, width=256)
-        counts = keycount_partial(batch_df)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            sketch = cms_merge(sess.read.parquet(f"{prev}/sketch"), sketch)
-            counts = keycount_merge(sess.read.parquet(f"{prev}/counts"), counts)
+    def step(batch: DataFrame, v: _Version) -> None:
+        sketch = cms_counters(batch, depth=4, width=256)
+        counts = keycount_partial(batch)
+        if v.first:
+            sketch, counts = cms_merge(sketch), keycount_merge(counts)
         else:
-            sketch = cms_merge(sketch)
-            counts = keycount_merge(counts)
-        cur = f"{state_dir}/v{batch_id}"
-        sketch.write.mode("overwrite").parquet(f"{cur}/sketch")
-        counts.write.mode("overwrite").parquet(f"{cur}/counts")
-        last_version[0] = max(last_version[0], batch_id)
+            sketch = cms_merge(v.prev("sketch"), sketch)
+            counts = keycount_merge(v.prev("counts"), counts)
+        v.put(sketch, "sketch")
+        v.put(counts, "counts")
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    def present(sketch: DataFrame, counts: DataFrame) -> DataFrame:
+        top = counts.orderBy(F.col("n_events").desc(), "user_id").limit(10)
+        return cms_probe_estimates(sketch, top, depth=4, width=256)
+
+    return _run_versioned(
+        _feed(spark, events_dir, per_file=True, events=True), state_dir,
+        checkpoint_dir, step, present=present,
+        empty=lambda b: cms_probe_estimates(cms_counters(b), keycount_partial(b).limit(0)),
+        tables=("sketch", "counts"),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty result, same schema
-        empty = normalize_events_ts(spark.createDataFrame([], schema))
-        return cms_probe_estimates(
-            cms_counters(empty), keycount_partial(empty).limit(0)
-        )
-    sketch = spark.read.parquet(f"{state_dir}/v{final}/sketch")
-    counts = spark.read.parquet(f"{state_dir}/v{final}/counts")
-    top = counts.orderBy(F.col("n_events").desc(), "user_id").limit(10)
-    return cms_probe_estimates(sketch, top, depth=4, width=256)
 
 
 def run_streaming_quantile_sketch(
@@ -941,13 +779,11 @@ def run_streaming_quantile_sketch(
     same trick as ``run_streaming_robust_outliers``) so the twin
     reproduces the batch answer (estimate bounds, exact value,
     containment guarantee) end-to-end through the shared
-    ``qsketch_estimates_from_state`` tail. State chains through
-    versioned parquet dirs (``v{batch_id}`` reads ``v{batch_id-1}``):
-    a retried batch id rewrites its own version from its predecessor —
-    idempotent on at-least-once delivery. 100 TB: each micro-batch
-    shuffles at most |buckets-in-batch| sketch partials plus the
-    batch's distinct (type, cents) pairs; the sketch merge cost is a
-    per-type constant regardless of stream size."""
+    ``qsketch_estimates_from_state`` tail. Versioned state as in the
+    module docstring. 100 TB: each micro-batch shuffles at most
+    |buckets-in-batch| sketch partials plus the batch's distinct
+    (type, cents) pairs; the sketch merge cost is a per-type constant
+    regardless of stream size."""
     from ds_mapreduce_spark.operators.sketch import (
         qsketch_counters,
         qsketch_estimates_from_state,
@@ -955,52 +791,22 @@ def run_streaming_quantile_sketch(
         type_cents_counts,
         type_cents_merge,
     )
-    from ds_mapreduce_spark.sources.catalog import normalize_events_ts
 
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sketch = qsketch_counters(batch_df)
-        vcounts = type_cents_counts(batch_df)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            sketch = qsketch_merge(sess.read.parquet(f"{prev}/sketch"), sketch)
-            vcounts = type_cents_merge(
-                sess.read.parquet(f"{prev}/vcounts"), vcounts
-            )
+    def step(batch: DataFrame, v: _Version) -> None:
+        sketch, vcounts = qsketch_counters(batch), type_cents_counts(batch)
+        if v.first:
+            sketch, vcounts = qsketch_merge(sketch), type_cents_merge(vcounts)
         else:
-            sketch = qsketch_merge(sketch)
-            vcounts = type_cents_merge(vcounts)
-        cur = f"{state_dir}/v{batch_id}"
-        sketch.write.mode("overwrite").parquet(f"{cur}/sketch")
-        vcounts.write.mode("overwrite").parquet(f"{cur}/vcounts")
-        last_version[0] = max(last_version[0], batch_id)
+            sketch = qsketch_merge(v.prev("sketch"), sketch)
+            vcounts = type_cents_merge(v.prev("vcounts"), vcounts)
+        v.put(sketch, "sketch")
+        v.put(vcounts, "vcounts")
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty result schema
-        empty = normalize_events_ts(spark.createDataFrame([], schema))
-        return qsketch_estimates_from_state(
-            qsketch_counters(empty), type_cents_counts(empty)
-        )
-    return qsketch_estimates_from_state(
-        spark.read.parquet(f"{state_dir}/v{final}/sketch"),
-        spark.read.parquet(f"{state_dir}/v{final}/vcounts"),
+    return _run_versioned(
+        _feed(spark, events_dir, per_file=True, events=True), state_dir,
+        checkpoint_dir, step, present=qsketch_estimates_from_state,
+        empty=lambda b: qsketch_estimates_from_state(qsketch_counters(b), type_cents_counts(b)),
+        tables=("sketch", "vcounts"),
     )
 
 
@@ -1022,13 +828,10 @@ def run_streaming_hll_rollup(
     (key-cardinality-sized — the evaluation side, not the production
     state). The final answer derives entirely from landed state through
     the shared ``hll_rollup_from_pgs``/``hll_rollup_present`` tail.
-    State chains through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``): a retried batch id rewrites its own version
-    from its predecessor — idempotent on at-least-once delivery.
-    100 TB: per batch the work is the batch's group partials plus a
-    group-cardinality-sized sketch union — the fact table is never
-    re-read; a year of dailies rolls up by unioning 365 sketch rows
-    per group."""
+    Versioned state as in the module docstring. 100 TB: per batch the
+    work is the batch's group partials plus a group-cardinality-sized
+    sketch union — the fact table is never re-read; a year of dailies
+    rolls up by unioning 365 sketch rows per group."""
     from ds_mapreduce_spark.plans.relational_queries import (
         hll_pgs_merge,
         hll_pgs_partial,
@@ -1036,75 +839,49 @@ def run_streaming_hll_rollup(
         hll_rollup_present,
     )
 
-    schema = spark.read.parquet(orders_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if orders_dir.endswith(".parquet"):
-        base, _, fname = orders_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        orders_dir = base
-    stream = reader.parquet(orders_dir)
-    last_version: list[int] = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        pgs = hll_pgs_partial(batch_df)
-        pri = batch_df.groupBy("o_orderpriority").agg(
-            F.hll_sketch_agg("o_custkey").alias("sk")
-        )
-        custs = batch_df.select("o_orderpriority", "o_custkey").distinct()
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            pgs = hll_pgs_merge(sess.read.parquet(f"{prev}/pgs"), pgs)
+    def step(batch: DataFrame, v: _Version) -> None:
+        pgs = hll_pgs_partial(batch)
+        pri = batch.groupBy("o_orderpriority").agg(F.hll_sketch_agg("o_custkey").alias("sk"))
+        custs = batch.select("o_orderpriority", "o_custkey").distinct()
+        if v.first:
+            pgs = hll_pgs_merge(pgs)
+        else:
+            pgs = hll_pgs_merge(v.prev("pgs"), pgs)
             pri = (
-                sess.read.parquet(f"{prev}/pri")
+                v.prev("pri")
                 .unionByName(pri)
                 .groupBy("o_orderpriority")
                 .agg(F.hll_union_agg("sk").alias("sk"))
             )
-            custs = (
-                sess.read.parquet(f"{prev}/custs").unionByName(custs).distinct()
-            )
-        else:
-            pgs = hll_pgs_merge(pgs)
-        cur = f"{state_dir}/v{batch_id}"
-        pgs.write.mode("overwrite").parquet(f"{cur}/pgs")
-        pri.write.mode("overwrite").parquet(f"{cur}/pri")
-        custs.write.mode("overwrite").parquet(f"{cur}/custs")
-        last_version[0] = max(last_version[0], batch_id)
+            custs = v.prev("custs").unionByName(custs).distinct()
+        v.put(pgs, "pgs")
+        v.put(pri, "pri")
+        v.put(custs, "custs")
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty result schema
-        empty = spark.createDataFrame([], schema)
-        direct = empty.groupBy("o_orderpriority").agg(
+    def present(pgs: DataFrame, pri: DataFrame, custs: DataFrame) -> DataFrame:
+        direct = (
+            pri.groupBy("o_orderpriority")
+            .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("__direct"))
+            .join(
+                custs.groupBy("o_orderpriority").agg(
+                    F.countDistinct("o_custkey").cast("bigint").alias("exact_custs")
+                ),
+                "o_orderpriority",
+            )
+        )
+        return hll_rollup_present(hll_rollup_from_pgs(pgs), direct)
+
+    def empty(batch: DataFrame) -> DataFrame:
+        direct = batch.groupBy("o_orderpriority").agg(
             F.hll_sketch_estimate(F.hll_sketch_agg("o_custkey")).alias("__direct"),
             F.countDistinct("o_custkey").cast("bigint").alias("exact_custs"),
         )
-        return hll_rollup_present(
-            hll_rollup_from_pgs(hll_pgs_partial(empty)), direct
-        )
-    rolled = hll_rollup_from_pgs(spark.read.parquet(f"{state_dir}/v{final}/pgs"))
-    direct = (
-        spark.read.parquet(f"{state_dir}/v{final}/pri")
-        .groupBy("o_orderpriority")
-        .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("__direct"))
-        .join(
-            spark.read.parquet(f"{state_dir}/v{final}/custs")
-            .groupBy("o_orderpriority")
-            .agg(
-                F.countDistinct("o_custkey").cast("bigint").alias("exact_custs")
-            ),
-            "o_orderpriority",
-        )
+        return hll_rollup_present(hll_rollup_from_pgs(hll_pgs_partial(batch)), direct)
+
+    return _run_versioned(
+        _feed(spark, orders_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=present, empty=empty, tables=("pgs", "pri", "custs"),
     )
-    return hll_rollup_present(rolled, direct)
 
 
 def run_streaming_priority_sample(
@@ -1124,47 +901,23 @@ def run_streaming_priority_sample(
     pass + a TakeOrdered(k); state never exceeds k rows no matter how
     long the stream runs — the sampling sibling of the CMS twin's
     constant-size sketch. The final answer derives from landed state
-    through the shared ``priority_sample_present`` tail. State chains
-    through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``): a retried batch id rewrites its own version
-    from its predecessor — idempotent on at-least-once delivery."""
+    through the shared ``priority_sample_present`` tail; versioned
+    state as in the module docstring."""
     from ds_mapreduce_spark.plans.text_queries import (
         priority_sample_present,
         priority_scores,
         priority_top_k,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    def step(batch: DataFrame, v: _Version) -> None:
+        top = priority_top_k(priority_scores(batch), 50)
+        v.put(top if v.first else priority_top_k(v.prev().unionByName(top), 50))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        top = priority_top_k(priority_scores(batch_df), 50)
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            top = priority_top_k(prev.unionByName(top), 50)
-        top.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=priority_sample_present,
+        empty=lambda b: priority_sample_present(priority_top_k(priority_scores(b))),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty sample schema
-        empty = spark.createDataFrame([], schema)
-        return priority_sample_present(priority_top_k(priority_scores(empty)))
-    return priority_sample_present(spark.read.parquet(f"{state_dir}/v{final}"))
 
 
 def run_streaming_bm25_index(
@@ -1191,17 +944,13 @@ def run_streaming_bm25_index(
     scorer is a pure function of the final state, ANY chunking or
     arrival order of the feed converges to the batch answer exactly —
     the invariant tests/test_streaming.py pins (chunked + shuffled
-    feed vs the batch bm25_search top-20).
+    feed vs the batch bm25_search top-20). Versioned state as in the
+    module docstring.
 
-    State chains through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``) like the sibling twins: a retried batch id
-    rewrites its own version from its predecessor — idempotent on
-    at-least-once delivery; resume-with-nothing-new and the empty feed
-    take the landed/empty paths via ``_resolve_final_version``. 100 TB:
-    each micro-batch tokenizes only its delta and shuffles |delta
-    postings| rows; postings/dfreq state is bucketed by token in a real
-    deployment so the merge is shuffle-free; the per-query probe cost
-    is posting-list-sized."""
+    100 TB: each micro-batch tokenizes only its delta and shuffles
+    |delta postings| rows; postings/dfreq state is bucketed by token in
+    a real deployment so the merge is shuffle-free; the per-query probe
+    cost is posting-list-sized."""
     from pyspark.sql import Window
 
     from ds_mapreduce_spark.operators.search import (
@@ -1212,75 +961,49 @@ def run_streaming_bm25_index(
         bm25_scores_from_index,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        post = bm25_postings_partial(batch_df)
-        dl = bm25_docstats_partial(batch_df)
+    def step(batch: DataFrame, v: _Version) -> None:
+        post = bm25_postings_partial(batch)
+        dl = bm25_docstats_partial(batch)
         dfreq = bm25_dfreq_partial(post)
         stats = bm25_corpus_stats_partial(dl)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            post = sess.read.parquet(f"{prev}/postings").unionByName(post)
-            dl = sess.read.parquet(f"{prev}/dl").unionByName(dl)
+        if not v.first:
+            post = v.prev("postings").unionByName(post)
+            dl = v.prev("dl").unionByName(dl)
             dfreq = (
-                sess.read.parquet(f"{prev}/dfreq")
+                v.prev("dfreq")
                 .unionByName(dfreq)
                 .groupBy("tok")
                 .agg(F.sum("dft").cast("bigint").alias("dft"))
             )
             stats = (
-                sess.read.parquet(f"{prev}/stats")
+                v.prev("stats")
                 .unionByName(stats)
                 .agg(
                     F.sum("d").cast("bigint").alias("d"),
                     F.sum("sum_dl").cast("bigint").alias("sum_dl"),
                 )
             )
-        cur = f"{state_dir}/v{batch_id}"
-        post.write.mode("overwrite").parquet(f"{cur}/postings")
-        dl.write.mode("overwrite").parquet(f"{cur}/dl")
-        dfreq.write.mode("overwrite").parquet(f"{cur}/dfreq")
-        stats.write.mode("overwrite").parquet(f"{cur}/stats")
-        last_version[0] = max(last_version[0], batch_id)
+        v.put(post, "postings")
+        v.put(dl, "dl")
+        v.put(dfreq, "dfreq")
+        v.put(stats, "stats")
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    def present(*index: DataFrame) -> DataFrame:
+        # same bounded presentation as the batch query: TakeOrdered(20)
+        # first, rank window on <=20 rows
+        agg = bm25_scores_from_index(*index)
+        top = agg.orderBy(F.col("bm25_scaled").desc(), "doc_id").limit(20)
+        w = Window.orderBy(F.col("bm25_scaled").desc(), "doc_id")
+        return top.withColumn("rnk", F.row_number().over(w).cast("bigint"))
+
+    def empty(batch: DataFrame) -> DataFrame:
+        post, dl = bm25_postings_partial(batch), bm25_docstats_partial(batch)
+        return present(post, dl, bm25_dfreq_partial(post), bm25_corpus_stats_partial(dl))
+
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=present, empty=empty, tables=("postings", "dl", "dfreq", "stats"),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty index
-        empty = spark.createDataFrame([], schema)
-        post = bm25_postings_partial(empty)
-        dl = bm25_docstats_partial(empty)
-        agg = bm25_scores_from_index(
-            post, dl, bm25_dfreq_partial(post), bm25_corpus_stats_partial(dl)
-        )
-    else:
-        cur = f"{state_dir}/v{final}"
-        agg = bm25_scores_from_index(
-            spark.read.parquet(f"{cur}/postings"),
-            spark.read.parquet(f"{cur}/dl"),
-            spark.read.parquet(f"{cur}/dfreq"),
-            spark.read.parquet(f"{cur}/stats"),
-        )
-    # same bounded presentation as the batch query: TakeOrdered(20)
-    # first, rank window on <=20 rows
-    top = agg.orderBy(F.col("bm25_scaled").desc(), "doc_id").limit(20)
-    w = Window.orderBy(F.col("bm25_scaled").desc(), "doc_id")
-    return top.withColumn("rnk", F.row_number().over(w).cast("bigint"))
 
 
 def run_streaming_robust_outliers(
@@ -1295,58 +1018,43 @@ def run_streaming_robust_outliers(
     final exact median/MAD/outlier derivation
     (``robust_census_from_counts``) is a pure function of that state —
     so ANY chunking or arrival order of the feed reproduces the batch
-    answer bit-for-bit, which the equivalence test pins. State chains
-    through versioned parquet dirs like the sibling twins (idempotent
-    per batch id on at-least-once delivery; resume/empty-feed via
-    ``_resolve_final_version``). 100 TB: per batch, |delta histogram|
-    rows shuffle; state is Σ per-user distinct cents — bounded by the
-    value domain (money quantized to cents), the explicit trade
-    against an O(1)-state approximate sketch."""
+    answer bit-for-bit, which the equivalence test pins. Versioned
+    state as in the module docstring. 100 TB: per batch, |delta
+    histogram| rows shuffle; state is Σ per-user distinct cents —
+    bounded by the value domain (money quantized to cents), the
+    explicit trade against an O(1)-state approximate sketch."""
     from ds_mapreduce_spark.operators.robust import (
         robust_census_from_counts,
         user_cents_counts,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    last_version: list[int] = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = user_cents_counts(batch_df)
-        if batch_id > 0:
+    def step(batch: DataFrame, v: _Version) -> None:
+        part = user_cents_counts(batch)
+        if not v.first:
             part = (
-                sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
+                v.prev()
                 .unionByName(part)
                 .groupBy("user_id", "cents")
                 .agg(F.sum("cnt").cast("bigint").alias("cnt"))
             )
-        part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        v.put(part)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, events_dir, per_file=True, events=True), state_dir,
+        checkpoint_dir, step, present=robust_census_from_counts,
+        empty=lambda b: robust_census_from_counts(user_cents_counts(b)),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty census
-        counts = user_cents_counts(
-            normalize_events_ts(spark.createDataFrame([], schema))
-        )
-    else:
-        counts = spark.read.parquet(f"{state_dir}/v{final}")
-    return robust_census_from_counts(counts)
+
+
+def _lsh_cross_pairs(bands_new: DataFrame, index: DataFrame) -> DataFrame:
+    """(doc_a < doc_b) pairs of batch docs colliding with landed ones."""
+    hit = bands_new.join(
+        index.withColumnRenamed("doc_id", "doc_old"), ["band", "band_key"]
+    )
+    return hit.select(
+        F.least("doc_id", "doc_old").alias("doc_a"),
+        F.greatest("doc_id", "doc_old").alias("doc_b"),
+    )
 
 
 def run_streaming_minhash_lsh(
@@ -1369,9 +1077,8 @@ def run_streaming_minhash_lsh(
     so the UNION of per-batch pair sets over any chunking equals the
     one-shot batch ``dedup_minhash_lsh`` pair set exactly, the
     invariant the equivalence test pins (normalized doc_a < doc_b,
-    distinct at the final read; per-batch pair files are the append
-    log, idempotent per batch id like the verdict log of the
-    incremental-dedup twin).
+    distinct at the final read; the per-batch pair files are the log
+    of the module docstring's contract).
 
     100 TB: per batch the work is |batch bands| map-side rows plus a
     join keyed on (band, band_key) against the index — posting-list
@@ -1385,56 +1092,24 @@ def run_streaming_minhash_lsh(
     )
 
     num_hashes, band_size = 8, 2
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sig = minhash_signatures(batch_df, k=3, num_hashes=num_hashes)
+    def step(batch: DataFrame, v: _Version) -> None:
+        sig = minhash_signatures(batch, k=3, num_hashes=num_hashes)
         bands_new = lsh_bands(sig, num_hashes, band_size).localCheckpoint(eager=True)
         # within-batch pairs from the SAME checkpointed band table that
         # appends into the index: one signature pipeline per batch
-        within = lsh_bucket_pairs(bands_new)
-        if batch_id > 0:
-            index = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            hit = bands_new.join(
-                index.withColumnRenamed("doc_id", "doc_old"), ["band", "band_key"]
-            )
-            cross = hit.select(
-                F.least("doc_id", "doc_old").alias("doc_a"),
-                F.greatest("doc_id", "doc_old").alias("doc_b"),
-            )
-            pairs = within.unionByName(cross).distinct()
+        pairs = lsh_bucket_pairs(bands_new)
+        merged = bands_new
+        if not v.first:
+            index = v.prev()
+            pairs = pairs.unionByName(_lsh_cross_pairs(bands_new, index)).distinct()
             merged = index.unionByName(bands_new)
-        else:
-            pairs = within
-            merged = bands_new
-        pairs.write.mode("overwrite").parquet(f"{state_dir}/pairs_v{batch_id}")
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        v.put(pairs, "pairs_")
+        v.put(merged)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="pairs_v")
-    if last_version[0] >= 0:
-        versions = [v for v in versions if v <= last_version[0]]
-    if not versions:  # empty feed, no prior pairs: empty pair schema
-        return spark.createDataFrame([], "doc_a bigint, doc_b bigint")
-    return (
-        spark.read.parquet(*[f"{state_dir}/pairs_v{i}" for i in versions])
-        .distinct()
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=DataFrame.distinct, empty="doc_a bigint, doc_b bigint", log="pairs_",
     )
 
 
@@ -1472,10 +1147,8 @@ def run_streaming_connected_components(
     connectivity, and min-id canonicality), untouched components pass
     through unread. CC(star(CC(E1)) u E2) = CC(E1 u E2) — the
     associativity that makes min-id labels a mergeable state, pinned by
-    the equivalence test under a 4-way-chunked feed. State chains
-    through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``): a retried batch id rewrites its own version
-    from its predecessor — idempotent on at-least-once delivery.
+    the equivalence test under a 4-way-chunked feed. Versioned state as
+    in the module docstring.
 
     100 TB: per batch the work is |batch bands| probe rows against a
     band_key-bucketed index, a posting-list-sized verify join, and a
@@ -1495,74 +1168,38 @@ def run_streaming_connected_components(
     )
 
     k, num_hashes, band_size, threshold = 3, 8, 2, 0.8
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        sig = minhash_signatures(batch_df, k=k, num_hashes=num_hashes)
+    def step(batch: DataFrame, v: _Version) -> None:
+        sig = minhash_signatures(batch, k=k, num_hashes=num_hashes)
         bands_new = lsh_bands(sig, num_hashes, band_size).localCheckpoint(eager=True)
-        prof_new = shingle_profiles(batch_df, k).select(
-            "doc_id", "sh", "n_shingles"
-        )
-        within = lsh_bucket_pairs(bands_new)
-        cur = f"{state_dir}/v{batch_id}"
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            index = sess.read.parquet(f"{prev}/bands")
-            hit = bands_new.join(
-                index.withColumnRenamed("doc_id", "doc_old"), ["band", "band_key"]
-            )
-            cross = hit.select(
-                F.least("doc_id", "doc_old").alias("doc_a"),
-                F.greatest("doc_id", "doc_old").alias("doc_b"),
-            )
-            pairs = within.unionByName(cross).distinct()
-            index.unionByName(bands_new).write.mode("overwrite").parquet(
-                f"{cur}/bands"
-            )
-            sess.read.parquet(f"{prev}/profiles").unionByName(
-                prof_new
-            ).write.mode("overwrite").parquet(f"{cur}/profiles")
-            prev_labels = sess.read.parquet(f"{prev}/labels")
+        prof_new = shingle_profiles(batch, k).select("doc_id", "sh", "n_shingles")
+        pairs = lsh_bucket_pairs(bands_new)
+        if v.first:
+            v.put(bands_new, "bands")
+            v.put(prof_new, "profiles")
+            prev_labels = v.sess.createDataFrame([], "id bigint, comp bigint")
         else:
-            pairs = within
-            bands_new.write.mode("overwrite").parquet(f"{cur}/bands")
-            prof_new.write.mode("overwrite").parquet(f"{cur}/profiles")
-            prev_labels = sess.createDataFrame([], "id bigint, comp bigint")
-        profiles = sess.read.parquet(f"{cur}/profiles")
+            index = v.prev("bands")
+            pairs = pairs.unionByName(_lsh_cross_pairs(bands_new, index)).distinct()
+            v.put(index.unionByName(bands_new), "bands")
+            v.put(v.prev("profiles").unionByName(prof_new), "profiles")
+            prev_labels = v.prev("labels")
         edges = (
-            jaccard_verify_pairs(pairs, profiles, threshold)
+            jaccard_verify_pairs(pairs, v.get("profiles"), threshold)
             .select("doc_a", "doc_b")
             .localCheckpoint(eager=True)
         )
         # component-local fold: re-solve ONLY components a new edge
         # touches; untouched labels pass through unread (cc_fold —
         # the algebra is property-tested against union-find)
-        cc_fold(prev_labels, edges).write.mode("overwrite").parquet(
-            f"{cur}/labels"
-        )
-        last_version[0] = max(last_version[0], batch_id)
+        v.put(cc_fold(prev_labels, edges), "labels")
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty label schema
-        return spark.createDataFrame([], "doc_id bigint, comp_id bigint")
-    return spark.read.parquet(f"{state_dir}/v{final}/labels").select(
-        F.col("id").alias("doc_id"), F.col("comp").alias("comp_id")
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=lambda labels: labels.select(
+            F.col("id").alias("doc_id"), F.col("comp").alias("comp_id")
+        ),
+        empty="doc_id bigint, comp_id bigint", tables=("labels",),
     )
 
 
@@ -1582,11 +1219,8 @@ def run_streaming_pmi_counts(
     to the partials: a pair seen 3 + 2 times across two batches must
     clear the floor after the merge).
 
-    State is chained through versioned parquet dirs
-    (``uni_v{batch_id}``/``big_v{batch_id}`` read their
-    ``{batch_id-1}`` predecessors) like ``run_streaming_heavy_hitters``
-    — a retried batch id rewrites its own version from its
-    predecessor, idempotent on top of at-least-once delivery.
+    Versioned state as in the module docstring, in two tables beside
+    the version dirs (``uni_v{n}``, ``big_v{n}``).
 
     100 TB: each micro-batch scans only its delta and shuffles
     vocab/bigram-vocab-sized partials (hot tokens absorbed map-side);
@@ -1600,57 +1234,21 @@ def run_streaming_pmi_counts(
         pmi_unigram_partial,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        uni_part = pmi_unigram_partial(batch_df)
-        big_part = pmi_bigram_partial(batch_df)
-        if batch_id > 0:
-            uni = pmi_unigram_merge(
-                sess.read.parquet(f"{state_dir}/uni_v{batch_id - 1}"), uni_part
-            )
-            big = pmi_bigram_merge(
-                sess.read.parquet(f"{state_dir}/big_v{batch_id - 1}"), big_part
-            )
+    def step(batch: DataFrame, v: _Version) -> None:
+        uni, big = pmi_unigram_partial(batch), pmi_bigram_partial(batch)
+        if v.first:
+            uni, big = pmi_unigram_merge(uni), pmi_bigram_merge(big)
         else:
-            uni = pmi_unigram_merge(uni_part)
-            big = pmi_bigram_merge(big_part)
-        uni.write.mode("overwrite").parquet(f"{state_dir}/uni_v{batch_id}")
-        big.write.mode("overwrite").parquet(f"{state_dir}/big_v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+            uni = pmi_unigram_merge(v.prev("uni_"), uni)
+            big = pmi_bigram_merge(v.prev("big_"), big)
+        v.put(uni, "uni_")
+        v.put(big, "big_")
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    # _resolve_final_version semantics under this job's uni_v/big_v
-    # naming: the max batch id that fired, else the latest landed
-    # version from a previous run, else None
-    if last_version[0] >= 0:
-        final: int | None = last_version[0]
-    else:
-        landed = existing_state_versions(spark, state_dir, prefix="uni_v")
-        final = landed[-1] if landed else None
-    if final is None:  # empty feed, no prior state: empty top-k shape
-        empty = spark.createDataFrame([], schema)
-        return pmi_topk_from_counts(
-            pmi_unigram_partial(empty), pmi_bigram_partial(empty)
-        )
-    return pmi_topk_from_counts(
-        spark.read.parquet(f"{state_dir}/uni_v{final}"),
-        spark.read.parquet(f"{state_dir}/big_v{final}"),
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=pmi_topk_from_counts,
+        empty=lambda b: pmi_topk_from_counts(pmi_unigram_partial(b), pmi_bigram_partial(b)),
+        tables=("uni_", "big_"),
     )
 
 
@@ -1677,10 +1275,10 @@ def run_streaming_winnow_screen(
     WITHIN the batch and (b) batch fps hitting the landed index —
     and a hit flags BOTH members, retro-flagging the earlier doc the
     way `run_streaming_minhash_lsh` emits a pair when its LATER
-    member arrives. The union of per-batch flag emissions over any
-    chunking therefore equals the one-shot batch screen
-    (`winnow_flagged_docs`: fp census count >= 2) EXACTLY — the
-    invariant `tests/test_streaming.py` pins.
+    member arrives. The union of per-batch flag emissions (the
+    ``flagged_`` log) over any chunking therefore equals the one-shot
+    batch screen (`winnow_flagged_docs`: fp census count >= 2)
+    EXACTLY — the invariant `tests/test_streaming.py` pins.
 
     100 TB: per batch the work is |batch| map-side fingerprinting at
     winnowing's ~2/(w+1) density plus one join keyed on the 8-byte fp
@@ -1691,20 +1289,9 @@ def run_streaming_winnow_screen(
     from ds_mapreduce_spark.operators.dedup import winnowing_fingerprints
 
     w = L - k + 1
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        fps_new = winnowing_fingerprints(batch_df, k=k, w=w).localCheckpoint(
-            eager=True
-        )
+    def step(batch: DataFrame, v: _Version) -> None:
+        fps_new = winnowing_fingerprints(batch, k=k, w=w).localCheckpoint(eager=True)
         # within-batch collisions: distinct (doc, fp) rows, so a count
         # >= 2 is >= 2 distinct docs — same census as the batch screen
         dup_fp = (
@@ -1712,45 +1299,25 @@ def run_streaming_winnow_screen(
             .agg(F.count(F.lit(1)).alias("c"))
             .where(F.col("c") >= 2)
         )
-        within = fps_new.join(dup_fp.select("fp"), "fp", "left_semi").select(
-            "doc_id"
-        )
-        if batch_id > 0:
-            index = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            hit = fps_new.join(
-                index.withColumnRenamed("doc_id", "doc_old"), "fp"
-            )
+        within = fps_new.join(dup_fp.select("fp"), "fp", "left_semi").select("doc_id")
+        if v.first:
+            flagged, merged = within.distinct(), fps_new
+        else:
+            index = v.prev()
+            hit = fps_new.join(index.withColumnRenamed("doc_id", "doc_old"), "fp")
             flagged = (
                 within.unionByName(hit.select("doc_id"))
                 .unionByName(hit.select(F.col("doc_old").alias("doc_id")))
                 .distinct()
             )
             merged = index.unionByName(fps_new)
-        else:
-            flagged = within.distinct()
-            merged = fps_new
-        flagged.write.mode("overwrite").parquet(
-            f"{state_dir}/flagged_v{batch_id}"
-        )
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        v.put(flagged, "flagged_")
+        v.put(merged)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=DataFrame.distinct, empty="doc_id bigint", log="flagged_",
     )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="flagged_v")
-    if last_version[0] >= 0:
-        versions = [v for v in versions if v <= last_version[0]]
-    if not versions:  # empty feed: empty flag set with the right schema
-        return spark.createDataFrame([], "doc_id bigint")
-    return spark.read.parquet(
-        *[f"{state_dir}/flagged_v{i}" for i in versions]
-    ).distinct()
 
 
 def run_streaming_ingest_manifest(
@@ -1766,8 +1333,9 @@ def run_streaming_ingest_manifest(
     micro-batch is scrubbed, quality-gated, deduped against the
     accumulated kept-fingerprint store, and its kept docs are routed
     into token-budget shards continuing from the carried offset. Two
-    state tables (kept fps; 1-row carried token total), one appended
-    manifest log — the decision record per document, written once.
+    seeded state tables (kept fps; 1-row carried token total), one
+    appended manifest log — the decision record per document, written
+    once, and the answer.
 
     Shared code: the per-doc stage is ``operators.ingest.scored_rows``
     verbatim (map-only, slice-able); ownership and routing both walk
@@ -1779,39 +1347,18 @@ def run_streaming_ingest_manifest(
     the kept SET per fingerprint is still one doc and shard fills
     remain budget-bounded, only ownership/routing identity shifts
     with arrival (documented, same as the incremental-dedup twin's
-    dup_of_history note). State chains through versioned parquet dirs
-    (idempotent per batch id); resume/empty-feed via the shared
-    guards. 100 TB: per batch the work is |batch| map-only rows, one
-    |batch fp| probe of the store, and a batch-local prefix sum — the
-    corpus is never rescanned."""
+    dup_of_history note). Versioned state as in the module docstring.
+    100 TB: per batch the work is |batch| map-only rows, one |batch
+    fp| probe of the store, and a batch-local prefix sum — the corpus
+    is never rescanned."""
+    from pyspark.sql import Window
+
     from ds_mapreduce_spark.operators.ingest import scored_rows
     from ds_mapreduce_spark.operators.relational import prefix_sum_over_total_order
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
-
-    spark.createDataFrame([(0,)], "carried bigint").write.mode("overwrite").parquet(
-        f"{state_dir}/v-1/carried"
-    )
-    spark.createDataFrame([], "fp string").write.mode("overwrite").parquet(
-        f"{state_dir}/v-1/fps"
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        sess = batch_df.sparkSession
-        prev = f"{state_dir}/v{batch_id - 1}"
-        store = sess.read.parquet(f"{prev}/fps")
-        carried = sess.read.parquet(f"{prev}/carried")
-
-        scored = scored_rows(batch_df).localCheckpoint(eager=True)
+    def step(batch: DataFrame, v: _Version) -> None:
+        store, carried = v.prev("fps"), v.prev("carried")
+        scored = scored_rows(batch).localCheckpoint(eager=True)
         qual = scored.where(F.col("q") >= F.lit(quality_threshold))
         fresh = qual.join(store, "fp", "left_anti")
         wfp = Window.partitionBy("fp").orderBy("okey", "doc_id")
@@ -1831,56 +1378,36 @@ def run_streaming_ingest_manifest(
                 "n_tok",
             )
         )
-        manifest = (
-            scored.join(kept.select("doc_id", "__shard"), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.when(
-                    F.col("q") < F.lit(quality_threshold), F.lit("low_quality")
-                )
-                .when(F.col("__shard").isNotNull(), F.lit("kept"))
-                .otherwise(F.lit("dup"))
-                .alias("verdict"),
-                "n_tok",
-                F.coalesce(F.col("__shard"), F.lit(-1))
-                .cast("bigint")
-                .alias("shard_id"),
-            )
+        verdict = (
+            F.when(F.col("q") < F.lit(quality_threshold), F.lit("low_quality"))
+            .when(F.col("__shard").isNotNull(), F.lit("kept"))
+            .otherwise(F.lit("dup"))
         )
-        cur = f"{state_dir}/v{batch_id}"
-        manifest.write.mode("overwrite").parquet(f"{state_dir}/manifest_v{batch_id}")
-        store.unionByName(owner.select("fp")).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{cur}/fps")
+        manifest = scored.join(kept.select("doc_id", "__shard"), "doc_id", "left").select(
+            "doc_id",
+            verdict.alias("verdict"),
+            "n_tok",
+            F.coalesce(F.col("__shard"), F.lit(-1)).cast("bigint").alias("shard_id"),
+        )
+        v.put(manifest, "manifest_")
+        v.put(store.unionByName(owner.select("fp")).distinct(), "fps")
         new_total = (
-            sess.read.parquet(f"{state_dir}/manifest_v{batch_id}")
+            v.get("manifest_")
             .where(F.col("verdict") == "kept")
             .agg(F.sum("n_tok").cast("bigint").alias("b"))
             .crossJoin(F.broadcast(carried))
-            .select(
-                (F.col("carried") + F.coalesce(F.col("b"), F.lit(0))).alias("carried")
-            )
+            .select((F.col("carried") + F.coalesce(F.col("b"), F.lit(0))).alias("carried"))
         )
-        new_total.write.mode("overwrite").parquet(f"{cur}/carried")
-        last_version[0] = max(last_version[0], batch_id)
+        v.put(new_total, "carried")
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir, prefix="manifest_v")
-    if last_version[0] >= 0:
-        versions = [v for v in versions if v <= last_version[0]]
-    if not versions:  # empty feed, no prior manifest: empty schema
-        return spark.createDataFrame(
-            [], "doc_id bigint, verdict string, n_tok bigint, shard_id bigint"
-        )
-    return spark.read.parquet(
-        *[f"{state_dir}/manifest_v{i}" for i in versions]
+    seed = {
+        "carried": spark.createDataFrame([(0,)], "carried bigint"),
+        "fps": spark.createDataFrame([], "fp string"),
+    }
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        empty="doc_id bigint, verdict string, n_tok bigint, shard_id bigint",
+        log="manifest_", seed=seed,
     )
 
 
@@ -1907,53 +1434,32 @@ def run_streaming_ivf_index(
     ``ivf_topk`` probe the batch ``knn_ivf`` runs (assigned= the
     state), so any chunking of the feed reproduces the batch top-k
     exactly — assignment is per-vector against fixed centroids, so
-    order cannot matter; the equivalence test pins it. State chains
-    through versioned parquet dirs (idempotent per batch id);
-    resume/empty-feed via the shared guards. 100 TB: per batch the
-    work is |batch| x |centroids| broadcast scores; the index is
-    bucketed by centroid_id in a real deployment so a query touches
-    nprobe posting lists, never the corpus."""
+    order cannot matter; the equivalence test pins it. Versioned state
+    as in the module docstring. 100 TB: per batch the work is |batch|
+    x |centroids| broadcast scores; the index is bucketed by
+    centroid_id in a real deployment so a query touches nprobe
+    posting lists, never the corpus."""
     from ds_mapreduce_spark.operators.similarity import (
         assign_to_centroids,
         ivf_topk,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if emb_dir.endswith(".parquet"):
-        base, _, fname = emb_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        emb_dir = base
-    stream = reader.parquet(emb_dir)
-    last_version: list[int] = [-1]
+    def step(batch: DataFrame, v: _Version) -> None:
+        part = assign_to_centroids(batch, centroids)
+        v.put(part if v.first else v.prev().unionByName(part))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = assign_to_centroids(batch_df, centroids)
-        if batch_id > 0:
-            part = sess.read.parquet(f"{state_dir}/v{batch_id - 1}").unionByName(part)
-        part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+    def present(index: DataFrame) -> DataFrame:
+        queries = index.where(F.col("vec_id") < n_queries).select("vec_id", "embedding")
+        return ivf_topk(
+            corpus=index, queries=queries, centroids=centroids,
+            k=k, nprobe=nprobe, assigned=index,
+        ).select(
+            "query_id", "neighbor_id", "score", F.col("rnk").cast("bigint").alias("rnk")
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior index
-        index = assign_to_centroids(spark.createDataFrame([], schema), centroids)
-    else:
-        index = spark.read.parquet(f"{state_dir}/v{final}")
-    queries = index.where(F.col("vec_id") < n_queries).select("vec_id", "embedding")
-    return ivf_topk(
-        corpus=index, queries=queries, centroids=centroids,
-        k=k, nprobe=nprobe, assigned=index,
-    ).select(
-        "query_id", "neighbor_id", "score", F.col("rnk").cast("bigint").alias("rnk")
+    return _run_versioned(
+        _feed(spark, emb_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=present, empty=lambda b: present(assign_to_centroids(b, centroids)),
     )
 
 
@@ -1981,14 +1487,10 @@ def run_streaming_dsir_selection(
     corpus re-reads — re-scoring touches the profile sketch and a
     <=1024-row broadcast only.
 
-    State chains through versioned parquet dirs (``v{batch_id}`` reads
-    ``v{batch_id-1}``): a retried batch id rewrites its own version
-    from its predecessor — idempotent on at-least-once delivery;
-    resume-with-nothing-new and the empty feed take the landed/empty
-    paths via ``_resolve_final_version``. 100 TB: each micro-batch
-    tokenizes only its delta; the weight table stays <=1024 rows at
-    any scale; docprof is bucketed by doc_id in a real deployment so
-    the append is shuffle-free."""
+    Versioned state as in the module docstring. 100 TB: each
+    micro-batch tokenizes only its delta; the weight table stays
+    <=1024 rows at any scale; docprof is bucketed by doc_id in a real
+    deployment so the append is shuffle-free."""
     from ds_mapreduce_spark.operators.importance import (
         dsir_bucket_merge,
         dsir_bucket_partial,
@@ -1997,50 +1499,22 @@ def run_streaming_dsir_selection(
         dsir_token_buckets,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-    last_version: list[int] = [-1]
+    def step(batch: DataFrame, v: _Version) -> None:
+        tb = dsir_token_buckets(batch)
+        bucketw, prof = dsir_bucket_partial(tb), dsir_docprof_partial(tb)
+        if not v.first:
+            bucketw = dsir_bucket_merge(v.prev("bucketw").unionByName(bucketw))
+            prof = v.prev("docprof").unionByName(prof)
+        v.put(bucketw, "bucketw")
+        v.put(prof, "docprof")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        tb = dsir_token_buckets(batch_df)
-        bucketw = dsir_bucket_partial(tb)
-        prof = dsir_docprof_partial(tb)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            bucketw = dsir_bucket_merge(
-                sess.read.parquet(f"{prev}/bucketw").unionByName(bucketw)
-            )
-            prof = sess.read.parquet(f"{prev}/docprof").unionByName(prof)
-        cur = f"{state_dir}/v{batch_id}"
-        bucketw.write.mode("overwrite").parquet(f"{cur}/bucketw")
-        prof.write.mode("overwrite").parquet(f"{cur}/docprof")
-        last_version[0] = max(last_version[0], batch_id)
+    def empty(batch: DataFrame) -> DataFrame:
+        tb = dsir_token_buckets(batch)
+        return dsir_select_from_state(dsir_docprof_partial(tb), dsir_bucket_partial(tb))
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: empty selection
-        empty = spark.createDataFrame([], schema)
-        tb = dsir_token_buckets(empty)
-        return dsir_select_from_state(
-            dsir_docprof_partial(tb), dsir_bucket_partial(tb)
-        )
-    cur = f"{state_dir}/v{final}"
-    return dsir_select_from_state(
-        spark.read.parquet(f"{cur}/docprof"),
-        spark.read.parquet(f"{cur}/bucketw"),
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=dsir_select_from_state, empty=empty, tables=("docprof", "bucketw"),
     )
 
 
@@ -2060,55 +1534,28 @@ def run_streaming_pca_gramian(
     converges to the batch answer exactly. This is the
     embedding-telemetry-at-ingest tier: anisotropy drift shows up per
     micro-batch without ever rescanning landed vectors, at dim^2 state
-    whatever the corpus size.
-
-    Versioned-state contract as the siblings: ``v{batch_id}`` reads
-    ``v{batch_id-1}`` (idempotent on at-least-once);
-    resume-with-nothing-new and the empty feed take the landed/empty
-    paths via ``_resolve_final_version``."""
+    whatever the corpus size. Versioned state as in the module
+    docstring (``v{n}/gram``)."""
     from ds_mapreduce_spark.operators.similarity import (
         pca_gramian_merge,
         pca_gramian_partial,
         pca_power_from_gramian,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if emb_dir.endswith(".parquet"):
-        base, _, fname = emb_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        emb_dir = base
-    stream = reader.parquet(emb_dir)
-    last_version: list[int] = [-1]
+    def step(batch: DataFrame, v: _Version) -> None:
+        gram = pca_gramian_partial(batch)
+        if not v.first:
+            gram = pca_gramian_merge(v.prev("gram").unionByName(gram))
+        v.put(gram, "gram")
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        gram = pca_gramian_partial(batch_df)
-        if batch_id > 0:
-            prev = f"{state_dir}/v{batch_id - 1}"
-            gram = pca_gramian_merge(
-                sess.read.parquet(f"{prev}/gram").unionByName(gram)
-            )
-        cur = f"{state_dir}/v{batch_id}"
-        gram.write.mode("overwrite").parquet(f"{cur}/gram")
-        last_version[0] = max(last_version[0], batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, emb_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=pca_power_from_gramian,
+        empty=lambda b: pca_power_from_gramian(
+            pca_gramian_partial(b).localCheckpoint(eager=True)
+        ),
+        tables=("gram",),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state
-        empty = spark.createDataFrame([], schema)
-        return pca_power_from_gramian(
-            pca_gramian_partial(empty).localCheckpoint(eager=True)
-        )
-    gram = spark.read.parquet(f"{state_dir}/v{final}/gram")
-    return pca_power_from_gramian(gram)
 
 
 def run_streaming_kmeans_centroids(
@@ -2136,8 +1583,7 @@ def run_streaming_kmeans_centroids(
     per-pass state is k×dim rows whatever the corpus size, each
     micro-batch scans only its delta, and successive passes re-run
     the stream with the previous pass's output as the new seeds.
-    State chains through versioned parquet dirs (idempotent per batch
-    id); resume/empty-feed via the shared guards."""
+    Versioned state as in the module docstring."""
     from ds_mapreduce_spark.operators.similarity import (
         lloyd_step_centroids,
         lloyd_step_merge,
@@ -2145,44 +1591,20 @@ def run_streaming_kmeans_centroids(
         quantize_embeddings,
     )
 
-    schema = spark.read.parquet(emb_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if emb_dir.endswith(".parquet"):
-        base, _, fname = emb_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        emb_dir = base
-    stream = reader.parquet(emb_dir)
-    last_version: list[int] = [-1]
+    def partial(batch: DataFrame) -> DataFrame:
+        return lloyd_step_partial(quantize_embeddings(batch, quant), seeds)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        part = lloyd_step_partial(quantize_embeddings(batch_df, quant), seeds)
-        if batch_id > 0:
-            prev = sess.read.parquet(f"{state_dir}/v{batch_id - 1}")
-            part = lloyd_step_merge(prev, part)
+    def step(batch: DataFrame, v: _Version) -> None:
         # batch 0: the partial IS the state — lloyd_step_partial already
         # ends in the same groupBy(cid, i) aggregate lloyd_step_merge
         # would re-apply, so no merge wrapper is needed
-        part.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        last_version[0] = max(last_version[0], batch_id)
+        part = partial(batch)
+        v.put(part if v.first else lloyd_step_merge(v.prev(), part))
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, emb_dir, per_file=True), state_dir, checkpoint_dir, step,
+        present=lloyd_step_centroids, empty=lambda b: lloyd_step_centroids(partial(b)),
     )
-    q.awaitTermination()
-    final = _resolve_final_version(spark, state_dir, last_version[0])
-    if final is None:  # empty feed, no prior state: no members, no means
-        return lloyd_step_centroids(
-            lloyd_step_partial(
-                quantize_embeddings(spark.createDataFrame([], schema), quant),
-                seeds,
-            )
-        )
-    return lloyd_step_centroids(spark.read.parquet(f"{state_dir}/v{final}"))
 
 
 def run_streaming_bpe_encode(
@@ -2205,60 +1627,34 @@ def run_streaming_bpe_encode(
     ``bpe_encode_census`` whose training produced the rules (the
     equivalence test pins it). Per batch: distinct-word segmentation
     (batch-vocab-sized, map-only fold) + one word join + one doc agg;
-    results land append-only in versioned parquet (idempotent per
-    batch id — a retried batch overwrites its own dir, never
-    double-counts). 100 TB: this is the always-on ingest tokenizer —
-    throughput is scan-bound, state is zero (rules are broadcast-sized
-    and frozen), and a vocabulary drift large enough to matter ships
-    as NEW rules through the same offline loop."""
+    the per-doc results are a log in the version dirs themselves
+    (``v{n}``; see the module docstring). 100 TB: this is the
+    always-on ingest tokenizer — throughput is scan-bound, state is
+    zero (rules are broadcast-sized and frozen), and a vocabulary
+    drift large enough to matter ships as NEW rules through the same
+    offline loop."""
     from ds_mapreduce_spark.operators.bpe import (
         encode_census_rows,
         segment_words_with_rules,
     )
     from ds_mapreduce_spark.plans.text_queries import _BPE_PATTERN
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, v: _Version) -> None:
         words = (
-            batch_df.select(
-                F.explode(
-                    F.regexp_extract_all("text", F.lit(_BPE_PATTERN), 1)
-                ).alias("w")
+            batch.select(
+                F.explode(F.regexp_extract_all("text", F.lit(_BPE_PATTERN), 1)).alias("w")
             )
             .where(~F.col("w").contains("\x1f"))
             .distinct()
         )
-        seg = segment_words_with_rules(words, rules)
-        encode_census_rows(batch_df, _BPE_PATTERN, seg).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/v{batch_id}")
+        v.put(encode_census_rows(batch, _BPE_PATTERN, segment_words_with_rules(words, rules)))
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        empty="doc_id bigint, lang string, n_words bigint, "
+        "n_char_tokens bigint, n_bpe_tokens bigint, saved_bp bigint",
+        log="",
     )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir)
-    if not versions:  # empty feed, nothing landed in any run
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, lang string, n_words bigint, "
-            "n_char_tokens bigint, n_bpe_tokens bigint, saved_bp bigint",
-        )
-    # per-doc rows are independent across batches (docs never split
-    # across files): the result is the UNION of all landed versions,
-    # unlike the merge-state twins that read only the latest
-    return spark.read.parquet(*[f"{state_dir}/v{v}" for v in versions])
 
 
 def run_streaming_media_features(
@@ -2273,7 +1669,7 @@ def run_streaming_media_features(
     real codec chain the batch ``multimodal_jpeg_roundtrip`` query
     uses (``synth_jpeg_pixels -> encode_jpeg -> decode_jpeg_features``
     — full JFIF container, fixed-point IDCT), landing per-doc features
-    append-only in versioned parquet (idempotent per batch id). The
+    as a log in the version dirs (``v{n}``, as the bpe twin). The
     decode is a deterministic per-row map, so per-doc rows are
     independent of batching and the union over ANY chunking of the
     feed is bit-equal to the batch query — the stateless-twin pattern
@@ -2288,36 +1684,15 @@ def run_streaming_media_features(
         synth_jpeg_pixels,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if docs_dir.endswith(".parquet"):
-        base, _, fname = docs_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        docs_dir = base
-    stream = reader.parquet(docs_dir)
+    def step(batch: DataFrame, v: _Version) -> None:
+        v.put(decode_jpeg_features(encode_jpeg(synth_jpeg_pixels(batch.select("doc_id")))))
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        feats = decode_jpeg_features(
-            encode_jpeg(synth_jpeg_pixels(batch_df.select("doc_id")))
-        )
-        feats.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_versioned(
+        _feed(spark, docs_dir, per_file=True), state_dir, checkpoint_dir, step,
+        empty="doc_id bigint, width bigint, height bigint, n_blocks bigint, "
+        "sum_v bigint, sum_sq bigint",
+        log="",
     )
-    q.awaitTermination()
-    versions = existing_state_versions(spark, state_dir)
-    if not versions:
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, width bigint, height bigint, n_blocks bigint, "
-            "sum_v bigint, sum_sq bigint",
-        )
-    return spark.read.parquet(*[f"{state_dir}/v{v}" for v in versions])
 
 
 #: The streaming-twin census (VERDICT r7 #6): one row per streaming

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ds_mapreduce_spark.functions.temporal import epoch_us, idiv_floor
+from ds_mapreduce_spark.streaming.jobs import _feed, _to_memory
 
 #: a closed session: who, when it started (epoch sec), how many events,
 #: how long it lasted. Micro-second arithmetic end-to-end so batch and
@@ -129,30 +130,14 @@ def run_streaming_sessionize(
     flush idle users. Tests compare against ``sessionize_batch`` minus
     each user's final session.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if schema is None:
-        # infer AFTER the nanos conf is set (events.ts is INT64 nanos,
-        # which Spark 4 only reads as long under this flag)
-        schema = spark.read.parquet(events_dir).schema
-    reader = spark.readStream.schema(schema)
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    if events_dir.endswith(".parquet"):
-        base, _, fname = events_dir.rpartition("/")
-        reader = reader.option("pathGlobFilter", fname)
-        events_dir = base
-    from ds_mapreduce_spark.sources.catalog import normalize_events_ts
-
-    stream = normalize_events_ts(reader.parquet(events_dir))
-    ts_us = epoch_us("ts")
+    stream = _feed(spark, events_dir, events=True, schema=schema, options=reader_options)
     gap_us = gap_sec * 1_000_000
 
     def fn(key, pdf_iter, state):
         return _sessionize_group(key, pdf_iter, state, gap_us)
 
     out = (
-        stream.select("user_id", ts_us.alias("ts_us"))
+        stream.select("user_id", epoch_us("ts").alias("ts_us"))
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
@@ -162,12 +147,4 @@ def run_streaming_sessionize(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _to_memory(out, sink_table, "append")

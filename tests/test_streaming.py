@@ -652,6 +652,12 @@ def test_versioned_state_jobs_survive_no_batch_run(spark, sf_dir, tmp_path):
             state,
             ckpt,
         ),
+        "pmi": lambda state, ckpt: J.run_streaming_pmi_counts(
+            spark, doc_dir, state, ckpt
+        ),
+        "winnow": lambda state, ckpt: J.run_streaming_winnow_screen(
+            spark, doc_dir, state, ckpt
+        ),
     }
     for name, run in cases.items():
         normal = run(str(tmp_path / f"{name}_s1"), str(tmp_path / f"{name}_c"))
@@ -660,6 +666,87 @@ def test_versioned_state_jobs_survive_no_batch_run(spark, sf_dir, tmp_path):
         empty = run(str(tmp_path / f"{name}_s2"), str(tmp_path / f"{name}_c"))
         assert empty.columns == cols, name
         assert empty.count() == 0, name
+
+
+def _crash_last_batch(state_dir: str, ckpt_dir: str, logs: tuple[str, ...] = ()) -> int:
+    """Undo the last micro-batch N as a crash between its state write
+    and its commit would: drop ``commits/N`` (and its checksum), then
+    strip the data files and ``_SUCCESS`` markers from ``v{N}`` and
+    each ``{log}_v{N}``. Returns N."""
+    import glob
+    import os
+
+    commits = os.path.join(ckpt_dir, "commits")
+    n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(n)))
+    crc = os.path.join(commits, f".{n}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    for d in (f"v{n}", *(f"{log}_v{n}" for log in logs)):
+        root = os.path.join(state_dir, d)
+        for pat in ("part-*", "_SUCCESS"):
+            for f in glob.glob(os.path.join(root, "**", pat), recursive=True):
+                os.remove(f)
+    return n
+
+
+def test_versioned_state_replays_an_uncommitted_batch(spark, sf_dir, tmp_path):
+    """At-least-once replay: when the last micro-batch's version is
+    half-written and its commit is missing, a rerun on the same
+    checkpoint replays that batch id, rewrites the version from its
+    predecessor and returns the uninterrupted answer. One twin per
+    state layout: a one-table state (``v{n}``), a multi-table state
+    (``v{n}/{table}``) and a seeded state with a per-batch log
+    (``v-1`` + ``manifest_v{n}``)."""
+    from ds_mapreduce_spark.sources.catalog import load_table
+    from ds_mapreduce_spark.streaming import jobs as J
+
+    ev_dir = str(tmp_path / "ev_feed")
+    load_table(spark, sf_dir, "events").repartition(3).write.parquet(ev_dir)
+    doc_dir = str(tmp_path / "doc_feed")
+    spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(3).write.parquet(
+        doc_dir
+    )
+
+    for name, run, feed, logs in (
+        ("hh", J.run_streaming_heavy_hitters, ev_dir, ()),
+        ("cms", J.run_streaming_cms_sketch, ev_dir, ()),
+        ("ingest", J.run_streaming_ingest_manifest, doc_dir, ("manifest",)),
+    ):
+        state, ckpt = str(tmp_path / f"{name}_s"), str(tmp_path / f"{name}_c")
+        whole = sorted(map(tuple, run(spark, feed, state, ckpt).collect()))
+        assert whole, name
+        assert _crash_last_batch(state, ckpt, logs) == 2, name
+        replayed = sorted(map(tuple, run(spark, feed, state, ckpt).collect()))
+        assert replayed == whole, name
+
+
+def test_log_twins_ignore_versions_above_the_last_batch(spark, sf_dir, tmp_path):
+    """A log twin's answer is the union of log versions up to the last
+    batch THIS run fired: a fresh checkpoint over a state dir a longer
+    previous run left behind must not return that run's higher
+    versions (here v1..v3 from a 4-file run under a 1-file rerun)."""
+    from ds_mapreduce_spark.operators.bpe import _train_vocab
+    from ds_mapreduce_spark.plans.text_queries import _BPE_PATTERN
+    from ds_mapreduce_spark.streaming import jobs as J
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").orderBy("doc_id")
+    long_feed, short_feed = str(tmp_path / "long"), str(tmp_path / "short")
+    docs.limit(80).repartition(4).write.parquet(long_feed)
+    docs.limit(20).coalesce(1).write.parquet(short_feed)
+    _, rules = _train_vocab(docs.limit(80), _BPE_PATTERN, 3)
+
+    for name, run in (
+        ("bpe", lambda *a: J.run_streaming_bpe_encode(spark, a[0], rules, *a[1:])),
+        ("media", lambda *a: J.run_streaming_media_features(spark, *a)),
+    ):
+        state = str(tmp_path / f"{name}_s")
+        run(long_feed, state, str(tmp_path / f"{name}_c1"))
+        rerun = run(short_feed, state, str(tmp_path / f"{name}_c2"))
+        alone = run(short_feed, str(tmp_path / f"{name}_fresh"), str(tmp_path / f"{name}_c3"))
+        cols = sorted(alone.columns)
+        assert rerun.count() == 20, name
+        assert _rows(rerun, cols) == _rows(alone, cols), name
 
 
 def test_streaming_priority_sample_matches_batch(spark, sf_dir, tmp_path):
