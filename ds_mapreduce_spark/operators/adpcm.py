@@ -39,14 +39,14 @@ ADPCM_SAMPLES_PER_BLOCK instead of the payload length.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
     WAV_FEATURE_SCHEMA,
     WAV_SAMPLE_RATE,
+    arrow_stage,
     pcm_feature_sums,
 )
 
@@ -266,17 +266,9 @@ def decode_adpcm_wav_samples(payload: bytes) -> tuple[int, list[int]]:
 
 def encode_adpcm(df: DataFrame) -> DataFrame:
     """(doc_id, samples) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_adpcm_wav_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(
+        df, lambda d, s: [(d, encode_adpcm_wav_bytes(s))], PAYLOAD_SCHEMA
+    )
 
 
 def decode_adpcm_features(media: DataFrame) -> DataFrame:
@@ -285,21 +277,8 @@ def decode_adpcm_features(media: DataFrame) -> DataFrame:
     this row's delta vs multimodal_wav_roundtrip measures exactly what
     4-bit adaptive quantization cost."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples",
-                "peak_abs", "sum_abs", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, samples = decode_adpcm_wav_samples(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(samples))
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        rate, samples = decode_adpcm_wav_samples(bytes(payload))
+        yield doc_id, rate, len(samples), *pcm_feature_sums(samples)
 
-    return media.mapInPandas(run, schema=WAV_FEATURE_SCHEMA)
+    return arrow_stage(media, features, WAV_FEATURE_SCHEMA)

@@ -45,10 +45,8 @@ independent rows, so corpus-level parallelism is untouched.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import corruption_to_value_error
@@ -58,8 +56,15 @@ from ds_mapreduce_spark.operators.gif import (
     _grayscale_ramp_palette,
     _lzw_compress,
     _lzw_decompress,
+    palette_sums,
 )
-from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B, pxbytes
+from ds_mapreduce_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
+    PCM_A,
+    PCM_B,
+    arrow_stage,
+    pxbytes,
+)
 
 ANIM_FRAMES = 6
 ANIM_BLOCK = 5
@@ -310,20 +315,13 @@ ANIM_FEATURE_SCHEMA = (
 
 def encode_animgif(df: DataFrame) -> DataFrame:
     """(doc_id, frames) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_animgif_bytes(
-                    [pxbytes(f) for f in frames], GIF_W, GIF_H
-                )
-                for frames in batch["frames"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(
+        df,
+        lambda d, frames: [
+            (d, encode_animgif_bytes([pxbytes(f) for f in frames], GIF_W, GIF_H))
+        ],
+        PAYLOAD_SCHEMA,
+    )
 
 
 def decode_animgif_features(media: DataFrame) -> DataFrame:
@@ -332,35 +330,11 @@ def decode_animgif_features(media: DataFrame) -> DataFrame:
     GIF features: a wrong delta rectangle or composition bug shifts
     some frame's sums."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "frame_id", "width", "height",
-                "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, palette, composed = parse_animgif(bytes(payload))
-                # palette-mapped channel sums via one index histogram
-                # per composed frame (r17) — value-identical to the
-                # three per-pixel generator passes (46% of this row's
-                # decode profile); parse_animgif validated every
-                # opaque index against the table and frame 0 covers
-                # the canvas, so composed indices stay in range
-                pal = np.frombuffer(palette, dtype=np.uint8)
-                pal = pal.astype(np.int64).reshape(-1, 3)
-                for t, canvas in enumerate(composed):
-                    cnt = np.bincount(
-                        np.frombuffer(canvas, dtype=np.uint8),
-                        minlength=pal.shape[0],
-                    )
-                    sum_r, sum_g, sum_b = (cnt @ pal).tolist()
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_id"].append(t)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["sum_r"].append(sum_r)
-                    rows["sum_g"].append(sum_g)
-                    rows["sum_b"].append(sum_b)
-            yield pd.DataFrame(rows)
+    def frames(doc_id, payload):
+        w, h, palette, composed = parse_animgif(bytes(payload))
+        # parse_animgif validated every opaque index against the table
+        # and frame 0 covers the canvas, so composed indices stay in range
+        for t, canvas in enumerate(composed):
+            yield doc_id, t, w, h, *palette_sums(palette, canvas)
 
-    return media.mapInPandas(run, schema=ANIM_FEATURE_SCHEMA)
+    return arrow_stage(media, frames, ANIM_FEATURE_SCHEMA)

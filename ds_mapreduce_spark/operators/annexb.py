@@ -61,10 +61,8 @@ container-format seam (`operators/multimodal.py` r9 note).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
@@ -85,6 +83,7 @@ from ds_mapreduce_spark.operators.mcv import (
     mcv_payload_features,
 )
 from ds_mapreduce_spark.operators.mdct import _read_ue, _write_ue
+from ds_mapreduce_spark.operators.multimodal import PAYLOAD_SCHEMA, arrow_stage
 
 #: fixed UUID for the SEI user_data_unregistered record — all bytes
 #: > 0x03 so the UUID itself never creates or terminates an emulation
@@ -472,62 +471,32 @@ def decode_annexb_features(media: DataFrame) -> DataFrame:
     record. Frame features come from decoding the REASSEMBLED MCV1
     container, so every slice still passes its CRC."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: dict[str, list] = {
-                k: [] for k in (
-                    "doc_id", "n_nals", "n_idr", "sps_width", "sps_height",
-                    "sei_doc_id", "sum_rbsp_bytes", "emu_bytes",
-                    "container_bytes", "sum_v_total", "sum_sq_v_total",
-                    "sum_abs_mv_total",
-                )
-            }
-            for doc_id, stream in zip(batch["doc_id"], batch["payload"]):
-                stream = bytes(stream)
-                nals, (sei_doc_id, width, height, frame_rbsps) = (
-                    _parse_annexb_with_nals(stream)
-                )
-                feats = mcv_payload_features(
-                    rebuild_mcv(width, height, frame_rbsps)
-                )
-                rbsp_total = sum(len(r) for _, _, r, _ in nals)
-                start_bytes = sum(sc for _, _, _, sc in nals)
-                rows["doc_id"].append(doc_id)
-                rows["n_nals"].append(len(nals))
-                rows["n_idr"].append(
-                    sum(1 for _, t, _, _ in nals if t == 5)
-                )
-                rows["sps_width"].append(width)
-                rows["sps_height"].append(height)
-                rows["sei_doc_id"].append(sei_doc_id)
-                rows["sum_rbsp_bytes"].append(rbsp_total)
-                rows["emu_bytes"].append(
-                    len(stream) - start_bytes - len(nals) - rbsp_total
-                )
-                rows["container_bytes"].append(len(stream))
-                rows["sum_v_total"].append(sum(f["sum_v"] for f in feats))
-                rows["sum_sq_v_total"].append(
-                    sum(f["sum_sq_v"] for f in feats)
-                )
-                rows["sum_abs_mv_total"].append(
-                    sum(f["sum_abs_mv"] for f in feats)
-                )
-            yield pd.DataFrame(rows)
+    def features(doc_id, stream):
+        stream = bytes(stream)
+        nals, (sei_doc_id, width, height, frame_rbsps) = (
+            _parse_annexb_with_nals(stream)
+        )
+        feats = mcv_payload_features(rebuild_mcv(width, height, frame_rbsps))
+        rbsp_total = sum(len(r) for _, _, r, _ in nals)
+        start_bytes = sum(sc for _, _, _, sc in nals)
+        yield (
+            doc_id,
+            len(nals),
+            sum(1 for _, t, _, _ in nals if t == 5),
+            width,
+            height,
+            sei_doc_id,
+            rbsp_total,
+            len(stream) - start_bytes - len(nals) - rbsp_total,
+            len(stream),
+            *(sum(f[k] for f in feats) for k in ("sum_v", "sum_sq_v", "sum_abs_mv")),
+        )
 
-    return media.mapInPandas(run, schema=ANNEXB_FEATURE_SCHEMA)
+    return arrow_stage(media, features, ANNEXB_FEATURE_SCHEMA)
 
 
 def wrap_annexb_df(media: DataFrame) -> DataFrame:
     """(doc_id, payload=MCV1) -> (doc_id, payload=Annex-B stream)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                wrap_annexb(int(d), bytes(p))
-                for d, p in zip(batch["doc_id"], batch["payload"])
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return media.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(
+        media, lambda d, p: [(d, wrap_annexb(int(d), bytes(p)))], PAYLOAD_SCHEMA
+    )

@@ -27,15 +27,16 @@ halves payload bytes vs PCM16, shrinking executor->Python transfer.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
     WAV_FEATURE_SCHEMA,
     WAV_SAMPLE_RATE,
+    arrow_stage,
+    pcm_feature_sums,
 )
 
 ULAW_BIAS = 0x84  # 132
@@ -130,17 +131,7 @@ def parse_ulaw_wav(payload: bytes):
 def encode_ulaw(df: DataFrame) -> DataFrame:
     """REAL G.711 encoder: (doc_id, samples PCM16 ints) ->
     (doc_id, payload), a standard mu-law WAV. Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_ulaw_wav_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(df, lambda d, s: [(d, encode_ulaw_wav_bytes(s))], PAYLOAD_SCHEMA)
 
 
 def decode_ulaw_features(media: DataFrame) -> DataFrame:
@@ -150,22 +141,9 @@ def decode_ulaw_features(media: DataFrame) -> DataFrame:
     exactly what companding cost). Parity against the closed-form
     oracle proves the whole lossy chain bit-reproducible."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples",
-                "peak_abs", "sum_abs", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, data = parse_ulaw_wav(bytes(payload))
-                pcm = _ULAW_TABLE[np.frombuffer(data, dtype=np.uint8)]
-                a = np.abs(pcm)
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(pcm))
-                rows["peak_abs"].append(int(a.max()) if len(a) else 0)
-                rows["sum_abs"].append(int(a.sum()))
-                rows["sum_sq"].append(int((pcm * pcm).sum()))
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        rate, data = parse_ulaw_wav(bytes(payload))
+        pcm = _ULAW_TABLE[np.frombuffer(data, dtype=np.uint8)]
+        yield doc_id, rate, len(pcm), *pcm_feature_sums(pcm)
 
-    return media.mapInPandas(run, schema=WAV_FEATURE_SCHEMA)
+    return arrow_stage(media, features, WAV_FEATURE_SCHEMA)

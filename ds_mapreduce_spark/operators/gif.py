@@ -36,16 +36,16 @@ from __future__ import annotations
 
 import functools
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.multimodal import (
     PCM_A,
     PCM_B,
+    PAYLOAD_SCHEMA,
     PPM_FEATURE_SCHEMA,
+    arrow_stage,
     pxbytes,
 )
 
@@ -364,18 +364,10 @@ def encode_gif(df: DataFrame) -> DataFrame:
     """REAL GIF encoder: (doc_id, px palette indices) ->
     (doc_id, payload), a standard GIF89a any viewer opens.
     Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_gif_bytes(pxbytes(px), GIF_W, GIF_H)
-                for px in batch["px"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(
+        df, lambda d, px: [(d, encode_gif_bytes(pxbytes(px), GIF_W, GIF_H))],
+        PAYLOAD_SCHEMA,
+    )
 
 
 def decode_gif_features(media: DataFrame) -> DataFrame:
@@ -385,31 +377,17 @@ def decode_gif_features(media: DataFrame) -> DataFrame:
     against the analytic oracle proves dictionary coding round-tripped
     every index."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, palette, indices = parse_gif(bytes(payload))
-                # palette-mapped channel sums via one index histogram
-                # (r17): counts @ palette-column is value-identical to
-                # the three per-pixel generator passes it replaces
-                # (indices are validated < palette entries by
-                # parse_gif, so bincount length == table length)
-                pal = np.frombuffer(palette, dtype=np.uint8)
-                pal = pal.astype(np.int64).reshape(-1, 3)
-                cnt = np.bincount(
-                    np.frombuffer(indices, dtype=np.uint8),
-                    minlength=pal.shape[0],
-                )
-                sum_r, sum_g, sum_b = (cnt @ pal).tolist()
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(sum_r)
-                rows["sum_g"].append(sum_g)
-                rows["sum_b"].append(sum_b)
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        w, h, palette, indices = parse_gif(bytes(payload))
+        yield doc_id, w, h, *palette_sums(palette, indices)
 
-    return media.mapInPandas(run, schema=PPM_FEATURE_SCHEMA)
+    return arrow_stage(media, features, PPM_FEATURE_SCHEMA)
+
+
+def palette_sums(palette: bytes, indices: bytes) -> list[int]:
+    """Exact (sum_r, sum_g, sum_b) of palette-mapped pixels: one index
+    histogram times the palette. The parsers validate every index <
+    palette entries, so the bincount length is the table length."""
+    pal = np.frombuffer(palette, dtype=np.uint8).astype(np.int64).reshape(-1, 3)
+    cnt = np.bincount(np.frombuffer(indices, dtype=np.uint8), minlength=pal.shape[0])
+    return (cnt @ pal).tolist()

@@ -54,14 +54,18 @@ from __future__ import annotations
 import functools
 import math
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import corruption_to_value_error
-from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
+from ds_mapreduce_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
+    PCM_A,
+    PCM_B,
+    arrow_stage,
+    pxbytes,
+)
 
 #: synthesized image geometry — multiples of 8 (one JPEG block = 8x8)
 JPEG_W = 32
@@ -555,7 +559,8 @@ class _BitReader:
         scan loop's per-coefficient cost was a ``huff`` + ``bits``
         method-call pair; the low nibble of every scan symbol is its
         magnitude bit count (AC symbols by the run/size spec layout,
-        DC size categories because they are <= 11 < 16), so one fused
+        DC size categories because ``parse_jpeg`` rejects DC tables
+        with a symbol > 11), so one fused
         call decodes both. Returns (sym, raw magnitude bits, size) —
         identical stall/starve semantics to huff() then bits(size)."""
         n = self._n
@@ -706,6 +711,14 @@ def parse_jpeg(payload: bytes):
                 huffval = body[b + 17 : b + 17 + n]
                 if len(bits) != 16 or len(huffval) != n:
                     raise ValueError("truncated DHT")
+                # DC symbols are size categories 0..11 (T.81 F.1.2.1.1);
+                # rejecting larger ones here keeps huff_recv's
+                # ``sym & 0x0F`` magnitude-size rule true by construction
+                if tc == 0 and max(huffval, default=0) > 11:
+                    raise ValueError(
+                        f"DC Huffman table {th} has category "
+                        f"{max(huffval)} > 11"
+                    )
                 htables[(tc, th)] = _build_huffman(bits, huffval)
                 b += 17 + n
         elif marker == 0xC0:  # SOF0 baseline sequential
@@ -857,18 +870,10 @@ def encode_jpeg(df: DataFrame) -> DataFrame:
     (doc_id, payload) where payload is a standard baseline JFIF file.
     Arrow-batched, map-only; DCT + quantization vectorized over all
     blocks of an image, only the entropy coder is per-symbol Python."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_jpeg_bytes(bytes(list(px)), JPEG_W, JPEG_H)
-                for px in batch["px"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(
+        df, lambda d, px: [(d, encode_jpeg_bytes(pxbytes(px), JPEG_W, JPEG_H))],
+        PAYLOAD_SCHEMA,
+    )
 
 
 JPEG_FEATURE_SCHEMA = (
@@ -906,18 +911,11 @@ def encode_jpeg_color(df: DataFrame) -> DataFrame:
     """REAL color JPEG encoder: (doc_id, px interleaved RGB ints) ->
     (doc_id, payload), a standard 4:4:4 YCbCr baseline JFIF file.
     Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_jpeg_color_bytes(bytes(list(px)), JPEG_W, JPEG_H)
-                for px in batch["px"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(
+        df,
+        lambda d, px: [(d, encode_jpeg_color_bytes(pxbytes(px), JPEG_W, JPEG_H))],
+        PAYLOAD_SCHEMA,
+    )
 
 
 JPEG_COLOR_FEATURE_SCHEMA = (
@@ -932,27 +930,15 @@ def decode_jpeg_color_features(media: DataFrame) -> DataFrame:
     fixed-point YCbCr->RGB) then exact per-channel sums over the
     RECONSTRUCTED pixels."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_blocks",
-                "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, px = parse_jpeg(bytes(payload))
-                if len(px) != w * h * 3:
-                    raise ValueError(f"doc {doc_id}: expected RGB output")
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_blocks"].append((w // 8) * (h // 8))
-                rows["sum_r"].append(int(a[0::3].sum()))
-                rows["sum_g"].append(int(a[1::3].sum()))
-                rows["sum_b"].append(int(a[2::3].sum()))
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        w, h, px = parse_jpeg(bytes(payload))
+        if len(px) != w * h * 3:
+            raise ValueError(f"doc {doc_id}: expected RGB output")
+        a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        sums = (int(a[k::3].sum()) for k in range(3))
+        yield doc_id, w, h, (w // 8) * (h // 8), *sums
 
-    return media.mapInPandas(run, schema=JPEG_COLOR_FEATURE_SCHEMA)
+    return arrow_stage(media, features, JPEG_COLOR_FEATURE_SCHEMA)
 
 
 def decode_jpeg_features(media: DataFrame) -> DataFrame:
@@ -962,20 +948,14 @@ def decode_jpeg_features(media: DataFrame) -> DataFrame:
     Parity against the analytic oracle proves the whole lossy chain is
     bit-reproducible, not just that bytes survived."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_blocks", "sum_v", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, px = parse_jpeg(bytes(payload))
-                a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_blocks"].append((w // 8) * (h // 8))
-                rows["sum_v"].append(int(a.sum()))
-                rows["sum_sq"].append(int((a * a).sum()))
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        w, h, px = parse_jpeg(bytes(payload))
+        yield doc_id, w, h, (w // 8) * (h // 8), *sum_v_sq(px)
 
-    return media.mapInPandas(run, schema=JPEG_FEATURE_SCHEMA)
+    return arrow_stage(media, features, JPEG_FEATURE_SCHEMA)
+
+
+def sum_v_sq(px: bytes) -> tuple[int, int]:
+    """Exact (sum, sum of squares) of 8-bit samples."""
+    a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    return int(a.sum()), int((a * a).sum())

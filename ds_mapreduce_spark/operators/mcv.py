@@ -67,10 +67,8 @@ the codec seam the r8 VERDICT named.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
@@ -87,7 +85,12 @@ from ds_mapreduce_spark.operators.jpeg import (
     _da_int,
 )
 from ds_mapreduce_spark.operators.mdct import _write_ue
-from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
+from ds_mapreduce_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
+    PCM_A,
+    PCM_B,
+    arrow_stage,
+)
 
 MCV_MAGIC = b"MCV1"
 MCV_W = 24
@@ -377,15 +380,7 @@ def _decode_frames_from_parsed(frames) -> list[np.ndarray]:
 
 def encode_mcv(df: DataFrame) -> DataFrame:
     """(doc_id, frames) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [encode_mcv_bytes(frames) for frames in batch["frames"]]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(df, lambda d, f: [(d, encode_mcv_bytes(f))], PAYLOAD_SCHEMA)
 
 
 def decode_mcv_features(media: DataFrame) -> DataFrame:
@@ -395,25 +390,14 @@ def decode_mcv_features(media: DataFrame) -> DataFrame:
     frame's coded bytes (grading the syntax coder and the skip-flag
     economics — P-frame bytes track the wrap seam, not frame count)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "frame_id", "width", "height",
-                "sum_v", "sum_sq_v", "sum_abs_mv", "frame_bytes",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                for f in mcv_payload_features(bytes(payload)):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_id"].append(f["frame_id"])
-                    rows["width"].append(MCV_W)
-                    rows["height"].append(MCV_H)
-                    rows["sum_v"].append(f["sum_v"])
-                    rows["sum_sq_v"].append(f["sum_sq_v"])
-                    rows["sum_abs_mv"].append(f["sum_abs_mv"])
-                    rows["frame_bytes"].append(f["frame_bytes"])
-            yield pd.DataFrame(rows)
+    def frames(doc_id, payload):
+        for f in mcv_payload_features(bytes(payload)):
+            yield (
+                doc_id, f["frame_id"], MCV_W, MCV_H, f["sum_v"],
+                f["sum_sq_v"], f["sum_abs_mv"], f["frame_bytes"],
+            )
 
-    return media.mapInPandas(run, schema=MCV_FEATURE_SCHEMA)
+    return arrow_stage(media, frames, MCV_FEATURE_SCHEMA)
 
 
 def mcv_payload_features(payload: bytes) -> list[dict]:

@@ -59,10 +59,8 @@ JPEG/MP3/H.264 seam the r8 VERDICT named.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
@@ -74,7 +72,9 @@ from ds_mapreduce_spark.operators.flac import (
     zigzag,
 )
 from ds_mapreduce_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
     WAV_SAMPLE_RATE,
+    arrow_stage,
     pcm_feature_sums,
 )
 
@@ -438,17 +438,7 @@ def decode_mdct_samples(payload: bytes) -> tuple[int, list[int]]:
 
 def encode_mdct(df: DataFrame) -> DataFrame:
     """(doc_id, samples) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_mdct_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(df, lambda d, s: [(d, encode_mdct_bytes(s))], PAYLOAD_SCHEMA)
 
 
 def decode_mdct_features(media: DataFrame) -> DataFrame:
@@ -458,23 +448,9 @@ def decode_mdct_features(media: DataFrame) -> DataFrame:
     vs multimodal_wav_roundtrip prices perceptual transform coding;
     payload_bytes grades the entropy coder byte-for-byte."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples", "peak_abs",
-                "sum_abs", "sum_sq", "payload_bytes",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                payload = bytes(payload)
-                rate, samples = decode_mdct_samples(payload)
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(samples))
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-                rows["payload_bytes"].append(len(payload))
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        payload = bytes(payload)
+        rate, samples = decode_mdct_samples(payload)
+        yield doc_id, rate, len(samples), *pcm_feature_sums(samples), len(payload)
 
-    return media.mapInPandas(run, schema=MDCT_FEATURE_SCHEMA)
+    return arrow_stage(media, features, MDCT_FEATURE_SCHEMA)

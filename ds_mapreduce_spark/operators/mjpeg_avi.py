@@ -22,10 +22,8 @@ expensive per-frame IDCT.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import corruption_to_value_error
@@ -35,8 +33,15 @@ from ds_mapreduce_spark.operators.jpeg import (
     JPEG_W,
     encode_jpeg_bytes,
     parse_jpeg,
+    sum_v_sq,
 )
-from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
+from ds_mapreduce_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
+    PCM_A,
+    PCM_B,
+    arrow_stage,
+    pxbytes,
+)
 
 MJPEG_N_FRAMES = 4
 MJPEG_STRIDE = 2
@@ -202,21 +207,15 @@ def encode_mjpeg_avi(df: DataFrame) -> DataFrame:
     payload), a standard MJPEG AVI. Arrow-batched, map-only."""
     per = JPEG_W * JPEG_H
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = []
-            for px in batch["px"]:
-                flat = bytes(list(px))
-                frames = [
-                    encode_jpeg_bytes(flat[f * per : (f + 1) * per], JPEG_W, JPEG_H)
-                    for f in range(MJPEG_N_FRAMES)
-                ]
-                payloads.append(encode_mjpeg_avi_bytes(frames, JPEG_W, JPEG_H))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
+    def encode(doc_id, px):
+        flat = pxbytes(px)
+        frames = [
+            encode_jpeg_bytes(flat[f * per : (f + 1) * per], JPEG_W, JPEG_H)
+            for f in range(MJPEG_N_FRAMES)
+        ]
+        yield doc_id, encode_mjpeg_avi_bytes(frames, JPEG_W, JPEG_H)
 
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(df, encode, PAYLOAD_SCHEMA)
 
 
 MJPEG_FEATURE_SCHEMA = (
@@ -231,25 +230,9 @@ def decode_mjpeg_features(media: DataFrame, stride: int = MJPEG_STRIDE) -> DataF
     reconstructed pixels. Parity against the closed-form oracle proves
     container + per-frame codec + sampling end-to-end."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_frames", "n_sampled",
-                "sum_v", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, frames = parse_mjpeg_avi(bytes(payload))
-                sampled = frames[::stride]
-                a = np.concatenate(
-                    [np.frombuffer(f, dtype=np.uint8) for f in sampled]
-                ).astype(np.int64) if sampled else np.zeros(0, np.int64)
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_frames"].append(len(frames))
-                rows["n_sampled"].append(len(sampled))
-                rows["sum_v"].append(int(a.sum()))
-                rows["sum_sq"].append(int((a * a).sum()))
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        w, h, frames = parse_mjpeg_avi(bytes(payload))
+        sampled = frames[::stride]
+        yield doc_id, w, h, len(frames), len(sampled), *sum_v_sq(b"".join(sampled))
 
-    return media.mapInPandas(run, schema=MJPEG_FEATURE_SCHEMA)
+    return arrow_stage(media, features, MJPEG_FEATURE_SCHEMA)

@@ -52,10 +52,7 @@ container-format seam (`operators/multimodal.py` r9 note).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
@@ -69,7 +66,11 @@ from ds_mapreduce_spark.operators.mdct import (
     granules_to_samples,
     read_granule,
 )
-from ds_mapreduce_spark.operators.multimodal import pcm_feature_sums
+from ds_mapreduce_spark.operators.multimodal import (
+    PAYLOAD_SCHEMA,
+    arrow_stage,
+    pcm_feature_sums,
+)
 
 #: MPEG-1 Layer III bitrate table (kbps), index 1..14 (0 = free, 15 =
 #: forbidden — both rejected on parse), ISO 11172-3 table B.2
@@ -252,17 +253,7 @@ def decode_mp3_samples(payload: bytes) -> tuple[list[tuple[int, int]], list[int]
 
 def encode_mp3(df: DataFrame) -> DataFrame:
     """(doc_id, samples) -> (doc_id, payload): Arrow-batched, map-only."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                encode_mp3_bytes(samples) for samples in batch["samples"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(df, lambda d, s: [(d, encode_mp3_bytes(s))], PAYLOAD_SCHEMA)
 
 
 def decode_mp3_features(media: DataFrame) -> DataFrame:
@@ -273,34 +264,19 @@ def decode_mp3_features(media: DataFrame) -> DataFrame:
     both are graded. sum_bitrate_kbps / n_padded / container_bytes
     grade the VBR frame-size choices byte-for-byte."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: dict[str, list] = {
-                k: [] for k in (
-                    "doc_id", "n_frames", "n_samples", "declared_hz",
-                    "duration_ms", "sum_bitrate_kbps", "n_padded",
-                    "container_bytes", "peak_abs", "sum_abs", "sum_sq",
-                )
-            }
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                payload = bytes(payload)
-                headers, samples = decode_mp3_samples(payload)
-                rows["doc_id"].append(doc_id)
-                rows["n_frames"].append(len(headers))
-                rows["n_samples"].append(len(samples))
-                rows["declared_hz"].append(MP3_SAMPLE_RATE)
-                rows["duration_ms"].append(
-                    len(headers) * MP3_FRAME_SAMPLES * 1000 // MP3_SAMPLE_RATE
-                )
-                rows["sum_bitrate_kbps"].append(
-                    sum(MP3_BITRATES[i] for i, _ in headers)
-                )
-                rows["n_padded"].append(sum(pad for _, pad in headers))
-                rows["container_bytes"].append(len(payload))
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        payload = bytes(payload)
+        headers, samples = decode_mp3_samples(payload)
+        yield (
+            doc_id,
+            len(headers),
+            len(samples),
+            MP3_SAMPLE_RATE,
+            len(headers) * MP3_FRAME_SAMPLES * 1000 // MP3_SAMPLE_RATE,
+            sum(MP3_BITRATES[i] for i, _ in headers),
+            sum(pad for _, pad in headers),
+            len(payload),
+            *pcm_feature_sums(samples),
+        )
 
-    return media.mapInPandas(run, schema=MP3_FEATURE_SCHEMA)
+    return arrow_stage(media, features, MP3_FEATURE_SCHEMA)

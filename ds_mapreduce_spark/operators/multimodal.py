@@ -40,12 +40,12 @@ whole point of keeping media opaque-but-columnar.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: metadata carried alongside every payload
 META_SCHEMA = "mime string, byte_len bigint"
@@ -110,20 +110,11 @@ def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFr
     round-trip per batch; at scale the output is written immediately so
     the original payload column prunes away downstream."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = [resize_stub(p, width, height) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].values,
-                    "width": width,
-                    "height": height,
-                    "resized_sig": [o["resized_sig"] for o in out],
-                    "out_bytes": [o["out_bytes"] for o in out],
-                }
-            )
+    def resize(doc_id, payload, *_):
+        o = resize_stub(payload, width, height)
+        yield doc_id, width, height, o["resized_sig"], o["out_bytes"]
 
-    return media.mapInPandas(run, schema=RESIZE_SCHEMA)
+    return arrow_stage(media, resize, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id bigint, frame_idx bigint, frame_sig string"
@@ -142,40 +133,23 @@ def sample_frames(media: DataFrame, stride: int = 4) -> DataFrame:
     same ``mapInPandas`` batch loop with this exact schema.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            sigs: list[str] = []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                info = decode_stub(payload)
-                for idx in range(0, info["n_frames"], stride):
-                    ids.append(doc_id)
-                    idxs.append(idx)
-                    sigs.append(
-                        hashlib.md5(f"{info['checksum']}:{idx}".encode()).hexdigest()
-                    )
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_sig": sigs})
+    def frames(doc_id, payload, *_):
+        info = decode_stub(payload)
+        for idx in range(0, info["n_frames"], stride):
+            sig = hashlib.md5(f"{info['checksum']}:{idx}".encode()).hexdigest()
+            yield doc_id, idx, sig
 
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
+    return arrow_stage(media, frames, FRAME_SCHEMA)
 
 
 def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over (doc_id, payload, meta)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            feats = [decode_stub(p) for p in batch["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].values,
-                    "byte_len": [f["byte_len"] for f in feats],
-                    "checksum": [f["checksum"] for f in feats],
-                    "n_frames": [f["n_frames"] for f in feats],
-                }
-            )
+    def features(doc_id, payload, *_):
+        f = decode_stub(payload)
+        yield doc_id, f["byte_len"], f["checksum"], f["n_frames"]
 
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return arrow_stage(media, features, FEATURE_SCHEMA)
 
 
 def payload_simhash_pairs(
@@ -263,17 +237,37 @@ def synth_map_arrays(docs: DataFrame, schema: str, build) -> DataFrame:
     int64 arithmetic ~10x faster, deterministically, and the synth was
     already feeding a mapInPandas chain, so this removes the codec
     family's only JVM-side hotspot instead of adding a Python seam."""
-    import numpy as np
-    import pandas as pd
 
-    def run(batches):
+    def synth(batches):
         for batch in batches:
             d = batch["doc_id"].to_numpy(dtype="int64")
-            cols = {"doc_id": d}
-            cols.update(build(d))
-            yield pd.DataFrame(cols)
+            yield pd.DataFrame({"doc_id": d, **build(d)})
 
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
+    return docs.select("doc_id").mapInPandas(synth, schema=schema)
+
+
+#: output of every encoder stage
+PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
+
+
+def arrow_stage(df: DataFrame, row_fn, schema: str) -> DataFrame:
+    """The one Arrow-batched ``mapInPandas`` loop of the codec and media
+    operators (the framework-owned record loop of the reference's
+    ``MapReducer``): ``row_fn(*values)`` receives one input row's
+    column values in ``df``'s column order and returns an iterable of
+    output tuples in ``schema`` order — one tuple for a map, any number
+    for an explode such as frame sampling. Exceptions propagate: a
+    parser's ValueError fails the task and then the job."""
+    out = StructType.fromDDL(schema)
+    names = out.fieldNames()
+
+    def stage(batches):
+        for batch in batches:
+            cols = (batch[c] for c in batch.columns)
+            rows = [t for values in zip(*cols) for t in row_fn(*values)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(stage, schema=out)
 
 
 def synth_pcm_samples(docs: DataFrame) -> DataFrame:
@@ -302,28 +296,24 @@ def encode_wav(df: DataFrame) -> DataFrame:
     """REAL WAV encoder (stdlib ``wave``): (doc_id, samples) ->
     (doc_id, payload) where payload is a complete RIFF/WAVE container
     (44-byte header + PCM16LE mono frames). Arrow-batched, map-only."""
+    return arrow_stage(
+        df, lambda d, s: [(d, _wav_bytes(s, WAV_SAMPLE_RATE))], PAYLOAD_SCHEMA
+    )
+
+
+def _wav_bytes(samples, rate: int) -> bytes:
+    """A mono PCM16 RIFF/WAVE container (stdlib ``wave`` writer)."""
     import io
     import struct
     import wave
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = []
-            for samples in batch["samples"]:
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(WAV_SAMPLE_RATE)
-                    w.writeframes(
-                        struct.pack(f"<{len(samples)}h", *samples)
-                    )
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
+    return buf.getvalue()
 
 
 WAV_FEATURE_SCHEMA = (
@@ -404,26 +394,13 @@ def decode_wav_features(media: DataFrame) -> DataFrame:
     Raises ValueError on a malformed container or unexpected layout — a
     corrupt payload fails loudly instead of producing silent garbage."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "sample_rate", "n_samples",
-                "peak_abs", "sum_abs", "sum_sq",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, n, samples = read_pcm16_wav(payload, doc_id)
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-                # A zero-frame WAV is a LEGAL container: features are 0,
-                # not a bare ValueError from max() on empty.
-                peak, sabs, ssq = pcm_feature_sums(samples)
-                rows["peak_abs"].append(peak)
-                rows["sum_abs"].append(sabs)
-                rows["sum_sq"].append(ssq)
-            yield pd.DataFrame(rows)
+    def features(doc_id, payload):
+        rate, n, samples = read_pcm16_wav(payload, doc_id)
+        # A zero-frame WAV is a LEGAL container: pcm_feature_sums gives
+        # 0s, not a bare ValueError from max() on empty.
+        yield doc_id, rate, n, *pcm_feature_sums(samples)
 
-    return media.mapInPandas(run, schema=WAV_FEATURE_SCHEMA)
+    return arrow_stage(media, features, WAV_FEATURE_SCHEMA)
 
 
 def synth_ppm_pixels(docs: DataFrame) -> DataFrame:
@@ -446,16 +423,8 @@ def synth_ppm_pixels(docs: DataFrame) -> DataFrame:
 
 def encode_ppm(df: DataFrame) -> DataFrame:
     """REAL binary-PPM (P6) encoder: header + raw RGB bytes."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        header = f"P6\n{PPM_WIDTH} {PPM_HEIGHT}\n255\n".encode()
-        for batch in batches:
-            payloads = [header + pxbytes(px) for px in batch["px"]]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    header = f"P6\n{PPM_WIDTH} {PPM_HEIGHT}\n255\n".encode()
+    return arrow_stage(df, lambda d, px: [(d, header + pxbytes(px))], PAYLOAD_SCHEMA)
 
 
 PPM_FEATURE_SCHEMA = (
@@ -500,24 +469,16 @@ def decode_ppm_features(media: DataFrame) -> DataFrame:
     """REAL PPM decoder: parses the P6 header (magic, dimensions,
     maxval — from the container), validates the pixel-buffer length
     against the parsed dimensions, and emits per-channel exact sums."""
-    parse = _parse_ppm
+    return arrow_stage(
+        media, lambda d, p: [_rgb_sums_row(d, *_parse_ppm(bytes(p)))],
+        PPM_FEATURE_SCHEMA,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, px = parse(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(sum(px[0::3]))
-                rows["sum_g"].append(sum(px[1::3]))
-                rows["sum_b"].append(sum(px[2::3]))
-            yield pd.DataFrame(rows)
 
-    return media.mapInPandas(run, schema=PPM_FEATURE_SCHEMA)
+def _rgb_sums_row(doc_id, w: int, h: int, px: bytes) -> tuple:
+    """A ``PPM_FEATURE_SCHEMA`` row: geometry plus exact channel sums
+    of interleaved RGB bytes."""
+    return doc_id, w, h, sum(px[0::3]), sum(px[1::3]), sum(px[2::3])
 
 
 def resize_ppm_nearest(media: DataFrame, factor: int = 2) -> DataFrame:
@@ -533,29 +494,20 @@ def resize_ppm_nearest(media: DataFrame, factor: int = 2) -> DataFrame:
     smaller, so downstream feature scans shrink accordingly. Corrupt
     or dimension-mismatched containers raise via the shared parser."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = []
-            for payload in batch["payload"]:
-                w, h, px = _parse_ppm(bytes(payload))
-                nw, nh = w // factor, h // factor
-                if nw < 1 or nh < 1:
-                    raise ValueError(
-                        f"resize factor {factor} collapses {w}x{h} to zero"
-                    )
-                out = bytearray()
-                for y in range(nh):
-                    row0 = y * factor * w
-                    for x in range(nw):
-                        i = (row0 + x * factor) * 3
-                        out += px[i : i + 3]
-                header = f"P6\n{nw} {nh}\n255\n".encode()
-                payloads.append(header + bytes(out))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
+    def resize(doc_id, payload):
+        w, h, px = _parse_ppm(bytes(payload))
+        nw, nh = w // factor, h // factor
+        if nw < 1 or nh < 1:
+            raise ValueError(f"resize factor {factor} collapses {w}x{h} to zero")
+        out = bytearray()
+        for y in range(nh):
+            row0 = y * factor * w
+            for x in range(nw):
+                i = (row0 + x * factor) * 3
+                out += px[i : i + 3]
+        yield doc_id, f"P6\n{nw} {nh}\n255\n".encode() + bytes(out)
 
-    return media.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(media, resize, PAYLOAD_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -772,18 +724,11 @@ def encode_png(df: DataFrame) -> DataFrame:
     filter loops inside the SAME mapInPandas batch — the plan shape
     (zero shuffles beyond the narrow-key spread, payload written columnar) is the part that carries
     to 100 TB unchanged."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = [
-                _encode_png_bytes(pxbytes(px), PPM_WIDTH, PPM_HEIGHT)
-                for px in batch["px"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
-
-    return df.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(
+        df,
+        lambda d, px: [(d, _encode_png_bytes(pxbytes(px), PPM_WIDTH, PPM_HEIGHT))],
+        PAYLOAD_SCHEMA,
+    )
 
 
 def decode_png_features(media: DataFrame) -> DataFrame:
@@ -792,23 +737,10 @@ def decode_png_features(media: DataFrame) -> DataFrame:
     reconstruction) then per-channel exact sums. Same feature schema as
     the PPM decoder, so the analytic oracle is shared verbatim: parity
     proves DEFLATE + filter prediction round-tripped every pixel."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "sum_r", "sum_g", "sum_b",
-            )}
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                w, h, px = _parse_png(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["sum_r"].append(sum(px[0::3]))
-                rows["sum_g"].append(sum(px[1::3]))
-                rows["sum_b"].append(sum(px[2::3]))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=PPM_FEATURE_SCHEMA)
+    return arrow_stage(
+        media, lambda d, p: [_rgb_sums_row(d, *_parse_png(bytes(p)))],
+        PPM_FEATURE_SCHEMA,
+    )
 
 
 def decimate_wav(media: DataFrame, stride: int = 4) -> DataFrame:
@@ -821,25 +753,9 @@ def decimate_wav(media: DataFrame, stride: int = 4) -> DataFrame:
     multimodal surface with a real container->container transform.
     Corrupt payloads raise ValueError (via read_pcm16_wav).
     Arrow-batched, map-only; output payloads shrink ~stride×."""
-    import io
-    import struct
-    import wave
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            payloads = []
-            for doc_id, payload in zip(batch["doc_id"], batch["payload"]):
-                rate, n, samples = read_pcm16_wav(payload, doc_id)
-                kept = samples[::stride]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wout:
-                    wout.setnchannels(1)
-                    wout.setsampwidth(2)
-                    wout.setframerate(max(1, rate // stride))
-                    wout.writeframes(struct.pack(f"<{len(kept)}h", *kept))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"].values, "payload": payloads}
-            )
+    def decimate(doc_id, payload):
+        rate, _n, samples = read_pcm16_wav(payload, doc_id)
+        yield doc_id, _wav_bytes(samples[::stride], max(1, rate // stride))
 
-    return media.mapInPandas(run, schema="doc_id bigint, payload binary")
+    return arrow_stage(media, decimate, PAYLOAD_SCHEMA)

@@ -15,11 +15,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def project(df: DataFrame, *cols: Column | str) -> DataFrame:
-    """Projection; column pruning reaches the scan (check ReadSchema)."""
-    return df.select(*cols)
-
-
 def aggregate(df: DataFrame, keys: Sequence[str], *aggs: Column) -> DataFrame:
     """Hash aggregation with automatic partial (map-side) combine —
     the global version of the reference's per-chunk reduce (§1.4)."""

@@ -318,6 +318,20 @@ def test_corrupt_and_unsupported_fail_loudly():
         parse_jpeg(bad_scan)
 
 
+def test_dc_table_symbol_above_category_11_is_rejected():
+    """A DC Huffman table may only hold size categories 0..11 (T.81
+    F.1.2.1.1); parse_jpeg rejects a larger HUFFVAL entry when it reads
+    the DHT, so the scan decoder's ``sym & 0x0F`` size rule never sees
+    one."""
+    payload = encode_jpeg_bytes(bytes(range(128)), 16, 8)
+    dht = payload.index(b"\xff\xc4")
+    assert payload[dht + 4] >> 4 == 0  # the segment's first table is DC
+    huffval = dht + 4 + 1 + 16  # marker, length, Tc/Th, BITS
+    patched = payload[:huffval] + b"\x1f" + payload[huffval + 1 :]
+    with pytest.raises(ValueError, match="DC Huffman table 0 has category 31"):
+        parse_jpeg(patched)
+
+
 def test_restart_intervals_roundtrip_and_reset_dc():
     """DRI/RSTn (T.81 §B.2.4.4 — the spec's intra-image parallelism
     seam): a file written with restart markers must decode to EXACTLY

@@ -12,6 +12,20 @@ import struct
 
 import pytest
 
+from ds_mapreduce_spark.operators import (
+    adpcm,
+    animgif,
+    annexb,
+    flac,
+    g711,
+    gif,
+    jpeg,
+    mcv,
+    mdct,
+    mjpeg_avi,
+    mpeg_audio,
+)
+from ds_mapreduce_spark.operators import multimodal as mm
 from ds_mapreduce_spark.operators.multimodal import (
     decode_ppm_features,
     decode_wav_features,
@@ -69,14 +83,114 @@ def test_ppm_decoder_reads_foreign_containers(spark):
         (decode_wav_features, b"RIFF garbage that is not a wav"),
         (decode_ppm_features, b"P5\n2 2\n255\n" + bytes(12)),  # wrong magic
         (decode_ppm_features, b"P6\n2 2\n255\n" + bytes(5)),  # truncated
+        (flac.decode_flac_features, b"fLaC" + bytes(6)),
+        (adpcm.decode_adpcm_features, b"RIFF\x04\x00\x00\x00WAVE"),
+        (g711.decode_ulaw_features, b"RIFF\x04\x00\x00\x00WAVE"),
+        (gif.decode_gif_features, b"GIF89a" + bytes(3)),
+        (jpeg.decode_jpeg_features, b"\xff\xd8\xff\xc0\x00"),
+        (jpeg.decode_jpeg_color_features, b"\xff\xd8\xff\xc0\x00"),
+        (animgif.decode_animgif_features, b"GIF89a" + bytes(3)),
+        (mdct.decode_mdct_features, b"MLT1" + bytes(3)),
+        (mpeg_audio.decode_mp3_features, b"ID3\x04"),
+        (mcv.decode_mcv_features, b"MCV1" + bytes(3)),
+        (annexb.decode_annexb_features, b"\x00\x00\x01\x67"),
+        (mjpeg_avi.decode_mjpeg_features, b"RIFF\x04\x00\x00\x00AVI "),
     ],
 )
 def test_corrupt_payloads_fail_loudly(spark, decoder, payload):
+    """A parser's ValueError fails the job through the shared Arrow
+    stage (``multimodal.arrow_stage``) — nothing swallows it. One
+    partition, so the failure is the job's only task: sibling tasks
+    cancelled mid-start can surface as a worker-channel error instead."""
     df = spark.createDataFrame(
         [(1, bytearray(payload))], "doc_id bigint, payload binary"
-    )
-    with pytest.raises(Exception):
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ValueError"):
         decoder(df).collect()
+
+
+_PAYLOAD_IN = "doc_id bigint, payload binary"
+_SAMPLES_IN = "doc_id bigint, samples array<int>"
+_PX_IN = "doc_id bigint, px array<int>"
+_FRAMES_IN = "doc_id bigint, frames array<array<int>>"
+_MEDIA_IN = _PAYLOAD_IN + ", meta struct<mime: string, byte_len: bigint>"
+
+#: every operator built on ``multimodal.arrow_stage``: (operator, input
+#: DDL, declared output DDL)
+_ARROW_STAGES = [
+    (mm.resize_images, _MEDIA_IN, mm.RESIZE_SCHEMA),
+    (mm.sample_frames, _MEDIA_IN, mm.FRAME_SCHEMA),
+    (mm.extract_features, _MEDIA_IN, mm.FEATURE_SCHEMA),
+    (mm.encode_wav, _SAMPLES_IN, mm.PAYLOAD_SCHEMA),
+    (mm.decode_wav_features, _PAYLOAD_IN, mm.WAV_FEATURE_SCHEMA),
+    (mm.decimate_wav, _PAYLOAD_IN, mm.PAYLOAD_SCHEMA),
+    (mm.encode_ppm, _PX_IN, mm.PAYLOAD_SCHEMA),
+    (mm.decode_ppm_features, _PAYLOAD_IN, mm.PPM_FEATURE_SCHEMA),
+    (mm.resize_ppm_nearest, _PAYLOAD_IN, mm.PAYLOAD_SCHEMA),
+    (mm.encode_png, _PX_IN, mm.PAYLOAD_SCHEMA),
+    (mm.decode_png_features, _PAYLOAD_IN, mm.PPM_FEATURE_SCHEMA),
+    (g711.encode_ulaw, _SAMPLES_IN, mm.PAYLOAD_SCHEMA),
+    (g711.decode_ulaw_features, _PAYLOAD_IN, mm.WAV_FEATURE_SCHEMA),
+    (adpcm.encode_adpcm, _SAMPLES_IN, mm.PAYLOAD_SCHEMA),
+    (adpcm.decode_adpcm_features, _PAYLOAD_IN, mm.WAV_FEATURE_SCHEMA),
+    (flac.encode_flac, _SAMPLES_IN, mm.PAYLOAD_SCHEMA),
+    (flac.decode_flac_features, _PAYLOAD_IN, mm.WAV_FEATURE_SCHEMA),
+    (mdct.encode_mdct, _SAMPLES_IN, mm.PAYLOAD_SCHEMA),
+    (mdct.decode_mdct_features, _PAYLOAD_IN, mdct.MDCT_FEATURE_SCHEMA),
+    (mpeg_audio.encode_mp3, _SAMPLES_IN, mm.PAYLOAD_SCHEMA),
+    (mpeg_audio.decode_mp3_features, _PAYLOAD_IN, mpeg_audio.MP3_FEATURE_SCHEMA),
+    (gif.encode_gif, _PX_IN, mm.PAYLOAD_SCHEMA),
+    (gif.decode_gif_features, _PAYLOAD_IN, mm.PPM_FEATURE_SCHEMA),
+    (animgif.encode_animgif, _FRAMES_IN, mm.PAYLOAD_SCHEMA),
+    (animgif.decode_animgif_features, _PAYLOAD_IN, animgif.ANIM_FEATURE_SCHEMA),
+    (jpeg.encode_jpeg, _PX_IN, mm.PAYLOAD_SCHEMA),
+    (jpeg.decode_jpeg_features, _PAYLOAD_IN, jpeg.JPEG_FEATURE_SCHEMA),
+    (jpeg.encode_jpeg_color, _PX_IN, mm.PAYLOAD_SCHEMA),
+    (
+        jpeg.decode_jpeg_color_features,
+        _PAYLOAD_IN,
+        jpeg.JPEG_COLOR_FEATURE_SCHEMA,
+    ),
+    (mjpeg_avi.encode_mjpeg_avi, _PX_IN, mm.PAYLOAD_SCHEMA),
+    (mjpeg_avi.decode_mjpeg_features, _PAYLOAD_IN, mjpeg_avi.MJPEG_FEATURE_SCHEMA),
+    (mcv.encode_mcv, _FRAMES_IN, mm.PAYLOAD_SCHEMA),
+    (mcv.decode_mcv_features, _PAYLOAD_IN, mcv.MCV_FEATURE_SCHEMA),
+    (annexb.wrap_annexb_df, _PAYLOAD_IN, mm.PAYLOAD_SCHEMA),
+    (annexb.decode_annexb_features, _PAYLOAD_IN, annexb.ANNEXB_FEATURE_SCHEMA),
+]
+
+
+@pytest.mark.parametrize(
+    "op,in_ddl,out_ddl", _ARROW_STAGES, ids=[op.__name__ for op, _, _ in _ARROW_STAGES]
+)
+def test_arrow_stage_operators_on_empty_input(spark, op, in_ddl, out_ddl):
+    """Every Arrow-stage operator maps an empty input to zero rows
+    whose columns and types are its declared schema."""
+    from pyspark.sql.types import StructType
+
+    out = op(spark.createDataFrame([], in_ddl))
+    assert out.schema == StructType.fromDDL(out_ddl)
+    assert out.collect() == []
+
+
+def test_arrow_stage_row_fn_contract(spark):
+    """``row_fn`` gets one input row's values in column order and may
+    yield any number of output tuples; a batch whose rows yield none
+    still returns a frame of the declared columns and types."""
+    df = spark.createDataFrame([(1, "ab"), (2, ""), (3, "c")], "k bigint, s string")
+    per_char = mm.arrow_stage(
+        df,
+        lambda k, s: ((k, i, ch.encode()) for i, ch in enumerate(s)),
+        "k bigint, i int, b binary",
+    )
+    assert sorted(map(tuple, per_char.collect())) == [
+        (1, 0, bytearray(b"a")),
+        (1, 1, bytearray(b"b")),
+        (3, 0, bytearray(b"c")),
+    ]
+    none = mm.arrow_stage(df, lambda k, s: [], "k bigint, i int, b binary")
+    assert none.collect() == []
+    assert none.schema.simpleString() == "struct<k:bigint,i:int,b:binary>"
 
 
 def test_wav_decoder_zero_frame_container(spark):
