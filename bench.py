@@ -1,30 +1,39 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: the HEADLINE queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints the full JSON line:
-  {"metric": "headline_total", "value": <sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": <float>}
-followed by a compact per-query line ({"line": "perq", "q": [medians
-in HEADLINE order], "top": {slowest rows by name}} — VERDICT r16 #2:
-per-query data short enough to survive the driver's tail capture; zip
-"q" with this file's HEADLINE for the name->sec map) and ONE compact
-summary line (same totals/calibration/steal, NO per-query map): the
-full per-query map outgrew the driver's 2000-char tail capture in r9
-(60 entries), truncating the leading "headline_total" out of the
-recorded BENCH_r09.json. The two compact lines together are always
-short enough to survive the tail window, so the recorded 2x-gate
-reference is read, not reconstructed (VERDICT r9 #3), and the summary
-stays LAST for tail-anchored parsers.
+    SPARK_GRAFT_CPUS=4 python bench.py
 
-Execution is forced with a noop-format write (full computation, no
-driver-side collect — the honest way to time a distributed plan).
+Every headline query first runs once at sf0.001, so the timed runs
+measure the plan, not first-touch classloading and codegen. Each query
+then runs $SPARK_GRAFT_BENCH_REPEATS times (default 3) and reports the
+MEDIAN: a single sample tracks page-cache and VM drift instead of
+plans. Execution is forced with a noop-format write (full computation,
+no driver-side collect). Dead checkpoint blocks are dropped between
+runs, outside the timed window.
 
-Per-query numbers are the MEDIAN OF 3 timed runs (override with
-$SPARK_GRAFT_BENCH_REPEATS): three identical-code r8 runs spanned
-63-95 s total on this VM (PLANS.md noise notes), so a single sample
-makes the cross-round 2x gate track page-cache/VM drift instead of
-plans. The calibration probes already used median-of-3; the headline
-queries now match them.
+Each query's repeats run under a job group named after the query.
+Around them, outside the timed window, the harness reads the engine's
+own accounting through ``perfbench.probes``, per repeat: the CPU
+seconds of the process tree (this process, the JVM and its Python
+workers, without the sampler's own CPU and the JIT compiler threads),
+the Python workers' share of it, and the status-store totals of the
+job group (jobs, stages, tasks, executor run and CPU time, GC, scan,
+shuffle, spill and Arrow bytes). Wall time on a shared VM moves with
+host CPU steal; CPU time barely does. Compare CPU, not wall, and only
+at the same core count.
+
+Prints three JSON lines:
+  full     {"metric": "headline_total", "value": <sec>, "unit": "sec",
+            "queries": {name: median sec}, "rows": {name: {"cpu_s",
+            "python_cpu_s", status-store totals}}, "repeats", "sf",
+            "errors" (if any)}
+  perq     {"line": "perq", "q": [medians], "c": [CPU sec], "top":
+            {slowest rows by name}}, both arrays in HEADLINE order
+  summary  {"metric": "headline_total", "value", "cpu_total", ...,
+            "line": "summary"}
+The full line is longer than the driver's 2000-char tail capture; the
+perq and summary lines together always fit in it, and the summary is
+always the last line.
 """
 
 from __future__ import annotations
@@ -232,252 +241,20 @@ HEADLINE = [
 ]
 
 
-def calibration_probes(spark) -> dict[str, float]:
-    """Fixed synthetic probes, independent of the data tables, so
-    cross-round bench ratios can be normalized against VM drift
-    (VERDICT r6 #4) instead of argued from prose: a pure-CPU probe
-    (whole-stage-codegen hash chain over a generated range — no reads,
-    one single-row agg) and a pure-shuffle probe (groupBy over
-    generated keys — exchange machinery dominates). Each warms once
-    (codegen/classloading), then reports the median of three timed
-    runs — single runs jitter ~30% on a shared VM.
-    Interpreting r{N} vs r{N-1}: if per-query ratios track the
-    calibration ratio, the delta is the environment; only a query
-    whose ratio SEPARATES from calibration is a plan change."""
-    from pyspark.sql import functions as F
-
-    def cpu():
-        (
-            spark.range(0, 500_000_000)
-            .select(F.xxhash64(F.xxhash64(F.xxhash64("id"))).alias("h"))
-            # shift keeps the sum < 2^55 so ANSI mode can't overflow
-            .agg(F.sum(F.shiftrightunsigned("h", 40)))
-            .write.format("noop").mode("overwrite").save()
-        )
-
-    def shuffle():
-        (
-            spark.range(0, 20_000_000)
-            .groupBy((F.col("id") % 2_000_000).alias("k"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.sum("c"), F.max("k"))
-            .write.format("noop").mode("overwrite").save()
-        )
-
-    out: dict[str, float] = {}
-    for name, probe in (("cpu", cpu), ("shuffle", shuffle)):
-        probe()  # warm: codegen + classloading
-        times = []
-        for _ in range(3):
-            t0 = time.monotonic()
-            probe()
-            times.append(time.monotonic() - t0)
-        out[name] = round(sorted(times)[1], 3)
-    return out
-
-
-#: In-family calibration thresholds for the quiet gate (VERDICT r13
-#: #2): the 86-90 s bench family reads cpu ~0.28-0.32 / shuffle
-#: ~1.0-1.2; a run is certified quiet only if both probes land at or
-#: under these bounds AND hypervisor steal over the probe window stays
-#: under 0.5% — the three signals that self-labeled every one of
-#: r13's six tainted attempts.
-QUIET_CPU_MAX = 0.35
-QUIET_SHUFFLE_MAX = 1.4
-QUIET_STEAL_MAX_PCT = 0.5
-
-
-def wait_for_quiet(spark) -> dict[str, object]:
-    """--require-quiet (VERDICT r13 #2): poll the calibration probes
-    until they read in-family, so quiet-hunting is mechanical instead
-    of six manually-labeled attempts (the r13 record). Each poll runs
-    the same table-independent cpu/shuffle probes the recorded bench
-    carries and measures /proc/stat steal across the probe window;
-    off-family polls sleep SPARK_GRAFT_QUIET_POLL_SEC (default 60) and
-    retry until SPARK_GRAFT_QUIET_DEADLINE_SEC (default 3600) elapses.
-    Returns a quiet_gate record for the JSON lines either way — on a
-    missed deadline the bench still RUNS (labeled attempts beat no
-    data; achieved=false tells the reader the gate never opened)."""
-    deadline = float(os.environ.get("SPARK_GRAFT_QUIET_DEADLINE_SEC", "3600"))
-    poll_sleep = float(os.environ.get("SPARK_GRAFT_QUIET_POLL_SEC", "60"))
-    t_start = time.monotonic()
-    attempts = 0
-    last: dict[str, object] = {}
-    while True:
-        attempts += 1
-        s0, t0 = read_cpu_steal()
-        try:
-            probes = calibration_probes(spark)
-        except Exception as exc:
-            probes = {}
-            last = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-        s1, t1 = read_cpu_steal()
-        steal = round(100.0 * (s1 - s0) / (t1 - t0), 2) if t1 > t0 else None
-        if probes:
-            last = {**probes, "steal_pct": steal}
-            quiet = (
-                probes.get("cpu", 99.0) <= QUIET_CPU_MAX
-                and probes.get("shuffle", 99.0) <= QUIET_SHUFFLE_MAX
-                and (steal is None or steal <= QUIET_STEAL_MAX_PCT)
-            )
-            if quiet:
-                return {
-                    "required": True,
-                    "achieved": True,
-                    "attempts": attempts,
-                    "waited_sec": round(time.monotonic() - t_start, 1),
-                    "probe": last,
-                }
-        waited = time.monotonic() - t_start
-        if waited + poll_sleep > deadline:
-            return {
-                "required": True,
-                "achieved": False,
-                "attempts": attempts,
-                "waited_sec": round(waited, 1),
-                "probe": last,
-            }
-        print(
-            f"quiet gate: attempt {attempts} off-family ({last}); "
-            f"sleeping {poll_sleep:.0f}s ({waited:.0f}/{deadline:.0f}s)",
-            file=sys.stderr,
-        )
-        time.sleep(poll_sleep)
-
-
-def detect_foreign_spark_jvms() -> list[int]:
-    """Pids of Spark driver JVMs that are NOT this process's own —
-    the calibration probes' blind spot (PLANS.md): they detect a
-    slower VM, not a BUSY one, and a bench run sharing the box with
-    pytest or ad-hoc Spark sessions inflates individual queries 3-5×
-    while calibration barely moves. Called BEFORE this bench creates
-    its own SparkSession, so any Spark JVM found is foreign. Readable
-    failure mode: /proc scan errors return [] (never kill the bench).
-    """
-    pids: list[int] = []
-    try:
-        for entry in os.listdir("/proc"):
-            if not entry.isdigit():
-                continue
-            try:
-                with open(f"/proc/{entry}/cmdline", "rb") as f:
-                    cmd = f.read().replace(b"\x00", b" ")
-            except OSError:
-                continue
-            if b"org.apache.spark.deploy.SparkSubmit" in cmd:
-                pids.append(int(entry))
-    except OSError:
-        return []
-    return pids
-
-
-def _stat_snapshot() -> dict[str, int]:
-    """One /proc/stat cpu-line read: {'steal','idle','iowait','total'}
-    ticks. BENCH_r10 postmortem: the tail-four codec rows recorded
-    3-7x their quiet-session medians while run-level steal was 0.05%
-    and the START-of-run foreign-JVM probe was empty — neither
-    instrument can see a co-tenant process that appears MID-bench, and
-    run-level averaging dilutes a 40 s interference window into
-    invisibility over a 120 s run. Per-query deltas of this snapshot
-    (plus the mid-run foreign re-probe and our own process-tree CPU)
-    localize interference to the queries it actually hit."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        return {
-            "steal": vals[7] if len(vals) > 7 else 0,
-            "idle": vals[3] if len(vals) > 3 else 0,
-            "iowait": vals[4] if len(vals) > 4 else 0,
-            "total": sum(vals),
-        }
-    except (OSError, ValueError, IndexError):
-        return {"steal": 0, "idle": 0, "iowait": 0, "total": 0}
-
-
-def _proc_tree_ticks() -> tuple[set[int], int]:
-    """(descendant pids of this process incl. self, their summed
-    utime+stime ticks). The JVM is our child and the pyspark daemons/
-    workers are its descendants, so this is the bench's whole compute
-    footprint. Used per-query: wall time that our own tree's CPU
-    seconds cannot account for is someone else's load (or scheduler
-    starvation) — the discriminator BENCH_r10's run-level instruments
-    lacked. /proc scan errors degrade to (self-only, 0)."""
-    me = os.getpid()
-    children: dict[int, list[int]] = {}
-    ticks: dict[int, int] = {}
-    try:
-        for entry in os.listdir("/proc"):
-            if not entry.isdigit():
-                continue
-            try:
-                with open(f"/proc/{entry}/stat") as f:
-                    after_comm = f.read().rsplit(")", 1)[1].split()
-            except (OSError, IndexError):
-                continue
-            pid = int(entry)
-            try:
-                ppid = int(after_comm[1])
-                ticks[pid] = int(after_comm[11]) + int(after_comm[12])
-            except (ValueError, IndexError):
-                continue
-            children.setdefault(ppid, []).append(pid)
-    except OSError:
-        return {me}, 0
-    tree = {me}
-    frontier = [me]
-    while frontier:
-        nxt = []
-        for p in frontier:
-            for c in children.get(p, []):
-                if c not in tree:
-                    tree.add(c)
-                    nxt.append(c)
-        frontier = nxt
-    return tree, sum(ticks.get(p, 0) for p in tree)
-
-
-def _jvm_gc_seconds(spark) -> float:
-    """Cumulative stop-the-world GC time of the bench's OWN JVM (all
-    collector MXBeans), in seconds. The missing instrument of the
-    BENCH_r10 tail postmortem: a query window whose wall inflates
-    while self_cores stays pinned at ~all cores and gc_sec eats the
-    window is the JVM fighting its own heap — our load, not a
-    co-tenant's — which neither steal nor the foreign-JVM probe can
-    see."""
-    try:
-        beans = (
-            spark._jvm.java.lang.management.ManagementFactory
-            .getGarbageCollectorMXBeans()
-        )
-        ms = 0
-        for i in range(beans.size()):
-            t = beans.get(i).getCollectionTime()
-            if t and t > 0:
-                ms += t
-        return ms / 1000.0
-    except Exception:  # telemetry must never kill the bench
-        return 0.0
-
-
 def _drop_dead_checkpoint_blocks(spark) -> int:
     """Unpersist every persistent RDD (returns how many were dropped).
 
     Every ``localCheckpoint(eager=True)`` in a query leaves its blocks
     in the block manager FOREVER — the DataFrame is discarded after
-    the action but the RDD blocks are not. Across the 63-query
-    headline sequence (plus its sf0.001 warm pass) the dead blocks
-    accumulate until the storage region and the old generation are
-    full of them, and late CPU-heavy rows then burn the whole box in
-    GC (observed: the tail codec rows at 5-7x their quiet medians
-    with steal 0.05, zero foreign JVMs, and self_cores ~30 — OUR cpu,
-    full-throttle, going to the collector). Dropping the dead blocks
+    the action but the RDD blocks are not. Across the headline
+    sequence (plus its sf0.001 warm pass) the dead blocks accumulate
+    until the storage region and the old generation are full of them,
+    and late CPU-heavy rows then burn the whole box in GC (observed:
+    the tail codec rows at 5-7x their quiet medians, our own CPU at
+    full throttle going to the collector). Dropping the dead blocks
     after each timed run makes every query measure in the same
-    clean-heap state the driver's one-query smoke or a production
-    job would see. Gated by SPARK_GRAFT_BENCH_KEEP_BLOCKS=1 for
-    re-diagnosis of the accumulation mode."""
-    if os.environ.get("SPARK_GRAFT_BENCH_KEEP_BLOCKS"):
-        return 0
+    clean-heap state the driver's one-query smoke or a production job
+    would see."""
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         rdds = list(jmap.values())
@@ -488,190 +265,51 @@ def _drop_dead_checkpoint_blocks(spark) -> int:
         return -1
 
 
-def _query_env_probe(
-    before: dict[str, int],
-    tree_ticks_before: int,
-    wall: float,
-    own_tree: set[int],
-) -> tuple[dict[str, float | int], dict[str, int], int]:
-    """Environment delta over one query's timed repeats. Returns
-    (env record, after-snapshot, after-tree-ticks). Fields:
-      steal  — hypervisor steal %% of host ticks in the window
-      busy   — host non-idle non-iowait %% (100 = all 32 cores busy)
-      self_cores — cores' worth of CPU our own process tree consumed
-      foreign    — SparkSubmit JVMs alive NOW that are outside our
-                   tree (the start-of-run probe misses ones that
-                   appear mid-bench)
-
-    Reading self_cores: LOW is only a finding when the row is
-    CPU-heavy (a codec/census row pinned near one core means a
-    serialized plan — how the entropic screen eval was caught at
-    busy 5.5%/1.8 cores). Iterative/many-small-stage rows (Lloyd
-    loops, checkpoint chains) legitimately idle at small SF because
-    scheduling latency, not CPU, dominates their wall time there —
-    their scale story is the tier curves, not this number.
-    """
-    after = _stat_snapshot()
-    tree_now, tree_ticks_after = _proc_tree_ticks()
-    own_tree |= tree_now
-    hz = os.sysconf("SC_CLK_TCK") or 100
-    dt = after["total"] - before["total"]
-    env: dict[str, float | int] = {}
-    if dt > 0:
-        env["steal"] = round(100.0 * (after["steal"] - before["steal"]) / dt, 2)
-        busy = dt - (after["idle"] - before["idle"]) - (after["iowait"] - before["iowait"])
-        env["busy"] = round(100.0 * busy / dt, 1)
-    if wall > 0:
-        # clamp: the tree sum counts LIVE pids only, so a reaped
-        # python worker removes its accumulated ticks and the delta
-        # can go negative (observed -113 on dq_validation_suite);
-        # a clamped 0 reads as "unmeasurable this window", not idle
-        env["self_cores"] = round(
-            max(0.0, (tree_ticks_after - tree_ticks_before) / hz) / wall, 1
-        )
-    foreign_now = [p for p in detect_foreign_spark_jvms() if p not in own_tree]
-    if foreign_now:
-        env["foreign"] = len(foreign_now)
-    return env, after, tree_ticks_after
-
-
-def _update_composite(
+def tail_lines(
     timings: dict[str, float | None],
-    quiet_gate: dict[str, object] | None,
+    cpu: dict[str, float],
+    n_errors: int,
+    repeats: int,
     sf: float,
     cpus: int,
-) -> dict[str, object] | None:
-    """Per-row-minimum composite across same-code bench attempts — the
-    protocol-blessed comparable when no single run is certified quiet
-    (VERDICT r14 #2): r13 and r14 each ran multiple labeled attempts
-    without one full quiet window, leaving the 2x gate with no
-    same-code total. Each run merges its per-query medians into a
-    sidecar (min per query), keyed by git HEAD so a code change resets
-    the composite — mixing attempts across different plans would
-    compare nothing. The reported total is an UPPER bound on the
-    quiet-family total (each row's best observed time still carries
-    whatever interference its quietest window had) and never
-    understates, so it is safe for the gate: if the composite is
-    within 2x, the quiet total is too. Rows are only merged from runs
-    whose per-row medians exist (errors skip); attempts counts every
-    merging run. Failures degrade to None — the composite must never
-    kill the bench."""
-    try:
-        import subprocess
-
-        repo = os.path.dirname(os.path.abspath(__file__))
-        # same-code identity = the last commit touching code the bench
-        # actually times (NOT plain HEAD: a docs/artifact commit —
-        # PLANS.md, BENCH_r*.json — must not orphan the campaign's
-        # accumulated attempts)
-        code_paths = ["bench.py", "ds_mapreduce_spark"]
-        head = subprocess.run(
-            ["git", "log", "-1", "--format=%H", "--", *code_paths],
-            cwd=repo,
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout.strip()
-        if not head:
-            return None
-        # uncommitted TRACKED changes under the code paths mean the
-        # key doesn't identify the code being timed — suffix so dirty
-        # attempts never merge into (or poison) a clean composite;
-        # untracked files (the driver's artifact drops) don't count
-        porcelain = subprocess.run(
-            ["git", "status", "--porcelain", "--", *code_paths],
-            cwd=repo,
-            capture_output=True,
-            text=True,
-            timeout=10,
-        ).stdout
-        if any(line and not line.startswith("??") for line in porcelain.splitlines()):
-            head += "-dirty"
-        path = os.path.join(repo, ".bench_composite.json")
-        state: dict[str, object] = {
-            "head": head,
-            "sf": sf,
-            "cpus": cpus,
-            "attempts": 0,
-            "queries": {},
-        }
-        if os.path.exists(path):
-            with open(path) as f:
-                prev = json.load(f)
-            # same code AND same scale factor AND same core count
-            # (VERDICT r16 #4: the driver's 8-core scaling run merged
-            # into the 32-core composite as a same-key attempt and
-            # quietly tightened the quiet-family upper bound with rows
-            # measured under a different parallelism), else the merge
-            # compares nothing
-            if (
-                prev.get("head") == head
-                and prev.get("sf") == sf
-                and prev.get("cpus") == cpus
-            ):
-                state = prev
-        mins: dict[str, float] = dict(state.get("queries", {}))
-        for name, t in timings.items():
-            if t is None:
-                continue
-            mins[name] = min(t, mins[name]) if name in mins else t
-        state["queries"] = mins
-        state["attempts"] = int(state.get("attempts", 0)) + 1
-        quiet = bool(quiet_gate and quiet_gate.get("achieved"))
-        state["quiet_attempts"] = int(state.get("quiet_attempts", 0)) + int(quiet)
-        with open(path, "w") as f:
-            json.dump(state, f)
-        common = [mins[n] for n in HEADLINE if n in mins]
-        return {
-            "total": round(sum(common), 3),
-            "n_rows": len(common),
-            "attempts": state["attempts"],
-            "quiet_attempts": state["quiet_attempts"],
-            "cpus": cpus,
-            "head": head[:12] + ("-dirty" if head.endswith("-dirty") else ""),
-            "label": "per-row min across same-code attempts; upper bound "
-            "on the quiet-family total",
-        }
-    except Exception:
-        return None
-
-
-def read_cpu_steal() -> tuple[int, int]:
-    """(steal_ticks, total_ticks) from /proc/stat — the hypervisor's
-    blind spot in busy-detection: r9 measured the SAME codec query at
-    1.7 s and 9.5 s minutes apart on an idle guest (zero foreign JVMs,
-    100% idle vmstat) because a co-tenant was stealing the physical
-    cores. Steal is the one signal that sees it. Errors return (0, 0)
-    (never kill the bench); steal_pct then records null."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
-    except (OSError, ValueError, IndexError):
-        return 0, 0
+) -> tuple[dict, dict]:
+    """The perq and summary lines. The driver keeps only the last 2000
+    characters of the output, so these two carry per-query data as
+    arrays in HEADLINE order (zip them with HEADLINE for names) and
+    the slowest rows by name; the full line with its name maps does
+    not fit."""
+    done = {k: v for k, v in timings.items() if v is not None}
+    perq = {
+        "line": "perq",
+        "order": "bench.py HEADLINE",
+        "sf": sf,
+        "cpus": cpus,
+        "q": [timings.get(n) for n in HEADLINE],
+        "c": [cpu.get(n) for n in HEADLINE],
+        "top": dict(sorted(done.items(), key=lambda kv: -kv[1])[:8]),
+    }
+    summary = {
+        "metric": "headline_total",
+        "value": round(sum(done.values()), 3),
+        "unit": "sec",
+        "n_queries": len(HEADLINE),
+        "n_errors": n_errors,
+        "repeats": repeats,
+        "cpu_total": round(sum(cpu.values()), 3),
+        "sf": sf,
+        "line": "summary",
+    }
+    return perq, summary
 
 
 def main() -> None:
+    from perfbench.probes import ProcessTree, StatusStore
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    steal0, total0 = read_cpu_steal()
-
-    # probe BEFORE our own JVM exists: anything found is another
-    # driver's, and the recorded timings are suspect (3-5× inflation
-    # measured in r7 — see PLANS.md calibration notes)
-    foreign = detect_foreign_spark_jvms()
-    if foreign:
-        print(
-            f"WARNING: {len(foreign)} foreign Spark JVM(s) alive "
-            f"(pids {foreign}) — timings will be inflated; recorded as "
-            'busy=true in the JSON line',
-            file=sys.stderr,
-        )
-
     spark = get_spark("ds-mapreduce-spark-bench")
+    sc = spark.sparkContext
     registry = load_all()
 
     # warm the JVM once per query shape so per-query timings measure the
@@ -679,7 +317,7 @@ def main() -> None:
     # query at the smallest scale factor first (sf0.001 ≈ free), then
     # time at the target scale. A broken query must never kill the
     # bench: failures degrade per-query into the "errors" map and the
-    # JSON line is ALWAYS printed.
+    # JSON lines are ALWAYS printed.
     warm_dir = "/root/testdata/sf0.001"
     errors: dict[str, str] = {}
     for name in HEADLINE:
@@ -692,193 +330,65 @@ def main() -> None:
                 errors[name] = f"warm: {type(exc).__name__}: {exc}"[:500]
         _drop_dead_checkpoint_blocks(spark)
 
-    # --require-quiet (or SPARK_GRAFT_REQUIRE_QUIET=1): gate the timed
-    # loop on an in-family calibration read so the recorded total is
-    # certified-quiet by construction (VERDICT r13 #2). Placed AFTER
-    # warmup so the gate's own probes don't pay classloading, and
-    # immediately BEFORE calibration_pre so the certified window and
-    # the recorded pre-probe are back-to-back.
-    quiet_gate: dict[str, object] | None = None
-    if "--require-quiet" in sys.argv or os.environ.get(
-        "SPARK_GRAFT_REQUIRE_QUIET"
-    ) == "1":
-        quiet_gate = wait_for_quiet(spark)
-        if not quiet_gate["achieved"]:
-            print(
-                "WARNING: quiet-gate deadline expired without an "
-                "in-family probe; recording a labeled (non-quiet) run",
-                file=sys.stderr,
-            )
-        # the gate's own steal window ends here; restart the run-level
-        # steal counters so the recorded run steal excludes the wait
-        steal0, total0 = read_cpu_steal()
-
-    # calibration BEFORE the query loop as well as after (r13): the
-    # r13 interference window ROTATED mid-run — one run stalled an
-    # early row and read a clean end-of-run shuffle probe, the next
-    # read 7x — so a single end-of-run probe can both under- and
-    # over-label a run. The pre/post PAIR bounds the window's drift
-    # across the ~10 min the queries take; `calibration` stays the
-    # end-of-run reading every cross-round comparison already uses.
-    try:
-        calibration_pre = calibration_probes(spark)
-    except Exception as exc:
-        calibration_pre = {}
-        errors["__calibration_pre__"] = f"{type(exc).__name__}: {exc}"[:500]
-
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     timings: dict[str, float | None] = {}
-    query_env: dict[str, dict[str, float | int]] = {}
-    own_tree, tree_ticks = _proc_tree_ticks()
-    stat_before = _stat_snapshot()
-    for name in HEADLINE:
-        fn = registry[name].fn
-        samples: list[float] = []
-        t_start = time.monotonic()
-        gc_before = _jvm_gc_seconds(spark)
-        dropped = 0
-        try:
-            for _ in range(repeats):
-                t0 = time.monotonic()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(time.monotonic() - t0)
-                # between repeats, outside the timed window: drop the
-                # run's dead checkpoint blocks so every repeat (and
-                # every query) measures in the same clean-heap state
-                dropped += max(0, _drop_dead_checkpoint_blocks(spark))
-            timings[name] = round(statistics.median(samples), 3)
-        except Exception as exc:
-            timings[name] = None
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            dropped += max(0, _drop_dead_checkpoint_blocks(spark))
-        gc_sec = round(_jvm_gc_seconds(spark) - gc_before, 2)
-        env, stat_before, tree_ticks = _query_env_probe(
-            stat_before, tree_ticks, time.monotonic() - t_start, own_tree
-        )
-        if gc_sec:
-            env["gc_sec"] = gc_sec
-        if dropped:
-            env["ckpt_blocks"] = dropped
-        query_env[name] = env
-
+    cpu: dict[str, float] = {}
+    rows: dict[str, dict[str, float]] = {}
+    tree, store = ProcessTree(), StatusStore(spark)
+    tree.start()
     try:
-        calibration = calibration_probes(spark)
-    except Exception as exc:  # a probe failure must not kill the bench
-        calibration = {}
-        errors["__calibration__"] = f"{type(exc).__name__}: {exc}"[:500]
+        for name in HEADLINE:
+            fn = registry[name].fn
+            sc.setJobGroup(name, f"bench {name}")
+            before, sampler = tree.reading(), tree.sampler_cpu()
+            samples: list[float] = []
+            try:
+                for _ in range(repeats):
+                    t0 = time.monotonic()
+                    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                    samples.append(time.monotonic() - t0)
+                    # between repeats, outside the timed window: drop the
+                    # run's dead checkpoint blocks so every repeat (and
+                    # every query) measures in the same clean-heap state
+                    _drop_dead_checkpoint_blocks(spark)
+                timings[name] = round(statistics.median(samples), 3)
+            except Exception as exc:
+                timings[name] = None
+                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+                _drop_dead_checkpoint_blocks(spark)
+                continue
+            tree_cpu = tree.cpu_since(before) - (tree.sampler_cpu() - sampler)
+            python_cpu = tree.cpu_since(before, ("python",))
+            cpu[name] = round(tree_cpu / repeats, 3)
+            rows[name] = {"cpu_s": cpu[name], "python_cpu_s": round(python_cpu / repeats, 3)}
+            totals = store.group_totals({name})[name]
+            rows[name].update((k, round(v / repeats, 3)) for k, v in sorted(totals.items()))
+    finally:
+        tree.stop()
 
-    total = round(sum(t for t in timings.values() if t is not None), 3)
-    steal1, total1 = read_cpu_steal()
-    steal_pct = (
-        round(100.0 * (steal1 - steal0) / (total1 - total0), 2)
-        if total1 > total0
-        else None
+    perq, summary = tail_lines(
+        timings, cpu, len(errors), repeats, sf, sc.defaultParallelism
     )
     result = {
         "metric": "headline_total",
-        "value": total,
+        "value": summary["value"],
         "unit": "sec",
         "queries": timings,
+        "rows": rows,
         "repeats": repeats,
-        "calibration": calibration,
-        "calibration_pre": calibration_pre,
-        "busy": bool(foreign),
-        "foreign_spark_pids": foreign,
-        # hypervisor steal over the whole run: >2-3% means a co-tenant
-        # had the physical cores part-time and CPU-bound rows are
-        # inflated even though busy=false (measured 5x on codec rows)
-        "cpu_steal_pct": steal_pct,
-        # per-query environment deltas (steal/busy/self_cores/foreign)
-        # — the BENCH_r10 instrument gap: interference that appears
-        # mid-run and hits a few tail queries is invisible to the
-        # run-level steal average and the start-only foreign probe
-        "query_env": query_env,
         "sf": sf,
     }
-    # same cores source as the session factory: the composite must key
-    # on the parallelism the rows were measured under
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    composite = _update_composite(timings, quiet_gate, sf, cpus)
-    if composite is not None:
-        result["composite"] = composite
-    if quiet_gate is not None:
-        result["quiet_gate"] = quiet_gate
     if errors:
         result["errors"] = errors
     print(json.dumps(result))
-    # Compact per-query line (VERDICT r16 #2): PERF has had
-    # per_query/geomean/scaling empty two rounds running because the
-    # full line above (>4000 chars with query_env) outgrows the
-    # driver's 2000-char tail capture and the summary line carries no
-    # per-query data. A full-name map is itself ~2100 chars (70 names
-    # average 21 chars), so it cannot fit the tail next to the ~550-
-    # char summary either; this line instead carries the medians as an
-    # ARRAY in HEADLINE order (stable, committed in this file) plus the
-    # slowest rows by full name for human readers. perq + summary
-    # together stay under ~1450 chars, so both always survive the tail
-    # window. Printed BEFORE the summary so the summary stays the last
-    # line (tail-anchored parsers depend on that).
-    perq_named = {
-        k: v for k, v in sorted(
-            ((k, v) for k, v in timings.items() if v is not None),
-            key=lambda kv: -kv[1],
-        )[:8]
-    }
-    print(
-        json.dumps(
-            {
-                "line": "perq",
-                "order": "bench.py HEADLINE",
-                "sf": sf,
-                "cpus": cpus,
-                "q": [timings.get(n) for n in HEADLINE],
-                "top": perq_named,
-            }
-        )
-    )
-    # Compact summary line (no per-query map): the full line above is
-    # >4000 chars at 60 queries and the driver records only a 2000-char
-    # TAIL, which truncated r9's headline total out of BENCH_r09.json.
-    # This line is ~300 chars, so the tail always captures a
-    # machine-readable total. Printed LAST so tail-anchored parsers and
-    # last-line JSON scanners both find it.
-    summary = {
-        "metric": "headline_total",
-        "value": total,
-        "unit": "sec",
-        "n_queries": len(HEADLINE),
-        "n_errors": len(errors),
-        "repeats": repeats,
-        "calibration": calibration,
-        "calibration_pre": calibration_pre,
-        "busy": bool(foreign),
-        "cpu_steal_pct": steal_pct,
-        # worst per-query steal and the count of queries during which
-        # a non-bench Spark JVM was alive: either being nonzero means
-        # some per-query medians are environment, not plan (read
-        # query_env in the full line for which ones)
-        "max_q_steal_pct": max(
-            (e.get("steal", 0.0) for e in query_env.values()), default=0.0
-        ),
-        "foreign_mid_run": sum(1 for e in query_env.values() if e.get("foreign")),
-        # worst single-query JVM GC time: a large value on a row whose
-        # wall inflated (self_cores ~all) is the heap-pressure mode —
-        # our own collector, not environment
-        "max_q_gc_sec": max(
-            (e.get("gc_sec", 0.0) for e in query_env.values()), default=0.0
-        ),
-        "sf": sf,
-        "line": "summary",
-        **({"composite": composite} if composite is not None else {}),
-        **({"quiet_gate": quiet_gate} if quiet_gate is not None else {}),
-    }
+    print(json.dumps(perq))
     print(json.dumps(summary))
 
 
 if __name__ == "__main__":
     try:
         main()
-    except Exception as exc:  # even a harness-level failure emits both lines
+    except Exception as exc:  # even a harness-level failure emits the full and summary lines
         err = f"{type(exc).__name__}: {exc}"[:500]
         print(
             json.dumps(
@@ -894,7 +404,6 @@ if __name__ == "__main__":
         )
         # the compact summary marker is ALWAYS the last line, even on
         # harness failure, so tail-anchored parsers never miss it
-        # (ADVICE r10)
         print(
             json.dumps(
                 {

@@ -323,10 +323,15 @@ def main() -> None:
             raise SystemExit(f"--only names not in probe list: {sorted(unknown)}")
         names = [n for n in names if n in wanted]
 
-    from bench import read_cpu_steal  # repo root is on sys.path
+    from perfbench.probes import ProcessTree  # repo root is on sys.path
+
+    tree = ProcessTree()
+    tree.start()
 
     def run(name: str, sf_dir: str, k_semdedup: int):
-        s0, tt0 = read_cpu_steal()
+        """(wall sec, rows, CPU sec of this process, the JVM and its
+        Python workers, without the sampler's own CPU)"""
+        before, sampler = tree.reading(), tree.sampler_cpu()
         t0 = time.monotonic()
         if name == "dedup_semdedup":
             df = semdedup_verdicts(
@@ -338,11 +343,8 @@ def main() -> None:
             df = registry[name].fn(spark, sf_dir)
         n = df.count()
         dt = time.monotonic() - t0
-        s1, tt1 = read_cpu_steal()
-        steal = (
-            round(100.0 * (s1 - s0) / (tt1 - tt0), 2) if tt1 > tt0 else None
-        )
-        return dt, n, steal
+        cpu = tree.cpu_since(before) - (tree.sampler_cpu() - sampler)
+        return dt, n, cpu
 
     results = {}
     for name in names:
@@ -351,20 +353,22 @@ def main() -> None:
             run(name, "/root/testdata/sf0.001", 8)
         except Exception:
             pass
-        t1, n1, st1 = run(name, BASE, 8)
-        row = {"t_1x_sec": round(t1, 3), "rows_1x": n1, "steal_1x_pct": st1}
+        t1, n1, c1 = run(name, BASE, 8)
+        row = {"t_1x_sec": round(t1, 3), "rows_1x": n1, "cpu_1x_sec": round(c1, 3)}
         line = f"{name:28s} 1x {t1:6.2f}s"
         for copies, out_dir, k in TIERS:
-            t, n, st = run(name, out_dir, k)
+            t, n, c = run(name, out_dir, k)
             row[f"t_{copies}x_sec"] = round(t, 3)
             row[f"ratio_{copies}x"] = round(t / t1, 2)
             row[f"rows_{copies}x"] = n
-            # a tier ratio read under hypervisor steal is environment,
-            # not engine superlinearity (PLANS.md late-r9 note)
-            row[f"steal_{copies}x_pct"] = st
+            # CPU barely moves with host steal: a wall ratio that its
+            # CPU ratio does not follow is environment, not engine
+            # superlinearity
+            row[f"cpu_{copies}x_sec"] = round(c, 3)
             line += f"   {copies}x {t:6.2f}s (r {t / t1:5.2f})"
         results[name] = row
         print(line)
+    tree.stop()
     print(json.dumps(results))
 
 

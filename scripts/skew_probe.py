@@ -138,18 +138,20 @@ def main() -> None:
         build_skew(spark)
         print(f"built skew 10x in {time.monotonic() - t0:.1f}s")
 
-    from bench import read_cpu_steal  # repo root is on sys.path
+    from perfbench.probes import ProcessTree  # repo root is on sys.path
+
+    tree = ProcessTree()
+    tree.start()
 
     def run(name: str, sf_dir: str):
-        s0, tt0 = read_cpu_steal()
+        """(wall sec, rows, CPU sec of this process, the JVM and its
+        Python workers, without the sampler's own CPU)"""
+        before, sampler = tree.reading(), tree.sampler_cpu()
         t0 = time.monotonic()
         n = registry[name].fn(spark, sf_dir).count()
         dt = time.monotonic() - t0
-        s1, tt1 = read_cpu_steal()
-        steal = (
-            round(100.0 * (s1 - s0) / (tt1 - tt0), 2) if tt1 > tt0 else None
-        )
-        return dt, n, steal
+        cpu = tree.cpu_since(before) - (tree.sampler_cpu() - sampler)
+        return dt, n, cpu
 
     results = {}
     for name in NAMES:
@@ -157,23 +159,24 @@ def main() -> None:
             run(name, "/root/testdata/sf0.001")
         except Exception:
             pass
-        tu, nu, su = run(name, UNIFORM_DIR)
-        ts, ns, ss = run(name, SKEW_DIR)
+        tu, nu, cu = run(name, UNIFORM_DIR)
+        ts, ns, cs = run(name, SKEW_DIR)
         results[name] = {
             "t_uniform10x_sec": round(tu, 3),
             "t_skew10x_sec": round(ts, 3),
             "skew_ratio": round(ts / tu, 2),
             "rows_uniform": nu,
             "rows_skew": ns,
-            # a skew ratio read under hypervisor steal is environment,
-            # not a hot-key pathology (PLANS.md late-r9 note)
-            "steal_uniform_pct": su,
-            "steal_skew_pct": ss,
+            # CPU barely moves with host steal: a wall ratio that its
+            # CPU ratio does not follow is environment, not a hot key
+            "cpu_uniform10x_sec": round(cu, 3),
+            "cpu_skew10x_sec": round(cs, 3),
         }
         print(
             f"{name:28s} uniform {tu:6.2f}s   skew {ts:6.2f}s   "
             f"ratio {ts / tu:5.2f}"
         )
+    tree.stop()
     print(json.dumps(results))
 
 
