@@ -23,7 +23,7 @@ earlier sample in the LOW nibble, blocks zero-padded to nBlockAlign.
 The decoder walks the chunk stream by hand, validates every field
 from the CONTAINER, and fails loudly on corruption.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one fused Arrow-batched ``mapInPandas``,
 map-only, zero data-bearing shuffles beyond the narrow-key spread.
 ADPCM packs 4 bits/sample — half of mu-law, a quarter of PCM16 — so
 it's the cheapest executor->Python transfer in the audio family. The

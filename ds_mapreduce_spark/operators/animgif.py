@@ -32,7 +32,7 @@ delta-extraction -> LZW -> container -> parse -> composition chain:
 a wrong rectangle, a mis-masked pixel, or a disposal bug shifts some
 frame's channel sums.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one fused Arrow-batched ``mapInPandas``,
 map-only, zero data-bearing shuffles beyond the narrow-key spread.
 Temporal delta coding is the storage-side win: payload bytes scale
 with MOTION, not frames (tests pin the 6-frame file far below 6x the

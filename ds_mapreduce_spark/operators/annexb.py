@@ -46,9 +46,9 @@ RBSPs -> `mcv.parse_mcv`/`decode` (every frame CRC still checked) ->
 per-frame reconstruction features. Parity therefore proves the whole
 wrap -> escape -> scan -> unescape -> parse -> decode chain.
 
-Scale notes (100 TB): identical plan shape to the MCV row — chained
-Arrow-batched ``mapInPandas``, map-only, zero data-bearing shuffles
-beyond the narrow-key spread. Annex-B's start-code scan is what makes
+Scale notes (100 TB): identical plan shape to the MCV row — synth,
+encode, wrap and decode fused into one Arrow-batched ``mapInPandas``,
+map-only, zero data-bearing shuffles beyond the narrow-key spread. Annex-B's start-code scan is what makes
 H.264 elementary streams SPLITTABLE: a reader dropped at a random
 offset resynchronizes at the next start code — the same property the
 frame-level CRC gives MLT1/MCV1, here at the byte-stream level.

@@ -39,7 +39,7 @@ precedent, entropy-coding edition). tests/test_flac.py additionally
 locks the CRC polynomials against published check values, Rice and
 UTF-8 coding by brute-force roundtrip, and the tamper paths.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one fused Arrow-batched ``mapInPandas``,
 map-only, zero data-bearing shuffles beyond the narrow-key spread
 (`plans/multimodal_queries.py:_doc_ids_spread`). Frames are
 decode-independent once STREAMINFO is read (fixed-blocksize streams

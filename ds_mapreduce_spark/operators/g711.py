@@ -19,7 +19,7 @@ our files to IDENTICAL PCM (tests/test_codec_interchange.py), and
 tests/test_g711.py locks encode->decode == the oracle's closed form
 over the ENTIRE 16-bit input range.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one fused Arrow-batched ``mapInPandas``,
 map-only, zero shuffles beyond the narrow-key spread — the WAV/PPM/PNG/JPEG/GIF plan shape; mu-law
 halves payload bytes vs PCM16, shrinking executor->Python transfer.
 """

@@ -50,7 +50,10 @@ polynomial) over the frame's coded bytes. The decoder validates every
 field, rejects out-of-picture motion vectors, verifies each frame CRC,
 and fails on trailing bytes.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): synth, encode and decode run back to back in
+one Arrow-batched ``mapInPandas`` (the stages fuse, see
+``multimodal._map_batches``), so the frames never cross the JVM, and
+``encode_mcv_batch`` encodes a whole batch of documents per call;
 map-only, zero data-bearing shuffles beyond the narrow-key spread.
 Prediction chains frames WITHIN a payload — the defining cost of
 inter coding (same seam as `operators/animgif.py`) — while payloads
@@ -73,23 +76,21 @@ from pyspark.sql import DataFrame
 
 from ds_mapreduce_spark.operators.flac import (
     BitReader,
-    BitWriter,
     corruption_to_value_error,
     crc8,
     unzigzag,
-    zigzag,
 )
 from ds_mapreduce_spark.operators.jpeg import (
     _fdct_blocks,
     _idct_blocks,
     _da_int,
 )
-from ds_mapreduce_spark.operators.mdct import _write_ue
 from ds_mapreduce_spark.operators.multimodal import (
     PAYLOAD_SCHEMA,
     PCM_A,
     PCM_B,
     arrow_stage,
+    synth_map_arrays,
 )
 
 MCV_MAGIC = b"MCV1"
@@ -122,8 +123,6 @@ def synth_scroll_frames(docs: DataFrame) -> DataFrame:
       base(i)      = ((doc_id%256)*PCM_A + i*PCM_B) mod 256
       cur(x, y, t) = base(((y+2t)%16)*24 + ((x+3t)%24))
     """
-    from ds_mapreduce_spark.operators.multimodal import synth_map_arrays
-
     n = MCV_W * MCV_H
     i = np.arange(n, dtype=np.int64)
     t = np.arange(MCV_FRAMES, dtype=np.int64)
@@ -142,33 +141,6 @@ def synth_scroll_frames(docs: DataFrame) -> DataFrame:
     )
 
 
-def _quant_flat(coeffs: np.ndarray, step: int) -> np.ndarray:
-    return _da_int(coeffs, step)
-
-
-def _code_block(w: BitWriter, q: np.ndarray) -> None:
-    """Zero-residual flag, then (unless flagged) 64 row-major ue codes.
-
-    The codes are folded into one integer and emitted with a single
-    write (r16): each coefficient contributes (zigzag+1) in
-    2*bitlength-1 bits — bit-identical to the per-coefficient
-    ``_write_ue`` loop, minus 64 writer calls per block. The leading
-    0 flag bit rides the same write (the fold is always below its
-    total width, so the top bit is 0)."""
-    flat = q.reshape(64).tolist()
-    if not any(flat):
-        w.write(1, 1)
-        return
-    acc = 0
-    total = 1  # the zero flag bit
-    for v in flat:
-        u = (v << 1 if v >= 0 else ((-v) << 1) - 1) + 1
-        nb = 2 * u.bit_length() - 1
-        acc = (acc << nb) | u
-        total += nb
-    w.write(acc, total)
-
-
 def _read_block(r: BitReader, materialize: bool = True):
     """Zero flag + (unless flagged) 64 ue codes, batch-read (r16) via
     BitReader.read_ue_many — one call per block instead of 64×3, with
@@ -184,21 +156,24 @@ def _read_block(r: BitReader, materialize: bool = True):
     return np.where(u & 1, -((u + 1) >> 1), u >> 1).reshape(8, 8)
 
 
-def _to_blocks(frame: np.ndarray) -> np.ndarray:
-    """(H, W) -> (n_blocks, 8, 8) in raster block order (the order the
-    bitstream, the oracle's ``bl`` table, and ``_from_blocks`` share)."""
+def _to_blocks(frames: np.ndarray) -> np.ndarray:
+    """(..., H, W) -> (..., n_blocks, 8, 8) in raster block order (the
+    order the bitstream, the oracle's ``bl`` table, and ``_from_blocks``
+    share)."""
+    lead = frames.shape[:-2]
     return (
-        frame.reshape(MCV_H // 8, 8, MCV_W // 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(-1, 8, 8)
+        frames.reshape(*lead, MCV_H // 8, 8, MCV_W // 8, 8)
+        .swapaxes(-3, -2)
+        .reshape(*lead, -1, 8, 8)
     )
 
 
 def _from_blocks(blocks: np.ndarray) -> np.ndarray:
+    lead = blocks.shape[:-3]
     return (
-        blocks.reshape(MCV_H // 8, MCV_W // 8, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(MCV_H, MCV_W)
+        blocks.reshape(*lead, MCV_H // 8, MCV_W // 8, 8, 8)
+        .swapaxes(-3, -2)
+        .reshape(*lead, MCV_H, MCV_W)
     )
 
 
@@ -208,67 +183,135 @@ def _block_origins():
             yield by0, bx0
 
 
-def _motion_search(prev: np.ndarray, curbs: np.ndarray):
-    """Vectorized exhaustive search: one SAD tensor per block over all
-    in-picture displacements. np.argmin's first-minimum rule over the
-    (dy, dx) raster IS the format's (sad, dy, dx) lexicographic
-    tie-break. -> (mvs, preds)."""
-    wins = np.lib.stride_tricks.sliding_window_view(prev, (8, 8))
-    mvs = []
-    preds = np.empty_like(curbs)
-    for bi, (by0, bx0) in enumerate(_block_origins()):
-        ylo = max(0, by0 - MCV_SEARCH)
-        yhi = min(MCV_H - 8, by0 + MCV_SEARCH)
-        xlo = max(0, bx0 - MCV_SEARCH)
-        xhi = min(MCV_W - 8, bx0 + MCV_SEARCH)
-        region = wins[ylo : yhi + 1, xlo : xhi + 1]
-        sad = np.abs(region - curbs[bi]).sum(axis=(-1, -2))
-        flat = int(np.argmin(sad))
-        ry, rx = divmod(flat, sad.shape[1])
-        dy, dx = ylo + ry - by0, xlo + rx - bx0
-        mvs.append((dy, dx))
-        preds[bi] = region[ry, rx]
-    return mvs, preds
+def _in_picture(d: int, size: int) -> tuple[int, int]:
+    """Block indices [lo, hi) along an axis of ``size`` pixels whose
+    8-pixel window displaced by ``d`` stays inside the picture."""
+    return -(d // 8), (size - d) // 8
+
+
+#: the (2*MCV_SEARCH+1)^2 candidate displacements in (dy, dx) raster
+#: order, each with the block rows [r0, r1) and columns [c0, c1) it may
+#: serve (the in-picture rule)
+_SHIFTS = np.array(
+    [
+        (dy, dx)
+        for dy in range(-MCV_SEARCH, MCV_SEARCH + 1)
+        for dx in range(-MCV_SEARCH, MCV_SEARCH + 1)
+    ],
+    dtype=np.int64,
+)
+_WINDOWS = [
+    (dy, dx, *_in_picture(dy, MCV_H), *_in_picture(dx, MCV_W))
+    for dy, dx in _SHIFTS.tolist()
+]
+_ORIGINS = np.array(list(_block_origins()), dtype=np.int64)
+_HEADER = MCV_MAGIC + struct.pack(
+    "<HHBBBB", MCV_W, MCV_H, MCV_FRAMES, MCV_QI, MCV_QP, MCV_SEARCH
+)
+
+
+def _block_match(prev: np.ndarray, cur: np.ndarray):
+    """Exhaustive search for every block of every document at once:
+    (n, H, W) reconstructed previous frames and current frames ->
+    (n, n_blocks, 2) motion vectors (dy, dx) and (n, n_blocks, 8, 8)
+    predictions. Per displacement, one SAD over the blocks it keeps
+    in-picture; the others stay at the int64 maximum, so they never
+    win, and argmin's first minimum over the (dy, dx) raster IS the
+    format's (sad, dy, dx) lexicographic tie-break."""
+    n = len(cur)
+    sads = np.full(
+        (len(_WINDOWS), n, MCV_H // 8, MCV_W // 8), np.iinfo(np.int64).max
+    )
+    for k, (dy, dx, r0, r1, c0, c1) in enumerate(_WINDOWS):
+        y0, y1, x0, x1 = 8 * r0, 8 * r1, 8 * c0, 8 * c1
+        diff = cur[:, y0:y1, x0:x1] - prev[:, y0 + dy : y1 + dy, x0 + dx : x1 + dx]
+        sads[k, :, r0:r1, c0:c1] = (
+            np.abs(diff)
+            .reshape(n, y1 - y0, c1 - c0, 8)
+            .sum(axis=-1)
+            .reshape(n, r1 - r0, 8, c1 - c0)
+            .sum(axis=2)
+        )
+    mvs = _SHIFTS[sads.reshape(len(_WINDOWS), n, -1).argmin(axis=0)]
+    r = np.arange(8)
+    ys = (_ORIGINS[:, 0] + mvs[..., 0])[..., None, None] + r[:, None]
+    xs = (_ORIGINS[:, 1] + mvs[..., 1])[..., None, None] + r[None, :]
+    return mvs, prev[np.arange(n)[:, None, None, None], ys, xs]
+
+
+def _se_codes(v: np.ndarray):
+    """Signed values -> ue code numbers u = zigzag(v) + 1 and their
+    lengths 2*bitlength(u) - 1 (ue(zigzag(v)) bits, MSB-first)."""
+    u = np.where(v >= 0, 2 * v, -2 * v - 1) + 1
+    return u, 2 * np.frexp(u.astype(np.float64))[1] - 1
+
+
+def encode_mcv_batch(frames) -> list[bytes]:
+    """Full encode of a batch of documents: (n, MCV_FRAMES, H, W)
+    rasters (values 0..255) -> n MCV1 containers. Closed-loop: every
+    P-frame searches and predicts in the encoder's own reconstruction
+    of the previous frame. Search, transform and quantization run over
+    every document's blocks at once; every syntax field of the batch
+    (se motion vectors, zero flag, 64 ue codes, byte pad) is packed
+    with one ``np.repeat``/``np.packbits``; then CRC-8 per frame."""
+    fr = np.asarray(frames, dtype=np.int64)
+    if not len(fr):
+        return []
+    if fr.shape[1:] != (MCV_FRAMES, MCV_H, MCV_W):
+        raise ValueError(
+            f"expected {MCV_FRAMES} frames of {MCV_W}x{MCV_H}, got "
+            f"frames of shape {fr.shape[1:]}"
+        )
+    n = len(fr)
+    q = np.empty((n, MCV_FRAMES, len(_ORIGINS), 8, 8), dtype=np.int64)
+    mvs = np.zeros((n, MCV_FRAMES, len(_ORIGINS), 2), dtype=np.int64)
+    for t in range(MCV_FRAMES):
+        curbs = _to_blocks(fr[:, t])
+        if t == 0:
+            q[:, t] = _da_int(_fdct_blocks(curbs - 128), MCV_QI)
+            recon_b = _idct_blocks(q[:, t] * MCV_QI) + 128
+        else:
+            mvs[:, t], preds = _block_match(prev, fr[:, t])
+            q[:, t] = _da_int(_fdct_blocks(curbs - preds), MCV_QP)
+            recon_b = preds + _idct_blocks(q[:, t] * MCV_QP)
+        prev = _from_blocks(np.clip(recon_b, 0, 255))
+
+    # per block: ue(zigzag(dx)), ue(zigzag(dy)) (P-frames only), the
+    # zero-residual flag, then unless flagged 64 row-major ue codes; per
+    # frame: zero bits to the byte boundary. Every field is a (value,
+    # length) pair, written MSB-first.
+    coef = q.reshape(*q.shape[:3], 64)
+    zero = ~coef.any(axis=-1, keepdims=True)
+    mv_u, mv_len = _se_codes(mvs[..., ::-1])
+    mv_len[:, 0] = 0  # frame 0 is intra: no motion vectors
+    co_u, co_len = _se_codes(coef)
+    co_len[zero[..., 0]] = 0
+    vals = np.concatenate([mv_u, zero, co_u], axis=-1).reshape(n, MCV_FRAMES, -1)
+    lens = np.concatenate([mv_len, np.ones_like(zero), co_len], axis=-1)
+    lens = lens.reshape(n, MCV_FRAMES, -1)
+    frame_bits = lens.sum(axis=-1, keepdims=True)
+    v = np.concatenate([vals, np.zeros_like(frame_bits)], axis=-1).ravel()
+    ln = np.concatenate([lens, -frame_bits % 8], axis=-1).ravel()
+    shift = np.repeat(np.cumsum(ln) - 1, ln) - np.arange(int(ln.sum()))
+    bits = (np.repeat(v, ln) >> np.minimum(shift, 63)) & 1
+    data = np.packbits(bits.astype(np.uint8)).tobytes()
+
+    ends = np.cumsum((frame_bits + 7) // 8).tolist()
+    out = []
+    for i in range(n):
+        parts = [_HEADER]
+        for j in range(i * MCV_FRAMES, (i + 1) * MCV_FRAMES):
+            coded = data[ends[j - 1] if j else 0 : ends[j]]
+            parts += (coded, bytes((crc8(coded),)))
+        out.append(b"".join(parts))
+    return out
 
 
 def encode_mcv_bytes(frames) -> bytes:
-    """Full encode: MCV_FRAMES rasters (row-major, values 0..255) ->
-    MCV1 container. Closed-loop: every P-frame searches and predicts
-    in the encoder's own reconstruction of the previous frame. All
-    transforms run batched (one (n_blocks, 8, 8) matmul per frame)."""
-    fr = [
-        np.asarray(f, dtype=np.int64).reshape(MCV_H, MCV_W) for f in frames
-    ]
-    if len(fr) != MCV_FRAMES:
-        raise ValueError(f"expected {MCV_FRAMES} frames, got {len(fr)}")
-    out = bytearray(
-        MCV_MAGIC
-        + struct.pack(
-            "<HHBBBB", MCV_W, MCV_H, MCV_FRAMES, MCV_QI, MCV_QP, MCV_SEARCH
-        )
-    )
-    prev: np.ndarray | None = None
-    for t, cur in enumerate(fr):
-        w = BitWriter()
-        curbs = _to_blocks(cur)
-        if t == 0:
-            q = _quant_flat(_fdct_blocks(curbs - 128), MCV_QI)
-            recon_b = _idct_blocks(q * MCV_QI) + 128
-            for bi in range(len(curbs)):
-                _code_block(w, q[bi])
-        else:
-            mvs, preds = _motion_search(prev, curbs)
-            q = _quant_flat(_fdct_blocks(curbs - preds), MCV_QP)
-            recon_b = preds + _idct_blocks(q * MCV_QP)
-            for bi, (dy, dx) in enumerate(mvs):
-                _write_ue(w, zigzag(dx))
-                _write_ue(w, zigzag(dy))
-                _code_block(w, q[bi])
-        w.align()
-        coded = w.getvalue()
-        out += coded + bytes([crc8(coded)])
-        prev = _from_blocks(np.clip(recon_b, 0, 255))
-    return bytes(out)
+    """One document's encode: MCV_FRAMES rasters (row-major, values
+    0..255) -> MCV1 container, through ``encode_mcv_batch``."""
+    fr = np.asarray(frames, dtype=np.int64)
+    return encode_mcv_batch(fr.reshape(1, len(fr), MCV_H, MCV_W))[0]
 
 
 @corruption_to_value_error
@@ -379,8 +422,14 @@ def _decode_frames_from_parsed(frames) -> list[np.ndarray]:
 
 
 def encode_mcv(df: DataFrame) -> DataFrame:
-    """(doc_id, frames) -> (doc_id, payload): Arrow-batched, map-only."""
-    return arrow_stage(df, lambda d, f: [(d, encode_mcv_bytes(f))], PAYLOAD_SCHEMA)
+    """(doc_id, frames) -> (doc_id, payload): Arrow-batched, map-only;
+    one ``encode_mcv_batch`` call per batch."""
+
+    def encode(doc_id, frames):
+        fr = [np.stack(f).reshape(len(f), MCV_H, MCV_W) for f in frames]
+        return {"payload": encode_mcv_batch(np.array(fr, dtype=np.int64))}
+
+    return synth_map_arrays(df, PAYLOAD_SCHEMA, encode)
 
 
 def decode_mcv_features(media: DataFrame) -> DataFrame:

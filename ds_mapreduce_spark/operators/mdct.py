@@ -40,7 +40,7 @@ decode-independent (scalefactors are stored, prediction never crosses
 a granule) — the audio analog of JPEG restart intervals: a 100 TB
 corpus can split one payload's granules across tasks.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one fused Arrow-batched ``mapInPandas``,
 map-only, zero data-bearing shuffles beyond the narrow-key spread
 (`plans/multimodal_queries.py:_doc_ids_spread`). The transforms are
 numpy int64 matrix products (bounded by |sum| < 2^39, no overflow);

@@ -12,7 +12,7 @@ the same fixed-point JPEG oracle arithmetic, now over (frame, block)
 instances. The NotImplementedError seam for INTER-FRAME codecs
 (H.264: motion compensation, no stdlib path) remains documented.
 
-Scale notes (100 TB): two chained Arrow-batched ``mapInPandas``,
+Scale notes (100 TB): one fused Arrow-batched ``mapInPandas``,
 map-only, zero shuffles beyond the narrow-key spread; video payloads are the widest rows in the
 corpus, so ``maxPartitionBytes`` (not row count) sizes tasks, and
 frame sampling drops (1 - 1/stride) of the decode work before the

@@ -38,8 +38,8 @@ join, so parity grades the VBR index choice, the padding bits, and
 the total container size byte-for-byte — without the oracle seeing a
 payload byte.
 
-Scale notes (100 TB): identical plan shape to the MDCT row — two
-chained Arrow-batched ``mapInPandas``, map-only, zero data-bearing
+Scale notes (100 TB): identical plan shape to the MDCT row — one
+fused Arrow-batched ``mapInPandas``, map-only, zero data-bearing
 shuffles beyond the narrow-key spread. Frames are decode-independent
 after the tag (the granule syntax carries no cross-frame state), so
 a real corpus can split one payload's frames across tasks after a

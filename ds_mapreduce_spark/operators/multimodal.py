@@ -215,10 +215,13 @@ PPM_WIDTH = 24
 PPM_HEIGHT = 16
 
 
-def synth_map_arrays(docs: DataFrame, schema: str, build) -> DataFrame:
-    """Arrow-batched payload synthesizer: ``build(doc_ids int64
-    ndarray) -> {col: list-of-per-doc-values}`` rendered in vectorized
-    numpy inside ``mapInPandas``.
+def synth_map_arrays(df: DataFrame, schema: str, build) -> DataFrame:
+    """Arrow-batched vectorized stage: ``build(*columns)`` receives the
+    batch's input columns as ndarrays, in ``df``'s column order, and
+    returns ``{col: per-doc values}`` for every output column but
+    ``doc_id``, which passes through. The synth stages take ``doc_id``
+    alone and render payloads in numpy; ``mcv.encode_mcv`` takes
+    ``(doc_id, frames)`` and encodes the whole batch at once.
 
     Every synth in the codec family is a linear-congruential closed
     form over (doc_id, element index) — pure integer arithmetic that
@@ -238,12 +241,11 @@ def synth_map_arrays(docs: DataFrame, schema: str, build) -> DataFrame:
     already feeding a mapInPandas chain, so this removes the codec
     family's only JVM-side hotspot instead of adding a Python seam."""
 
-    def synth(batches):
-        for batch in batches:
-            d = batch["doc_id"].to_numpy(dtype="int64")
-            yield pd.DataFrame({"doc_id": d, **build(d)})
+    def synth(batch):
+        cols = [batch[c].to_numpy() for c in batch.columns]
+        return pd.DataFrame({"doc_id": batch["doc_id"].to_numpy(), **build(*cols)})
 
-    return docs.select("doc_id").mapInPandas(synth, schema=schema)
+    return _map_batches(df, synth, StructType.fromDDL(schema))
 
 
 #: output of every encoder stage
@@ -261,13 +263,68 @@ def arrow_stage(df: DataFrame, row_fn, schema: str) -> DataFrame:
     out = StructType.fromDDL(schema)
     names = out.fieldNames()
 
-    def stage(batches):
-        for batch in batches:
-            cols = (batch[c] for c in batch.columns)
-            rows = [t for values in zip(*cols) for t in row_fn(*values)]
-            yield pd.DataFrame(rows, columns=names)
+    def stage(batch):
+        cols = (batch[c] for c in batch.columns)
+        rows = [t for values in zip(*cols) for t in row_fn(*values)]
+        return pd.DataFrame(rows, columns=names)
 
-    return df.mapInPandas(stage, schema=out)
+    return _map_batches(df, stage, out)
+
+
+def _map_batches(df: DataFrame, fn, schema: StructType) -> DataFrame:
+    """``df.mapInPandas`` of ``fn(batch) -> batch``, fused with the stage
+    that returned ``df``, if any.
+
+    The DataFrame returned here records its input, its batch function
+    and its declared schema. Called on exactly such a DataFrame, it
+    builds one ``mapInPandas`` over the first stage's input and runs the
+    batch functions back to back in one Python worker (the reference
+    runs a worker's whole map over its chunk in one task), instead of
+    one worker and one JVM hop per stage. Between them the batch takes
+    the hop the JVM would give it (``_arrow_hop``), so a wrong column or
+    type still raises and the next stage sees the same values. Any
+    other DataFrame method (``select``, ``where``, ``repartition``, a
+    checkpoint) returns a new object without the record and ends the
+    chain; a cached stage output is read from its cache instead."""
+    prev = df.__dict__.get("_stage")
+    if prev is not None and not df.is_cached:
+        df, first, first_schema = prev
+        hop = _arrow_hop(df.sparkSession, first_schema)
+        last = fn
+
+        def fn(batch):
+            return last(hop(first(batch)))
+
+    res = df.mapInPandas(lambda batches: map(fn, batches), schema=schema)
+    res._stage = (df, fn, schema)
+    return res
+
+
+def _arrow_hop(spark, schema: StructType):
+    """A pandas batch -> the declared Arrow ``schema`` -> pandas, through
+    the serializer pyspark's own ``mapInPandas`` worker uses on each side
+    of the JVM (same settings), with its result-column check."""
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    ser = ArrowStreamPandasUDFSerializer(
+        spark.conf.get("spark.sql.session.timeZone"),
+        spark.conf.get("spark.sql.execution.pandas.convertToArrowArraySafely")
+        == "true",
+        True,
+        df_for_struct=True,
+        arrow_cast=True,
+    )
+    arrow_type = to_arrow_type(schema)
+
+    def hop(pdf):
+        from pyspark.worker import verify_pandas_result
+
+        verify_pandas_result(pdf, schema, True, True)
+        batch = ser._create_batch([(pdf, arrow_type)])
+        return ser.arrow_to_pandas(batch.column(0), 0)
+
+    return hop
 
 
 def synth_pcm_samples(docs: DataFrame) -> DataFrame:

@@ -244,7 +244,7 @@ FROM s GROUP BY doc_id
     "the sample formula and never sees a WAV byte — parity therefore "
     "proves the encode->decode roundtrip preserved every sample "
     "bit-for-bit, i.e. the decoder is real, not a checksum stub. "
-    "Plan: two chained mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; at 100 TB "
+    "Plan: one fused mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; at 100 TB "
     "payload width (not row count) sizes tasks via maxPartitionBytes "
     "and features are written columnar so the payload prunes away. "
     "The stub seam now remains only for MP3/H.264 (JPEG became real "
@@ -353,7 +353,7 @@ FROM px GROUP BY doc_id
     "proves the full parse->resample->re-encode->parse chain "
     "preserved exactly the expected pixels. Closes the 'resize' leg "
     "of the mandated multimodal surface as REAL (the stub remains "
-    "only for true-codec formats). Three chained mapInPandas, "
+    "only for true-codec formats). Three stages fused into one mapInPandas, "
     "map-only, zero shuffles beyond the narrow-key spread; resize shrinks payloads 4x so the "
     "second decode scans a quarter of the bytes. See "
     "operators/multimodal.py:resize_ppm_nearest.",
@@ -389,8 +389,8 @@ def q_multimodal_ppm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one-place rule), so parity proves DEFLATE + filter prediction "
     "preserved every pixel bit-for-bit. Lossless image compression is "
     "real here; the lossy tiers are real too (JPEG gray+color, G.711, "
-    "MJPEG-AVI) — the stub seam now covers only MP3/H.264. Plan: two "
-    "chained mapInPandas, map-only, ZERO data-bearing shuffles beyond "
+    "MJPEG-AVI) — the stub seam now covers only MP3/H.264. Plan: one "
+    "fused mapInPandas, map-only, ZERO data-bearing shuffles beyond "
     "the narrow-key spread; compressed payloads shrink the bytes that "
     "cross executor->Python. See operators/multimodal.py:_parse_png.",
 )
@@ -476,7 +476,7 @@ FROM r GROUP BY doc_id
     "IDENTICAL PCM (tests/test_codec_interchange.py). The features "
     "share the PCM WAV decoder's schema, so this row's delta vs "
     "multimodal_wav_roundtrip measures exactly what companding cost. "
-    "Plan: two chained mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; mu-law "
+    "Plan: one fused mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; mu-law "
     "halves the bytes crossing executor->Python vs PCM16. See "
     "operators/g711.py:parse_ulaw_wav.",
 )
@@ -534,7 +534,7 @@ FROM px GROUP BY doc_id
     "(javax.imageio, a decoder sharing zero code with ours) "
     "reconstructs our GIF and PNG files pixel-EXACTLY and our JPEG "
     "within the T.81-permitted +-1 (tests/test_codec_interchange.py). "
-    "Plan: two chained mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread. See "
+    "Plan: one fused mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread. See "
     "operators/gif.py:parse_gif.",
 )
 def q_multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,7 +806,7 @@ FROM px GROUP BY doc_id
     "reconstruction, and the inverse transform — parity grades "
     "color JPEG end-to-end bit-exactly. OpenJDK ImageIO decodes our "
     "color files within the expected IDCT+color variance "
-    "(tests/test_codec_interchange.py). Plan: two chained "
+    "(tests/test_codec_interchange.py). Plan: one fused "
     "mapInPandas after the narrow-key spread. See "
     "operators/jpeg.py:encode_jpeg_color_bytes.",
 )
@@ -873,8 +873,8 @@ FROM fx GROUP BY doc_id
     "parser and cross-checks dimensions and counts against the "
     "header. The oracle reuses the fixed-point JPEG closed form over "
     "the sampled (frame, block) instances, so parity proves container "
-    "walk + per-frame lossy decode + sampling end-to-end. Plan: two "
-    "chained mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; sampling drops "
+    "walk + per-frame lossy decode + sampling end-to-end. Plan: one "
+    "fused mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; sampling drops "
     "half the IDCT work, and at 100 TB video payloads are the widest "
     "rows so maxPartitionBytes sizes tasks. See "
     "operators/mjpeg_avi.py:parse_mjpeg_avi.",
@@ -909,7 +909,7 @@ def q_multimodal_mjpeg_avi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     "coefficients at zigzag 1/6/15/28, so run-length coding is "
     "genuinely exercised on the graded path (not just DC+EOB). This "
     "retires the 'lossy codecs' NotImplementedError seam for images; "
-    "only MP3/H.264 remain environment-stubbed. Plan: two chained "
+    "only MP3/H.264 remain environment-stubbed. Plan: one fused "
     "mapInPandas, map-only, ZERO data-bearing shuffles beyond the narrow-key spread; DCT/IDCT are vectorized "
     "int64 numpy matmuls per payload batch. See "
     "operators/jpeg.py:parse_jpeg.",
@@ -938,7 +938,7 @@ def q_multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(UNNEST(range(0, 1024, 4))) and never sees a WAV byte — parity "
     "proves the parse->decimate->re-encode->parse chain bit-exact. "
     "Closes the 'frame-sample' leg of the mandated multimodal "
-    "surface as REAL. Three chained mapInPandas, map-only, zero "
+    "surface as REAL. Three stages fused into one mapInPandas, map-only, zero "
     "shuffles; decimation shrinks payloads ~4x. See "
     "operators/multimodal.py:decimate_wav.",
 )
@@ -1060,7 +1060,7 @@ FROM r GROUP BY doc_id
     "sample-for-sample, plus quantizer brute-force over every step "
     "index). The per-block index reset makes blocks decode-"
     "independent — the audio analog of JPEG restart intervals: the "
-    "intra-payload parallelism seam at 100 TB. Plan: two chained "
+    "intra-payload parallelism seam at 100 TB. Plan: one fused "
     "mapInPandas, map-only, zero data-bearing shuffles beyond the "
     "narrow-key spread; 4-bit packing is the cheapest "
     "executor->Python transfer in the audio family. See "
@@ -1097,7 +1097,7 @@ def q_multimodal_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "-> reconstruct is the identity on every sample (the PNG/DEFLATE "
     "precedent, entropy-coding edition); tests/test_flac.py locks "
     "the CRC polynomials, coded-number widths, compression on "
-    "low-entropy signals, and the tamper paths. Plan: two chained "
+    "low-entropy signals, and the tamper paths. Plan: one fused "
     "mapInPandas, map-only, zero data-bearing shuffles beyond the "
     "narrow-key spread; frames are decode-independent after "
     "STREAMINFO (the JPEG-restart / ADPCM-block parallelism seam). "
@@ -1191,7 +1191,7 @@ FROM v GROUP BY doc_id, t
     "storage economics that make temporal coding matter at 100 TB; "
     "composition chains frames WITHIN a payload (the inter-frame "
     "seam's defining cost) while payloads stay independent rows. "
-    "Plan: two chained mapInPandas, map-only, zero data-bearing "
+    "Plan: one fused mapInPandas, map-only, zero data-bearing "
     "shuffles beyond the narrow-key spread. See operators/animgif.py.",
 )
 def q_multimodal_animgif_roundtrip(
@@ -1348,7 +1348,7 @@ GROUP BY doc_id
     "splits one payload's granules across tasks). ~0.73x of raw "
     "PCM16 at <500 LSB max error on this corpus — real "
     "rate-distortion, priced against the lossless WAV row by the "
-    "shared schema. Plan: two chained mapInPandas, map-only, zero "
+    "shared schema. Plan: one fused mapInPandas, map-only, zero "
     "data-bearing shuffles beyond the narrow-key spread. See "
     "operators/mdct.py.",
 )
@@ -1550,7 +1550,7 @@ FROM r GROUP BY doc_id, t
     "cannot reach the displacement in-picture) exercise the full "
     "residual path every frame. CRC-8-framed frames; prediction "
     "chains frames WITHIN a payload (the inter-coding seam, as "
-    "animgif), payloads stay independent rows. Plan: two chained "
+    "animgif), payloads stay independent rows. Plan: one fused "
     "mapInPandas, map-only, zero data-bearing shuffles beyond the "
     "narrow-key spread. See operators/mcv.py.",
 )
@@ -1647,7 +1647,7 @@ GROUP BY doc_id
     "zero slack bytes, and exact stream end, then reconstructs the "
     "audio through the shared synthesis path — graded sample-exactly "
     "alongside the byte census. Plan: identical map-only shape to the "
-    "MDCT row (narrow-key spread -> chained Arrow mapInPandas, zero "
+    "MDCT row (narrow-key spread -> one fused Arrow mapInPandas, zero "
     "data-bearing shuffles); frames are decode-independent after the "
     "tag, the splittability property real distributed MP3 ingest "
     "relies on. See operators/mpeg_audio.py.",
@@ -1774,8 +1774,8 @@ FROM agg a LEFT JOIN emu USING (doc_id)
     "byte-for-byte; decode reassembles the MCV1 container from "
     "parsed geometry and re-validates every frame CRC, so the pixel "
     "features grade the whole wrap -> escape -> scan -> unescape -> "
-    "parse -> decode chain. Plan: map-only chained Arrow mapInPandas "
-    "on the narrow-key spread, zero data-bearing shuffles; the "
+    "parse -> decode chain. Plan: synth, encode, wrap and decode fused into "
+    "one map-only Arrow mapInPandas on the narrow-key spread, zero data-bearing shuffles; the "
     "start-code scan is the property that makes H.264 elementary "
     "streams SPLITTABLE at 100 TB. See operators/annexb.py.",
 )

@@ -1,6 +1,7 @@
 """SparkSession factory with scale-oriented defaults.
 
-``local[$SPARK_GRAFT_CPUS]`` with AQE, Arrow and a UTC session clock.
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run
+on) with AQE, Arrow and a UTC session clock.
 None of the settings is load-bearing for correctness:
 every operator takes the session as an argument, so sessions built
 elsewhere (``__spark_entry__.entry(spark)`` gets its caller's) run
@@ -37,7 +38,7 @@ def get_spark(app_name: str = "ds-mapreduce-spark") -> SparkSession:
     default 128 MiB so a 100 TB scan yields ~800k input splits — fine
     for the DAG scheduler.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -13,6 +13,7 @@ pre-r16 loops.
 
 from __future__ import annotations
 
+import itertools
 import random
 import struct
 
@@ -23,16 +24,30 @@ from ds_mapreduce_spark.operators.flac import (
     BitReader,
     BitWriter,
     _pack_pcm16le,
+    crc8,
+    zigzag,
 )
+from ds_mapreduce_spark.operators.jpeg import _da_int, _fdct_blocks, _idct_blocks
 from ds_mapreduce_spark.operators.mcv import (
     MCV_FRAMES,
     MCV_H,
+    MCV_MAGIC,
+    MCV_QI,
+    MCV_QP,
+    MCV_SEARCH,
+    MCV_VX,
+    MCV_VY,
     MCV_W,
+    _block_origins,
+    _from_blocks,
+    _to_blocks,
+    encode_mcv_batch,
     encode_mcv_bytes,
     mcv_frame_spans,
     parse_mcv,
 )
 from ds_mapreduce_spark.operators.mdct import _read_ue, _write_ue
+from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
 
 
 class RefBitReader:
@@ -414,3 +429,115 @@ def test_mcv_frame_spans_matches_parse() -> None:
         return "ok"
 
     assert outcome(mcv_frame_spans) == outcome(lambda p: parse_mcv(p))
+
+
+# ---- MCV encoder: the per-document encoder the batch encoder replaced
+def _ref_code_block(w: BitWriter, q: np.ndarray) -> None:
+    """Zero-residual flag, then (unless flagged) 64 row-major ue codes,
+    folded into one write."""
+    flat = q.reshape(64).tolist()
+    if not any(flat):
+        w.write(1, 1)
+        return
+    acc = 0
+    total = 1  # the zero flag bit
+    for v in flat:
+        u = (v << 1 if v >= 0 else ((-v) << 1) - 1) + 1
+        nb = 2 * u.bit_length() - 1
+        acc = (acc << nb) | u
+        total += nb
+    w.write(acc, total)
+
+
+def _ref_motion_search(prev: np.ndarray, curbs: np.ndarray):
+    """Per-block exhaustive search over the in-picture window; argmin's
+    first minimum over the (dy, dx) raster is the tie-break."""
+    wins = np.lib.stride_tricks.sliding_window_view(prev, (8, 8))
+    mvs = []
+    preds = np.empty_like(curbs)
+    for bi, (by0, bx0) in enumerate(_block_origins()):
+        ylo = max(0, by0 - MCV_SEARCH)
+        yhi = min(MCV_H - 8, by0 + MCV_SEARCH)
+        xlo = max(0, bx0 - MCV_SEARCH)
+        xhi = min(MCV_W - 8, bx0 + MCV_SEARCH)
+        region = wins[ylo : yhi + 1, xlo : xhi + 1]
+        sad = np.abs(region - curbs[bi]).sum(axis=(-1, -2))
+        flat = int(np.argmin(sad))
+        ry, rx = divmod(flat, sad.shape[1])
+        mvs.append((ylo + ry - by0, xlo + rx - bx0))
+        preds[bi] = region[ry, rx]
+    return mvs, preds
+
+
+def _ref_encode_mcv(frames) -> bytes:
+    fr = [np.asarray(f, dtype=np.int64).reshape(MCV_H, MCV_W) for f in frames]
+    if len(fr) != MCV_FRAMES:
+        raise ValueError(f"expected {MCV_FRAMES} frames, got {len(fr)}")
+    out = bytearray(
+        MCV_MAGIC
+        + struct.pack("<HHBBBB", MCV_W, MCV_H, MCV_FRAMES, MCV_QI, MCV_QP, MCV_SEARCH)
+    )
+    prev = None
+    for t, cur in enumerate(fr):
+        w = BitWriter()
+        curbs = _to_blocks(cur)
+        if t == 0:
+            q = _da_int(_fdct_blocks(curbs - 128), MCV_QI)
+            recon_b = _idct_blocks(q * MCV_QI) + 128
+            for bi in range(len(curbs)):
+                _ref_code_block(w, q[bi])
+        else:
+            mvs, preds = _ref_motion_search(prev, curbs)
+            q = _da_int(_fdct_blocks(curbs - preds), MCV_QP)
+            recon_b = preds + _idct_blocks(q * MCV_QP)
+            for bi, (dy, dx) in enumerate(mvs):
+                _write_ue(w, zigzag(dx))
+                _write_ue(w, zigzag(dy))
+                _ref_code_block(w, q[bi])
+        w.align()
+        coded = w.getvalue()
+        out += coded + bytes([crc8(coded)])
+        prev = _from_blocks(np.clip(recon_b, 0, 255))
+    return bytes(out)
+
+
+def _scroll_frames(docs: np.ndarray) -> np.ndarray:
+    """(n,) doc ids -> (n, MCV_FRAMES, H, W): the synth scene's closed form."""
+    y, x = np.divmod(np.arange(MCV_H * MCV_W), MCV_W)
+    t = np.arange(MCV_FRAMES)[:, None]
+    src = ((y + MCV_VY * t) % MCV_H) * MCV_W + (x + MCV_VX * t) % MCV_W
+    px = ((docs[:, None, None] % 256) * PCM_A + src * PCM_B) % 256
+    return px.reshape(len(docs), MCV_FRAMES, MCV_H, MCV_W)
+
+
+def test_mcv_batch_encoder_matches_per_document_reference() -> None:
+    frames = _scroll_frames(np.arange(1, 501))
+    want = [_ref_encode_mcv(f) for f in frames]
+    # consecutive batches of 0, 1, 7 and 131 documents, cycled to the end
+    got, start = [], 0
+    for size in itertools.cycle([0, 1, 7, 131]):
+        if start >= len(frames):
+            break
+        batch = encode_mcv_batch(frames[start : start + size])
+        assert len(batch) == len(frames[start : start + size])
+        got += batch
+        start += size
+    assert got == want
+
+    rng = np.random.default_rng(2024)
+    noise = rng.integers(0, 256, size=(24, MCV_FRAMES, MCV_H, MCV_W))
+    flat = np.stack([np.zeros_like(noise[0]), np.full_like(noise[0], 255)])
+    for batch in (noise, flat):
+        want = [_ref_encode_mcv(f) for f in batch]
+        assert encode_mcv_batch(batch) == want
+        assert [encode_mcv_bytes(f) for f in batch] == want
+
+
+def test_mcv_encoder_rejects_wrong_frame_count_and_short_frames() -> None:
+    frames = _scroll_frames(np.array([5]))[0].reshape(MCV_FRAMES, -1).tolist()
+    with pytest.raises(ValueError):
+        encode_mcv_bytes(frames[:5])
+    with pytest.raises(ValueError):
+        encode_mcv_bytes(frames[:5] + [frames[5][:-1]])
+    with pytest.raises(ValueError):
+        encode_mcv_batch(_scroll_frames(np.array([5, 6]))[:, :5])

@@ -272,7 +272,7 @@ def test_out_of_picture_motion_vector_rejected():
     edge column — a reference leaving the picture must be rejected
     BEFORE any pixel is touched (the parser guards the predictor)."""
     from ds_mapreduce_spark.operators.flac import BitWriter, crc8, zigzag
-    from ds_mapreduce_spark.operators.mcv import _write_ue
+    from ds_mapreduce_spark.operators.mdct import _write_ue
 
     out = bytearray(
         b"MCV1"

@@ -193,6 +193,67 @@ def test_arrow_stage_row_fn_contract(spark):
     assert none.schema.simpleString() == "struct<k:bigint,i:int,b:binary>"
 
 
+def _python_maps(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("MapInPandas")
+
+
+def _three_stage_chain(docs, between=lambda df: df):
+    """synth_map_arrays -> arrow_stage (map, binary out) -> arrow_stage
+    (explode: 0 or 2 rows per input), with ``between`` applied to each
+    stage's output before the next stage reads it."""
+    base = mm.synth_map_arrays(
+        docs, "doc_id bigint, n bigint, xs array<int>", lambda d: {
+            "n": d * 3,
+            "xs": [list(range(k % 5)) for k in d],
+        }
+    )
+    packed = mm.arrow_stage(
+        between(base),
+        lambda d, n, xs: [(d, n * n, bytes(int(x) for x in xs))],
+        "doc_id bigint, sq bigint, b binary",
+    )
+    return mm.arrow_stage(
+        between(packed),
+        lambda d, sq, b: [(d, sq - len(b), i) for i in range(2 * (d % 2))],
+        "doc_id bigint, v bigint, i int",
+    )
+
+
+def test_chained_stages_run_in_one_python_map(spark):
+    """A stage applied directly to a stage's output runs in the same
+    Python worker: one map node, the same rows as the chain with a
+    ``select("*")`` (which ends it) between the stages."""
+    docs = spark.range(1, 41, numPartitions=3).withColumnRenamed("id", "doc_id")
+    fused = _three_stage_chain(docs)
+    unfused = _three_stage_chain(docs, lambda df: df.select("*"))
+    assert _python_maps(fused) == 1
+    assert _python_maps(unfused) == 3
+    assert fused.schema == unfused.schema
+    rows = sorted(map(tuple, fused.collect()))
+    assert rows == sorted(map(tuple, unfused.collect()))
+    assert len(rows) == 40 and rows[0] == (1, 9 - 1, 0)
+
+
+def test_codec_roundtrips_run_in_one_python_map(spark, sf_dir):
+    from ds_mapreduce_spark.plans.registry import load_all
+
+    registry = load_all()
+    for name in ("multimodal_mcv_roundtrip", "multimodal_h264_annexb_roundtrip"):
+        assert _python_maps(registry[name].fn(spark, sf_dir)) == 1, name
+
+
+def test_fused_stage_still_checks_its_declared_types(spark):
+    """A middle stage whose rows do not fit its declared schema fails the
+    job inside the fused map, as the JVM hop would have failed it."""
+    docs = spark.range(1, 9, numPartitions=2).withColumnRenamed("id", "doc_id")
+    base = mm.synth_map_arrays(docs, "doc_id bigint, n bigint", lambda d: {"n": d})
+    bad = mm.arrow_stage(base, lambda d, n: [(d, "x")], "doc_id bigint, n bigint")
+    out = mm.arrow_stage(bad, lambda d, n: [(d, n + 1)], "doc_id bigint, n bigint")
+    assert _python_maps(out) == 1
+    with pytest.raises(Exception, match="Failed to convert the value of the column 'n'"):
+        out.collect()
+
+
 def test_wav_decoder_zero_frame_container(spark):
     """A zero-frame WAV is a legal container: features come back 0
     instead of a bare ValueError from max() on empty (ADVICE r8)."""
