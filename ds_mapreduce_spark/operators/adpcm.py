@@ -42,6 +42,7 @@ import struct
 
 from pyspark.sql import DataFrame
 
+from ds_mapreduce_spark.operators.bitio import riff_chunk
 from ds_mapreduce_spark.operators.multimodal import (
     PAYLOAD_SCHEMA,
     WAV_FEATURE_SCHEMA,
@@ -192,16 +193,13 @@ def encode_adpcm_wav_bytes(samples, rate: int = WAV_SAMPLE_RATE) -> bytes:
         ADPCM_BLOCK_ALIGN, 4,  # nBlockAlign, wBitsPerSample
         2, ADPCM_SAMPLES_PER_BLOCK,  # cbSize, wSamplesPerBlock
     )
-    fact = struct.pack("<I", n)
-    body = (
+    return riff_chunk(
+        b"RIFF",
         b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + data
+        + riff_chunk(b"fmt ", fmt)
+        + riff_chunk(b"fact", struct.pack("<I", n))
+        + riff_chunk(b"data", data),
     )
-    if len(data) % 2:
-        body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def parse_adpcm_wav(payload: bytes):

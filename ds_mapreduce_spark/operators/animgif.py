@@ -49,7 +49,7 @@ import struct
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ds_mapreduce_spark.operators.flac import corruption_to_value_error
+from ds_mapreduce_spark.operators.bitio import corruption_to_value_error
 from ds_mapreduce_spark.operators.gif import (
     GIF_H,
     GIF_W,

@@ -65,11 +65,13 @@ import struct
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ds_mapreduce_spark.operators.flac import (
+from ds_mapreduce_spark.operators.bitio import (
     BitReader,
     BitWriter,
     corruption_to_value_error,
+    read_ue,
     unzigzag,
+    write_ue,
     zigzag,
 )
 from ds_mapreduce_spark.operators.mcv import (
@@ -82,7 +84,6 @@ from ds_mapreduce_spark.operators.mcv import (
     mcv_frame_spans,
     mcv_payload_features,
 )
-from ds_mapreduce_spark.operators.mdct import _read_ue, _write_ue
 from ds_mapreduce_spark.operators.multimodal import PAYLOAD_SCHEMA, arrow_stage
 
 #: fixed UUID for the SEI user_data_unregistered record — all bytes
@@ -203,20 +204,20 @@ def write_sps(width: int, height: int) -> bytes:
     w.write(66, 8)   # profile_idc: Baseline
     w.write(0, 8)    # constraint flags + reserved_zero_2bits
     w.write(10, 8)   # level_idc 1.0
-    _write_ue(w, 0)  # seq_parameter_set_id
-    _write_ue(w, 0)  # log2_max_frame_num_minus4
-    _write_ue(w, 2)  # pic_order_cnt_type
-    _write_ue(w, 1)  # max_num_ref_frames
+    write_ue(w, 0)   # seq_parameter_set_id
+    write_ue(w, 0)   # log2_max_frame_num_minus4
+    write_ue(w, 2)   # pic_order_cnt_type
+    write_ue(w, 1)   # max_num_ref_frames
     w.write(0, 1)    # gaps_in_frame_num_value_allowed_flag
-    _write_ue(w, mbs_w - 1)  # pic_width_in_mbs_minus1
-    _write_ue(w, mbs_h - 1)  # pic_height_in_map_units_minus1
+    write_ue(w, mbs_w - 1)  # pic_width_in_mbs_minus1
+    write_ue(w, mbs_h - 1)  # pic_height_in_map_units_minus1
     w.write(1, 1)    # frame_mbs_only_flag
     w.write(0, 1)    # direct_8x8_inference_flag
     w.write(1, 1)    # frame_cropping_flag
-    _write_ue(w, 0)        # frame_crop_left_offset
-    _write_ue(w, crop_r)   # frame_crop_right_offset
-    _write_ue(w, 0)        # frame_crop_top_offset
-    _write_ue(w, crop_b)   # frame_crop_bottom_offset
+    write_ue(w, 0)         # frame_crop_left_offset
+    write_ue(w, crop_r)    # frame_crop_right_offset
+    write_ue(w, 0)         # frame_crop_top_offset
+    write_ue(w, crop_b)    # frame_crop_bottom_offset
     w.write(0, 1)    # vui_parameters_present_flag
     _rbsp_trailing(w)
     return w.getvalue()
@@ -230,26 +231,26 @@ def parse_sps(rbsp: bytes) -> tuple[int, int]:
         raise ValueError("unexpected SPS profile_idc")
     if r.read(8) != 0 or r.read(8) != 10:
         raise ValueError("unexpected SPS constraint/level bytes")
-    if _read_ue(r) != 0:
+    if read_ue(r) != 0:
         raise ValueError("unexpected seq_parameter_set_id")
-    if _read_ue(r) != 0:
+    if read_ue(r) != 0:
         raise ValueError("unexpected log2_max_frame_num_minus4")
-    if _read_ue(r) != 2:
+    if read_ue(r) != 2:
         raise ValueError("unexpected pic_order_cnt_type")
-    if _read_ue(r) != 1:
+    if read_ue(r) != 1:
         raise ValueError("unexpected max_num_ref_frames")
     if r.read(1) != 0:
         raise ValueError("unexpected gaps_in_frame_num flag")
-    mbs_w = _read_ue(r) + 1
-    mbs_h = _read_ue(r) + 1
+    mbs_w = read_ue(r) + 1
+    mbs_h = read_ue(r) + 1
     if r.read(1) != 1:
         raise ValueError("expected frame_mbs_only_flag")
     if r.read(1) != 0:
         raise ValueError("unexpected direct_8x8_inference_flag")
     width, height = mbs_w * 16, mbs_h * 16
     if r.read(1):  # frame_cropping_flag
-        crop_l, crop_r_ = _read_ue(r), _read_ue(r)
-        crop_t, crop_b = _read_ue(r), _read_ue(r)
+        crop_l, crop_r_ = read_ue(r), read_ue(r)
+        crop_t, crop_b = read_ue(r), read_ue(r)
         width -= 2 * (crop_l + crop_r_)
         height -= 2 * (crop_t + crop_b)
     if r.read(1) != 0:
@@ -263,18 +264,18 @@ def parse_sps(rbsp: bytes) -> tuple[int, int]:
 def write_pps() -> bytes:
     """Minimal CAVLC PPS RBSP (§7.3.2.2), all-default fields."""
     w = BitWriter()
-    _write_ue(w, 0)  # pic_parameter_set_id
-    _write_ue(w, 0)  # seq_parameter_set_id
+    write_ue(w, 0)   # pic_parameter_set_id
+    write_ue(w, 0)   # seq_parameter_set_id
     w.write(0, 1)    # entropy_coding_mode_flag: CAVLC
     w.write(0, 1)    # bottom_field_pic_order_in_frame_present_flag
-    _write_ue(w, 0)  # num_slice_groups_minus1
-    _write_ue(w, 0)  # num_ref_idx_l0_default_active_minus1
-    _write_ue(w, 0)  # num_ref_idx_l1_default_active_minus1
+    write_ue(w, 0)   # num_slice_groups_minus1
+    write_ue(w, 0)   # num_ref_idx_l0_default_active_minus1
+    write_ue(w, 0)   # num_ref_idx_l1_default_active_minus1
     w.write(0, 1)    # weighted_pred_flag
     w.write(0, 2)    # weighted_bipred_idc
-    _write_ue(w, zigzag(0))  # pic_init_qp_minus26
-    _write_ue(w, zigzag(0))  # pic_init_qs_minus26
-    _write_ue(w, zigzag(0))  # chroma_qp_index_offset
+    write_ue(w, zigzag(0))  # pic_init_qp_minus26
+    write_ue(w, zigzag(0))  # pic_init_qs_minus26
+    write_ue(w, zigzag(0))  # chroma_qp_index_offset
     w.write(0, 1)    # deblocking_filter_control_present_flag
     w.write(0, 1)    # constrained_intra_pred_flag
     w.write(0, 1)    # redundant_pic_cnt_present_flag
@@ -285,17 +286,17 @@ def write_pps() -> bytes:
 def parse_pps(rbsp: bytes) -> None:
     r = BitReader(rbsp)
     for field in ("pps_id", "sps_id"):
-        if _read_ue(r) != 0:
+        if read_ue(r) != 0:
             raise ValueError(f"unexpected PPS {field}")
     if r.read(2) != 0:
         raise ValueError("unexpected PPS entropy/order flags")
     for field in ("slice_groups", "ref_idx_l0", "ref_idx_l1"):
-        if _read_ue(r) != 0:
+        if read_ue(r) != 0:
             raise ValueError(f"unexpected PPS {field}")
     if r.read(3) != 0:
         raise ValueError("unexpected PPS weighted-pred fields")
     for field in ("init_qp", "init_qs", "chroma_qp_offset"):
-        if unzigzag(_read_ue(r)) != 0:
+        if unzigzag(read_ue(r)) != 0:
             raise ValueError(f"unexpected PPS {field}")
     if r.read(3) != 0:
         raise ValueError("unexpected PPS tail flags")

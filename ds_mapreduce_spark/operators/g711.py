@@ -31,6 +31,7 @@ import struct
 import numpy as np
 from pyspark.sql import DataFrame
 
+from ds_mapreduce_spark.operators.bitio import riff_chunk
 from ds_mapreduce_spark.operators.multimodal import (
     PAYLOAD_SCHEMA,
     WAV_FEATURE_SCHEMA,
@@ -78,14 +79,9 @@ def encode_ulaw_wav_bytes(samples, rate: int = WAV_SAMPLE_RATE) -> bytes:
     8 bits/sample, mono) — hand-written; stdlib wave is PCM-only."""
     data = bytes(ulaw_encode_sample(int(s)) for s in samples)
     fmt = struct.pack("<HHIIHH", _WAVE_FORMAT_MULAW, 1, rate, rate, 1, 8)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
+    return riff_chunk(
+        b"RIFF", b"WAVE" + riff_chunk(b"fmt ", fmt) + riff_chunk(b"data", data)
     )
-    if len(data) % 2:  # RIFF chunks are word-aligned
-        body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def parse_ulaw_wav(payload: bytes):

@@ -58,7 +58,7 @@ import struct
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ds_mapreduce_spark.operators.flac import corruption_to_value_error
+from ds_mapreduce_spark.operators.bitio import BitWriter, corruption_to_value_error
 from ds_mapreduce_spark.operators.multimodal import (
     PAYLOAD_SCHEMA,
     PCM_A,
@@ -247,35 +247,6 @@ def _quantize(coeffs: np.ndarray, qt: np.ndarray = _QT_NP) -> np.ndarray:
     return np.sign(coeffs) * ((2 * np.abs(coeffs) + qt) // (2 * qt))
 
 
-class _BitWriter:
-    """MSB-first bit packer with the spec's 0xFF00 byte stuffing."""
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        acc = (self._acc << nbits) | (value & ((1 << nbits) - 1))
-        n = self._n + nbits
-        nbytes = n >> 3
-        if nbytes:
-            n &= 7
-            # int.to_bytes at C speed; bytes.replace applies the
-            # spec's 0xFF00 stuffing to every emitted 0xFF identically
-            # to the per-byte loop it replaces
-            self.buf += (acc >> n).to_bytes(nbytes, "big").replace(
-                b"\xff", b"\xff\x00"
-            )
-            acc &= (1 << n) - 1
-        self._acc = acc
-        self._n = n
-
-    def flush(self) -> None:
-        while self._n:
-            self.write(1, 1)  # pad with 1-bits per the spec
-
-
 def _category(v: int) -> int:
     return abs(v).bit_length()
 
@@ -304,25 +275,39 @@ def encode_jpeg_bytes(px: bytes, w: int, h: int, restart_interval: int = 0) -> b
         - 128
     )
     q = _quantize(_fdct_blocks(blocks))
-
-    out = _BitWriter()
-    prev_dc = 0
-    rst = 0
-    for bi, blk in enumerate(q):
-        if restart_interval and bi and bi % restart_interval == 0:
-            out.flush()  # pad to byte boundary before the marker
-            out.buf += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) % 8
-            prev_dc = 0
-        prev_dc = _encode_block(out, blk, prev_dc)
-    out.flush()
-
     return _assemble_jfif(
-        w, h, [(1, 0)], bytes(out.buf), restart_interval
+        w, h, [(1, 0)], _encode_scan([q], restart_interval), restart_interval
     )
 
 
-def _encode_block(out: _BitWriter, blk: np.ndarray, prev_dc: int) -> int:
+def _encode_scan(planes: list[np.ndarray], restart_interval: int) -> bytes:
+    """The entropy-coded scan of MCU-interleaved blocks (block ``mcu``
+    of each component plane in turn). Each restart segment is written
+    with one BitWriter, padded with 1-bits to the byte boundary, then
+    0xFF00-stuffed as a whole; RSTn markers cycle RST0..RST7 between
+    segments, and every component's DC predictor resets at each one
+    (T.81 §B.2.4.4)."""
+    segments = []
+    out = BitWriter()
+    preds = [0] * len(planes)
+    for mcu in range(len(planes[0])):
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            out.align(1)
+            segments.append(out.getvalue())
+            out = BitWriter()
+            preds = [0] * len(planes)
+        for ci, plane in enumerate(planes):
+            preds[ci] = _encode_block(out, plane[mcu], preds[ci])
+    out.align(1)
+    segments.append(out.getvalue())
+    return b"".join(
+        (bytes((0xFF, 0xD0 + (i - 1) % 8)) if i else b"")
+        + seg.replace(b"\xff", b"\xff\x00")
+        for i, seg in enumerate(segments)
+    )
+
+
+def _encode_block(out: BitWriter, blk: np.ndarray, prev_dc: int) -> int:
     """Entropy-code one quantized 8x8 block (DC diff + AC run-length),
     returning the new DC predictor."""
     flat = blk[_ZZ_ROWS, _ZZ_COLS].tolist()
@@ -437,187 +422,127 @@ def encode_jpeg_color_bytes(
             _quantize(_fdct_blocks(blocks), _QT_NP if i == 0 else _QTC_NP)
         )
 
-    out = _BitWriter()
-    preds = [0, 0, 0]
-    rst = 0
-    for mcu in range(bw * bh):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            out.flush()
-            out.buf += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) % 8
-            preds = [0, 0, 0]
-        for ci in range(3):
-            preds[ci] = _encode_block(out, quantized[ci][mcu], preds[ci])
-    out.flush()
-
     return _assemble_jfif(
-        w, h, [(1, 0), (2, 1), (3, 1)], bytes(out.buf), restart_interval
+        w,
+        h,
+        [(1, 0), (2, 1), (3, 1)],
+        _encode_scan(quantized, restart_interval),
+        restart_interval,
     )
 
 
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    unstuffing; raises on an unexpected marker inside the scan.
+def _scan_segments(payload: bytes, pos: int) -> list[tuple[bytes, int]]:
+    """The byte layer of the scan that starts at ``pos`` (as
+    ``annexb.ebsp_unescape`` is for NAL units): split it at its markers
+    and undo the 0xFF00 stuffing. -> [(segment bytes, end)], where
+    ``end`` is the code of the marker that closes the segment, -1 for
+    the end of the payload, or -2 for a lone trailing 0xFF. Splitting
+    stops at the first marker that is not RSTn (normally EOI): no
+    segment after it can be decoded."""
+    segs = []
+    n = len(payload)
+    start = j = pos
+    while True:
+        i = payload.find(b"\xff", j)
+        if i < 0 or i + 1 == n:
+            data = payload[start : n if i < 0 else i]
+            segs.append((data.replace(b"\xff\x00", b"\xff"), -1 if i < 0 else -2))
+            return segs
+        marker = payload[i + 1]
+        if marker == 0x00:  # stuffed data byte
+            j = i + 2
+            continue
+        segs.append((payload[start:i].replace(b"\xff\x00", b"\xff"), marker))
+        if not 0xD0 <= marker <= 0xD7:
+            return segs
+        start = j = i + 2
 
-    Multi-bit accumulator form (r16): bytes are still pulled (and
-    unstuffed / marker-checked) one at a time, but reads consume the
-    accumulator in one arithmetic step instead of a Python-loop bit at
-    a time, and ``peek16`` gives the Huffman LUT a zero-padded 16-bit
-    lookahead. A marker or EOF met while REFILLING is recorded as a
-    stall and only raised when a consumed bit actually needs it, so
-    lookahead never rejects a stream the bit-serial reader accepted."""
 
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self._acc = 0
-        self._n = 0
-        self._stall: tuple | None = None
+class _HuffReader:
+    """Huffman decoding over the unstuffed restart segments of one scan
+    (``_scan_segments``): a 16-bit lookahead accumulator per segment.
+    A read that needs bits past the end of its segment raises what
+    ended the segment, so lookahead never rejects a decodable
+    stream."""
 
-    def _pull(self) -> bool:
-        """Refill one data byte; record (not raise) marker/EOF stalls."""
-        if self._stall is not None:
-            return False
-        data, pos = self.data, self.pos
-        if pos >= len(data):
-            self._stall = ("eof",)
-            return False
-        b = data[pos]
-        pos += 1
-        if b == 0xFF:
-            if pos >= len(data):
-                self._stall = ("eof_ff",)
-                return False
-            nxt = data[pos]
-            if nxt != 0x00:
-                self._stall = ("marker", nxt)
-                return False
-            pos += 1  # stuffed byte: literal 0xFF
-        self._acc = (self._acc << 8) | b
-        self._n += 8
-        self.pos = pos
-        return True
+    __slots__ = ("_segs", "_seg", "_data", "_fb", "_acc", "_n")
+
+    def __init__(self, segs: list[tuple[bytes, int]]) -> None:
+        self._segs = segs
+        self._seg = 0
+        self._data = segs[0][0]
+        self._fb = self._acc = self._n = 0
+
+    def _fill(self) -> int:
+        """Called with fewer than 16 bits held: afterwards at least 16
+        are held, or the whole segment is."""
+        data, fb = self._data, self._fb
+        take = min(6, len(data) - fb)
+        self._acc = (self._acc << (take << 3)) | int.from_bytes(
+            data[fb : fb + take], "big"
+        )
+        self._fb = fb + take
+        self._n += take << 3
+        return self._n
 
     def _starved(self):
-        kind = self._stall[0] if self._stall else "eof"
-        if kind == "eof":
+        end = self._segs[self._seg][1]
+        if end == -1:
             raise ValueError("truncated entropy-coded scan")
-        if kind == "eof_ff":
+        if end == -2:
             raise ValueError("truncated after 0xFF in scan")
-        raise ValueError(
-            f"unexpected marker 0xFF{self._stall[1]:02X} inside scan"
-        )
-
-    def bits(self, nbits: int) -> int:
-        while self._n < nbits:
-            if not self._pull():
-                self._starved()
-        n = self._n - nbits
-        v = (self._acc >> n) & ((1 << nbits) - 1)
-        self._acc &= (1 << n) - 1
-        self._n = n
-        return v
-
-    def bit(self) -> int:
-        return self.bits(1)
-
-    def peek16(self) -> int:
-        while self._n < 16:
-            if not self._pull():
-                return (self._acc << (16 - self._n)) & 0xFFFF
-        return (self._acc >> (self._n - 16)) & 0xFFFF
-
-    def consume(self, nbits: int) -> None:
-        if nbits > self._n:
-            self._starved()
-        self._n -= nbits
-        self._acc &= (1 << self._n) - 1
-
-    def huff(self, lut) -> int:
-        """Decode one Huffman symbol via the 16-bit lookahead LUT —
-        peek + table hit + consume fused into one call (the per-symbol
-        hot path of the scan loop)."""
-        n = self._n
-        while n < 16 and self._pull():
-            n = self._n
-        if n >= 16:
-            word = (self._acc >> (n - 16)) & 0xFFFF
-        else:
-            word = (self._acc << (16 - n)) & 0xFFFF
-        sym, length = lut[word]
-        if length == 0 or length > n:
-            if n < 16:
-                self._starved()
-            raise ValueError("invalid Huffman code in scan")
-        n -= length
-        self._acc &= (1 << n) - 1
-        self._n = n
-        return sym
+        raise ValueError(f"unexpected marker 0xFF{end:02X} inside scan")
 
     def huff_recv(self, lut) -> tuple:
         """Huffman symbol + its magnitude bits in ONE call (r17): the
-        scan loop's per-coefficient cost was a ``huff`` + ``bits``
-        method-call pair; the low nibble of every scan symbol is its
-        magnitude bit count (AC symbols by the run/size spec layout,
-        DC size categories because ``parse_jpeg`` rejects DC tables
-        with a symbol > 11), so one fused
-        call decodes both. Returns (sym, raw magnitude bits, size) —
-        identical stall/starve semantics to huff() then bits(size)."""
+        low nibble of every scan symbol is its magnitude bit count (AC
+        symbols by the run/size spec layout, DC size categories because
+        ``parse_jpeg`` rejects DC tables with a symbol > 11). Returns
+        (sym, raw magnitude bits, size)."""
         n = self._n
-        while n < 16 and self._pull():
-            n = self._n
-        if n >= 16:
-            word = (self._acc >> (n - 16)) & 0xFFFF
-        else:
-            word = (self._acc << (16 - n)) & 0xFFFF
+        if n < 16:
+            n = self._fill()
+        acc = self._acc
+        word = acc >> (n - 16) if n >= 16 else acc << (16 - n)
         sym, length = lut[word]
         if length == 0 or length > n:
             if n < 16:
                 self._starved()
             raise ValueError("invalid Huffman code in scan")
         n -= length
-        acc = self._acc & ((1 << n) - 1)
+        acc &= (1 << n) - 1
         size = sym & 0x0F
-        if not size:
-            self._acc = acc
-            self._n = n
-            return sym, 0, 0
-        if n < size:
-            self._acc = acc
-            self._n = n
-            while n < size:
-                if not self._pull():
+        v = 0
+        if size:
+            if n < size:
+                self._acc, self._n = acc, n
+                n = self._fill()
+                acc = self._acc
+                if n < size:
                     self._starved()
-                n = self._n
-            acc = self._acc
-        n -= size
-        v = (acc >> n) & ((1 << size) - 1)
-        self._acc = acc & ((1 << n) - 1)
-        self._n = n
+            n -= size
+            v = acc >> n
+            acc &= (1 << n) - 1
+        self._acc, self._n = acc, n
         return sym, v, size
 
     def restart(self, ordinal: int) -> None:
-        """Byte-align (discard the pre-marker pad bits) and consume the
-        expected RSTn marker (T.81 §B.2.4.4); a missing or out-of-cycle
-        marker raises. Whole undecoded data bytes before the marker
-        raise too — refills stop AT markers, so a compliant stream
-        leaves at most 7 pad bits in the accumulator here (the
-        bit-serial reader hit the same streams via its pos check)."""
-        if self._n >= 8:
+        """Step past the expected RSTn marker into the next segment
+        (T.81 §B.2.4.4). Only the pre-marker pad bits (fewer than 8)
+        may be left undecoded; a missing or out-of-cycle marker
+        raises."""
+        if self._n + ((len(self._data) - self._fb) << 3) >= 8:
             raise ValueError(
                 f"expected RST{ordinal}, undecoded data before marker"
             )
-        self._acc = 0
-        self._n = 0
-        self._stall = None
-        if self.pos + 2 > len(self.data):
+        end = self._segs[self._seg][1]
+        if end < 0:
             raise ValueError("truncated at restart marker")
-        got = self.data[self.pos : self.pos + 2]
-        if got[0] != 0xFF or got[1] != 0xD0 + ordinal:
-            raise ValueError(
-                f"expected RST{ordinal}, got 0x{got.hex()} in scan"
-            )
-        self.pos += 2
+        if end != 0xD0 + ordinal:
+            raise ValueError(f"expected RST{ordinal}, got 0xff{end:02x} in scan")
+        self._seg += 1
+        self._data = self._segs[self._seg][0]
+        self._fb = self._acc = self._n = 0
 
 
 @functools.lru_cache(maxsize=128)
@@ -771,7 +696,7 @@ def parse_jpeg(payload: bytes):
 
     bw, bh = (w + 7) // 8, (h + 7) // 8
     nmcu = bw * bh
-    reader = _BitReader(payload, pos)
+    reader = _HuffReader(_scan_segments(payload, pos))
     # whole-image batched entropy decode (r17, VERDICT r16 #3): the
     # scan loop collects (zigzag-flat position, value) into Python
     # lists — one fused huff_recv call per coefficient — and the

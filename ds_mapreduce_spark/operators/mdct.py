@@ -35,7 +35,7 @@ Container ("MLT1"): 12-byte header (magic, u32 n_samples LE, u16
 sample rate, u8 n_bands, u8 coefficient shift), then per granule:
 16 x 4-bit scalefactors, 8 frames x 16 exp-Golomb coefficients,
 zero-pad to a byte boundary, CRC-8 (the FLAC polynomial, shared
-`operators/flac.crc8`) over the granule's coded bytes. Granules are
+`operators/bitio.crc8`) over the granule's coded bytes. Granules are
 decode-independent (scalefactors are stored, prediction never crosses
 a granule) — the audio analog of JPEG restart intervals: a 100 TB
 corpus can split one payload's granules across tasks.
@@ -63,13 +63,12 @@ import struct
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ds_mapreduce_spark.operators.flac import (
+from ds_mapreduce_spark.operators.bitio import (
     BitReader,
     BitWriter,
     corruption_to_value_error,
     crc8,
     unzigzag,
-    zigzag,
 )
 from ds_mapreduce_spark.operators.multimodal import (
     PAYLOAD_SCHEMA,
@@ -262,20 +261,6 @@ _MDCT_UE_BITLEN = np.array(
 )
 
 
-def _write_ue(w: BitWriter, u: int) -> None:
-    """Unsigned Exp-Golomb: floor(log2(u+1)) zero bits, then u+1 in
-    binary — 2*bitlength(u+1)-1 bits total (the closed form the oracle
-    prices payload bytes with)."""
-    nbits = (u + 1).bit_length()
-    w.write(u + 1, 2 * nbits - 1)
-
-
-def _read_ue(r: BitReader) -> int:
-    lz = r.read_unary()  # consumes the leading zeros AND the first 1
-    rest = r.read(lz)
-    return ((1 << lz) | rest) - 1
-
-
 def encode_granule_blobs(samples) -> list[bytes]:
     """Granule-level encode: samples (len a multiple of 16) -> one coded
     blob per granule (scalefactors + exp-Golomb coefficients, byte-
@@ -314,7 +299,7 @@ def encode_granule_blobs(samples) -> list[bytes]:
         q = np.clip(q, -MDCT_QMAX, MDCT_QMAX)
         u1 = (np.where(q >= 0, q << 1, ((-q) << 1) - 1) + 1).ravel()
         # fold the granule's exp-Golomb codes ((u+1) in 2*len-1 bits
-        # each — same bits _write_ue emits) into one write call; the
+        # each — same bits bitio.write_ue emits) into one write call; the
         # variable-width pack runs in numpy (LUT bit lengths, repeat/
         # cumsum positions) instead of growing a per-code bigint
         bl = _MDCT_UE_BITLEN[u1]

@@ -26,7 +26,7 @@ import struct
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ds_mapreduce_spark.operators.flac import corruption_to_value_error
+from ds_mapreduce_spark.operators.bitio import corruption_to_value_error, riff_chunk
 from ds_mapreduce_spark.operators.jpeg import (
     JPEG_BLOCKS,
     JPEG_H,
@@ -48,15 +48,8 @@ MJPEG_STRIDE = 2
 MJPEG_FPS = 10
 
 
-def _chunk(fourcc: bytes, data: bytes) -> bytes:
-    out = fourcc + struct.pack("<I", len(data)) + data
-    if len(data) % 2:
-        out += b"\x00"  # RIFF word alignment
-    return out
-
-
 def _list(fourcc: bytes, data: bytes) -> bytes:
-    return _chunk(b"LIST", fourcc + data)
+    return riff_chunk(b"LIST", fourcc + data)
 
 
 def encode_mjpeg_avi_bytes(frames: list[bytes], w: int, h: int) -> bytes:
@@ -82,11 +75,11 @@ def encode_mjpeg_avi_bytes(frames: list[bytes], w: int, h: int) -> bytes:
     )
     hdrl = _list(
         b"hdrl",
-        _chunk(b"avih", avih)
-        + _list(b"strl", _chunk(b"strh", strh) + _chunk(b"strf", strf)),
+        riff_chunk(b"avih", avih)
+        + _list(b"strl", riff_chunk(b"strh", strh) + riff_chunk(b"strf", strf)),
     )
-    movi = _list(b"movi", b"".join(_chunk(b"00dc", f) for f in frames))
-    return _chunk(b"RIFF", b"AVI " + hdrl + movi)
+    movi = _list(b"movi", b"".join(riff_chunk(b"00dc", f) for f in frames))
+    return riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
 
 
 def _walk_chunks(buf: bytes, pos: int, end: int):

@@ -55,7 +55,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
-from ds_mapreduce_spark.operators.flac import (
+from ds_mapreduce_spark.operators.bitio import (
     BitReader,
     corruption_to_value_error,
 )

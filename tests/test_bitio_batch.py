@@ -1,7 +1,7 @@
 """Differential locks for the r16 vectorized bit-I/O internals.
 
 The r16 optimization round replaced the per-bit/per-code Python loops
-in the shared codec bit layer (`operators/flac.BitReader`/`BitWriter`)
+in the shared codec bit layer (`operators/bitio.BitReader`/`BitWriter`)
 with accumulator/batch forms, and added spans-only container walks.
 These tests pin the contract every codec row relies on: each batch
 call is bit-identical to the sequential loop it replaced — same
@@ -20,13 +20,15 @@ import struct
 import numpy as np
 import pytest
 
-from ds_mapreduce_spark.operators.flac import (
+from ds_mapreduce_spark.operators.bitio import (
     BitReader,
     BitWriter,
-    _pack_pcm16le,
     crc8,
+    read_ue,
+    write_ue,
     zigzag,
 )
+from ds_mapreduce_spark.operators.flac import _pack_pcm16le
 from ds_mapreduce_spark.operators.jpeg import _da_int, _fdct_blocks, _idct_blocks
 from ds_mapreduce_spark.operators.mcv import (
     MCV_FRAMES,
@@ -46,7 +48,6 @@ from ds_mapreduce_spark.operators.mcv import (
     mcv_frame_spans,
     parse_mcv,
 )
-from ds_mapreduce_spark.operators.mdct import _read_ue, _write_ue
 from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
 
 
@@ -101,26 +102,21 @@ def test_read_and_unary_match_reference() -> None:
         data = _random_stream(rng, rng.randrange(1, 64))
         fast, ref = BitReader(data), RefBitReader(data)
         while True:
-            op = rng.randrange(3)
+            op = rng.randrange(2)
             try:
                 if op == 0:
                     n = rng.randrange(0, 20)
                     want = ref.read(n)
                     got = fast.read(n)
-                elif op == 1:
-                    want = ref.read_unary()
-                    got = fast.read_unary()
                 else:
                     want = ref.read_ue()
-                    got = _read_ue(fast)
+                    got = read_ue(fast)
             except ValueError:
                 with pytest.raises(ValueError):
                     if op == 0:
                         fast.read(n)
-                    elif op == 1:
-                        fast.read_unary()
                     else:
-                        _read_ue(fast)
+                        read_ue(fast)
                 break
             assert got == want
             assert _reader_bitpos(fast) == ref.bit_position
@@ -135,17 +131,17 @@ def test_read_ue_many_matches_sequential() -> None:
             vals = [rng.randrange(0, 1 << rng.randrange(1, 16)) for _ in range(rng.randrange(1, 80))]
             w = BitWriter()
             for v in vals:
-                _write_ue(w, v)
+                write_ue(w, v)
             w.align()
             data = w.getvalue()
         else:
             data = _random_stream(rng, rng.randrange(0, 40))
         count = rng.randrange(1, 90)
-        seq, bat = BitReader(data), BitReader(data)
+        seq, bat = RefBitReader(data), BitReader(data)
         want, err = [], False
         try:
             for _ in range(count):
-                want.append(_read_ue(seq))
+                want.append(seq.read_ue())
         except ValueError:
             err = True
         if err:
@@ -153,7 +149,7 @@ def test_read_ue_many_matches_sequential() -> None:
                 bat.read_ue_many(count)
         else:
             assert bat.read_ue_many(count) == want
-            assert _reader_bitpos(bat) == _reader_bitpos(seq)
+            assert _reader_bitpos(bat) == seq.bit_position
             # the held-bits invariant the container bookkeeping needs
             assert bat._navail < 8
 
@@ -172,7 +168,7 @@ def test_read_rice_many_matches_sequential() -> None:
         else:
             data = _random_stream(rng, rng.randrange(0, 40))
         count = rng.randrange(1, 70)
-        seq, bat = BitReader(data), BitReader(data)
+        seq, bat = RefBitReader(data), BitReader(data)
         want, err = [], False
         try:
             for _ in range(count):
@@ -185,7 +181,7 @@ def test_read_rice_many_matches_sequential() -> None:
                 bat.read_rice_many(param, count)
         else:
             assert bat.read_rice_many(param, count) == want
-            assert _reader_bitpos(bat) == _reader_bitpos(seq)
+            assert _reader_bitpos(bat) == seq.bit_position
             assert bat._navail < 8
 
 
@@ -264,7 +260,7 @@ def test_pack_pcm16le_matches_struct_loop() -> None:
 def test_mdct_encode_vectorized_matches_scalar_reference() -> None:
     """The vectorized scalefactor search + exp-Golomb pack in
     encode_granule_blobs is bit-identical to the per-value reference
-    path (_scalefactor/_quantize/_write_ue), including EMAX saturation
+    path (_scalefactor/_quantize/write_ue), including EMAX saturation
     and the ±QMAX clamp."""
     import numpy as np
 
@@ -285,7 +281,7 @@ def test_mdct_encode_vectorized_matches_scalar_reference() -> None:
             for row in frames:
                 for k, a in enumerate(row.tolist()):
                     q = M._quantize(int(a), k, es[k])
-                    M._write_ue(w, (q << 1) if q >= 0 else ((-q) << 1) - 1)
+                    write_ue(w, (q << 1) if q >= 0 else ((-q) << 1) - 1)
             w.align()
             coded = w.getvalue()
             blobs.append(coded + bytes([M.crc8(coded)]))
@@ -382,7 +378,7 @@ def test_lzw_compress_code_keys_match_string_keys() -> None:
 
 
 def test_crc_slice_by_16_matches_byte_loop() -> None:
-    from ds_mapreduce_spark.operators.flac import (
+    from ds_mapreduce_spark.operators.bitio import (
         _CRC8_TABLE,
         _CRC16_TABLE,
         crc8,
@@ -491,8 +487,8 @@ def _ref_encode_mcv(frames) -> bytes:
             q = _da_int(_fdct_blocks(curbs - preds), MCV_QP)
             recon_b = preds + _idct_blocks(q * MCV_QP)
             for bi, (dy, dx) in enumerate(mvs):
-                _write_ue(w, zigzag(dx))
-                _write_ue(w, zigzag(dy))
+                write_ue(w, zigzag(dx))
+                write_ue(w, zigzag(dy))
                 _ref_code_block(w, q[bi])
         w.align()
         coded = w.getvalue()
@@ -541,3 +537,47 @@ def test_mcv_encoder_rejects_wrong_frame_count_and_short_frames() -> None:
         encode_mcv_bytes(frames[:5] + [frames[5][:-1]])
     with pytest.raises(ValueError):
         encode_mcv_batch(_scroll_frames(np.array([5, 6]))[:, :5])
+
+
+def test_codec_bit_layer_lives_in_bitio() -> None:
+    """Layering: `operators/bitio.py` holds the package's only bit
+    reader and writer, and no operator takes a bit-layer name from
+    another codec. Nothing may be imported from `operators.flac`; an
+    import from `operators.mdct` (the MPEG framing reuses its granule
+    coder) may take neither a private name nor one bitio defines."""
+    import ast
+    from pathlib import Path
+
+    from ds_mapreduce_spark.operators import bitio
+
+    ops = Path(bitio.__file__).parent
+    tree = ast.parse((ops / "bitio.py").read_text())
+    bit_names = {
+        n.name
+        for n in tree.body
+        if isinstance(n, (ast.ClassDef, ast.FunctionDef))
+    }
+    assert {"BitReader", "BitWriter", "read_ue", "write_ue"} <= bit_names
+    bad = []
+    for path in sorted(ops.glob("*.py")):
+        if path.name == "bitio.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ClassDef) and (
+                "BitReader" in node.name or "BitWriter" in node.name
+            ):
+                bad.append(f"{path.name}: class {node.name}")
+            if not isinstance(node, ast.ImportFrom) or not node.module:
+                continue
+            source = node.module.rsplit(".", 1)[-1]
+            if node.level == 0 and not node.module.startswith(
+                "ds_mapreduce_spark.operators."
+            ):
+                continue
+            names = [a.name for a in node.names]
+            if source == "flac" or (
+                source == "mdct"
+                and any(n.startswith("_") or n in bit_names for n in names)
+            ):
+                bad.append(f"{path.name}: from {node.module} import {names}")
+    assert not bad, bad

@@ -7,7 +7,7 @@ typed, so a 100 TB ingest job can catch bad media rows without a bare
 except. The r9 fuzz that motivated this found raw struct.error on
 <12-byte MCV1/MLT1 headers and IndexError/OverflowError leaks in the
 FLAC/animated-GIF/JPEG parsers (fixed by header guards +
-``operators/flac.corruption_to_value_error`` at the parse entry
+``operators/bitio.corruption_to_value_error`` at the parse entry
 points). Seeded, so failures reproduce.
 """
 
@@ -57,6 +57,7 @@ def _targets():
         JPEG_H,
         JPEG_W,
         encode_jpeg_bytes,
+        encode_jpeg_color_bytes,
         parse_jpeg,
     )
     from ds_mapreduce_spark.operators.mcv import (
@@ -92,6 +93,7 @@ def _targets():
         for t in range(ANIM_FRAMES)
     ]
     px = bytes((i * 7) % 256 for i in range(JPEG_W * JPEG_H))
+    rgb_jpeg = bytes((i * 7) % 256 for i in range(JPEG_W * JPEG_H * 3))
     frames_mcv = [
         [
             (
@@ -133,6 +135,14 @@ def _targets():
         # (start codes, emulation prevention, SPS/PPS/SEI syntax).
         ("mp3", _mp3_bytes(samples), _parse_mp3()),
         ("annexb", _annexb_bytes(frames_mcv), _parse_annexb()),
+        # JPEG scans with the color MCU interleave and with RSTn
+        # markers (restart segments, marker cycle, byte realignment)
+        ("jpeg_color", encode_jpeg_color_bytes(rgb_jpeg, JPEG_W, JPEG_H), parse_jpeg),
+        (
+            "jpeg_restart",
+            encode_jpeg_bytes(px, JPEG_W, JPEG_H, restart_interval=2),
+            parse_jpeg,
+        ),
     ]
 
 

@@ -29,6 +29,7 @@ from ds_mapreduce_spark.operators.jpeg import (
     DCT_T,
     JPEG_QT,
     encode_jpeg_bytes,
+    encode_jpeg_color_bytes,
     parse_jpeg,
 )
 
@@ -382,3 +383,65 @@ def test_encoder_rejects_bad_geometry():
         encode_jpeg_bytes(bytes(100), 10, 10)
     with pytest.raises(ValueError, match="multiples of 8"):
         encode_jpeg_bytes(bytes(63), 8, 8)
+
+
+def test_encoder_bytes_are_pinned():
+    """Encoder output is pinned byte for byte, not only through decoded
+    values: sha256 of gray and color JPEGs with and without restart
+    intervals (one scan holds a stuffed FF 00), and of the ADPCM and
+    mu-law WAV containers on an odd sample count (RIFF pad byte)."""
+    import hashlib
+
+    from ds_mapreduce_spark.operators.adpcm import encode_adpcm_wav_bytes
+    from ds_mapreduce_spark.operators.g711 import encode_ulaw_wav_bytes
+
+    rng = np.random.RandomState(2026)
+    gray = rng.randint(0, 256, 40 * 16).astype(np.uint8).tobytes()
+    rgb = rng.randint(0, 256, 24 * 16 * 3).astype(np.uint8).tobytes()
+    samples = rng.randint(-32768, 32768, 1017).tolist()
+    payloads = {
+        "gray": encode_jpeg_bytes(gray, 40, 16),
+        "gray_rst2": encode_jpeg_bytes(gray, 40, 16, restart_interval=2),
+        "color": encode_jpeg_color_bytes(rgb, 24, 16),
+        "color_rst2": encode_jpeg_color_bytes(rgb, 24, 16, restart_interval=2),
+        "adpcm": encode_adpcm_wav_bytes(samples),
+        "ulaw": encode_ulaw_wav_bytes(samples),
+    }
+    want = {
+        "gray": "2ed42ffc02d7b231b77ee6233f2b983c70ae3bc5b3953a98c4f70cf17d85662f",
+        "gray_rst2": "b1708cbc2a4a2a64fcdb248165e91f15ceadda17ff35659099bfb41c4be5981f",
+        "color": "169f6eb7a524b8aa63e0bed8a71af80b4b54987f677a3e9f6d704cd438ad4c91",
+        "color_rst2": "89c82f827b4d00d996ffafa67f0be1e988f1962b78ec8a3ce0c59abb82854f3b",
+        "adpcm": "a9cfbb3cb3f56abd7744b0fa3787e65a4ec9994f92530410817674077105c907",
+        "ulaw": "85fdff95bc06f45e317a4819bbe519d7664b7bd32d7525436cdaf6f5012a7d2e",
+    }
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in payloads.items()}
+    assert got == want
+    stuffed = payloads["gray_rst2"]
+    assert b"\xff\x00" in stuffed[_scan_start(stuffed) :]
+
+
+def _scan_start(payload: bytes) -> int:
+    sos = payload.index(b"\xff\xda")
+    (seglen,) = struct.unpack(">H", payload[sos + 2 : sos + 4])
+    return sos + 2 + seglen
+
+
+def test_scan_marker_errors():
+    """The three ways a scan can end before its last MCU, on hand-cut
+    scans of a 10-MCU image: a non-RST marker, a lone trailing 0xFF,
+    and the end of the payload."""
+    payload = encode_jpeg_bytes(bytes((7 * i) % 256 for i in range(640)), 40, 16)
+    start = _scan_start(payload)
+    cut = start + (len(payload) - 2 - start) // 2
+    while payload[cut - 1] == 0xFF:  # never split a stuffed FF 00
+        cut += 1
+    head = payload[:cut]
+    with pytest.raises(
+        ValueError, match="^unexpected marker 0xFFC4 inside scan$"
+    ):
+        parse_jpeg(head + b"\xff\xc4" + payload[cut:])
+    with pytest.raises(ValueError, match="^truncated after 0xFF in scan$"):
+        parse_jpeg(head + b"\xff")
+    with pytest.raises(ValueError, match="^truncated entropy-coded scan$"):
+        parse_jpeg(head)

@@ -271,8 +271,7 @@ def test_out_of_picture_motion_vector_rejected():
     """Craft a P-frame whose first block claims dx=+3 at the right
     edge column — a reference leaving the picture must be rejected
     BEFORE any pixel is touched (the parser guards the predictor)."""
-    from ds_mapreduce_spark.operators.flac import BitWriter, crc8, zigzag
-    from ds_mapreduce_spark.operators.mdct import _write_ue
+    from ds_mapreduce_spark.operators.bitio import BitWriter, crc8, write_ue, zigzag
 
     out = bytearray(
         b"MCV1"
@@ -287,8 +286,8 @@ def test_out_of_picture_motion_vector_rejected():
     w = BitWriter()
     for blk in range(6):
         # blocks 2 and 5 sit at bx0=16; dx=+3 puts the ref at x=27>24
-        _write_ue(w, zigzag(3))  # dx
-        _write_ue(w, zigzag(0))  # dy
+        write_ue(w, zigzag(3))  # dx
+        write_ue(w, zigzag(0))  # dy
         w.write(1, 1)
     w.align()
     coded = w.getvalue()

@@ -18,7 +18,7 @@ import pytest
 from hypothesis import given
 from hypothesis import strategies as st
 
-from ds_mapreduce_spark.operators.flac import BitReader, BitWriter, zigzag
+from ds_mapreduce_spark.operators.bitio import BitReader, BitWriter, read_ue, write_ue
 from ds_mapreduce_spark.operators.mdct import (
     MDCT_BASE_STEPS,
     MDCT_COEF,
@@ -28,8 +28,6 @@ from ds_mapreduce_spark.operators.mdct import (
     MDCT_N,
     MDCT_QMAX,
     MDCT_WIN,
-    _read_ue,
-    _write_ue,
     decode_mdct_samples,
     encode_mdct_bytes,
     parse_mlt1,
@@ -158,9 +156,9 @@ def test_unquantized_tdac_reconstructs_within_3lsb():
 @given(st.integers(min_value=0, max_value=1 << 20))
 def test_exp_golomb_roundtrips(u):
     w = BitWriter()
-    _write_ue(w, u)
+    write_ue(w, u)
     w.align()
-    assert _read_ue(BitReader(w.getvalue())) == u
+    assert read_ue(BitReader(w.getvalue())) == u
 
 
 def test_container_roundtrip_equals_fused_replay():
@@ -279,7 +277,7 @@ def _granule_spans(payload: bytes) -> tuple[int, list[tuple[int, int]]]:
         r.read(4 * MDCT_N)
         for qs in frames:
             for q in qs:
-                _read_ue(r)
+                read_ue(r)
         r.align()
         r.read(8)
         spans.append((start, r.byte_pos))
