@@ -81,10 +81,11 @@ from ds_mapreduce_spark.operators.mcv import (
     MCV_QP,
     MCV_SEARCH,
     MCV_W,
+    mcv_features_batch,
     mcv_frame_spans,
-    mcv_payload_features,
+    mcv_frame_spans_batch,
 )
-from ds_mapreduce_spark.operators.multimodal import PAYLOAD_SCHEMA, arrow_stage
+from ds_mapreduce_spark.operators.multimodal import PAYLOAD_SCHEMA, synth_map_arrays
 
 #: fixed UUID for the SEI user_data_unregistered record — all bytes
 #: > 0x03 so the UUID itself never creates or terminates an emulation
@@ -340,8 +341,12 @@ def _nal(start4: bool, ref_idc: int, nal_type: int, rbsp: bytes) -> bytes:
 def wrap_annexb(doc_id: int, mcv_payload: bytes) -> bytes:
     """MCV1 container -> Annex-B byte stream: SPS, PPS, SEI, then one
     slice NAL per frame (IDR for frame 0). Each slice RBSP is the MCV
-    frame's coded bytes + CRC + rbsp_trailing_bits."""
-    spans = mcv_frame_spans(mcv_payload)  # full validation, no q arrays
+    frame's coded bytes + CRC + rbsp_trailing_bits. The container is
+    validated as ``parse_mcv`` validates it (``mcv_frame_spans``)."""
+    return _wrap_spans(doc_id, mcv_payload, mcv_frame_spans(mcv_payload))
+
+
+def _wrap_spans(doc_id: int, mcv_payload: bytes, spans) -> bytes:
     out = bytearray()
     out += _nal(True, 3, 7, write_sps(MCV_W, MCV_H))
     out += _nal(True, 3, 8, write_pps())
@@ -470,34 +475,63 @@ def decode_annexb_features(media: DataFrame) -> DataFrame:
     closed-form by the oracle's replay of the escape rule);
     ``sei_doc_id`` must round-trip the identity through the escaped
     record. Frame features come from decoding the REASSEMBLED MCV1
-    container, so every slice still passes its CRC."""
+    containers of the whole Arrow batch (``mcv_features_batch``), so
+    every slice still passes its CRC. The first document in row order
+    that fails either parse fails the job with its error."""
 
     def features(doc_id, stream):
-        stream = bytes(stream)
-        nals, (sei_doc_id, width, height, frame_rbsps) = (
-            _parse_annexb_with_nals(stream)
-        )
-        feats = mcv_payload_features(rebuild_mcv(width, height, frame_rbsps))
-        rbsp_total = sum(len(r) for _, _, r, _ in nals)
-        start_bytes = sum(sc for _, _, _, sc in nals)
-        yield (
-            doc_id,
-            len(nals),
-            sum(1 for _, t, _, _ in nals if t == 5),
-            width,
-            height,
-            sei_doc_id,
-            rbsp_total,
-            len(stream) - start_bytes - len(nals) - rbsp_total,
-            len(stream),
-            *(sum(f[k] for f in feats) for k in ("sum_v", "sum_sq_v", "sum_abs_mv")),
-        )
+        census, containers, error = [], [], None
+        for s in stream:
+            s = bytes(s)
+            try:
+                nals, (sei_doc_id, width, height, frame_rbsps) = (
+                    _parse_annexb_with_nals(s)
+                )
+            except ValueError as exc:
+                # raised after the containers of the rows before it
+                # are decoded: an earlier row's MCV1 error comes first
+                error = exc
+                break
+            containers.append(rebuild_mcv(width, height, frame_rbsps))
+            rbsp_total = sum(len(r) for _, _, r, _ in nals)
+            start_bytes = sum(sc for _, _, _, sc in nals)
+            census.append(
+                (
+                    len(nals),
+                    sum(1 for _, t, _, _ in nals if t == 5),
+                    width,
+                    height,
+                    sei_doc_id,
+                    rbsp_total,
+                    len(s) - start_bytes - len(nals) - rbsp_total,
+                    len(s),
+                )
+            )
+        f = mcv_features_batch(containers)
+        if error is not None:
+            raise error
+        totals = np.zeros((3, len(containers)), dtype=np.int64)
+        for k, name in enumerate(("sum_v", "sum_sq_v", "sum_abs_mv")):
+            np.add.at(totals[k], f["row"], f[name])
+        names = ANNEXB_FEATURE_SCHEMA.replace(" bigint", "").split(", ")
+        cols = np.array(census, dtype=np.int64).reshape(-1, 8).T
+        return dict(zip(names, [doc_id, *cols, *totals]))
 
-    return arrow_stage(media, features, ANNEXB_FEATURE_SCHEMA)
+    return synth_map_arrays(media, ANNEXB_FEATURE_SCHEMA, features)
 
 
 def wrap_annexb_df(media: DataFrame) -> DataFrame:
-    """(doc_id, payload=MCV1) -> (doc_id, payload=Annex-B stream)."""
-    return arrow_stage(
-        media, lambda d, p: [(d, wrap_annexb(int(d), bytes(p)))], PAYLOAD_SCHEMA
-    )
+    """(doc_id, payload=MCV1) -> (doc_id, payload=Annex-B stream), one
+    ``mcv_frame_spans_batch`` walk per Arrow batch."""
+
+    def wrap(doc_id, payload):
+        payloads = [bytes(p) for p in payload]
+        spans = mcv_frame_spans_batch(payloads)
+        return {
+            "payload": [
+                _wrap_spans(int(d), p, sp)
+                for d, p, sp in zip(doc_id, payloads, spans)
+            ]
+        }
+
+    return synth_map_arrays(media, PAYLOAD_SCHEMA, wrap)

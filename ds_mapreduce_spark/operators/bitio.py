@@ -74,6 +74,30 @@ def crc8(data: bytes) -> int:
     return r
 
 
+_CRC8_NP = np.array(_CRC8_TABLE, dtype=np.uint8)
+
+
+def crc8_many(buf, starts, ends) -> np.ndarray:
+    """``crc8(buf[s:e])`` of every range, all ranges stepped together
+    through the byte table: one numpy step per byte of the longest
+    range instead of one Python loop per range. Ranges run longest
+    first, so step k updates a prefix of them."""
+    data = np.frombuffer(buf, dtype=np.uint8)
+    starts = np.asarray(starts, dtype=np.int64)
+    lens = np.asarray(ends, dtype=np.int64) - starts
+    order = np.argsort(-lens, kind="stable")
+    s, neg = starts[order], -lens[order]
+    r = np.zeros(len(s), dtype=np.uint8)
+    longest = int(-neg[0]) if len(neg) else 0
+    # live[k]: how many ranges are longer than k bytes
+    live = np.searchsorted(neg, -np.arange(longest), side="left")
+    for k, m in enumerate(live.tolist()):
+        r[:m] = _CRC8_NP[r[:m] ^ data[s[:m] + k]]
+    out = np.empty_like(r)
+    out[order] = r
+    return out
+
+
 def crc16(data: bytes) -> int:
     r = 0
     n = len(data)

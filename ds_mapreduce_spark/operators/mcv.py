@@ -78,6 +78,7 @@ from ds_mapreduce_spark.operators.bitio import (
     BitReader,
     corruption_to_value_error,
     crc8,
+    crc8_many,
     unzigzag,
 )
 from ds_mapreduce_spark.operators.jpeg import (
@@ -89,7 +90,6 @@ from ds_mapreduce_spark.operators.multimodal import (
     PAYLOAD_SCHEMA,
     PCM_A,
     PCM_B,
-    arrow_stage,
     synth_map_arrays,
 )
 
@@ -141,18 +141,12 @@ def synth_scroll_frames(docs: DataFrame) -> DataFrame:
     )
 
 
-def _read_block(r: BitReader, materialize: bool = True):
-    """Zero flag + (unless flagged) 64 ue codes, batch-read (r16) via
-    BitReader.read_ue_many — one call per block instead of 64×3, with
-    the unzigzag fold vectorized. ``materialize=False`` consumes the
-    identical bits and performs the identical validation but skips
-    building the value array (the spans-only walk wrap_annexb needs)."""
+def _read_block(r: BitReader) -> np.ndarray:
+    """Zero flag + (unless flagged) 64 ue codes, read with one
+    BitReader.read_ue_many call and unzigzagged at once."""
     if r.read(1):
-        return np.zeros((8, 8), dtype=np.int64) if materialize else None
-    vals = r.read_ue_many(64)
-    if not materialize:
-        return None
-    u = np.array(vals, dtype=np.int64)
+        return np.zeros((8, 8), dtype=np.int64)
+    u = np.array(r.read_ue_many(64), dtype=np.int64)
     return np.where(u & 1, -((u + 1) >> 1), u >> 1).reshape(8, 8)
 
 
@@ -233,10 +227,34 @@ def _block_match(prev: np.ndarray, cur: np.ndarray):
             .sum(axis=2)
         )
     mvs = _SHIFTS[sads.reshape(len(_WINDOWS), n, -1).argmin(axis=0)]
+    return mvs, _predict(prev, mvs)
+
+
+def _predict(prev: np.ndarray, mvs: np.ndarray) -> np.ndarray:
+    """(n, H, W) reference frames and (n, n_blocks, 2) motion vectors
+    (dy, dx) -> (n, n_blocks, 8, 8) motion-compensated predictions."""
     r = np.arange(8)
     ys = (_ORIGINS[:, 0] + mvs[..., 0])[..., None, None] + r[:, None]
     xs = (_ORIGINS[:, 1] + mvs[..., 1])[..., None, None] + r[None, :]
-    return mvs, prev[np.arange(n)[:, None, None, None], ys, xs]
+    return prev[np.arange(len(prev))[:, None, None, None], ys, xs]
+
+
+def _reconstruct(q: np.ndarray, mvs: np.ndarray) -> np.ndarray:
+    """The decoder over n documents at once: (n, T, n_blocks, 8, 8)
+    quantized blocks and (n, T, n_blocks, 2) motion vectors ->
+    (n, T, H, W) frames. Frame 0 is intra; every later frame adds its
+    decoded residual to the prediction from the frame before it, the
+    same closed loop the encoder runs."""
+    out = np.empty((*q.shape[:2], MCV_H, MCV_W), dtype=np.int64)
+    for t in range(q.shape[1]):
+        if t == 0:
+            recon_b = _idct_blocks(q[:, 0] * MCV_QI) + 128
+        else:
+            recon_b = _predict(out[:, t - 1], mvs[:, t]) + _idct_blocks(
+                q[:, t] * MCV_QP
+            )
+        out[:, t] = _from_blocks(np.clip(recon_b, 0, 255))
+    return out
 
 
 def _se_codes(v: np.ndarray):
@@ -253,7 +271,8 @@ def encode_mcv_batch(frames) -> list[bytes]:
     of the previous frame. Search, transform and quantization run over
     every document's blocks at once; every syntax field of the batch
     (se motion vectors, zero flag, 64 ue codes, byte pad) is packed
-    with one ``np.repeat``/``np.packbits``; then CRC-8 per frame."""
+    with one ``np.repeat``/``np.packbits``; every frame's CRC-8 comes
+    from one ``crc8_many`` call."""
     fr = np.asarray(frames, dtype=np.int64)
     if not len(fr):
         return []
@@ -294,17 +313,14 @@ def encode_mcv_batch(frames) -> list[bytes]:
     ln = np.concatenate([lens, -frame_bits % 8], axis=-1).ravel()
     shift = np.repeat(np.cumsum(ln) - 1, ln) - np.arange(int(ln.sum()))
     bits = (np.repeat(v, ln) >> np.minimum(shift, 63)) & 1
-    data = np.packbits(bits.astype(np.uint8)).tobytes()
+    data = np.packbits(bits.astype(np.uint8))
 
-    ends = np.cumsum((frame_bits + 7) // 8).tolist()
-    out = []
-    for i in range(n):
-        parts = [_HEADER]
-        for j in range(i * MCV_FRAMES, (i + 1) * MCV_FRAMES):
-            coded = data[ends[j - 1] if j else 0 : ends[j]]
-            parts += (coded, bytes((crc8(coded),)))
-        out.append(b"".join(parts))
-    return out
+    # each frame's CRC byte goes in right after its coded bytes
+    nbytes = ((frame_bits + 7) // 8).ravel()
+    ends = np.cumsum(nbytes)
+    framed = np.insert(data, ends, crc8_many(data, ends - nbytes, ends)).tobytes()
+    doc_ends = np.cumsum((nbytes + 1).reshape(n, MCV_FRAMES).sum(axis=1)).tolist()
+    return [_HEADER + framed[a:b] for a, b in zip([0] + doc_ends[:-1], doc_ends)]
 
 
 def encode_mcv_bytes(frames) -> bytes:
@@ -316,27 +332,16 @@ def encode_mcv_bytes(frames) -> bytes:
 
 @corruption_to_value_error
 def parse_mcv(payload: bytes):
-    """Header + per-frame syntax walk -> (frames, spans) where each
-    frame is a list of (dy, dx, q-block) per block ((0,0,intra-q) for
-    frame 0) and spans are each frame's (start, end) byte range
+    """Header + per-frame syntax walk of ONE container -> (frames, spans)
+    where each frame is a list of (dy, dx, q-block) per block ((0,0,intra-q)
+    for frame 0) and spans are each frame's (start, end) byte range
     including its CRC — so frame_bytes in the features is a span
     length and len(payload) == 12 + sum(frame_bytes) by construction.
     Validates magic, geometry, motion-vector bounds, frame CRCs, and
-    exact stream consumption."""
-    return _walk_mcv(payload, materialize=True)
-
-
-@corruption_to_value_error
-def mcv_frame_spans(payload: bytes) -> list[tuple[int, int]]:
-    """Spans-only walk (r16): consumes the identical bits and performs
-    the identical validation as parse_mcv — same magic/geometry/MV/CRC
-    checks, same failure points — but never materializes the q-block
-    arrays. wrap_annexb only needs the frame byte ranges, so this
-    halves its per-document parse cost."""
-    return _walk_mcv(payload, materialize=False)[1]
-
-
-def _walk_mcv(payload: bytes, materialize: bool):
+    exact stream consumption. The decode stages call it only for the
+    documents the batch walk (``_walk_batch``) does not accept: it is
+    the per-document error path, and it decodes the containers with a
+    header other than the standard one."""
     if payload[:4] != MCV_MAGIC:
         raise ValueError("not an MCV1 payload")
     if len(payload) < 12:
@@ -352,28 +357,27 @@ def _walk_mcv(payload: bytes, materialize: bool):
     for t in range(n_frames):
         start = r.byte_pos
         blocks = []
-        for by0 in range(0, MCV_H, 8):
-            for bx0 in range(0, MCV_W, 8):
-                if t == 0:
-                    dy = dx = 0
-                else:
-                    dxu, dyu = r.read_ue_many(2)
-                    dx = unzigzag(dxu)
-                    dy = unzigzag(dyu)
-                    if not (
-                        0 <= by0 + dy <= MCV_H - 8
-                        and 0 <= bx0 + dx <= MCV_W - 8
-                    ):
-                        raise ValueError(
-                            f"MCV1 motion vector ({dx},{dy}) leaves the "
-                            f"picture at block ({bx0},{by0})"
-                        )
-                    if abs(dx) > search or abs(dy) > search:
-                        raise ValueError(
-                            f"MCV1 motion vector ({dx},{dy}) exceeds the "
-                            f"declared search range {search}"
-                        )
-                blocks.append((dy, dx, _read_block(r, materialize)))
+        for by0, bx0 in _block_origins():
+            if t == 0:
+                dy = dx = 0
+            else:
+                dxu, dyu = r.read_ue_many(2)
+                dx = unzigzag(dxu)
+                dy = unzigzag(dyu)
+                if not (
+                    0 <= by0 + dy <= MCV_H - 8
+                    and 0 <= bx0 + dx <= MCV_W - 8
+                ):
+                    raise ValueError(
+                        f"MCV1 motion vector ({dx},{dy}) leaves the "
+                        f"picture at block ({bx0},{by0})"
+                    )
+                if abs(dx) > search or abs(dy) > search:
+                    raise ValueError(
+                        f"MCV1 motion vector ({dx},{dy}) exceeds the "
+                        f"declared search range {search}"
+                    )
+            blocks.append((dy, dx, _read_block(r)))
         r.align()
         end = r.byte_pos
         crc = r.read(8)
@@ -388,37 +392,185 @@ def _walk_mcv(payload: bytes, materialize: bool):
     return frames, spans
 
 
-def decode_mcv_frames(payload: bytes) -> list[np.ndarray]:
-    """Full reconstruction: intra-decode frame 0, then motion-
-    compensate + add decoded residuals frame by frame."""
-    frames, _spans = parse_mcv(payload)
-    return _decode_frames_from_parsed(frames)
+#: longest ue(v) prefix the batch walk decodes (values below 2^29); a
+#: longer code sends its document to ``parse_mcv``
+_MAX_LZ = 28
 
 
-def _decode_frames_from_parsed(frames) -> list[np.ndarray]:
-    """Reconstruction from an already-parsed frame list — split out
-    (r16) so `mcv_payload_features` walks the container syntax ONCE
-    instead of parsing it a second time inside the decode."""
-    out: list[np.ndarray] = []
-    prev: np.ndarray | None = None
-    for t, blocks in enumerate(frames):
-        qs = np.stack([q for _dy, _dx, q in blocks])
-        if t == 0:
-            recon_b = _idct_blocks(qs * MCV_QI) + 128
-        else:
-            preds = np.stack(
-                [
-                    prev[by0 + dy : by0 + dy + 8, bx0 + dx : bx0 + dx + 8]
-                    for (dy, dx, _q), (by0, bx0) in zip(
-                        blocks, _block_origins()
-                    )
-                ]
+def _walk_batch(payloads: list[bytes]):
+    """Syntax walk of a whole batch of MCV1 containers -> (rows, q, mvs,
+    spans) of the documents it accepts: their indices into
+    ``payloads``, (n, F, n_blocks, 8, 8) quantized blocks,
+    (n, F, n_blocks, 2) motion vectors (dy, dx), and (n, F, 2) frame
+    byte spans including the CRC.
+
+    The payloads with the standard header are concatenated into one bit
+    array, and one table gives, for every bit position, where the ue(v)
+    code that starts there ends. All documents then walk in lockstep:
+    per syntax element, one gather across the documents. The code
+    values are read out afterwards, all at once. A document is accepted
+    only if no code has more than ``_MAX_LZ`` leading zeros, every
+    motion vector stays in the picture and within the search range,
+    every frame CRC matches, and the walk ends exactly at its payload's
+    end. Any other document is left to ``parse_mcv``, which raises its
+    error or decodes it."""
+    rows = [i for i, p in enumerate(payloads) if p[:12] == _HEADER]
+    docs = [payloads[i] for i in rows]
+    lens = np.array([len(p) for p in docs], dtype=np.int64)
+    doc_end = 8 * np.cumsum(lens)
+    doc_start = doc_end - 8 * lens
+    # 8 zero bytes of padding hold the dead position (past every
+    # document, a fixed point of the walk) and the 5-byte value reads
+    joined = b"".join(docs)
+    dead = 8 * len(joined) + 8
+    buf = np.frombuffer(joined + bytes(8), dtype=np.uint8)
+    bits = np.unpackbits(buf)
+    # a ue(v) code that starts at p and has its first 1 bit at o ends at
+    # 2*o - p + 1, clamped to the dead position (a 1 bit past the end
+    # closes the zero run of the padding)
+    idx = np.int32 if 2 * len(bits) < 1 << 31 else np.int64
+    ones = np.append(np.flatnonzero(bits), len(bits)).astype(idx)
+    code_end = np.repeat(2 * ones + 1, np.diff(ones, prepend=-1))
+    code_end -= np.arange(len(bits) + 1, dtype=idx)
+    np.minimum(code_end, dead, out=code_end)
+
+    n, nb = len(docs), len(_ORIGINS)
+    # per block: the start of ue(dx), ue(dy), then the 64 coefficients
+    pos = np.zeros((n, MCV_FRAMES, nb, 66), dtype=idx)
+    zero = np.zeros((n, MCV_FRAMES, nb), dtype=bool)
+    starts = np.empty((n, MCV_FRAMES), dtype=np.int64)
+    crc_at = np.empty((n, MCV_FRAMES), dtype=np.int64)
+    c = doc_start + 8 * len(_HEADER)
+    for t in range(MCV_FRAMES):
+        starts[:, t] = c
+        for b in range(nb):
+            if t:
+                pos[:, t, b, 0] = c
+                c = code_end[c]
+                pos[:, t, b, 1] = c
+                c = code_end[c]
+            z = bits[c] == 1
+            zero[:, t, b] = z
+            c = np.minimum(c + 1, dead)
+            live = np.flatnonzero(~z)
+            cl = c[live]
+            steps = []
+            for _ in range(64):
+                steps.append(cl)
+                cl = code_end[cl]
+            pos[live, t, b, 2:] = np.stack(steps, axis=1)
+            c[live] = cl
+        crc_at[:, t] = c = (c + 7) & -8  # zero pad to the byte boundary
+        c = np.minimum(c + 8, dead)
+    ok = np.flatnonzero(c == doc_end)
+
+    # every code's value: the lz+1 bits from its first 1 bit, minus one
+    p = pos[ok]
+    lz = (code_end[p] - p) >> 1
+    first = p + lz
+    window = np.zeros(len(buf) - 4, dtype=np.int64)  # 5 bytes from each
+    for k in range(5):
+        window = (window << 8) | buf[k : len(buf) - 4 + k]
+    u = window[first >> 3] >> (39 - (first & 7) - lz)
+    u = (u & ((1 << (lz + 1)) - 1)) - 1
+    v = (u >> 1) ^ -(u & 1)  # unzigzag
+    mvs = v[..., 1::-1].copy()
+    mvs[:, 0] = 0  # frame 0 is intra: no motion vectors
+    q = np.where(zero[ok][..., None], 0, v[..., 2:])
+    ref = _ORIGINS + mvs  # each reference block's top-left corner
+    fits = (
+        (ref >= 0) & (ref <= (MCV_H - 8, MCV_W - 8)) & (abs(mvs) <= MCV_SEARCH)
+    ).all(axis=(1, 2, 3))
+    s, e = starts[ok] >> 3, crc_at[ok] >> 3
+    crc_ok = crc8_many(buf, s.ravel(), e.ravel()) == buf[e.ravel()]
+    short = (lz <= _MAX_LZ).all(axis=(1, 2, 3))
+    keep = fits & short & crc_ok.reshape(-1, MCV_FRAMES).all(axis=1)
+    spans = np.stack([s, e + 1], axis=-1) - (doc_start[ok] >> 3)[:, None, None]
+    return (
+        np.array(rows, dtype=np.int64)[ok][keep],
+        q[keep].reshape(-1, MCV_FRAMES, nb, 8, 8),
+        mvs[keep],
+        spans[keep],
+    )
+
+
+def _decode_batch(payloads: list[bytes]):
+    """Decode a batch of MCV1 containers -> [(rows, frames, mvs, spans)]:
+    the documents ``_walk_batch`` accepts as one group, then every other
+    document, in row order, as a group of its own through
+    ``parse_mcv`` (so the first rejected document's ValueError is the
+    one raised). Each group is reconstructed by ``_reconstruct``;
+    frames are (n, T, H, W), mvs (n, T, n_blocks, 2), spans (n, T, 2)."""
+    rows, q, mvs, spans = _walk_batch(payloads)
+    groups = [(rows, _reconstruct(q, mvs), mvs, spans)]
+    accepted = set(rows.tolist())
+    for i, payload in enumerate(payloads):
+        if i in accepted:
+            continue
+        frames, sp = parse_mcv(payload)
+        shape = (1, len(frames), len(_ORIGINS))
+        q1 = np.array([[b[2] for b in f] for f in frames], dtype=np.int64)
+        mv1 = np.array([[b[:2] for b in f] for f in frames], dtype=np.int64)
+        mv1 = mv1.reshape(*shape, 2)
+        groups.append(
+            (
+                np.array([i]),
+                _reconstruct(q1.reshape(*shape, 8, 8), mv1),
+                mv1,
+                np.array(sp, dtype=np.int64).reshape(1, len(sp), 2),
             )
-            recon_b = preds + _idct_blocks(qs * MCV_QP)
-        recon = _from_blocks(np.clip(recon_b, 0, 255))
-        out.append(recon)
-        prev = recon
-    return out
+        )
+    return groups
+
+
+def mcv_frame_spans_batch(payloads: list[bytes]) -> list[list[tuple[int, int]]]:
+    """Every container's frame byte spans (CRC included), from one
+    ``_walk_batch``; the documents it does not accept go through
+    ``parse_mcv`` in row order, which raises the first one's error."""
+    rows, _q, _mvs, spans = _walk_batch(payloads)
+    walked = dict(zip(rows.tolist(), spans.tolist()))
+    return [
+        list(map(tuple, walked[i])) if i in walked else parse_mcv(p)[1]
+        for i, p in enumerate(payloads)
+    ]
+
+
+def mcv_frame_spans(payload: bytes) -> list[tuple[int, int]]:
+    """One container's frame byte spans: a one-document
+    ``mcv_frame_spans_batch``, with parse_mcv's validation and errors."""
+    return mcv_frame_spans_batch([payload])[0]
+
+
+def mcv_features_batch(payloads: list[bytes]) -> dict[str, np.ndarray]:
+    """Per-frame features of a batch of MCV1 containers, one entry per
+    frame in row then frame order: ``row`` (index into ``payloads``),
+    ``frame_id``, the reconstructed frame's ``sum_v`` and ``sum_sq_v``,
+    ``sum_abs_mv`` (|dx|+|dy| over its blocks) and ``frame_bytes`` (its
+    span, CRC included)."""
+    cols = [
+        np.stack(
+            [
+                np.repeat(rows, frames.shape[1]),
+                np.tile(np.arange(frames.shape[1]), len(rows)),
+                frames.sum(axis=(2, 3)).ravel(),
+                (frames * frames).sum(axis=(2, 3)).ravel(),
+                np.abs(mvs).sum(axis=(2, 3)).ravel(),
+                np.diff(spans, axis=-1).ravel(),
+            ]
+        )
+        for rows, frames, mvs, spans in _decode_batch(payloads)
+    ]
+    f = np.concatenate(cols, axis=1)
+    f = f[:, np.argsort(f[0], kind="stable")]
+    names = ("row", "frame_id", "sum_v", "sum_sq_v", "sum_abs_mv", "frame_bytes")
+    return dict(zip(names, f))
+
+
+def decode_mcv_frames(payload: bytes) -> list[np.ndarray]:
+    """Full reconstruction of one container: a one-document
+    ``_decode_batch``."""
+    groups = _decode_batch([payload])
+    return list(next(frames for rows, frames, _, _ in groups if len(rows))[0])
 
 
 def encode_mcv(df: DataFrame) -> DataFrame:
@@ -437,31 +589,18 @@ def decode_mcv_features(media: DataFrame) -> DataFrame:
     sums (grading the whole prediction+transform chain), the motion
     budget |dx|+|dy| summed over blocks (grading the search), and the
     frame's coded bytes (grading the syntax coder and the skip-flag
-    economics — P-frame bytes track the wrap seam, not frame count)."""
+    economics — P-frame bytes track the wrap seam, not frame count).
+    One ``mcv_features_batch`` call per Arrow batch."""
 
     def frames(doc_id, payload):
-        for f in mcv_payload_features(bytes(payload)):
-            yield (
-                doc_id, f["frame_id"], MCV_W, MCV_H, f["sum_v"],
-                f["sum_sq_v"], f["sum_abs_mv"], f["frame_bytes"],
-            )
-
-    return arrow_stage(media, frames, MCV_FEATURE_SCHEMA)
-
-
-def mcv_payload_features(payload: bytes) -> list[dict]:
-    """Per-frame features of one MCV1 payload — the per-payload core of
-    `decode_mcv_features`, shared with the Annex-B wrapper
-    (`operators/annexb.py`) which decodes a REASSEMBLED container."""
-    frames, spans = parse_mcv(payload)
-    recons = _decode_frames_from_parsed(frames)
-    return [
-        {
-            "frame_id": t,
-            "sum_v": int(recon.sum()),
-            "sum_sq_v": int((recon * recon).sum()),
-            "sum_abs_mv": sum(abs(dy) + abs(dx) for dy, dx, _ in blocks),
-            "frame_bytes": span[1] - span[0],
+        f = mcv_features_batch([bytes(p) for p in payload])
+        n = len(f["row"])
+        return {
+            "doc_id": doc_id[f["row"]],
+            "frame_id": f["frame_id"],
+            "width": np.full(n, MCV_W),
+            "height": np.full(n, MCV_H),
+            **{k: f[k] for k in ("sum_v", "sum_sq_v", "sum_abs_mv", "frame_bytes")},
         }
-        for t, (blocks, recon, span) in enumerate(zip(frames, recons, spans))
-    ]
+
+    return synth_map_arrays(media, MCV_FEATURE_SCHEMA, frames)

@@ -20,10 +20,12 @@ import struct
 import numpy as np
 import pytest
 
+from ds_mapreduce_spark.operators import mcv
 from ds_mapreduce_spark.operators.bitio import (
     BitReader,
     BitWriter,
     crc8,
+    crc8_many,
     read_ue,
     write_ue,
     zigzag,
@@ -43,9 +45,12 @@ from ds_mapreduce_spark.operators.mcv import (
     _block_origins,
     _from_blocks,
     _to_blocks,
+    decode_mcv_frames,
     encode_mcv_batch,
     encode_mcv_bytes,
+    mcv_features_batch,
     mcv_frame_spans,
+    mcv_frame_spans_batch,
     parse_mcv,
 )
 from ds_mapreduce_spark.operators.multimodal import PCM_A, PCM_B
@@ -581,3 +586,240 @@ def test_codec_bit_layer_lives_in_bitio() -> None:
             ):
                 bad.append(f"{path.name}: from {node.module} import {names}")
     assert not bad, bad
+
+
+def test_crc8_many_matches_crc8() -> None:
+    rng = random.Random(0xC8C8)
+    sizes = list(range(65)) + [255, 517]
+    buf = bytes(rng.randrange(256) for _ in range(sum(sizes) + 100))
+    starts, ends, at = [], [], 0
+    for n in sizes:
+        starts.append(at)
+        ends.append(at + n)
+        at += n
+    # unsorted ranges, overlapping ones and empty ones at odd offsets
+    order = list(range(len(sizes)))
+    rng.shuffle(order)
+    starts = [starts[i] for i in order] + [7, 0, len(buf), 3]
+    ends = [ends[i] for i in order] + [7, len(buf), len(buf), 600]
+    got = crc8_many(buf, starts, ends)
+    assert got.tolist() == [crc8(buf[s:e]) for s, e in zip(starts, ends)]
+    assert crc8_many(buf, [], []).tolist() == []
+    assert crc8_many(np.frombuffer(buf, dtype=np.uint8), [5], [9]).tolist() == [
+        crc8(buf[5:9])
+    ]
+
+
+# ---- MCV batch decoder: parse_mcv plus per-document reconstruction
+def _ref_features(payload: bytes) -> list[tuple]:
+    """The per-document decode the batch decoder replaced: parse_mcv,
+    then frame by frame the motion-compensated reconstruction."""
+    frames, spans = parse_mcv(payload)
+    out, prev = [], None
+    for t, blocks in enumerate(frames):
+        qs = np.stack([q for _dy, _dx, q in blocks])
+        if t == 0:
+            recon_b = _idct_blocks(qs * MCV_QI) + 128
+        else:
+            preds = np.stack(
+                [
+                    prev[by0 + dy : by0 + dy + 8, bx0 + dx : bx0 + dx + 8]
+                    for (dy, dx, _q), (by0, bx0) in zip(blocks, _block_origins())
+                ]
+            )
+            recon_b = preds + _idct_blocks(qs * MCV_QP)
+        prev = _from_blocks(np.clip(recon_b, 0, 255))
+        out.append(
+            (
+                t,
+                int(prev.sum()),
+                int((prev * prev).sum()),
+                sum(abs(dy) + abs(dx) for dy, dx, _ in blocks),
+                spans[t][1] - spans[t][0],
+            )
+        )
+    return out
+
+
+def _batch_features(payloads: list[bytes]) -> list[list[tuple]]:
+    f = mcv_features_batch(payloads)
+    out = [[] for _ in payloads]
+    cols = ("frame_id", "sum_v", "sum_sq_v", "sum_abs_mv", "frame_bytes")
+    for i, row in enumerate(f["row"].tolist()):
+        out[row].append(tuple(int(f[c][i]) for c in cols))
+    return out
+
+
+def _counting_parse(monkeypatch) -> list[int]:
+    calls = []
+
+    def counted(payload):
+        calls.append(1)
+        return parse_mcv(payload)
+
+    monkeypatch.setattr(mcv, "parse_mcv", counted)
+    return calls
+
+
+def test_mcv_batch_decoder_matches_per_document_reference(monkeypatch) -> None:
+    payloads = [
+        p
+        for k in range(0, 500, 125)
+        for p in encode_mcv_batch(_scroll_frames(np.arange(1 + k, 126 + k)))
+    ]
+    want = [_ref_features(p) for p in payloads]
+    calls = _counting_parse(monkeypatch)
+    got, start = [], 0
+    for size in itertools.cycle([0, 1, 7, 131]):
+        if start >= len(payloads):
+            break
+        batch = payloads[start : start + size]
+        got += _batch_features(batch)
+        assert mcv_frame_spans_batch(batch) == [parse_mcv(p)[1] for p in batch]
+        start += size
+    assert got == want
+    # graded payloads never leave the batch walk (the spans check above
+    # calls the real parse_mcv, not the counted one)
+    assert calls == []
+
+    rng = np.random.default_rng(2025)
+    noise = encode_mcv_batch(rng.integers(0, 256, size=(24, MCV_FRAMES, MCV_H, MCV_W)))
+    still = encode_mcv_batch(np.stack([_scroll_frames(np.array([42]))[0, :1]] * MCV_FRAMES, axis=1))
+    for batch in (noise, still):
+        assert _batch_features(batch) == [_ref_features(p) for p in batch]
+    assert calls == []
+    # the all-skip static scene: 4-byte P-frames at the end
+    assert [f[4] for f in _batch_features(still)[0]][3:] == [4, 4, 4]
+    frames = decode_mcv_frames(still[0])
+    assert len(frames) == MCV_FRAMES and (frames[-1] == frames[2]).all()
+
+
+def _two_frame_container() -> bytes:
+    """A 2-frame container (not the standard header): all-zero intra
+    frame, then a P-frame of (0, 0) vectors and one coded block."""
+    out = bytearray(
+        MCV_MAGIC
+        + struct.pack("<HHBBBB", MCV_W, MCV_H, 2, MCV_QI, MCV_QP, MCV_SEARCH)
+    )
+    w = BitWriter()
+    for _blk in range(6):
+        w.write(1, 1)
+    w.align()
+    coded = w.getvalue()
+    out += coded + bytes([crc8(coded)])
+    w = BitWriter()
+    for blk in range(6):
+        write_ue(w, zigzag(0))
+        write_ue(w, zigzag(0))
+        w.write(blk != 4, 1)
+        if blk == 4:
+            for k in range(64):
+                write_ue(w, zigzag(k % 5 - 2))
+    w.align()
+    coded = w.getvalue()
+    return bytes(out + coded + bytes([crc8(coded)]))
+
+
+def _long_code_container() -> bytes:
+    """A standard container whose first intra coefficient is coded with
+    31 leading zeros (value 2^31 - 2 folded): valid, but past the batch
+    walk's 28-zero bound."""
+    w = BitWriter()
+    w.write(0, 1)
+    write_ue(w, (1 << 31) - 2)
+    for _ in range(63):
+        write_ue(w, 0)
+    for _blk in range(5):
+        w.write(1, 1)
+    w.align()
+    coded = w.getvalue()
+    frame0 = coded + bytes([crc8(coded)])
+    base = encode_mcv_bytes(_scroll_frames(np.array([3]))[0])
+    spans = parse_mcv(base)[1]
+    return base[:12] + frame0 + base[spans[1][0] :]
+
+
+def test_mcv_batch_decoder_per_document_path(monkeypatch) -> None:
+    graded = encode_mcv_batch(_scroll_frames(np.arange(1, 4)))
+    odd = [_two_frame_container(), _long_code_container()]
+    assert mcv._walk_batch(odd)[0].tolist() == []
+    batch = [graded[0], odd[0], graded[1], odd[1], graded[2]]
+    want = [_ref_features(p) for p in batch]
+    assert len(want[1]) == 2 and want[3][0][2] > 0
+    calls = _counting_parse(monkeypatch)
+    assert _batch_features(batch) == want
+    assert len(calls) == 2
+    assert mcv_frame_spans_batch(batch) == [parse_mcv(p)[1] for p in batch]
+    assert len(decode_mcv_frames(odd[0])) == 2
+
+
+def test_mcv_batch_decoder_raises_the_first_rejected_documents_error() -> None:
+    good = encode_mcv_batch(_scroll_frames(np.arange(1, 4)))
+    bad_crc = bytearray(good[1])
+    bad_crc[40] ^= 0x10
+    trailing = good[2] + b"\x00"
+    for first, second in ((bytes(bad_crc), trailing), (trailing, bytes(bad_crc))):
+        with pytest.raises(ValueError) as want:
+            parse_mcv(first)
+        batch = [good[0], first, good[1], second, good[2]]
+        for decode in (mcv_features_batch, mcv_frame_spans_batch):
+            with pytest.raises(ValueError) as got:
+                decode(batch)
+            assert str(got.value) == str(want.value)
+
+
+def test_mcv_batch_walk_never_accepts_what_parse_mcv_rejects() -> None:
+    """Seeded mutations of graded payloads: bit flips, truncations,
+    garbage bytes, inserted and deleted bytes, and bit flips followed
+    by a repaired frame CRC (so the syntax checks, not the CRC, must
+    catch them). Every payload the batch walk accepts, parse_mcv
+    accepts with the same blocks, vectors and spans."""
+    rng = random.Random(0x3C71)
+    base = encode_mcv_batch(_scroll_frames(np.arange(1, 41)))
+    mutants = []
+    for trial in range(5200):
+        p = base[trial % len(base)]
+        b = bytearray(p)
+        op = trial % 6
+        if op == 0:
+            b[rng.randrange(len(b))] ^= 1 << rng.randrange(8)
+        elif op == 1:
+            b = b[: rng.randrange(len(b))]
+        elif op == 2:
+            for _ in range(rng.randrange(1, 4)):
+                b[rng.randrange(len(b))] = rng.randrange(256)
+        elif op == 3:
+            b.insert(rng.randrange(len(b) + 1), rng.randrange(256))
+        elif op == 4:
+            del b[rng.randrange(len(b))]
+        else:
+            spans = parse_mcv(p)[1]
+            s, e = spans[rng.randrange(len(spans))]
+            for _ in range(rng.randrange(1, 3)):
+                b[rng.randrange(s, e - 1)] ^= 1 << rng.randrange(8)
+            b[e - 1] = crc8(bytes(b[s : e - 1]))
+        mutants.append(bytes(b))
+    accepted = rejected = 0
+    for k in range(0, len(mutants), 125):
+        batch = mutants[k : k + 125]
+        rows, q, mvs, spans = mcv._walk_batch(batch)
+        walked = dict(zip(rows.tolist(), range(len(rows))))
+        for i, p in enumerate(batch):
+            try:
+                frames, want_spans = parse_mcv(p)
+            except ValueError:
+                rejected += 1
+                assert i not in walked
+                continue
+            if i not in walked:
+                continue
+            accepted += 1
+            j = walked[i]
+            assert spans[j].tolist() == [list(sp) for sp in want_spans]
+            for t, blocks in enumerate(frames):
+                for b, (dy, dx, blk) in enumerate(blocks):
+                    assert mvs[j, t, b].tolist() == [dy, dx]
+                    assert (q[j, t, b] == blk).all()
+    # most mutants are rejected, and the CRC-repaired ones give the
+    # walk real accept decisions to make
+    assert rejected > 4000 and accepted > 100, (rejected, accepted)

@@ -143,6 +143,9 @@ def _targets():
             encode_jpeg_bytes(px, JPEG_W, JPEG_H, restart_interval=2),
             parse_jpeg,
         ),
+        # the batch MCV decoder (lockstep walk, parse_mcv for the rest)
+        # on a one-document batch
+        ("mcv_batch", encode_mcv_bytes(frames_mcv), _mcv_batch()),
     ]
 
 
@@ -169,6 +172,12 @@ def _parse_annexb():
     from ds_mapreduce_spark.operators.annexb import parse_annexb
 
     return parse_annexb
+
+
+def _mcv_batch():
+    from ds_mapreduce_spark.operators.mcv import mcv_features_batch
+
+    return lambda payload: mcv_features_batch([payload])
 
 
 def _pcm16_wav_bytes(samples: list[int]) -> bytes:

@@ -445,3 +445,26 @@ def test_scan_marker_errors():
         parse_jpeg(head + b"\xff")
     with pytest.raises(ValueError, match="^truncated entropy-coded scan$"):
         parse_jpeg(head)
+
+
+def test_missing_eoi_and_trailing_bytes_rejected():
+    """The segment after the last MCU must close with EOI, and EOI must
+    be the payload's last two bytes: a cut-off EOI, EOI replaced by
+    zero bytes, and bytes after EOI all fail loudly, with and without
+    restart markers."""
+    px = bytes((7 * i) % 256 for i in range(16 * 8))
+    for restart_interval in (0, 1):
+        p = encode_jpeg_bytes(px, 16, 8, restart_interval=restart_interval)
+        assert parse_jpeg(p)[:2] == (16, 8)
+        assert p.endswith(b"\xff\xd9")
+        with pytest.raises(ValueError, match="^expected EOI after the last MCU"):
+            parse_jpeg(p[:-2])
+        with pytest.raises(ValueError, match="^expected EOI"):
+            parse_jpeg(p[:-2] + bytes(3))
+        with pytest.raises(ValueError, match="^7 trailing bytes after EOI$"):
+            parse_jpeg(p + b"garbage")
+        with pytest.raises(ValueError, match="^2 trailing bytes after EOI$"):
+            parse_jpeg(p + b"\xff\xd9")
+        # a marker other than EOI after the last MCU
+        with pytest.raises(ValueError, match="^expected EOI after the last MCU, got 0xffd0$"):
+            parse_jpeg(p[:-2] + b"\xff\xd0\xff\xd9")

@@ -109,6 +109,78 @@ def test_corrupt_payloads_fail_loudly(spark, decoder, payload):
         decoder(df).collect()
 
 
+def _graded_mcv(docs: list[int]) -> list[bytes]:
+    import numpy as np
+
+    y, x = np.divmod(np.arange(mcv.MCV_H * mcv.MCV_W), mcv.MCV_W)
+    t = np.arange(mcv.MCV_FRAMES)[:, None]
+    src = ((y + mcv.MCV_VY * t) % mcv.MCV_H) * mcv.MCV_W + (x + mcv.MCV_VX * t) % mcv.MCV_W
+    d = np.array(docs)[:, None, None]
+    px = ((d % 256) * mm.PCM_A + src * mm.PCM_B) % 256
+    return mcv.encode_mcv_batch(px.reshape(len(docs), mcv.MCV_FRAMES, mcv.MCV_H, mcv.MCV_W))
+
+
+def _corrupt_mcv(payload: bytes) -> bytes:
+    b = bytearray(payload)
+    b[40] ^= 0x10  # inside frame 0: its CRC no longer matches
+    return bytes(b)
+
+
+def _corrupt_sps(stream: bytes) -> bytes:
+    b = bytearray(stream)
+    b[5] = 77  # SPS profile_idc (after the start code and NAL header)
+    return bytes(b)
+
+
+def _mcv_row(docs):
+    payloads = _graded_mcv(docs)
+    return payloads, mcv.parse_mcv, _corrupt_mcv(payloads[1])
+
+
+def _annexb_row(corrupt_stream, parse):
+    def rows(docs):
+        streams = [annexb.wrap_annexb(d, p) for d, p in zip(docs, _graded_mcv(docs))]
+        return streams, parse, corrupt_stream(streams[1])
+
+    return rows
+
+
+@pytest.mark.parametrize(
+    "decoder,rows",
+    [
+        (mcv.decode_mcv_features, _mcv_row),
+        (annexb.decode_annexb_features, _annexb_row(_corrupt_sps, annexb.parse_annexb)),
+        # a slice whose MCV1 frame fails its CRC: parse_annexb accepts
+        # the stream, parse_mcv rejects the rebuilt container
+        (
+            annexb.decode_annexb_features,
+            _annexb_row(
+                lambda s: s[:-2] + bytes([s[-2] ^ 0x01]) + s[-1:],  # last CRC
+                lambda s: mcv.parse_mcv(annexb.rebuild_mcv(*annexb.parse_annexb(s)[1:])),
+            ),
+        ),
+    ],
+    ids=["mcv", "annexb_sps", "annexb_slice_crc"],
+)
+def test_batch_decoders_fail_with_the_corrupt_rows_message(spark, decoder, rows):
+    """A batch of (valid, corrupt, valid) fails the job with the corrupt
+    row's own parse_mcv / parse_annexb message, not just a ValueError."""
+    import re
+
+    docs = [11, 12, 13]
+    payloads, parse, corrupt = rows(docs)
+    for p in (payloads[0], payloads[2]):
+        parse(p)
+    with pytest.raises(ValueError) as want:
+        parse(corrupt)
+    df = spark.createDataFrame(
+        [(d, bytearray(p)) for d, p in zip(docs, [payloads[0], corrupt, payloads[2]])],
+        "doc_id bigint, payload binary",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ValueError: " + re.escape(str(want.value))):
+        decoder(df).collect()
+
+
 _PAYLOAD_IN = "doc_id bigint, payload binary"
 _SAMPLES_IN = "doc_id bigint, samples array<int>"
 _PX_IN = "doc_id bigint, px array<int>"
