@@ -40,11 +40,15 @@ from ITU-T H.264 §7.3.1/§7.4.1 + Annex B:
    (`plans/multimodal_queries.py:_annexb_oracle`), so the inserted
    0x03 count and the total container size are graded byte-for-byte.
 
-Decode path: scan start codes -> strip emulation -> parse SPS/PPS/SEI
--> reassemble the MCV1 container from the parsed geometry + slice
-RBSPs -> `mcv.parse_mcv`/`decode` (every frame CRC still checked) ->
-per-frame reconstruction features. Parity therefore proves the whole
-wrap -> escape -> scan -> unescape -> parse -> decode chain.
+Decode path: per document, scan start codes -> strip emulation ->
+parse SPS/PPS/SEI -> reassemble the MCV1 container from the parsed
+geometry + slice RBSPs; then per Arrow batch, `mcv.mcv_features_batch`
+decodes all the rebuilt containers at once (every frame CRC still
+checked; `mcv.parse_mcv` raises for a container the batch walk does
+not accept) -> per-frame reconstruction features. Wrapping walks the
+batch's MCV1 containers the same way (`mcv.mcv_frame_spans_batch`).
+Parity therefore proves the whole wrap -> escape -> scan -> unescape
+-> parse -> decode chain.
 
 Scale notes (100 TB): identical plan shape to the MCV row — synth,
 encode, wrap and decode fused into one Arrow-batched ``mapInPandas``,

@@ -52,9 +52,12 @@ and fails on trailing bytes.
 
 Scale notes (100 TB): synth, encode and decode run back to back in
 one Arrow-batched ``mapInPandas`` (the stages fuse, see
-``multimodal._map_batches``), so the frames never cross the JVM, and
-``encode_mcv_batch`` encodes a whole batch of documents per call;
-map-only, zero data-bearing shuffles beyond the narrow-key spread.
+``multimodal._map_batches``), so the frames never cross the JVM;
+``encode_mcv_batch`` encodes and ``mcv_features_batch`` decodes a
+whole batch of documents per call (the decode walks every document's
+syntax in lockstep, ``_walk_batch``, and ``parse_mcv`` is only the
+per-document error path); map-only, zero data-bearing shuffles beyond
+the narrow-key spread.
 Prediction chains frames WITHIN a payload — the defining cost of
 inter coding (same seam as `operators/animgif.py`) — while payloads
 stay independent rows; I-frames are the random-access points a real
@@ -479,7 +482,9 @@ def _walk_batch(payloads: list[bytes]):
     q = np.where(zero[ok][..., None], 0, v[..., 2:])
     ref = _ORIGINS + mvs  # each reference block's top-left corner
     fits = (
-        (ref >= 0) & (ref <= (MCV_H - 8, MCV_W - 8)) & (abs(mvs) <= MCV_SEARCH)
+        (ref >= 0)
+        & (ref <= (MCV_H - 8, MCV_W - 8))
+        & (np.abs(mvs) <= MCV_SEARCH)
     ).all(axis=(1, 2, 3))
     s, e = starts[ok] >> 3, crc_at[ok] >> 3
     crc_ok = crc8_many(buf, s.ravel(), e.ravel()) == buf[e.ravel()]

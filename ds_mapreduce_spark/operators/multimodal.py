@@ -221,7 +221,10 @@ def synth_map_arrays(df: DataFrame, schema: str, build) -> DataFrame:
     returns ``{col: per-doc values}`` for every output column but
     ``doc_id``, which passes through. The synth stages take ``doc_id``
     alone and render payloads in numpy; ``mcv.encode_mcv`` takes
-    ``(doc_id, frames)`` and encodes the whole batch at once.
+    ``(doc_id, frames)`` and encodes the whole batch at once. ``build``
+    may also return its own ``doc_id`` column, which replaces the input
+    one: an explode (``mcv.decode_mcv_features`` returns one row per
+    frame, each with its document's id).
 
     Every synth in the codec family is a linear-congruential closed
     form over (doc_id, element index) — pure integer arithmetic that

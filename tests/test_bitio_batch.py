@@ -683,8 +683,10 @@ def test_mcv_batch_decoder_matches_per_document_reference(monkeypatch) -> None:
     assert calls == []
 
     rng = np.random.default_rng(2025)
-    noise = encode_mcv_batch(rng.integers(0, 256, size=(24, MCV_FRAMES, MCV_H, MCV_W)))
-    still = encode_mcv_batch(np.stack([_scroll_frames(np.array([42]))[0, :1]] * MCV_FRAMES, axis=1))
+    shape = (24, MCV_FRAMES, MCV_H, MCV_W)
+    noise = encode_mcv_batch(rng.integers(0, 256, size=shape))
+    first = _scroll_frames(np.array([42]))[:, :1]
+    still = encode_mcv_batch(np.repeat(first, MCV_FRAMES, axis=1))
     for batch in (noise, still):
         assert _batch_features(batch) == [_ref_features(p) for p in batch]
     assert calls == []

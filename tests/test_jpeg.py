@@ -466,5 +466,7 @@ def test_missing_eoi_and_trailing_bytes_rejected():
         with pytest.raises(ValueError, match="^2 trailing bytes after EOI$"):
             parse_jpeg(p + b"\xff\xd9")
         # a marker other than EOI after the last MCU
-        with pytest.raises(ValueError, match="^expected EOI after the last MCU, got 0xffd0$"):
+        with pytest.raises(
+            ValueError, match="^expected EOI after the last MCU, got 0xffd0$"
+        ):
             parse_jpeg(p[:-2] + b"\xff\xd0\xff\xd9")

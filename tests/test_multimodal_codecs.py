@@ -109,15 +109,12 @@ def test_corrupt_payloads_fail_loudly(spark, decoder, payload):
         decoder(df).collect()
 
 
-def _graded_mcv(docs: list[int]) -> list[bytes]:
+def _mcv_payloads(docs: list[int]) -> list[bytes]:
     import numpy as np
 
-    y, x = np.divmod(np.arange(mcv.MCV_H * mcv.MCV_W), mcv.MCV_W)
-    t = np.arange(mcv.MCV_FRAMES)[:, None]
-    src = ((y + mcv.MCV_VY * t) % mcv.MCV_H) * mcv.MCV_W + (x + mcv.MCV_VX * t) % mcv.MCV_W
-    d = np.array(docs)[:, None, None]
-    px = ((d % 256) * mm.PCM_A + src * mm.PCM_B) % 256
-    return mcv.encode_mcv_batch(px.reshape(len(docs), mcv.MCV_FRAMES, mcv.MCV_H, mcv.MCV_W))
+    rng = np.random.default_rng(docs)
+    shape = (len(docs), mcv.MCV_FRAMES, mcv.MCV_H, mcv.MCV_W)
+    return mcv.encode_mcv_batch(rng.integers(0, 256, size=shape))
 
 
 def _corrupt_mcv(payload: bytes) -> bytes:
@@ -133,13 +130,13 @@ def _corrupt_sps(stream: bytes) -> bytes:
 
 
 def _mcv_row(docs):
-    payloads = _graded_mcv(docs)
+    payloads = _mcv_payloads(docs)
     return payloads, mcv.parse_mcv, _corrupt_mcv(payloads[1])
 
 
 def _annexb_row(corrupt_stream, parse):
     def rows(docs):
-        streams = [annexb.wrap_annexb(d, p) for d, p in zip(docs, _graded_mcv(docs))]
+        streams = [annexb.wrap_annexb(d, p) for d, p in zip(docs, _mcv_payloads(docs))]
         return streams, parse, corrupt_stream(streams[1])
 
     return rows
@@ -156,7 +153,9 @@ def _annexb_row(corrupt_stream, parse):
             annexb.decode_annexb_features,
             _annexb_row(
                 lambda s: s[:-2] + bytes([s[-2] ^ 0x01]) + s[-1:],  # last CRC
-                lambda s: mcv.parse_mcv(annexb.rebuild_mcv(*annexb.parse_annexb(s)[1:])),
+                lambda s: mcv.parse_mcv(
+                    annexb.rebuild_mcv(*annexb.parse_annexb(s)[1:])
+                ),
             ),
         ),
     ],
