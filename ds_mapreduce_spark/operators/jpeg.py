@@ -436,27 +436,36 @@ def _scan_segments(payload: bytes, pos: int) -> tuple[list[tuple[bytes, int]], i
     ``annexb.ebsp_unescape`` is for NAL units): split it at its markers
     and undo the 0xFF00 stuffing. -> ([(segment bytes, end)], tail),
     where ``end`` is the code of the marker that closes the segment, -1
-    for the end of the payload, or -2 for a lone trailing 0xFF, and
+    for the end of the payload, or -2 for trailing 0xFF bytes, and
     ``tail`` is the offset just past the last segment's closing marker.
-    Splitting stops at the first marker that is not RSTn (normally
-    EOI): no segment after it can be decoded."""
+    A marker may be preceded by any number of 0xFF fill bytes (T.81
+    §B.1.1.2); they belong to neither segment. Splitting stops at the
+    first marker that is not RSTn (normally EOI): no segment after it
+    can be decoded."""
     segs = []
     n = len(payload)
     start = j = pos
     while True:
         i = payload.find(b"\xff", j)
-        if i < 0 or i + 1 == n:
-            data = payload[start : n if i < 0 else i]
-            segs.append((data.replace(b"\xff\x00", b"\xff"), -1 if i < 0 else -2))
+        if i < 0:
+            segs.append((payload[start:].replace(b"\xff\x00", b"\xff"), -1))
             return segs, n
-        marker = payload[i + 1]
+        k = i + 1
+        while k < n and payload[k] == 0xFF:  # fill bytes
+            k += 1
+        if k == n:
+            segs.append((payload[start:i].replace(b"\xff\x00", b"\xff"), -2))
+            return segs, n
+        marker = payload[k]
         if marker == 0x00:  # stuffed data byte
-            j = i + 2
+            if k > i + 1:
+                raise ValueError("0xFF fill bytes before a stuffed zero in scan")
+            j = k + 1
             continue
         segs.append((payload[start:i].replace(b"\xff\x00", b"\xff"), marker))
         if not 0xD0 <= marker <= 0xD7:
-            return segs, i + 2
-        start = j = i + 2
+            return segs, k + 1
+        start = j = k + 1
 
 
 class _HuffReader:

@@ -12,12 +12,23 @@ Scale notes (100 TB): ``spark.read.parquet`` on a 100 TB table gives
 columnar scans with predicate pushdown + column pruning; the catalog
 here never collects, caches, or repartitions at read time, so partition
 pruning and AQE stay fully in play downstream.
+
+Schema reuse: a Parquet read without a schema makes Spark launch one
+job to read a footer (``ParquetUtils.inferSchema``): driver latency on
+every read of a query's input, though the files rarely change between
+reads. ``read_parquet`` infers a path's schema once and passes it to
+later reads of the same path for as long as the path's file listing
+(path, length and modification time of every file under it) and the
+confs inference reads are unchanged; any change infers again. An empty
+or missing path goes straight to Spark, which raises its own error.
+Read Parquet inputs through ``load_table``/``read_parquet``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: the driver-generated star schema + LLM-pipeline tables (TESTDATA.md)
 TABLES = (
@@ -32,6 +43,70 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+#: the confs Parquet schema inference reads: a change of any of them can
+#: change the inferred schema of unchanged files
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+#: (path, inference conf values) -> (file listing, inferred schema); the
+#: benchmark's client threads at worst infer the same path twice
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``, so any scheme (local,
+    HDFS, S3A) works."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _listing(spark: SparkSession, path: str) -> tuple:
+    """Sorted (path, length, modification time) of every file under
+    ``path``, recursively (of ``path`` itself if it is a file); empty if
+    it cannot be listed."""
+    fs, p = fs_path(spark, path)
+    try:
+        files = fs.listFiles(p, True)
+    except Exception:  # missing or unreadable: Spark reports it
+        return ()
+    out = []
+    while files.hasNext():
+        st = files.next()
+        out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when this
+    process has not inferred it for the same files and confs.
+
+    Inference costs one Spark job per read (it reads a footer); a hit
+    reads with ``spark.read.schema(cached)`` and launches none. The cache
+    key is the path and the values of the confs inference reads
+    (``_INFERENCE_CONFS``); a hit also needs the path's file listing
+    (path, length and modification time of every file under it) to equal
+    the one taken before the cached inference. Any new, removed,
+    resized or touched file, or a changed conf, infers again. An empty
+    or missing path goes straight to Spark, so its error is unchanged.
+    """
+    key = (path, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    listing = _listing(spark, path)
+    if not listing:
+        return spark.read.parquet(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == listing:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (listing, df.schema)
+    return df
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -79,15 +154,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
       Downstream code may therefore assume ``ts`` is always LTZ
       TIMESTAMP in UTC, whatever the driver regenerates next round.
+
+    The scan goes through ``read_parquet``: a table whose files did not
+    change since this process last read it launches no schema job.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        return normalize_events_ts(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_events_ts(read_parquet(spark, path))
+    return read_parquet(spark, path)
 
 
 def read_text_corpus(spark: SparkSession, path: str, wholetext: bool = False) -> DataFrame:

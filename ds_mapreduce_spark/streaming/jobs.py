@@ -39,6 +39,9 @@ owns one contract for all of them:
 - **Logs.** A twin whose answer is a per-batch log returns the union
   of the log versions <= the last batch that fired (versions a
   previous run left above it are stale), else of all landed ones.
+- **Schemas.** State reads of versions this run wrote reuse the
+  schema of the DataFrame written there, so they launch no schema
+  inference job; versions an earlier run left are read with inference.
 """
 
 from __future__ import annotations
@@ -47,16 +50,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ds_mapreduce_spark.functions.temporal import epoch_sec, epoch_us
-from ds_mapreduce_spark.sources.catalog import normalize_events_ts
-
-
-def _fs_path(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path) for ``path``, so any scheme (local,
-    HDFS, S3A) works."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+from ds_mapreduce_spark.sources.catalog import fs_path, normalize_events_ts, read_parquet
 
 
 def existing_state_versions(
@@ -68,7 +65,7 @@ def existing_state_versions(
     and an availableNow RESUME whose checkpoint says nothing is new —
     in the second case the right answer is the state already on disk,
     not a crash on ``v-1`` (ADVICE r6)."""
-    fs, path = _fs_path(spark, state_dir)
+    fs, path = fs_path(spark, state_dir)
     if not fs.exists(path):
         return []
     out = []
@@ -93,7 +90,8 @@ def _feed(
     options: dict | None = None,
 ) -> DataFrame:
     """The stream a twin reads: parquet under ``path`` with the schema
-    inferred from it (unless given), or text lines (``text``).
+    inferred from it (unless given; ``read_parquet`` infers it once per
+    unchanged listing), or text lines (``text``).
     ``per_file`` makes each file one micro-batch; ``events`` reads the
     events table (``ts`` as INT64 nanos is read as long, then
     normalized to a UTC timestamp). A file ``path`` is read as its
@@ -107,13 +105,13 @@ def _feed(
     reader = spark.readStream
     if not text:
         reader = reader.schema(
-            schema if schema is not None else spark.read.parquet(path).schema
+            schema if schema is not None else read_parquet(spark, path).schema
         )
     if per_file:
         reader = reader.option("maxFilesPerTrigger", "1")
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
-    fs, p = _fs_path(spark, path)
+    fs, p = fs_path(spark, path)
     if fs.isFile(p):
         path, _, name = path.rpartition("/")
         reader = reader.option("pathGlobFilter", name)
@@ -139,19 +137,23 @@ class _Version:
     """One micro-batch's handle on the versioned state: ``prev`` reads
     version n-1 (absent when ``first``: batch 0 of an unseeded state),
     ``put`` writes version n, ``get`` reads back what ``put`` wrote.
-    ``table`` names a table or log as in the module docstring."""
+    ``table`` names a table or log as in the module docstring; ``read``
+    and ``write`` are the run's state reader and writer."""
 
-    def __init__(self, batch: DataFrame, at: Callable, n: int, first: bool):
+    def __init__(
+        self, batch: DataFrame, at: Callable, n: int, first: bool, read: Callable, write: Callable
+    ):
         self.sess, self.at, self.n, self.first = batch.sparkSession, at, n, first
+        self._read, self._write = read, write
 
     def prev(self, table: str | None = None) -> DataFrame:
-        return self.sess.read.parquet(self.at(self.n - 1, table))
+        return self._read(self.sess, self.at(self.n - 1, table))
 
     def put(self, df: DataFrame, table: str | None = None) -> None:
-        df.write.mode("overwrite").parquet(self.at(self.n, table))
+        self._write(df, self.at(self.n, table))
 
     def get(self, table: str | None = None) -> DataFrame:
-        return self.sess.read.parquet(self.at(self.n, table))
+        return self._read(self.sess, self.at(self.n, table))
 
 
 def _run_versioned(
@@ -187,14 +189,29 @@ def _run_versioned(
         versions = existing_state_versions(spark, state_dir, series(table))
         return [n for n in versions if n >= 0]
 
+    written: dict[str, StructType] = {}  # path -> schema this run wrote there
+
+    def write(df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").parquet(path)
+        written[path] = df.schema
+
+    def read(sess: SparkSession, *paths: str) -> DataFrame:
+        """The state at ``paths``: read with the schema this run wrote
+        there if it wrote every one of them (with one schema), else with
+        the schema inferred."""
+        schema = written.get(paths[0])
+        if schema is not None and all(written.get(p) == schema for p in paths):
+            return sess.read.schema(schema).parquet(*paths)
+        return sess.read.parquet(*paths)
+
     if seed is not None:
         for table, df in (seed if isinstance(seed, dict) else {None: seed}).items():
-            df.write.mode("overwrite").parquet(at(-1, table))
+            write(df, at(-1, table))
     fired = -1
 
     def sink(batch: DataFrame, n: int) -> None:
         nonlocal fired
-        step(batch, _Version(batch, at, n, first=n == 0 and seed is None))
+        step(batch, _Version(batch, at, n, n == 0 and seed is None, read, write))
         fired = max(fired, n)
 
     (
@@ -208,11 +225,11 @@ def _run_versioned(
     if log is not None:
         versions = [n for n in landed(log) if fired < 0 or n <= fired]
         if versions:
-            return present(spark.read.parquet(*[at(n, log) for n in versions]))
+            return present(read(spark, *[at(n, log) for n in versions]))
     else:
         final = fired if fired >= 0 else max(landed(tables[0]), default=None)
         if final is not None:
-            return present(*[spark.read.parquet(at(final, t)) for t in tables])
+            return present(*[read(spark, at(final, t)) for t in tables])
     if isinstance(empty, str):
         return spark.createDataFrame([], empty)
     return empty(spark.createDataFrame([], stream.schema))

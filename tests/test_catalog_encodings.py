@@ -5,17 +5,22 @@ INT64-nanos to timestamp[us] (TIMESTAMP_NTZ under Spark 4), silently breaking
 every ``unix_micros(ts)`` call site. This test writes tiny events parquets in
 BOTH encodings and asserts ``load_table`` yields the same LTZ timestamps for
 each — so the next encoding change fails here, loudly, not in the driver gate.
+
+It also pins ``read_parquet``'s schema cache (every ``load_table`` goes
+through it): a repeat read of unchanged files launches no job, and a
+changed file listing or inference conf infers again.
 """
 
 from __future__ import annotations
 
 import datetime
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from ds_mapreduce_spark.sources.catalog import load_table
+from ds_mapreduce_spark.sources.catalog import load_table, read_parquet
 
 # three instants, microsecond precision, spanning a day boundary
 _INSTANTS_US = [
@@ -79,3 +84,117 @@ def test_real_testdata_events_ts_is_ltz(spark, sf_dir):
     from pyspark.sql import functions as F
 
     assert df.select(F.unix_micros("ts")).limit(1).count() == 1
+
+
+_ENCODINGS = {
+    "int64_nanos": pa.array([us * 1000 for us in _INSTANTS_US], type=pa.int64()),
+    "timestamp_us_ntz": pa.array(_INSTANTS_US, type=pa.timestamp("us")),
+    "timestamp_us_utc": pa.array(_INSTANTS_US, type=pa.timestamp("us", tz="UTC")),
+}
+
+
+def _epoch_us(df) -> list[int]:
+    from pyspark.sql import functions as F
+
+    return [r[0] for r in df.select(F.unix_micros("ts")).orderBy("ts").collect()]
+
+
+def test_repeat_load_table_launches_no_job(spark, tmp_path, jobs_launched):
+    sf_dir = _write_events(str(tmp_path), _ENCODINGS["timestamp_us_ntz"])
+    first, inferred = jobs_launched(lambda: load_table(spark, sf_dir, "events"))
+    assert inferred >= 1, "the first read of a new path infers its schema"
+    again, jobs = jobs_launched(lambda: load_table(spark, sf_dir, "events"))
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert _epoch_us(again) == sorted(_INSTANTS_US)
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path, jobs_launched):
+    """The same ``events.parquet`` path rewritten in each encoding: the
+    cache must see the new listing and infer again, or a stale schema
+    would read the new file's ``ts`` wrongly."""
+    path = str(tmp_path / "events.parquet")
+    for k, (encoding, ts_array) in enumerate(_ENCODINGS.items()):
+        _write_events(str(tmp_path), ts_array)
+        # a distinct mtime whatever the file system's timestamp resolution
+        os.utime(path, (1_600_000_000 + k, 1_600_000_000 + k))
+        df, jobs = jobs_launched(lambda: load_table(spark, str(tmp_path), "events"))
+        assert jobs >= 1, encoding
+        assert dict(df.dtypes)["ts"] == "timestamp", encoding
+        assert _epoch_us(df) == sorted(_INSTANTS_US), encoding
+
+
+def test_inference_conf_change_infers_again(spark, tmp_path, jobs_launched):
+    """nanosAsLong changes what an unchanged TIMESTAMP(NANOS) file
+    infers to (off, Spark 4 cannot read the type at all): a flip must
+    not be served the schema inferred under the other value."""
+    path = str(tmp_path / "ts_ns.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([us * 1000 for us in _INSTANTS_US], type=pa.timestamp("ns"))}),
+        path,
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "true")
+        df, jobs = jobs_launched(lambda: read_parquet(spark, path))
+        assert jobs >= 1 and dict(df.dtypes)["ts"] == "bigint"
+        assert jobs_launched(lambda: read_parquet(spark, path))[1] == 0
+        spark.conf.set(key, "false")
+        with pytest.raises(Exception, match=r"TIMESTAMP\(NANOS"):
+            read_parquet(spark, path)
+        spark.conf.set(key, "true")
+        df, jobs = jobs_launched(lambda: read_parquet(spark, path))
+        assert jobs == 0 and dict(df.dtypes)["ts"] == "bigint"
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+@pytest.mark.parametrize("kind", ["empty_dir", "missing"])
+def test_unreadable_path_raises_sparks_own_error(spark, tmp_path, kind):
+    path = tmp_path / "t.parquet"
+    if kind == "empty_dir":
+        path.mkdir()
+    with pytest.raises(Exception) as spark_err:
+        spark.read.parquet(str(path)).schema
+    with pytest.raises(type(spark_err.value)) as ours:
+        read_parquet(spark, str(path))
+    assert str(ours.value) == str(spark_err.value)
+
+
+def test_parquet_schema_inference_lives_in_read_parquet() -> None:
+    """Layering: in ``sources/`` and ``streaming/``, a schema-less
+    ``<session>.read.parquet(...)`` (one schema-inference job per call)
+    appears only in ``catalog.read_parquet`` and in ``_run_versioned``'s
+    state reader, which fall back to it on a path they cannot vouch for.
+    Every other read goes through ``read_parquet`` or passes a schema."""
+    import ast
+    from pathlib import Path
+
+    import ds_mapreduce_spark
+
+    pkg = Path(ds_mapreduce_spark.__file__).parent
+    allowed = {("catalog.py", "read_parquet"), ("jobs.py", "_run_versioned.read")}
+    found = set()
+
+    def walk(node, path: Path, scope: tuple) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            scope = (*scope, node.name)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "read"
+        ):
+            found.add((path.name, ".".join(scope)))
+        for child in ast.iter_child_nodes(node):
+            walk(child, path, scope)
+
+    for layer in ("sources", "streaming"):
+        for path in sorted((pkg / layer).glob("*.py")):
+            walk(ast.parse(path.read_text()), path, ())
+    assert found == allowed, f"schema-inferring reads outside read_parquet: {found - allowed}"

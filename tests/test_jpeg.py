@@ -470,3 +470,29 @@ def test_missing_eoi_and_trailing_bytes_rejected():
             ValueError, match="^expected EOI after the last MCU, got 0xffd0$"
         ):
             parse_jpeg(p[:-2] + b"\xff\xd0\xff\xd9")
+
+
+def test_fill_bytes_before_a_marker_are_skipped():
+    """Any number of 0xFF fill bytes may precede a marker (T.81
+    §B.1.1.2): before EOI and before an RSTn they decode to the same
+    pixels as the clean payload, while 0xFF bytes that end the payload
+    (no marker code after them) still fail."""
+    px = bytes((7 * i) % 256 for i in range(16 * 8))
+    clean = encode_jpeg_bytes(px, 16, 8)
+    want = parse_jpeg(clean)
+    for fill in (b"\xff", b"\xff\xff\xff"):
+        assert parse_jpeg(clean[:-2] + fill + b"\xff\xd9") == want
+    p = encode_jpeg_bytes(px, 16, 8, restart_interval=1)
+    want_rst = parse_jpeg(p)
+    assert want_rst[:2] == want[:2]
+    rst0 = p.index(b"\xff\xd0")
+    for fill in (b"\xff", b"\xff\xff\xff"):
+        assert parse_jpeg(p[:rst0] + fill + p[rst0:]) == want_rst
+        assert parse_jpeg(p[:-2] + fill + b"\xff\xd9") == want_rst
+    for payload in (clean, p):
+        with pytest.raises(ValueError, match="^expected EOI after the last MCU"):
+            parse_jpeg(payload[:-2] + b"\xff")
+        with pytest.raises(ValueError, match="^expected EOI after the last MCU"):
+            parse_jpeg(payload[:-2] + b"\xff\xff")
+        with pytest.raises(ValueError, match="^1 trailing bytes after EOI$"):
+            parse_jpeg(payload + b"\xff")

@@ -1380,3 +1380,59 @@ def test_streaming_bpe_encode_empty_feed(spark, tmp_path):
     )
     assert out.count() == 0
     assert "saved_bp" in out.columns
+
+
+def test_versioned_state_reads_reuse_the_written_schema(
+    spark, sf_dir, tmp_path, monkeypatch, jobs_launched
+):
+    """``_run_versioned`` reads the state versions this run wrote with
+    the schema it wrote there: no state read launches a schema job, and
+    each reads the schema inference gives the same path(s). One twin per
+    layout: one-table states (heavy hitters, MV maintenance), a
+    multi-table state (CMS), and a seeded state with a per-batch log
+    read back by ``get`` and unioned at the end (ingest manifest). As a
+    control, every state read is repeated with inference on the same
+    thread, which must launch a job."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    from ds_mapreduce_spark.streaming import jobs as J
+
+    feeds = {}
+    for table in ("events", "orders", "documents"):
+        feeds[table] = str(tmp_path / f"{table}_feed")
+        load_table(spark, sf_dir, table).repartition(3).write.parquet(feeds[table])
+    states = str(tmp_path / "states")
+    parquet_read, parquet_write = DataFrameReader.parquet, DataFrameWriter.parquet
+    reads, writes = [], {}
+
+    def read(self, *paths, **options):
+        if not paths[0].startswith(states):
+            return parquet_read(self, *paths, **options)
+        df, jobs = jobs_launched(lambda: parquet_read(self, *paths, **options))
+        ref, ref_jobs = jobs_launched(lambda: parquet_read(self._spark.read, *paths))
+        reads.append((paths, jobs, ref_jobs, df.schema == ref.schema))
+        return df
+
+    def write(self, path, *args, **kwargs):
+        parquet_write(self, path, *args, **kwargs)
+        if path.startswith(states):
+            writes[path] = self._df.schema
+
+    monkeypatch.setattr(DataFrameReader, "parquet", read)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    for name, run, feed in (
+        ("hh", J.run_streaming_heavy_hitters, "events"),
+        ("mv", J.run_streaming_mv_maintenance, "orders"),
+        ("cms", J.run_streaming_cms_sketch, "events"),
+        ("ingest", J.run_streaming_ingest_manifest, "documents"),
+    ):
+        reads.clear()
+        writes.clear()
+        run(spark, feeds[feed], f"{states}/{name}", str(tmp_path / f"{name}_c"))
+        assert len(reads) >= 3 and writes, name
+        assert [r[0] for r in reads if r[1]] == [], f"{name}: state reads that inferred"
+        assert all(r[2] >= 1 for r in reads), f"{name}: the inference control saw no job"
+        assert [r[0] for r in reads if not r[3]] == [], f"{name}: schema differs"
+        for path, schema in writes.items():
+            given = parquet_read(spark.read.schema(schema), path).schema
+            assert given == parquet_read(spark.read, path).schema, (name, path)
