@@ -26,6 +26,8 @@ Read Parquet inputs through ``load_table``/``read_parquet``.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -61,26 +63,38 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
 
 
+@functools.cache
+def _path_class(jvm):
+    """Hadoop's ``Path`` class (resolving it through the JVM view costs
+    a few py4j round trips per lookup)."""
+    return jvm.org.apache.hadoop.fs.Path
+
+
 def fs_path(spark: SparkSession, path: str):
     """(Hadoop FileSystem, Path) for ``path``, so any scheme (local,
     HDFS, S3A) works."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    p = _path_class(spark._jvm)(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def _listing(spark: SparkSession, path: str) -> tuple:
     """Sorted (path, length, modification time) of every file under
     ``path``, recursively (of ``path`` itself if it is a file); empty if
-    it cannot be listed."""
+    it cannot be listed. Walks ``listStatus`` rather than taking
+    ``listFiles(p, true)``: the located statuses of the latter also load
+    each file's permissions, 19 ms for one local file against 1 ms."""
     fs, p = fs_path(spark, path)
     try:
-        files = fs.listFiles(p, True)
+        todo = list(fs.listStatus(p))
     except Exception:  # missing or unreadable: Spark reports it
         return ()
     out = []
-    while files.hasNext():
-        st = files.next()
-        out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    while todo:
+        st = todo.pop()
+        if st.isDirectory():
+            todo.extend(fs.listStatus(st.getPath()))
+        else:
+            out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
     return tuple(sorted(out))
 
 

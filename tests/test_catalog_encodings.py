@@ -153,6 +153,25 @@ def test_inference_conf_change_infers_again(spark, tmp_path, jobs_launched):
             spark.conf.set(key, saved)
 
 
+def test_new_partition_is_inferred_again(spark, tmp_path, jobs_launched):
+    """A file added in a new partition directory changes the listing:
+    the new partition value's type is inferred again, not taken from
+    the cached schema."""
+    path = str(tmp_path / "parted")
+    spark.createDataFrame([(1, 1)], "x bigint, p int").write.partitionBy("p").parquet(path)
+    first = read_parquet(spark, path)
+    again, jobs = jobs_launched(lambda: read_parquet(spark, path))
+    assert jobs == 0 and again.schema == first.schema
+    assert dict(first.dtypes)["p"] == "int"
+    spark.createDataFrame([(2, "b")], "x bigint, p string").write.mode("append").partitionBy(
+        "p"
+    ).parquet(path)
+    df, jobs = jobs_launched(lambda: read_parquet(spark, path))
+    assert jobs >= 1
+    assert dict(df.dtypes)["p"] == "string"
+    assert sorted(r.p for r in df.collect()) == ["1", "b"]
+
+
 @pytest.mark.parametrize("kind", ["empty_dir", "missing"])
 def test_unreadable_path_raises_sparks_own_error(spark, tmp_path, kind):
     path = tmp_path / "t.parquet"
