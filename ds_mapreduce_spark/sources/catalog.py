@@ -58,8 +58,8 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.respectSummaryFiles",
 )
 
-#: (path, inference conf values) -> (file listing, inferred schema); the
-#: benchmark's client threads at worst infer the same path twice
+#: (path, inference conf values) -> (file listing, inferred schema); threads
+#: that read one new path at once at worst each infer it
 _SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
 
 
@@ -82,7 +82,8 @@ def _listing(spark: SparkSession, path: str) -> tuple:
     ``path``, recursively (of ``path`` itself if it is a file); empty if
     it cannot be listed. Walks ``listStatus`` rather than taking
     ``listFiles(p, true)``: the located statuses of the latter also load
-    each file's permissions, 19 ms for one local file against 1 ms."""
+    each file's permissions: 19 ms against 1 ms for one local file on a
+    4-vCPU VM."""
     fs, p = fs_path(spark, path)
     try:
         todo = list(fs.listStatus(p))
