@@ -1,11 +1,4 @@
-from ds_mapreduce_spark.sources.catalog import TABLES, load_table, read_parquet, read_text_corpus
+from ds_mapreduce_spark.sources.catalog import TABLES, load_table, read_text_corpus
 from ds_mapreduce_spark.sources.kv_text import read_kv_text, write_kv_text
 
-__all__ = [
-    "TABLES",
-    "load_table",
-    "read_parquet",
-    "read_text_corpus",
-    "read_kv_text",
-    "write_kv_text",
-]
+__all__ = ["TABLES", "load_table", "read_text_corpus", "read_kv_text", "write_kv_text"]

@@ -37,6 +37,14 @@ _BASE_COLS = {
 }
 
 
+#: every physical encoding events.ts has shipped in
+_ENCODINGS = {
+    "int64_nanos": pa.array([us * 1000 for us in _INSTANTS_US], type=pa.int64()),
+    "timestamp_us_ntz": pa.array(_INSTANTS_US, type=pa.timestamp("us")),
+    "timestamp_us_utc": pa.array(_INSTANTS_US, type=pa.timestamp("us", tz="UTC")),
+}
+
+
 def _write_events(tmpdir: str, ts_array: pa.Array) -> str:
     cols = dict(_BASE_COLS)
     cols["ts"] = ts_array
@@ -48,23 +56,7 @@ def _write_events(tmpdir: str, ts_array: pa.Array) -> str:
     return tmpdir
 
 
-@pytest.mark.parametrize(
-    "encoding,ts_array",
-    [
-        (
-            "int64_nanos",
-            pa.array([us * 1000 for us in _INSTANTS_US], type=pa.int64()),
-        ),
-        (
-            "timestamp_us_ntz",
-            pa.array(_INSTANTS_US, type=pa.timestamp("us")),
-        ),
-        (
-            "timestamp_us_utc",
-            pa.array(_INSTANTS_US, type=pa.timestamp("us", tz="UTC")),
-        ),
-    ],
-)
+@pytest.mark.parametrize("encoding,ts_array", list(_ENCODINGS.items()))
 def test_load_table_normalizes_ts_encoding(spark, tmp_path, encoding, ts_array):
     sf_dir = _write_events(str(tmp_path), ts_array)
     df = load_table(spark, sf_dir, "events")
@@ -84,13 +76,6 @@ def test_real_testdata_events_ts_is_ltz(spark, sf_dir):
     from pyspark.sql import functions as F
 
     assert df.select(F.unix_micros("ts")).limit(1).count() == 1
-
-
-_ENCODINGS = {
-    "int64_nanos": pa.array([us * 1000 for us in _INSTANTS_US], type=pa.int64()),
-    "timestamp_us_ntz": pa.array(_INSTANTS_US, type=pa.timestamp("us")),
-    "timestamp_us_utc": pa.array(_INSTANTS_US, type=pa.timestamp("us", tz="UTC")),
-}
 
 
 def _epoch_us(df) -> list[int]:
