@@ -14,7 +14,7 @@ here never collects, caches, or repartitions at read time, so partition
 pruning and AQE stay fully in play downstream.
 
 Schema reuse: a Parquet read without a schema makes Spark launch one
-job to read a footer (``ParquetUtils.inferSchema``): driver latency on
+job to read a footer (``ParquetUtils.inferSchema``): planning latency on
 every read of a query's input, though the files rarely change between
 reads. ``read_parquet`` infers a path's schema once and passes it to
 later reads of the same path for as long as the path's file listing

@@ -26,7 +26,7 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def jobs_launched(spark):
     """``jobs_launched(fn) -> (fn(), jobs)``: the Spark jobs ``fn``
-    launched on the calling thread (a driver thread or a
+    launched on the calling thread (a main Python thread or a
     ``foreachBatch`` callback). ``fn`` runs under a fresh job group and
     the thread's own group is restored after it. The status tracker
     learns of jobs from the listener bus, in order, so once a marker job
