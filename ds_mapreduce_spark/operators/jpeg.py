@@ -625,6 +625,9 @@ def parse_jpeg(payload: bytes):
     scan_comp = None
     restart_interval = 0
     while True:
+        # 0xFF fill bytes may precede any marker (T.81 §B.1.1.2)
+        while payload[pos : pos + 2] == b"\xff\xff":
+            pos += 1
         if pos + 4 > len(payload):
             raise ValueError("truncated marker stream")
         if payload[pos] != 0xFF:

@@ -23,30 +23,13 @@ The only shuffle in each graded plan is the final aggregation's.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ds_mapreduce_spark.plans.registry import register
-from ds_mapreduce_spark.sources.catalog import load_table, read_text_corpus
+from ds_mapreduce_spark.sources.catalog import landed, load_table, read_text_corpus
 from ds_mapreduce_spark.sources.kv_text import read_kv_text, write_kv_text
-
-#: (applicationId, tag, sf) → scratch path already written this session.
-#: Memoizing keeps schema-only consumers (driver contract probes call
-#: query fns just for .schema) from re-running the eager write job, and
-#: keying by applicationId keeps concurrent runs (pytest-xdist, driver +
-#: local test at the same sf) from racing on one predictable /tmp path.
-_WRITTEN: dict[tuple[str, str, str], str] = {}
-
-
-def _scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
-    """Per-session scratch path: namespaced by Spark applicationId (no
-    cross-run overwrite-vs-read race, not a predictable world-writable
-    path) and keyed by (query tag, sf basename) within the session."""
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    app = spark.sparkContext.applicationId
-    return os.path.join(tempfile.gettempdir(), "ds_mapreduce_spark", app, f"{tag}_{sf}")
 
 
 def _render_guard(*cols: str) -> Column:
@@ -95,9 +78,7 @@ GROUP BY lang, source
     "total.",
 )
 def q_kv_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir(spark, "kv_text_roundtrip", sf_dir)
-    key = (spark.sparkContext.applicationId, "kv_text_roundtrip", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         docs = load_table(spark, sf_dir, "documents")
         rendered = docs.select(
             F.col("doc_id").alias("key"),
@@ -108,8 +89,9 @@ def q_kv_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value"),
         )
         write_kv_text(rendered, out)
-        _WRITTEN[key] = out
-    back = read_kv_text(spark, out)
+        return out
+
+    back = read_kv_text(spark, landed(spark, sf_dir, "kv_text_roundtrip", write))
     parts = F.split("value", " ")
     parsed = back.select(
         parts.getItem(0).alias("lang"),
@@ -148,9 +130,7 @@ GROUP BY lang
     "aggregation's.",
 )
 def q_wholetext_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir(spark, "wholetext_file_stats", sf_dir)
-    key = (spark.sparkContext.applicationId, "wholetext_file_stats", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         docs = load_table(spark, sf_dir, "documents")
         rendered = docs.select(
             "lang",
@@ -164,10 +144,11 @@ def q_wholetext_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             rendered.repartition(F.col("lang"))
             .write.partitionBy("lang")
-            .mode("overwrite")
             .text(out)
         )
-        _WRITTEN[key] = out
+        return out
+
+    out = landed(spark, sf_dir, "wholetext_file_stats", write)
     back = read_text_corpus(spark, out, wholetext=True)
     lines = F.filter(F.split("value", "\n"), lambda x: x != "")
     per_file = back.select(
@@ -225,20 +206,18 @@ GROUP BY lang
     "aggregation shuffle in the graded plan.",
 )
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir(spark, "csv_roundtrip", sf_dir)
-    key = (spark.sparkContext.applicationId, "csv_roundtrip", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         docs = load_table(spark, sf_dir, "documents")
         (
             docs.select("doc_id", "text", "lang", "n_chars")
-            .write.mode("overwrite")
-            .option("header", True)
+            .write.option("header", True)
             .csv(out)
         )
-        _WRITTEN[key] = out
+        return out
+
     back = spark.read.schema(
         "doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT"
-    ).option("header", True).csv(out)
+    ).option("header", True).csv(landed(spark, sf_dir, "csv_roundtrip", write))
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -268,12 +247,12 @@ GROUP BY source
     "here, not the analytical store.",
 )
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir(spark, "jsonl_roundtrip", sf_dir)
-    key = (spark.sparkContext.applicationId, "jsonl_roundtrip", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         docs = load_table(spark, sf_dir, "documents")
-        docs.select("doc_id", "text", "source").write.mode("overwrite").json(out)
-        _WRITTEN[key] = out
+        docs.select("doc_id", "text", "source").write.json(out)
+        return out
+
+    out = landed(spark, sf_dir, "jsonl_roundtrip", write)
     back = spark.read.schema("doc_id BIGINT, text STRING, source STRING").json(out)
     return back.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -311,15 +290,12 @@ GROUP BY lang
     "pruning/pushdown — interchange, not the analytical store.",
 )
 def q_gzip_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir(spark, "gzip_jsonl_roundtrip", sf_dir)
-    key = (spark.sparkContext.applicationId, "gzip_jsonl_roundtrip", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         docs = load_table(spark, sf_dir, "documents")
         (
             docs.select("doc_id", "text", "lang")
             .repartition(8)  # gzip is unsplittable: file count IS the read parallelism
-            .write.mode("overwrite")
-            .option("compression", "gzip")
+            .write.option("compression", "gzip")
             .json(out)
         )
         parts = [
@@ -331,7 +307,9 @@ def q_gzip_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(out, parts[0]), "rb") as fh:
             if fh.read(2) != b"\x1f\x8b":
                 raise ValueError("part file lacks the gzip magic bytes")
-        _WRITTEN[key] = out
+        return out
+
+    out = landed(spark, sf_dir, "gzip_jsonl_roundtrip", write)
     back = spark.read.schema("doc_id BIGINT, text STRING, lang STRING").json(out)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -370,9 +348,8 @@ def q_bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     app = spark.sparkContext.applicationId.replace("-", "_")
     li_tbl = f"bkt_lineitem_{sf.replace('.', '_')}_{app}"
     o_tbl = f"bkt_orders_{sf.replace('.', '_')}_{app}"
-    key = (spark.sparkContext.applicationId, "bucketed_join", sf_dir)
-    if key not in _WRITTEN:
-        base = _scratch_dir(spark, "bucketed_join", sf_dir)
+
+    def write(base):
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount"
         )
@@ -391,7 +368,8 @@ def q_bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("path", os.path.join(base, "orders"))
             .saveAsTable(o_tbl)
         )
-        _WRITTEN[key] = base
+
+    landed(spark, sf_dir, "bucketed_join", write)
     li_b = spark.table(li_tbl)
     o_b = spark.table(o_tbl)
     disc = (F.lit(1) - F.col("l_discount").cast("decimal(4,2)")).cast("decimal(3,2)")
@@ -411,18 +389,16 @@ def _partitioned_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents written ONCE per session as lang-partitioned parquet;
     shared by the static (partitioned_write_prune) and dynamic
     (dynamic_partition_pruning) pruning queries."""
-    out = _scratch_dir(spark, "partitioned_write_prune", sf_dir)
-    key = (spark.sparkContext.applicationId, "partitioned_write_prune", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         docs = load_table(spark, sf_dir, "documents")
         (
             docs.select("doc_id", "text", "source", "n_chars", "lang")
-            .write.mode("overwrite")
-            .partitionBy("lang")
+            .write.partitionBy("lang")
             .parquet(out)
         )
-        _WRITTEN[key] = out
-    return spark.read.parquet(out)
+        return out
+
+    return spark.read.parquet(landed(spark, sf_dir, "partitioned_write_prune", write))
 
 
 @register(
@@ -501,10 +477,7 @@ GROUP BY d.lang, d.source
     "works wherever the partition key is joined to any filtered dim.",
 )
 def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    back = _partitioned_docs(spark, sf_dir)
-    dim_path = _scratch_dir(spark, "lang_dim", sf_dir)
-    key = (spark.sparkContext.applicationId, "lang_dim", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         docs = load_table(spark, sf_dir, "documents")
         (
             docs.select("lang")
@@ -513,11 +486,14 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "script",
                 F.when(F.col("lang") == "zh", "cjk").otherwise("latin"),
             )
-            .write.mode("overwrite")
-            .parquet(dim_path)
+            .write.parquet(out)
         )
-        _WRITTEN[key] = dim_path
-    dim = spark.read.parquet(dim_path).filter(F.col("script") == "cjk")
+        return out
+
+    back = _partitioned_docs(spark, sf_dir)
+    dim = spark.read.parquet(landed(spark, sf_dir, "lang_dim", write)).filter(
+        F.col("script") == "cjk"
+    )
     return (
         back.join(dim, "lang")
         .groupBy("lang", "source")
@@ -556,22 +532,23 @@ GROUP BY lang
     "output splits from runtime statistics.",
 )
 def q_compaction_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    frag = _scratch_dir(spark, "compaction_frag", sf_dir)
-    compacted = _scratch_dir(spark, "compaction_out", sf_dir)
-    key = (spark.sparkContext.applicationId, "compaction_rebalance", sf_dir)
-    if key not in _WRITTEN:
+    def fragment(out):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "n_chars"
         )
-        docs.repartition(64).write.mode("overwrite").parquet(frag)
+        docs.repartition(64).write.parquet(out)
+        return out
+
+    def compact(out):
+        frag = landed(spark, sf_dir, "compaction_frag", fragment)
         (
             spark.read.parquet(frag)
             .hint("rebalance")
-            .write.mode("overwrite")
-            .parquet(compacted)
+            .write.parquet(out)
         )
-        _WRITTEN[key] = compacted
-    back = spark.read.parquet(compacted)
+        return out
+
+    back = spark.read.parquet(landed(spark, sf_dir, "compaction_out", compact))
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("doc_id").cast("bigint").alias("id_checksum"),
@@ -605,9 +582,13 @@ def zorder_write(spark: SparkSession, sf_dir: str) -> str:
     RECTANGLE of the key space and parquet min/max stats prune on BOTH
     columns (a single-column sort clusters only one).
     tests/test_zorder.py pins the clustering quality."""
-    out = _scratch_dir(spark, "zorder_lineitem", sf_dir)
-    key = (spark.sparkContext.applicationId, "zorder_lineitem", sf_dir)
-    if key not in _WRITTEN:
+    def norm(c, lo, hi):
+        return F.expr(
+            f"CAST((({c} - {lo}) * {(1 << 10) - 1}) DIV "
+            f"greatest({hi} - {lo}, 1) AS BIGINT)"
+        )
+
+    def write(out):
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_returnflag"
         )
@@ -617,12 +598,6 @@ def zorder_write(spark: SparkSession, sf_dir: str) -> str:
             F.min("l_partkey").alias("__ymin"),
             F.max("l_partkey").alias("__ymax"),
         )
-        def norm(c, lo, hi):
-            return F.expr(
-                f"CAST((({c} - {lo}) * {(1 << 10) - 1}) DIV "
-                f"greatest({hi} - {lo}, 1) AS BIGINT)"
-            )
-
         mz = _morton(
             norm("l_orderkey", "__xmin", "__xmax"),
             norm("l_partkey", "__ymin", "__ymax"),
@@ -633,11 +608,11 @@ def zorder_write(spark: SparkSession, sf_dir: str) -> str:
             .repartitionByRange(8, F.col("__z"))
             .sortWithinPartitions("__z")
             .drop("__z", "__xmin", "__xmax", "__ymin", "__ymax")
-            .write.mode("overwrite")
-            .parquet(out)
+            .write.parquet(out)
         )
-        _WRITTEN[key] = out
-    return out
+        return out
+
+    return landed(spark, sf_dir, "zorder_lineitem", write)
 
 
 @register(
@@ -770,17 +745,14 @@ GROUP BY lang
     "columns; explicit schema on re-read, no inference pass.",
 )
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir(spark, "orc_roundtrip", sf_dir)
-    key = (spark.sparkContext.applicationId, "orc_roundtrip", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         docs = load_table(spark, sf_dir, "documents")
-        docs.select("doc_id", "text", "lang", "n_chars").write.mode(
-            "overwrite"
-        ).orc(out)
-        _WRITTEN[key] = out
+        docs.select("doc_id", "text", "lang", "n_chars").write.orc(out)
+        return out
+
     back = spark.read.schema(
         "doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT"
-    ).orc(out)
+    ).orc(landed(spark, sf_dir, "orc_roundtrip", write))
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
@@ -814,9 +786,7 @@ GROUP BY 1
     "additive evolution is free and destructive evolution is not.",
 )
 def q_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _scratch_dir(spark, "schema_evolution", sf_dir)
-    key = (spark.sparkContext.applicationId, "schema_evolution", sf_dir)
-    if key not in _WRITTEN:
+    def write(out):
         orders = load_table(spark, sf_dir, "orders")
         gen1 = orders.where(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
@@ -824,9 +794,11 @@ def q_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen2 = orders.where(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
-        gen1.write.mode("overwrite").parquet(f"{out}/gen=1")
-        gen2.write.mode("overwrite").parquet(f"{out}/gen=2")
-        _WRITTEN[key] = out
+        gen1.write.parquet(f"{out}/gen=1")
+        gen2.write.parquet(f"{out}/gen=2")
+        return out
+
+    out = landed(spark, sf_dir, "schema_evolution", write)
     merged = spark.read.option("mergeSchema", True).parquet(
         f"{out}/gen=1", f"{out}/gen=2"
     )

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ds_mapreduce_spark.functions.temporal import epoch_day, epoch_sec, epoch_us, idiv_floor
 from ds_mapreduce_spark.plans.registry import register
-from ds_mapreduce_spark.sources.catalog import load_table
+from ds_mapreduce_spark.sources.catalog import landed, load_table
 from ds_mapreduce_spark.operators.sketch import (
     qsketch_bucket_sql_duckdb,
     qsketch_decode_sql_duckdb,
@@ -1809,66 +1809,43 @@ def q_quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf basename, store name) -> (store path, d_lo,
-#: d_hi): a day-partitioned sketch store written ONCE per session (the
-#: format_queries _WRITTEN memo pattern — schema-only consumers don't
-#: re-run the write job; applicationId keying avoids cross-run races on
-#: a predictable /tmp path), plus the middle-third day bounds derived
-#: from the store's partition metadata. Bounds are literals by the time
-#: the graded query plans, so the day filter prunes STATICALLY.
-_DAY_STORES: dict[tuple[str, str, str], tuple[str, int, int]] = {}
-
-
 def _landed_day_store(
     spark: SparkSession,
     sf_dir: str,
     name: str,
     build: "Callable[[DataFrame], DataFrame]",
 ) -> tuple[str, int, int]:
-    """Memoized day-partitioned landed store: ``build(events)`` must
-    emit a ``day`` column; the result lands as day-partitioned parquet
-    under /tmp exactly once per (session, sf). A memo hit re-checks the
-    store's ``_SUCCESS`` marker and rebuilds if a /tmp wipe took the
-    directory (VERDICT r13 #4 — the r13 scale-tier session hit exactly
-    that mid-session wipe, and a stale memo turns the next range read
-    into an AnalysisException on a missing path)."""
-    import os
-    import tempfile
+    """A day-partitioned sketch store landed once per session through
+    ``catalog.landed``: ``build(events)`` must emit a ``day`` column.
+    -> (store path, d_lo, d_hi), the middle-third day bounds derived
+    from the store's partition metadata while it lands. Bounds are
+    literals by the time the graded query plans, so the day filter
+    prunes STATICALLY."""
 
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    app = spark.sparkContext.applicationId
-    key = (app, sf, name)
-    if key in _DAY_STORES:
-        path = _DAY_STORES[key][0]
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            return _DAY_STORES[key]
-        del _DAY_STORES[key]
-    out = os.path.join(
-        tempfile.gettempdir(), "ds_mapreduce_spark", app, f"{name}_{sf}"
-    )
-    ev = load_table(spark, sf_dir, "events")
-    # ONE events scan: the write is the only action that touches the
-    # fact table. repartition("day") puts each day wholly in one
-    # task so partitionBy("day") emits one file per day directory.
-    (
-        build(ev)
-        .repartition("day")
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(out)
-    )
-    # Middle-third contiguous day range [dmin + span/3, dmin + 2*span/3]:
-    # min/max of a partition column resolve from directory metadata —
-    # no data files are opened, and the fact table is not re-read.
-    row = (
-        spark.read.parquet(out)
-        .agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-        .first()
-    )
-    dmin, dmax = int(row["dmin"]), int(row["dmax"])
-    span = dmax - dmin
-    _DAY_STORES[key] = (out, dmin + span // 3, dmin + 2 * span // 3)
-    return _DAY_STORES[key]
+    def write(out):
+        ev = load_table(spark, sf_dir, "events")
+        # ONE events scan: the write is the only action that touches the
+        # fact table. repartition("day") puts each day wholly in one
+        # task so partitionBy("day") emits one file per day directory.
+        (
+            build(ev)
+            .repartition("day")
+            .write.partitionBy("day")
+            .parquet(out)
+        )
+        # Middle-third contiguous day range [dmin + span/3, dmin + 2*span/3]:
+        # min/max of a partition column resolve from directory metadata —
+        # no data files are opened, and the fact table is not re-read.
+        row = (
+            spark.read.parquet(out)
+            .agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
+            .first()
+        )
+        dmin, dmax = int(row["dmin"]), int(row["dmax"])
+        span = dmax - dmin
+        return out, dmin + span // 3, dmin + 2 * span // 3
+
+    return landed(spark, sf_dir, name, write)
 
 
 def _qsketch_landed_store(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
@@ -2218,12 +2195,6 @@ _QS_FRAG_BATCHES = 3
 #: the oracle-side mirror list: "0, 1, 2"
 _QS_FRAG_IN = ", ".join(str(b) for b in range(_QS_FRAG_BATCHES))
 
-#: (applicationId, sf basename) -> (fragmented path, compacted path):
-#: same once-per-session memo + _SUCCESS wipe-recheck contract as
-#: _DAY_STORES (VERDICT r13 #4).
-_COMPACT_STORES: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def _compaction_plan(spark: SparkSession, frag_path: str) -> DataFrame:
     """The compaction job's read side: re-aggregate the fragmented
     store's per-batch partials per (event_type, day, bucket) — counter
@@ -2239,7 +2210,8 @@ def _compaction_plan(spark: SparkSession, frag_path: str) -> DataFrame:
 
 
 def _compacted_qsketch_stores(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Memoized (fragmented, compacted) quantile-sketch day stores.
+    """(fragmented, compacted) quantile-sketch day stores, each landed
+    once per session through ``catalog.landed``.
 
     Fragmented: ``_QS_FRAG_BATCHES`` incremental ingest batches
     (``user_id % 3``) each append their own per-day sketch partial to
@@ -2247,47 +2219,35 @@ def _compacted_qsketch_stores(spark: SparkSession, sf_dir: str) -> tuple[str, st
     per batch, the many-small-files state every real landed store
     reaches. Compacted: ``_compaction_plan`` merges the partials and
     rewrites day-partitioned with ``repartition("day")`` — exactly one
-    file per day directory. Both writes happen once per (session, sf);
-    a memo hit re-checks both ``_SUCCESS`` markers and rebuilds after
-    a /tmp wipe (the _landed_day_store contract)."""
-    import os
-    import tempfile
-
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    app = spark.sparkContext.applicationId
-    key = (app, sf)
-    if key in _COMPACT_STORES:
-        frag, comp = _COMPACT_STORES[key]
-        if os.path.exists(os.path.join(frag, "_SUCCESS")) and os.path.exists(
-            os.path.join(comp, "_SUCCESS")
-        ):
-            return _COMPACT_STORES[key]
-        del _COMPACT_STORES[key]
-    base = os.path.join(tempfile.gettempdir(), "ds_mapreduce_spark", app)
-    frag = os.path.join(base, f"qsketch_frag_store_{sf}")
-    comp = os.path.join(base, f"qsketch_compact_store_{sf}")
+    file per day directory."""
     from ds_mapreduce_spark.operators.sketch import qsketch_day_store
 
-    ev = load_table(spark, sf_dir, "events")
-    for b in range(_QS_FRAG_BATCHES):
-        # one write per arrival batch — the ingest model; only these
-        # builder jobs touch the fact table, never the graded read
+    def fragment(out):
+        ev = load_table(spark, sf_dir, "events")
+        for b in range(_QS_FRAG_BATCHES):
+            # one write per arrival batch — the ingest model; only these
+            # builder jobs touch the fact table, never the graded read
+            (
+                qsketch_day_store(ev.where(F.col("user_id") % _QS_FRAG_BATCHES == b))
+                .repartition("day")
+                .write.mode("append")
+                .partitionBy("day")
+                .parquet(out)
+            )
+        return out
+
+    def compact(out):
+        frag = landed(spark, sf_dir, "qsketch_frag_store", fragment)
         (
-            qsketch_day_store(ev.where(F.col("user_id") % _QS_FRAG_BATCHES == b))
+            _compaction_plan(spark, frag)
             .repartition("day")
-            .write.mode("overwrite" if b == 0 else "append")
-            .partitionBy("day")
-            .parquet(frag)
+            .write.partitionBy("day")
+            .parquet(out)
         )
-    (
-        _compaction_plan(spark, frag)
-        .repartition("day")
-        .write.mode("overwrite")
-        .partitionBy("day")
-        .parquet(comp)
-    )
-    _COMPACT_STORES[key] = (frag, comp)
-    return _COMPACT_STORES[key]
+        return out
+
+    comp = landed(spark, sf_dir, "qsketch_compact_store", compact)
+    return landed(spark, sf_dir, "qsketch_frag_store", fragment), comp
 
 
 @register(
@@ -2440,23 +2400,18 @@ def q_sketch_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf basename) -> (retained path, d_cutoff,
-#: n_days_expired): same once-per-session memo + _SUCCESS wipe-recheck
-#: contract as _DAY_STORES (VERDICT r13 #4).
-_RETAIN_STORES: dict[tuple[str, str], tuple[str, int, int]] = {}
-
-
 def _retained_qsketch_store(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
-    """Memoized post-RETENTION quantile-sketch day store.
+    """Post-RETENTION quantile-sketch day store, landed once per
+    session through ``catalog.landed``.
 
     Retention is the lifecycle step after compaction (VERDICT r15 #4):
     expire every day partition older than the cutoff (the midpoint of
     the landed day span — "retain the newest half"). On a
     day-partitioned store expiry is PURE DIRECTORY METADATA: the
-    compacted store's tree is copied (staged without its ``_SUCCESS``
-    marker), the expired ``day=N`` directories are deleted, and only
-    then is a fresh ``_SUCCESS`` written — the transactional commit
-    order, so a crash mid-expiry leaves a store no reader accepts
+    compacted store's tree is copied (staged without its commit marker
+    or any other ``_``-prefixed metadata file), the expired ``day=N``
+    directories are deleted, and only then does ``landed`` commit the
+    store — so a crash mid-expiry leaves a store no reader accepts
     rather than a half-expired one. No Spark job runs, no data file is
     opened, and the fact table is never touched (plan-locked). The
     cutoff derives from the partition directory names alone — exactly
@@ -2465,33 +2420,20 @@ def _retained_qsketch_store(spark: SparkSession, sf_dir: str) -> tuple[str, int,
     Returns (path, d_cutoff, n_days_expired)."""
     import os
     import shutil
-    import tempfile
 
-    sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    app = spark.sparkContext.applicationId
-    key = (app, sf)
-    if key in _RETAIN_STORES:
-        path = _RETAIN_STORES[key][0]
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            return _RETAIN_STORES[key]
-        del _RETAIN_STORES[key]
-    _, comp = _compacted_qsketch_stores(spark, sf_dir)
-    out = os.path.join(
-        tempfile.gettempdir(), "ds_mapreduce_spark", app, f"qsketch_retain_store_{sf}"
-    )
-    if os.path.exists(out):
-        shutil.rmtree(out)
-    shutil.copytree(comp, out, ignore=shutil.ignore_patterns("_SUCCESS"))
-    days = sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(out) if d.startswith("day=")
-    )
-    d_cutoff = days[0] + (days[-1] - days[0]) // 2
-    expired = [d for d in days if d < d_cutoff]
-    for d in expired:
-        shutil.rmtree(os.path.join(out, f"day={d}"))
-    open(os.path.join(out, "_SUCCESS"), "w").close()
-    _RETAIN_STORES[key] = (out, d_cutoff, len(expired))
-    return _RETAIN_STORES[key]
+    def write(out):
+        _, comp = _compacted_qsketch_stores(spark, sf_dir)
+        shutil.copytree(comp, out, ignore=shutil.ignore_patterns("_*"))
+        days = sorted(
+            int(d.split("=", 1)[1]) for d in os.listdir(out) if d.startswith("day=")
+        )
+        d_cutoff = days[0] + (days[-1] - days[0]) // 2
+        expired = [d for d in days if d < d_cutoff]
+        for d in expired:
+            shutil.rmtree(os.path.join(out, f"day={d}"))
+        return out, d_cutoff, len(expired)
+
+    return landed(spark, sf_dir, "qsketch_retain_store", write)
 
 
 @register(
@@ -2569,10 +2511,10 @@ FROM dec JOIN census USING (event_type)
     "the compacted store by DELETING their day=N directories. On a "
     "partitioned store expiry is pure directory metadata — no Spark "
     "job, no data file opened, the fact table never touched — and the "
-    "builder stages the copy WITHOUT _SUCCESS, deletes, then commits "
-    "the marker last, so a crash mid-expiry leaves an un-landed store "
-    "rather than a half-expired one (the delete-side dual of the "
-    "landed-store _SUCCESS contract the memo machinery re-checks). "
+    "builder stages the copy WITHOUT _SUCCESS, deletes, then "
+    "catalog.landed commits the marker last, so a crash mid-expiry "
+    "leaves an un-landed store rather than a half-expired one (the "
+    "delete-side dual of the landed-store commit rule). "
     "The graded read walks per-type p50/p90/p99 from the ENTIRE "
     "surviving store — no day filter, so any partition that escaped "
     "expiry would flow into n_events/store_rows_retained and fail the "

@@ -22,11 +22,22 @@ later reads of the same path for as long as the path's file listing
 confs inference reads are unchanged; any change infers again. An empty
 or missing path goes straight to Spark, which raises its own error.
 Read Parquet inputs through ``load_table``/``read_parquet``.
+
+Landed inputs: a query that needs its input in another layout or format
+writes it once per session to local scratch and then reads it, as the
+reference's workers hand data between phases only through files they
+wrote (src/worker.rs:123,151), used only once the writing task has
+reported completion (src/master.rs:127-156). ``landed`` is the one
+place that decides where such an input lives, when it is reused and
+when it is written again.
 """
 
 from __future__ import annotations
 
 import functools
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,6 +133,47 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     _SCHEMAS[key] = (listing, df.schema)
     return df
+
+
+#: (applicationId, tag, sf_dir) -> what ``write`` returned for the input
+#: ``landed`` committed under that key
+_LANDED: dict[tuple[str, str, str], object] = {}
+
+
+def scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
+    """``<tempdir>/ds_mapreduce_spark/<applicationId>/<tag>_<sf basename>``:
+    namespaced by the Spark application, so concurrent runs at the same
+    scale never share a path."""
+    sf = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    app = spark.sparkContext.applicationId
+    return os.path.join(tempfile.gettempdir(), "ds_mapreduce_spark", app, f"{tag}_{sf}")
+
+
+def landed(spark: SparkSession, sf_dir: str, tag: str, write):
+    """Land a query's own input once per session: ``write(path)`` at
+    ``scratch_dir(spark, tag, sf_dir)``, reused while it stays committed.
+
+    - Key: ``(applicationId, tag, sf_dir)``.
+    - Hit: the key is in this process's memo and ``path/_SUCCESS``
+      exists. A hit returns what ``write`` returned when the input
+      landed and starts no Spark job, so callers that only want a
+      schema, or values derived while writing, do not write again.
+    - Miss (no entry, or the marker is gone, as after a wipe of the
+      temp dir): remove whatever is at the path, call ``write(path)``,
+      then create ``path/_SUCCESS`` last, as the commit. A ``write``
+      that raises leaves no entry, so the next call writes again.
+    """
+    path = scratch_dir(spark, tag, sf_dir)
+    key = (spark.sparkContext.applicationId, tag, sf_dir)
+    marker = os.path.join(path, "_SUCCESS")
+    if key in _LANDED and os.path.exists(marker):
+        return _LANDED[key]
+    _LANDED.pop(key, None)
+    shutil.rmtree(path, ignore_errors=True)
+    value = write(path)
+    open(marker, "w").close()
+    _LANDED[key] = value
+    return value
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -8,19 +8,23 @@ each — so the next encoding change fails here, loudly, not in the driver gate.
 
 It also pins ``read_parquet``'s schema cache (every ``load_table`` goes
 through it): a repeat read of unchanged files launches no job, and a
-changed file listing or inference conf infers again.
+changed file listing or inference conf infers again; and ``landed``'s
+write-once rule for the inputs queries write for themselves.
 """
 
 from __future__ import annotations
 
 import datetime
 import os
+import tempfile
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from ds_mapreduce_spark.sources.catalog import load_table, read_parquet
+from ds_mapreduce_spark.sources import catalog
+from ds_mapreduce_spark.sources.catalog import landed, load_table, read_parquet
 
 # three instants, microsecond precision, spanning a day boundary
 _INSTANTS_US = [
@@ -202,3 +206,132 @@ def test_parquet_schema_inference_lives_in_read_parquet() -> None:
         for path in sorted((pkg / layer).glob("*.py")):
             walk(ast.parse(path.read_text()), path, ())
     assert found == allowed, f"schema-inferring reads outside read_parquet: {found - allowed}"
+
+
+def test_landed_inputs_live_in_catalog_landed() -> None:
+    """Layering: a query that writes its own input lands it through
+    ``catalog.landed``. Anywhere in the package, a ``gettempdir`` call,
+    a ``scratch_dir`` call or a ``"_SUCCESS"`` literal (a path of its
+    own, a memo of its own, a commit check of its own) appears only in
+    ``catalog.scratch_dir`` and ``catalog.landed``."""
+    import ast
+    from pathlib import Path
+
+    import ds_mapreduce_spark
+
+    pkg = Path(ds_mapreduce_spark.__file__).parent
+    found = set()
+
+    def walk(node, path: Path, scope: tuple) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            scope = (*scope, node.name)
+        where = (path.name, ".".join(scope))
+        if isinstance(node, ast.Call):
+            f = node.func
+            called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if called in ("gettempdir", "scratch_dir"):
+                found.add((*where, called))
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and (node.value == "_SUCCESS" or node.value.endswith("/_SUCCESS"))
+        ):
+            found.add((*where, "_SUCCESS"))
+        for child in ast.iter_child_nodes(node):
+            walk(child, path, scope)
+
+    for path in sorted(pkg.rglob("*.py")):
+        walk(ast.parse(path.read_text()), path, ())
+    assert found == {
+        ("catalog.py", "scratch_dir", "gettempdir"),
+        ("catalog.py", "landed", "scratch_dir"),
+        ("catalog.py", "landed", "_SUCCESS"),
+    }, f"landed-input logic outside catalog.landed: {sorted(found)}"
+
+
+@pytest.fixture
+def fake_spark(monkeypatch, tmp_path):
+    """Just enough of a session for ``landed`` (its application id),
+    with the temp dir moved under ``tmp_path`` and an empty memo."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(catalog, "_LANDED", {})
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-1"))
+
+
+def _counting_write(calls: list):
+    def write(path):
+        calls.append(path)
+        os.makedirs(path)
+        with open(os.path.join(path, "part-0"), "w") as fh:
+            fh.write(str(len(calls)))
+        return ("value", len(calls))
+
+    return write
+
+
+def test_landed_writes_once_per_session_tag_and_scale(fake_spark, tmp_path):
+    calls: list = []
+    write = _counting_write(calls)
+    first = landed(fake_spark, "/data/sf0.001", "t", write)
+    assert landed(fake_spark, "/data/sf0.001", "t", write) == first == ("value", 1)
+    path = catalog.scratch_dir(fake_spark, "t", "/data/sf0.001")
+    assert calls == [path]
+    assert path == os.path.join(str(tmp_path), "ds_mapreduce_spark", "app-1", "t_sf0.001")
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    landed(fake_spark, "/data/sf0.01", "t", write)
+    landed(fake_spark, "/data/sf0.001", "u", write)
+    other = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-2"))
+    landed(other, "/data/sf0.001", "t", write)
+    assert len(calls) == 4 and len(set(calls)) == 4
+
+
+def test_landed_raising_write_leaves_no_entry(fake_spark):
+    """Also when the failed write left a marker of its own, as a Spark
+    write does before a later step of ``write`` raises, and an entry
+    from an earlier landing existed."""
+    calls: list = []
+    write = _counting_write(calls)
+    landed(fake_spark, "/data/sf0.001", "t", write)
+    path = calls[0]
+    os.remove(os.path.join(path, "_SUCCESS"))
+
+    def failing(path):
+        calls.append(path)
+        os.makedirs(path)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        landed(fake_spark, "/data/sf0.001", "t", failing)
+    assert landed(fake_spark, "/data/sf0.001", "t", write) == ("value", 3)
+    assert calls == [path, path, path]
+
+
+def test_landed_rebuilds_into_an_emptied_directory_without_its_marker(fake_spark):
+    calls: list = []
+    write = _counting_write(calls)
+    path = catalog.scratch_dir(fake_spark, "t", "/data/sf0.001")
+    landed(fake_spark, "/data/sf0.001", "t", write)
+    os.remove(os.path.join(path, "_SUCCESS"))
+    with open(os.path.join(path, "stale"), "w") as fh:
+        fh.write("left by the first write")
+    # _counting_write's makedirs fails unless the directory was removed
+    assert landed(fake_spark, "/data/sf0.001", "t", write) == ("value", 2)
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-0"]
+    with open(os.path.join(path, "part-0")) as fh:
+        assert fh.read() == "2"
+
+
+def test_landed_hit_returns_the_first_writes_value(fake_spark):
+    calls: list = []
+    values = iter([{"bounds": (3, 7)}, {"bounds": (0, 0)}])
+
+    def write(path):
+        calls.append(path)
+        os.makedirs(path)
+        return next(values)
+
+    first = landed(fake_spark, "/data/sf0.001", "t", write)
+    assert first == {"bounds": (3, 7)}
+    assert landed(fake_spark, "/data/sf0.001", "t", write) is first
+    assert len(calls) == 1

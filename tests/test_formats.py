@@ -4,6 +4,7 @@ write-read — schema and values must survive the trip."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -66,14 +67,40 @@ def test_compaction_collapses_file_count(spark, sf_dir):
     import glob
     import os
 
-    from ds_mapreduce_spark.plans.format_queries import _scratch_dir
     from ds_mapreduce_spark.plans.registry import load_all
+    from ds_mapreduce_spark.sources.catalog import scratch_dir
 
     reg = load_all()
     reg["compaction_rebalance"].fn(spark, sf_dir).collect()
-    frag = _scratch_dir(spark, "compaction_frag", sf_dir)
-    compacted = _scratch_dir(spark, "compaction_out", sf_dir)
+    frag = scratch_dir(spark, "compaction_frag", sf_dir)
+    compacted = scratch_dir(spark, "compaction_out", sf_dir)
     n_frag = len(glob.glob(os.path.join(frag, "part-*")))
     n_comp = len(glob.glob(os.path.join(compacted, "part-*")))
     assert n_frag >= 32, n_frag
     assert n_comp <= n_frag // 8, (n_frag, n_comp)
+
+
+@pytest.mark.parametrize(
+    "query,tags",
+    [
+        ("csv_roundtrip", ["csv_roundtrip"]),
+        ("zorder_write_prune", ["zorder_lineitem"]),
+        ("compaction_rebalance", ["compaction_frag", "compaction_out"]),
+        ("bucketed_join_no_shuffle", ["bucketed_join"]),
+    ],
+)
+def test_landed_format_input_rebuilds_after_scratch_wipe(spark, sf_dir, query, tags):
+    """A query's landed input can vanish mid-session (a temp-dir
+    cleaner): with every scratch path the row landed removed, the next
+    call lands it again and returns the same rows, rather than reading
+    a path that is gone."""
+    import shutil
+
+    from ds_mapreduce_spark.plans.registry import load_all
+    from ds_mapreduce_spark.sources.catalog import scratch_dir
+
+    fn = load_all()[query].fn
+    before = sorted(fn(spark, sf_dir).collect())
+    for tag in tags:
+        shutil.rmtree(scratch_dir(spark, tag, sf_dir))
+    assert sorted(fn(spark, sf_dir).collect()) == before

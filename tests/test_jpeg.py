@@ -496,3 +496,20 @@ def test_fill_bytes_before_a_marker_are_skipped():
             parse_jpeg(payload[:-2] + b"\xff\xff")
         with pytest.raises(ValueError, match="^1 trailing bytes after EOI$"):
             parse_jpeg(payload + b"\xff")
+
+
+def test_fill_bytes_before_a_header_marker_are_skipped():
+    """Fill bytes may precede the header's markers too (T.81 §B.1.1.2):
+    1 or 3 of them before DQT, DHT, SOF0 or SOS decode to the clean
+    payload's pixels, while a header that ends in 0xFF bytes raises."""
+    px = bytes((7 * i) % 256 for i in range(16 * 8))
+    clean = encode_jpeg_bytes(px, 16, 8)
+    want = parse_jpeg(clean)
+    for code in (b"\xdb", b"\xc4", b"\xc0", b"\xda"):
+        at = clean.index(b"\xff" + code)
+        for fill in (b"\xff", b"\xff\xff\xff"):
+            assert parse_jpeg(clean[:at] + fill + clean[at:]) == want, (code, fill)
+    sos = clean.index(b"\xff\xda")
+    for tail in (b"\xff", b"\xff\xff\xff"):
+        with pytest.raises(ValueError):
+            parse_jpeg(clean[:sos] + tail)
