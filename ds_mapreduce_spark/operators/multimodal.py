@@ -47,8 +47,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-#: metadata carried alongside every payload
-META_SCHEMA = "mime string, byte_len bigint"
 FEATURE_SCHEMA = "doc_id bigint, byte_len bigint, checksum string, n_frames bigint"
 
 

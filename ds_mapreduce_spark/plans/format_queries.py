@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ds_mapreduce_spark.plans.registry import register
-from ds_mapreduce_spark.sources.catalog import landed, load_table, read_text_corpus
+from ds_mapreduce_spark.sources.catalog import landed, load_table, read_parquet, read_text_corpus
 from ds_mapreduce_spark.sources.kv_text import read_kv_text, write_kv_text
 
 
@@ -398,7 +398,7 @@ def _partitioned_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out
 
-    return spark.read.parquet(landed(spark, sf_dir, "partitioned_write_prune", write))
+    return read_parquet(spark, landed(spark, sf_dir, "partitioned_write_prune", write))
 
 
 @register(
@@ -491,7 +491,7 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
 
     back = _partitioned_docs(spark, sf_dir)
-    dim = spark.read.parquet(landed(spark, sf_dir, "lang_dim", write)).filter(
+    dim = read_parquet(spark, landed(spark, sf_dir, "lang_dim", write)).filter(
         F.col("script") == "cjk"
     )
     return (
@@ -542,13 +542,13 @@ def q_compaction_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     def compact(out):
         frag = landed(spark, sf_dir, "compaction_frag", fragment)
         (
-            spark.read.parquet(frag)
+            read_parquet(spark, frag)
             .hint("rebalance")
             .write.parquet(out)
         )
         return out
 
-    back = spark.read.parquet(landed(spark, sf_dir, "compaction_out", compact))
+    back = read_parquet(spark, landed(spark, sf_dir, "compaction_out", compact))
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("doc_id").cast("bigint").alias("id_checksum"),
@@ -644,7 +644,7 @@ GROUP BY l_returnflag
 )
 def q_zorder_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = zorder_write(spark, sf_dir)
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     return (
         back.where(
             F.col("l_orderkey").between(100, 500) & F.col("l_partkey").between(20, 80)

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ds_mapreduce_spark.functions.temporal import epoch_day, epoch_sec, epoch_us, idiv_floor
 from ds_mapreduce_spark.plans.registry import register
-from ds_mapreduce_spark.sources.catalog import landed, load_table
+from ds_mapreduce_spark.sources.catalog import landed, load_table, read_parquet
 from ds_mapreduce_spark.operators.sketch import (
     qsketch_bucket_sql_duckdb,
     qsketch_decode_sql_duckdb,
@@ -1837,7 +1837,7 @@ def _landed_day_store(
         # min/max of a partition column resolve from directory metadata —
         # no data files are opened, and the fact table is not re-read.
         row = (
-            spark.read.parquet(out)
+            read_parquet(spark, out)
             .agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
             .first()
         )
@@ -1949,7 +1949,7 @@ def q_quantile_sketch_day_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path, d_lo, d_hi = _qsketch_landed_store(spark, sf_dir)
-    store = spark.read.parquet(path).where(
+    store = read_parquet(spark, path).where(
         (F.col("day") >= F.lit(d_lo)) & (F.col("day") <= F.lit(d_hi))
     )
     est = qsketch_quantiles(qsketch_rollup_store(store))
@@ -2033,7 +2033,7 @@ FROM f GROUP BY event_type
 )
 def q_hll_sketch_day_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, d_lo, d_hi = _hll_landed_store(spark, sf_dir)
-    store = spark.read.parquet(path).where(
+    store = read_parquet(spark, path).where(
         (F.col("day") >= F.lit(d_lo)) & (F.col("day") <= F.lit(d_hi))
     )
     merged = store.groupBy("event_type").agg(
@@ -2147,7 +2147,7 @@ FROM est
 )
 def q_cms_sketch_day_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, d_lo, d_hi = _cms_landed_store(spark, sf_dir)
-    store = spark.read.parquet(path).where(
+    store = read_parquet(spark, path).where(
         (F.col("day") >= F.lit(d_lo)) & (F.col("day") <= F.lit(d_hi))
     )
     merged = cms_merge(store.select("j", "bucket", "c"))
@@ -2203,7 +2203,7 @@ def _compaction_plan(spark: SparkSession, frag_path: str) -> DataFrame:
     plan touches no fact table). Factored out of the builder so the
     plan is inspectable without re-running the write."""
     return (
-        spark.read.parquet(frag_path)
+        read_parquet(spark, frag_path)
         .groupBy("event_type", "day", "bucket")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
@@ -2353,8 +2353,8 @@ def q_sketch_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     frag_path, comp_path = _compacted_qsketch_stores(spark, sf_dir)
-    frag = spark.read.parquet(frag_path)
-    comp = spark.read.parquet(comp_path)
+    frag = read_parquet(spark, frag_path)
+    comp = read_parquet(spark, comp_path)
     est = qsketch_quantiles(qsketch_rollup_store(comp))
     frag_est = qsketch_quantiles(qsketch_rollup_store(frag)).select(
         "event_type",
@@ -2540,7 +2540,7 @@ def q_sketch_store_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path, d_cutoff, n_expired = _retained_qsketch_store(spark, sf_dir)
-    store = spark.read.parquet(path)
+    store = read_parquet(spark, path)
     est = qsketch_quantiles(qsketch_rollup_store(store))
     census = store.groupBy("event_type").agg(
         F.countDistinct("day").cast("bigint").alias("n_days_retained"),

@@ -16,12 +16,19 @@ pruning and AQE stay fully in play downstream.
 Schema reuse: a Parquet read without a schema makes Spark launch one
 job to read a footer (``ParquetUtils.inferSchema``): planning latency on
 every read of a query's input, though the files rarely change between
-reads. ``read_parquet`` infers a path's schema once and passes it to
-later reads of the same path for as long as the path's file listing
-(path, length and modification time of every file under it) and the
-confs inference reads are unchanged; any change infers again. An empty
-or missing path goes straight to Spark, which raises its own error.
-Read Parquet inputs through ``load_table``/``read_parquet``.
+reads. This module is the only code that decides which schema a Parquet
+read uses. ``_SCHEMAS`` records, per path and the confs inference reads,
+a schema and the path's file listing: the (path, length, modification
+time in ms) of every file Spark's reader reads there, walked in Python,
+so names Spark skips (``_SUCCESS``, ``.crc``, a leading ``_`` or ``.``)
+are not in it. ``read_parquet`` infers a path's schema once and records
+it; ``write_parquet`` records the schema of the DataFrame it wrote.
+Later reads pass the recorded schema while the listing and confs are
+unchanged; any change infers again. A read of several paths reuses a
+schema only when every path has a record with one schema. Only local
+paths are recorded; others, like an empty or missing path, go straight
+to Spark, which lists them and raises its own errors. Read and write
+Parquet through ``load_table``/``read_parquet``/``write_parquet``.
 
 Landed inputs: a query that needs its input in another layout or format
 writes it once per session to local scratch and then reads it, as the
@@ -38,6 +45,7 @@ import functools
 import os
 import shutil
 import tempfile
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,8 +77,9 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.respectSummaryFiles",
 )
 
-#: (path, inference conf values) -> (file listing, inferred schema); threads
-#: that read one new path at once at worst each infer it
+#: (path, inference conf values) -> (file listing, schema): the one record of
+#: which schema a Parquet read of a local path uses; threads that read one
+#: new path at once at worst each infer it
 _SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
 
 
@@ -88,51 +97,89 @@ def fs_path(spark: SparkSession, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def _listing(spark: SparkSession, path: str) -> tuple:
-    """Sorted (path, length, modification time) of every file under
-    ``path``, recursively (of ``path`` itself if it is a file); empty if
-    it cannot be listed. Walks ``listStatus`` rather than taking
-    ``listFiles(p, true)``: the located statuses of the latter also load
-    each file's permissions: 19 ms against 1 ms for one local file on a
-    4-vCPU VM."""
-    fs, p = fs_path(spark, path)
+def _skipped(name: str) -> bool:
+    """Spark's ``HadoopFSUtils.shouldFilterOutPathName``: the file and
+    directory names its file index never reads (commit markers, Hadoop
+    ``.crc`` checksums, staging directories)."""
+    hidden = name.startswith(".") or name[:1] == "_" and "=" not in name or name.endswith("._COPYING_")
+    return hidden and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def _listing(path: str) -> tuple:
+    """Sorted (path, length, modification time in ms) of the files
+    Spark's reader reads at the local ``path``: the path itself if it is
+    a file, else every file under it not ``_skipped``, by its own name
+    or a directory's on the way. Empty if ``path`` is missing or
+    unreadable or holds no such file."""
+    files = [path] if os.path.isfile(path) else []
+    for top, dirs, names in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if not _skipped(d)]
+        files += [os.path.join(top, n) for n in names if not _skipped(n)]
     try:
-        todo = list(fs.listStatus(p))
-    except Exception:  # missing or unreadable: Spark reports it
+        stats = [(f, os.stat(f)) for f in files]
+    except OSError:  # removed while listed: Spark reports it
         return ()
-    out = []
-    while todo:
-        st = todo.pop()
-        if st.isDirectory():
-            todo.extend(fs.listStatus(st.getPath()))
-        else:
-            out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
-    return tuple(sorted(out))
+    return tuple(sorted((f, st.st_size, st.st_mtime_ns // 1_000_000) for f, st in stats))
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, inferring the schema only when this
-    process has not inferred it for the same files and confs.
+def _entry(spark: SparkSession, path: str) -> tuple[tuple, tuple]:
+    """(key, listing) that a ``_SCHEMAS`` record of ``path`` must match:
+    the path with ``spark``'s inference conf values, and the path's
+    ``_listing`` if it is local, else (). A path is local if its scheme
+    is ``file``, or it has none and ``fs.defaultFS`` is ``file:``; any
+    other path is left to Spark's own listing."""
+    key = (path, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    url = urlsplit(path, allow_fragments=False)
+    scheme = url.scheme or urlsplit(spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")).scheme
+    if scheme != "file" or url.netloc:
+        return key, ()
+    return key, _listing(url.path if url.scheme else path)
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)``, inferring the schema only when
+    this process has no schema on record for the same files and confs.
 
     Inference costs one Spark job per read (it reads a footer); a hit
-    reads with ``spark.read.schema(cached)`` and launches none. The cache
-    key is the path and the values of the confs inference reads
-    (``_INFERENCE_CONFS``); a hit also needs the path's file listing
-    (path, length and modification time of every file under it) to equal
-    the one taken before the cached inference. Any new, removed,
-    resized or touched file, or a changed conf, infers again. An empty
-    or missing path goes straight to Spark, so its error is unchanged.
+    reads with ``spark.read.schema(recorded)`` and launches none.
+
+    - Record: per path and the values of the confs inference reads
+      (``_INFERENCE_CONFS``), the path's listing and a schema, put there
+      by a one-path inference here or by ``write_parquet``.
+    - Listing: sorted (path, length, modification time in ms) of the
+      files Spark's reader reads at the path (``_listing``), walked with
+      ``os.walk``/``os.stat`` and no py4j call. Names Spark skips
+      (``_skipped``: a leading ``.``, or ``_`` without ``=``) are not in
+      it, so a rewritten ``_SUCCESS`` or ``.crc`` file keeps the record;
+      a new, removed, resized or touched data file, or a changed conf,
+      infers again.
+    - Hit: every path's record has the current listing, all with one
+      schema. A multi-path miss infers over all the paths and records
+      nothing.
+    - Local only: a path is local if its scheme is ``file``, or it has
+      none and ``fs.defaultFS`` is ``file:``. Any other path, and an
+      empty or missing one, is read with plain ``spark.read.parquet``,
+      so Spark's own listing, behaviour and errors are unchanged.
     """
-    key = (path, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
-    listing = _listing(spark, path)
-    if not listing:
-        return spark.read.parquet(path)
-    hit = _SCHEMAS.get(key)
-    if hit is not None and hit[0] == listing:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (listing, df.schema)
+    keys, listings = zip(*(_entry(spark, p) for p in paths))
+    schemas = [r[1] if (r := _SCHEMAS.get(k)) and r[0] == l else None for k, l in zip(keys, listings)]
+    if schemas[0] is not None and all(s == schemas[0] for s in schemas):
+        return spark.read.schema(schemas[0]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    if len(paths) == 1 and listings[0]:
+        _SCHEMAS[keys[0]] = (listings[0], df.schema)
     return df
+
+
+def write_parquet(df: DataFrame, path: str) -> None:
+    """Overwrite ``path`` with ``df`` as Parquet, then record ``df``'s
+    schema for the listing the write left, so a ``read_parquet`` of the
+    path under the same confs launches no job while its data files are
+    unchanged. A non-local path is written but not recorded."""
+    df.write.mode("overwrite").parquet(path)
+    key, listing = _entry(df.sparkSession, path)
+    if listing:
+        _SCHEMAS[key] = (listing, df.schema)
 
 
 #: (applicationId, tag, sf_dir) -> what ``write`` returned for the input

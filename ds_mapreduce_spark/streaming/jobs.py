@@ -39,9 +39,11 @@ owns one contract for all of them:
 - **Logs.** A twin whose answer is a per-batch log returns the union
   of the log versions <= the last batch that fired (versions a
   previous run left above it are stale), else of all landed ones.
-- **Schemas.** State reads of versions this run wrote reuse the
-  schema of the DataFrame written there, so they launch no schema
-  inference job; versions an earlier run left are read with inference.
+- **Schemas.** State is written with ``catalog.write_parquet`` and
+  read with ``catalog.read_parquet``: a version this process wrote is
+  read with the schema of the DataFrame written there, and launches no
+  schema inference job, while its files are unchanged; a version an
+  earlier process left is inferred once.
 """
 
 from __future__ import annotations
@@ -50,10 +52,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ds_mapreduce_spark.functions.temporal import epoch_sec, epoch_us
-from ds_mapreduce_spark.sources.catalog import fs_path, normalize_events_ts, read_parquet
+from ds_mapreduce_spark.sources.catalog import fs_path, normalize_events_ts, read_parquet, write_parquet
 
 
 def existing_state_versions(
@@ -137,23 +138,22 @@ class _Version:
     """One micro-batch's handle on the versioned state: ``prev`` reads
     version n-1 (absent when ``first``: batch 0 of an unseeded state),
     ``put`` writes version n, ``get`` reads back what ``put`` wrote.
-    ``table`` names a table or log as in the module docstring; ``read``
-    and ``write`` are the run's state reader and writer."""
+    ``table`` names a table or log as in the module docstring. Writes go
+    through ``catalog.write_parquet`` and reads through
+    ``catalog.read_parquet``, so reading a version this process wrote
+    launches no schema job."""
 
-    def __init__(
-        self, batch: DataFrame, at: Callable, n: int, first: bool, read: Callable, write: Callable
-    ):
+    def __init__(self, batch: DataFrame, at: Callable, n: int, first: bool):
         self.sess, self.at, self.n, self.first = batch.sparkSession, at, n, first
-        self._read, self._write = read, write
 
     def prev(self, table: str | None = None) -> DataFrame:
-        return self._read(self.sess, self.at(self.n - 1, table))
+        return read_parquet(self.sess, self.at(self.n - 1, table))
 
     def put(self, df: DataFrame, table: str | None = None) -> None:
-        self._write(df, self.at(self.n, table))
+        write_parquet(df, self.at(self.n, table))
 
     def get(self, table: str | None = None) -> DataFrame:
-        return self._read(self.sess, self.at(self.n, table))
+        return read_parquet(self.sess, self.at(self.n, table))
 
 
 def _run_versioned(
@@ -189,29 +189,14 @@ def _run_versioned(
         versions = existing_state_versions(spark, state_dir, series(table))
         return [n for n in versions if n >= 0]
 
-    written: dict[str, StructType] = {}  # path -> schema this run wrote there
-
-    def write(df: DataFrame, path: str) -> None:
-        df.write.mode("overwrite").parquet(path)
-        written[path] = df.schema
-
-    def read(sess: SparkSession, *paths: str) -> DataFrame:
-        """The state at ``paths``: read with the schema this run wrote
-        there if it wrote every one of them (with one schema), else with
-        the schema inferred."""
-        schema = written.get(paths[0])
-        if schema is not None and all(written.get(p) == schema for p in paths):
-            return sess.read.schema(schema).parquet(*paths)
-        return sess.read.parquet(*paths)
-
     if seed is not None:
         for table, df in (seed if isinstance(seed, dict) else {None: seed}).items():
-            write(df, at(-1, table))
+            write_parquet(df, at(-1, table))
     fired = -1
 
     def sink(batch: DataFrame, n: int) -> None:
         nonlocal fired
-        step(batch, _Version(batch, at, n, n == 0 and seed is None, read, write))
+        step(batch, _Version(batch, at, n, n == 0 and seed is None))
         fired = max(fired, n)
 
     (
@@ -225,11 +210,11 @@ def _run_versioned(
     if log is not None:
         versions = [n for n in landed(log) if fired < 0 or n <= fired]
         if versions:
-            return present(read(spark, *[at(n, log) for n in versions]))
+            return present(read_parquet(spark, *[at(n, log) for n in versions]))
     else:
         final = fired if fired >= 0 else max(landed(tables[0]), default=None)
         if final is not None:
-            return present(*[read(spark, at(final, t)) for t in tables])
+            return present(*[read_parquet(spark, at(final, t)) for t in tables])
     if isinstance(empty, str):
         return spark.createDataFrame([], empty)
     return empty(spark.createDataFrame([], stream.schema))

@@ -6,10 +6,13 @@ every ``unix_micros(ts)`` call site. This test writes tiny events parquets in
 BOTH encodings and asserts ``load_table`` yields the same LTZ timestamps for
 each — so the next encoding change fails here, loudly, not in the driver gate.
 
-It also pins ``read_parquet``'s schema cache (every ``load_table`` goes
-through it): a repeat read of unchanged files launches no job, and a
-changed file listing or inference conf infers again; and ``landed``'s
-write-once rule for the inputs queries write for themselves.
+It also pins ``read_parquet``'s schema cache (every ``load_table``, landed
+store and streaming state read goes through it): a repeat read of
+unchanged files launches no job, the listing it checks is the file set
+Spark's reader reads, a changed data file or inference conf infers
+again, and a row's second build reads its landed inputs with no job;
+and ``landed``'s write-once rule for the inputs queries write for
+themselves.
 """
 
 from __future__ import annotations
@@ -173,19 +176,180 @@ def test_unreadable_path_raises_sparks_own_error(spark, tmp_path, kind):
     assert str(ours.value) == str(spark_err.value)
 
 
+def _spark_skips(name: str) -> bool:
+    """Spark's ``HadoopFSUtils.shouldFilterOutPathName``, restated here
+    so the listing is checked against the rule, not against itself."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _hadoop_listing(spark, path: str) -> tuple:
+    """Sorted (local path, length, mtime) of the files a Hadoop
+    ``listStatus`` walk finds under ``path``, less the names Spark's
+    file index skips."""
+    fs, p = catalog.fs_path(spark, path)
+    todo, out = list(fs.listStatus(p)), []
+    while todo:
+        st = todo.pop()
+        if _spark_skips(st.getPath().getName()):
+            continue
+        if st.isDirectory():
+            todo.extend(fs.listStatus(st.getPath()))
+        else:
+            out.append((st.getPath().toUri().getPath(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
+
+
+def _partitioned(spark, tmp_path) -> str:
+    """A ``partitionBy("day", "kind")`` directory as Spark's local writer
+    leaves it (``_SUCCESS``, ``.crc`` files, nested ``day=``/``kind=``
+    directories), plus a staging directory Spark's reader skips."""
+    path = str(tmp_path / "parted")
+    rows = [(i, d, k) for i, (d, k) in enumerate([(1, "a"), (1, "b"), (2, "a"), (3, "b")])]
+    spark.createDataFrame(rows, "x bigint, day int, kind string").write.partitionBy(
+        "day", "kind"
+    ).parquet(path)
+    os.makedirs(os.path.join(path, "_temporary", "0"))
+    with open(os.path.join(path, "_temporary", "0", "part-00000.parquet"), "w") as fh:
+        fh.write("not parquet")
+    return path
+
+
+def _rewrite(path: str, k: int) -> None:
+    """Rewrite ``path`` with its own bytes and a new mtime."""
+    with open(path, "rb") as fh:
+        data = fh.read()
+    with open(path, "wb") as fh:
+        fh.write(data)
+    os.utime(path, (1_600_000_000 + k, 1_600_000_000 + k))
+
+
+def _files_named(path: str, pred) -> list[str]:
+    return sorted(os.path.join(d, n) for d, _, names in os.walk(path) for n in names if pred(n))
+
+
+def test_listing_is_the_file_set_spark_reads(spark, tmp_path):
+    from urllib.parse import urlsplit
+
+    path = _partitioned(spark, tmp_path)
+    assert _files_named(path, lambda n: n == "_SUCCESS")
+    assert _files_named(path, lambda n: n.endswith(".crc"))
+    listing = catalog._listing(path)
+    assert all("/day=" in f and "/kind=" in f for f, _, _ in listing)
+    assert listing == _hadoop_listing(spark, path)
+    read = spark.read.parquet(path).inputFiles()
+    assert sorted(f for f, _, _ in listing) == sorted(urlsplit(f).path for f in read)
+    assert catalog._entry(spark, path)[1] == listing
+    assert catalog._entry(spark, f"file://{path}")[1] == listing
+
+
+def test_only_local_paths_are_listed(tmp_path):
+    """A path on another file system, or a schemeless path under a
+    non-local ``fs.defaultFS``, gets no listing and so no record."""
+    (tmp_path / "f.parquet").write_bytes(b"x")
+    local = str(tmp_path / "f.parquet")
+
+    def session(default_fs: str):
+        hadoop = SimpleNamespace(get=lambda k, d=None: default_fs)
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda k, d=None: None),
+            _jsc=SimpleNamespace(hadoopConfiguration=lambda: hadoop),
+        )
+
+    assert catalog._entry(session("file:///"), local)[1] != ()
+    assert catalog._entry(session("file:///"), f"file:{local}")[1] != ()
+    assert catalog._entry(session("hdfs://nn:8020"), local)[1] == ()
+    assert catalog._entry(session("file:///"), f"hdfs://nn:8020{local}")[1] == ()
+    assert catalog._entry(session("file:///"), f"s3a://bucket{local}")[1] == ()
+
+
+def test_marker_and_checksum_rewrites_keep_the_hit(spark, tmp_path, jobs_launched):
+    path = _partitioned(spark, tmp_path)
+    first, jobs = jobs_launched(lambda: read_parquet(spark, path))
+    assert jobs >= 1
+    marker = _files_named(path, lambda n: n == "_SUCCESS")
+    crcs = _files_named(path, lambda n: n.endswith(".crc"))
+    for k, f in enumerate([*marker, crcs[0], crcs[-1]]):
+        _rewrite(f, k)
+        again, jobs = jobs_launched(lambda: read_parquet(spark, path))
+        assert jobs == 0, f
+        assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_added_or_rewritten_part_file_infers_again(spark, tmp_path, jobs_launched):
+    import shutil
+
+    path = _partitioned(spark, tmp_path)
+    read_parquet(spark, path)
+    parts = _files_named(path, lambda n: n.startswith("part-"))
+    parts = [f for f in parts if "_temporary" not in f]
+    _rewrite(parts[0], 0)
+    assert jobs_launched(lambda: read_parquet(spark, path))[1] >= 1
+    assert jobs_launched(lambda: read_parquet(spark, path))[1] == 0
+    shutil.copy2(parts[0], os.path.join(os.path.dirname(parts[0]), "part-99999-copy.parquet"))
+    df, jobs = jobs_launched(lambda: read_parquet(spark, path))
+    assert jobs >= 1
+    assert df.count() == 5
+
+
+def test_multi_path_read_hits_only_when_every_path_does(spark, tmp_path, jobs_launched):
+    """Two state versions written through ``write_parquet`` read back
+    together with no job; with one part file of one path touched the
+    same read infers, over both paths, and records nothing."""
+    a, b = str(tmp_path / "v0"), str(tmp_path / "v1")
+    df = spark.createDataFrame([(1, "x"), (2, "y")], "k bigint, v string")
+    catalog.write_parquet(df, a)
+    catalog.write_parquet(df.where("k = 2"), b)
+    both, jobs = jobs_launched(lambda: read_parquet(spark, a, b))
+    assert jobs == 0
+    assert sorted(both.collect()) == [(1, "x"), (2, "y"), (2, "y")]
+    _rewrite(_files_named(b, lambda n: n.startswith("part-"))[0], 0)
+    again, jobs = jobs_launched(lambda: read_parquet(spark, a, b))
+    assert jobs >= 1 and again.schema == both.schema
+    assert jobs_launched(lambda: read_parquet(spark, a))[1] == 0
+    assert jobs_launched(lambda: read_parquet(spark, b))[1] >= 1
+
+
+#: rows whose graded plan reads an input the row landed itself: a second
+#: build in one session finds every schema on record
+_LANDED_ROWS = (
+    "partitioned_write_prune",
+    "dynamic_partition_pruning",
+    "compaction_rebalance",
+    "zorder_write_prune",
+    "quantile_sketch_day_range",
+    "hll_sketch_day_range",
+    "cms_sketch_day_range",
+    "sketch_store_compaction",
+    "sketch_store_retention",
+)
+
+
+@pytest.mark.parametrize("row", _LANDED_ROWS)
+def test_warm_build_of_a_landed_row_launches_no_job(spark, sf_dir, jobs_launched, row):
+    from ds_mapreduce_spark.plans.registry import load_all
+
+    fn = load_all()[row].fn
+    fn(spark, sf_dir)
+    assert jobs_launched(lambda: fn(spark, sf_dir))[1] == 0
+
+
 def test_parquet_schema_inference_lives_in_read_parquet() -> None:
-    """Layering: in ``sources/`` and ``streaming/``, a schema-less
-    ``<session>.read.parquet(...)`` (one schema-inference job per call)
-    appears only in ``catalog.read_parquet`` and in ``_run_versioned``'s
-    state reader, which fall back to it on a path they cannot vouch for.
-    Every other read goes through ``read_parquet`` or passes a schema."""
+    """Layering: in ``sources/``, ``streaming/`` and ``plans/``, a
+    schema-less ``<session>.read.parquet(...)`` (one schema-inference
+    job per call) appears only in ``catalog.read_parquet``, which falls
+    back to it on a path it has no schema on record for. Every other
+    read goes through ``read_parquet`` or passes a schema (or options,
+    as the ``mergeSchema`` read does)."""
     import ast
     from pathlib import Path
 
     import ds_mapreduce_spark
 
     pkg = Path(ds_mapreduce_spark.__file__).parent
-    allowed = {("catalog.py", "read_parquet"), ("jobs.py", "_run_versioned.read")}
+    allowed = {("catalog.py", "read_parquet")}
     found = set()
 
     def walk(node, path: Path, scope: tuple) -> None:
@@ -202,7 +366,7 @@ def test_parquet_schema_inference_lives_in_read_parquet() -> None:
         for child in ast.iter_child_nodes(node):
             walk(child, path, scope)
 
-    for layer in ("sources", "streaming"):
+    for layer in ("sources", "streaming", "plans"):
         for path in sorted((pkg / layer).glob("*.py")):
             walk(ast.parse(path.read_text()), path, ())
     assert found == allowed, f"schema-inferring reads outside read_parquet: {found - allowed}"
